@@ -201,6 +201,17 @@ object Bench {
       yield (a1 - a0) * 100.0 / (b1 - b0)
   }
 
+  /** One corroboration re-run of a flagged query: the kept time is the
+    * min of the first sample and the re-run, and the JSON value of the
+    * flag's `corroborated` field is `true`. A re-run that throws yields
+    * no second sample, so the first time stands and the field reads
+    * `"failed"`. */
+  private[graft] def corroborate(cur0: Double)(rerun: => Unit): (Double, String) = {
+    val t0 = System.nanoTime()
+    try { rerun; (math.min(cur0, (System.nanoTime() - t0) / 1e9), "true") }
+    catch { case _: Throwable => (cur0, "\"failed\"") }
+  }
+
   /** Capture-acceptance rule for baseline folds, pinned in code (r17
     * verdict item 5 — the rule lived only in DESIGN prose/scripts and a
     * future window could silently regress to idle probes): a capture
@@ -552,13 +563,8 @@ object Bench {
             val (cur, corroborated) =
               if (wouldBeCode) {
                 settle()
-                val t0 = System.nanoTime()
-                val ok =
-                  try { SparkEntry.queries(n)(spark, sfDir).count(); true }
-                  catch { case _: Throwable => false }
-                val dt = (System.nanoTime() - t0) / 1e9
-                (if (ok) math.min(cur0, dt) else cur0, true)
-              } else (cur0, false)
+                corroborate(cur0) { SparkEntry.queries(n)(spark, sfDir).count() }
+              } else (cur0, "false")
             if (!trips(cur, prevAdj)) None
             else {
               val isWindow = !trips(cur, prevShift)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import BroadcastGuard.{Guarded, PairRowCap, ShingleRowCap}
 
 /** Deduplication operators over the `documents` / `embeddings` tables —
   * the near-dup family a 100 TB training-data pipeline needs: exact
@@ -339,22 +340,20 @@ object Dedup {
     "dedup_prefix_filter_jaccard",
     (s, dir) => {
       val sh = shingleSurface(s, dir)
-      val cands = prefixCandidatePairs(sh, 0.5)
-        .localCheckpoint(true) // tiny; probed twice below
-      val bc = candBroadcaster(cands) // size-guarded broadcast (r8 advice)
+      // the candidate pairs are tiny and probed twice below
+      val Guarded(cands, _, bc) = BroadcastGuard(prefixCandidatePairs(sh, 0.5), PairRowCap)
       val candDocs = cands.select(col("ia").as("doc_id"))
         .union(cands.select(col("ib").as("doc_id"))).distinct()
-      val shC = sh.join(bc(candDocs), Seq("doc_id"))
-        .localCheckpoint(true) // referenced 2× (intersections, sizes)
+      // candidate-pruned shingles (referenced 2×: intersections, sizes)
+      // are small by construction — broadcast one side of the
+      // intersection self-join behind a row-count guard (r18: un-hinted
+      // this planned a SortMergeJoin, exchanging + sorting the shingle
+      // strings twice; past the cap the hint drops and the join stays
+      // keyed). The cap is the SHINGLE-row cap, not the slim-pair cap —
+      // these rows carry the strings (r18 advice)
+      val Guarded(shC, _, shBc) = BroadcastGuard(sh.join(bc(candDocs), Seq("doc_id")),
+        ShingleRowCap)
       val sz = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      // candidate-pruned shingles are small by construction — broadcast
-      // one side of the intersection self-join behind a row-count guard
-      // (r18: un-hinted this planned a SortMergeJoin, exchanging +
-      // sorting the shingle strings twice; past the cap the hint drops
-      // and the join stays keyed). The cap is the SHINGLE-row cap, not
-      // the slim-pair cap — these rows carry the strings (r18 advice)
-      val shBc: DataFrame => DataFrame =
-        if (shC.count() <= BroadcastShingleRowCap) broadcast _ else identity[DataFrame] _
       val inter = shC.as("ca").join(shBc(shC.as("cb")),
           col("ca.shingle") === col("cb.shingle") &&
           col("ca.doc_id") < col("cb.doc_id"))
@@ -439,34 +438,6 @@ object Dedup {
     mh.select(col("doc_id"), posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
   }
 
-  /** Broadcast gate for the candidate-scoped verification tails: the
-    * candidate pair/doc/size tables are one narrow row per candidate, so
-    * broadcasting them beats shuffled sort-merge joins — but only while
-    * the candidate set is genuinely small. On an adversarially
-    * duplicate-heavy corpus the LSH/prefix candidate set is unbounded,
-    * and an unconditional broadcast hint risks a driver OOM where a
-    * shuffle join degrades gracefully. The pair frame is already
-    * materialized (eager localCheckpoint) when this runs, so counting it
-    * is a cached-partition scan, not a recompute; past the cap every
-    * verification-tail hint is dropped and Spark's cost-based planner
-    * picks the strategy. (The streaming per-batch path keeps
-    * unconditional hints instead: its candidate set is O(batch × bucket)
-    * by construction and a per-micro-batch count action would cost more
-    * than the insurance buys — see [[deltaNearDupsFromSketch]].)
-    */
-  private val BroadcastPairCap = 1000000L
-  private def candBroadcaster(materializedCands: DataFrame): DataFrame => DataFrame =
-    if (materializedCands.count() <= BroadcastPairCap) broadcast _
-    else identity[DataFrame] _
-
-  /** Separate, smaller cap for broadcasting candidate-pruned SHINGLE
-    * rows (r18 advice): a (doc_id, shingle) row carries the shingle
-    * STRING (~40–60 framed bytes vs ~16 for a slim id pair), so reusing
-    * BroadcastPairCap admitted a ~4× larger broadcast than the pair
-    * guard was sized for. 250k shingle rows ≈ the byte budget 1M pair
-    * rows was calibrated to. */
-  private val BroadcastShingleRowCap = 250000L
-
   /** Session-pinned sketch surface: the (shingle table, 16-hash minhash
     * signature table) pair memoized per (session, corpus) — the persisted
     * sketch index a production corpus maintains alongside its snapshots.
@@ -545,7 +516,8 @@ object Dedup {
       // probes the session-pinned sketch index (see sketchSurface);
       // minhashLsh carries the family's honest build cost in the bench
       val (sh, mh) = sketchSurface(s, dir)
-      val cands = lshCandsFromSketch(s, dir) // checkpointed; probed 3× below
+      // the candidate pairs are probed 3× below
+      val Guarded(cands, _, bc) = BroadcastGuard(lshCandsFromSketch(s, dir), PairRowCap)
       // The whole exact side is scoped to CANDIDATE DOCUMENTS before any
       // further work: one broadcast semi-join prunes the shingle table to
       // the docs the LSH stage surfaced (at scale: orders of magnitude
@@ -554,7 +526,6 @@ object Dedup {
       // the output is bit-identical — but the 3 full-shingle-table
       // shuffles the unpruned form paid (inter ×2, sz) become shuffles of
       // the pruned table (r5: 11.0 s → this is the round-6 hotspot fix).
-      val bc = candBroadcaster(cands) // size-guarded broadcast (r8 advice)
       val candDocs = cands.select(col("ia").as("doc_id"))
         .union(cands.select(col("ib").as("doc_id"))).distinct()
       val shC = sh.join(bc(candDocs), Seq("doc_id"))
@@ -634,13 +605,12 @@ object Dedup {
       val (sh, mh) = sketchSurface(s, dir)
       val bands = bandsOf(mh)
       val isNew = col("doc_id") % 10 === 0
-      val cands = bands.filter(isNew).as("n")
+      // the candidate pairs are probed 2× (candDocs, normalized pair key)
+      val Guarded(cands, _, bc) = BroadcastGuard(bands.filter(isNew).as("n")
         .join(bands.filter(!isNew).as("o"),
           col("n.band") === col("o.band") && col("n.bkey") === col("o.bkey"))
         .select(col("n.doc_id").as("new_id"), col("o.doc_id").as("old_id"))
-        .distinct()
-        .localCheckpoint(true)  // probed 2× (candDocs, normalized pair key)
-      val bc = candBroadcaster(cands) // size-guarded broadcast (r8 advice)
+        .distinct(), PairRowCap)
       val candDocs = cands.select(col("new_id").as("doc_id"))
         .union(cands.select(col("old_id").as("doc_id"))).distinct()
       val shC = sh.join(bc(candDocs), Seq("doc_id"))
@@ -854,7 +824,7 @@ object Dedup {
     // any near-dup's batch-side doc has shingles by construction, so the
     // batch ids seen in bsh suffice for orientation recovery.
     // Broadcasts here stay UNCONDITIONAL (unlike the batch tails'
-    // candBroadcaster guard): the candidate set is O(batch x bucket) by
+    // BroadcastGuard): the candidate set is O(batch x bucket) by
     // construction, and a per-micro-batch count action would cost more
     // than the insurance buys.
     val deltaIds = bsh.select(col("doc_id").as("did")).distinct()
@@ -1266,7 +1236,9 @@ object Dedup {
 
   /** LSH candidate pairs against the session-pinned sketch (the probe
     * path shared with [[minhashEstimateQuality]] and CrossSourceSpec;
-    * [[minhashLsh]] remains the family's honest-build gate).
+    * [[minhashLsh]] remains the family's honest-build gate). Returned
+    * unmaterialized: multi-consumer callers materialize it through
+    * [[BroadcastGuard]].
     */
   private[operators] def lshCandsFromSketch(s: SparkSession, dir: String): DataFrame = {
     val (_, mh) = sketchSurface(s, dir)
@@ -1276,7 +1248,6 @@ object Dedup {
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
       .distinct()
-      .localCheckpoint(true) // tiny LSH output; joined twice below
   }
 
   /** WHO duplicates WHOM: near-dup pair mass per unordered source pair.
@@ -1297,8 +1268,7 @@ object Dedup {
   val crossSourceAttribution: QueryDef = QueryDef(
     "dedup_cross_source_attribution",
     (s, dir) => {
-      val cands = lshCandsFromSketch(s, dir)
-      val bc = candBroadcaster(cands)
+      val Guarded(cands, _, bc) = BroadcastGuard(lshCandsFromSketch(s, dir), PairRowCap)
       val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
       bc(cands)
         .join(src.as("da"), col("ia") === col("da.doc_id"))
@@ -1331,10 +1301,9 @@ object Dedup {
     * the size-guarded broadcaster — the ONE dup-exposure set shared by
     * the per-source rate query and the data card. */
   private[operators] def dupDocIdsGuarded(s: SparkSession, dir: String): DataFrame = {
-    val cands = lshCandsFromSketch(s, dir)
-    val ids = cands.select(col("ia").as("doc_id"))
-      .union(cands.select(col("ib").as("doc_id"))).distinct()
-    candBroadcaster(cands)(ids)
+    val Guarded(cands, _, bc) = BroadcastGuard(lshCandsFromSketch(s, dir), PairRowCap)
+    bc(cands.select(col("ia").as("doc_id"))
+      .union(cands.select(col("ib").as("doc_id"))).distinct())
   }
 
   /** SQL twin of [[dupDocIdsGuarded]] (expects the `cand` CTE in scope). */
@@ -1508,10 +1477,9 @@ object Dedup {
     "pipeline_span_dedup_cut",
     (s, dir) => {
       // materialized for the coverage join AND the size-guarded broadcast
-      // decision (candBroadcaster counts it; a dup-heavy corpus can make
-      // the span set arbitrarily large — same guard as the LSH tails)
-      val spans = gramSpans(s, dir).localCheckpoint(true)
-      val bc = candBroadcaster(spans)
+      // decision (a dup-heavy corpus can make the span set arbitrarily
+      // large — same guard as the LSH tails)
+      val Guarded(spans, _, bc) = BroadcastGuard(gramSpans(s, dir), PairRowCap)
       val words = Tables.documents(s, dir)
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), split(col("text"), " ").as("ts"))
@@ -1763,8 +1731,7 @@ object Dedup {
     "dedup_minhash_bbit_estimate",
     (s, dir) => {
       val (_, mh) = sketchSurface(s, dir)
-      val cands = lshCandsFromSketch(s, dir)
-      val bc = candBroadcaster(cands)
+      val Guarded(cands, _, bc) = BroadcastGuard(lshCandsFromSketch(s, dir), PairRowCap)
       def bit(side: String, i: Int) =
         expr(s"(instr('0123456789abcdef', substring($side.h$i, 32, 1)) - 1) % 2")
       val bitMatch = (0 until 16)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import BroadcastGuard.{Guarded, SlimRowCap}
 
 /** Iterative graph analytics as unrolled keyed joins — the execution
   * pattern (Pregel-style superstep = join + groupBy) that label
@@ -27,22 +28,6 @@ import graft.{QueryDef, Tables}
 object GraphIterative {
 
   private val graphCache = new graft.SessionCache[DataFrame]
-
-  /** Row-count guard for broadcasting NODE-proportional frames in the
-    * iterative queries (pagerank contribs, BFS frontier/visited, the
-    * link-prediction seed/candidate frames) — the candBroadcaster
-    * pattern (r8 advice; r18 verdict item 2). Spark honors an explicit
-    * broadcast() hint regardless of size, so past ~8 GB / driver memory
-    * an unguarded hint hard-fails instead of degrading; within the cap
-    * the hint ships the slim node rows (~16 bytes framed), past it the
-    * hint drops and the join stays keyed (the bucketed-edge-table
-    * layout at 100 TB — identical algebra). Counts are taken off
-    * checkpointed/pinned frames or maintained incrementally, never by
-    * re-running a corpus-sized subtree.
-    */
-  private[operators] val NodeBroadcastCap = 4000000L
-  private[operators] def nodeBc(n: Long): DataFrame => DataFrame =
-    if (n <= NodeBroadcastCap) broadcast _ else identity[DataFrame] _
 
   /** THE single edge-list definition (shared-single-definition
     * discipline): distinct supplier↔part pairs mapped to disjoint even/
@@ -111,18 +96,18 @@ object GraphIterative {
       // hint flips it, so per superstep only the rank table moves and
       // the big operand is scanned in place — measured 1.9 → 1.5 s).
       // Deployment note: contrib is O(nodes); the broadcast is gated on
-      // the node count ([[NodeBroadcastCap]], r18 verdict item 2) — past
+      // the node count ([[BroadcastGuard]], r18 verdict item 2) — past
       // the cap the hint drops and the superstep becomes a shuffled join
       // against a bucketed-by-src edge table — the standard Pregel
-      // layout — with identical algebra. ONE count of the checkpointed
-      // degree table decides all three supersteps: every superstep's
-      // contrib has exactly |deg| rows (iteration output re-keys on dst,
-      // and in the symmetric graph every node is a dst).
+      // layout — with identical algebra. ONE guard of the degree table
+      // decides all three supersteps: every superstep's contrib has
+      // exactly |deg| rows (iteration output re-keys on dst, and in the
+      // symmetric graph every node is a dst).
       val edges = buildEdges(s, dir)
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .select(col("src").as("node"), col("deg"))
-        .localCheckpoint()
-      val contribBc = nodeBc(deg.count())
+      val Guarded(deg, _, contribBc) = BroadcastGuard(
+        edges.groupBy("src").agg(count(lit(1)).as("deg"))
+          .select(col("src").as("node"), col("deg")),
+        SlimRowCap)
       var ranks = deg.select(col("node"), lit(1000000L).as("rank"))
       for (_ <- 1 to 3) {
         val contrib = ranks.join(deg, "node")
@@ -185,29 +170,28 @@ object GraphIterative {
         .select((col("s_suppkey") * 2).as("node"))
         // seeds outside the graph (suppliers with no lineitem) stay hop-0
         // members of the visited set but expand nothing — keep them
-      var visited = seeds.withColumn("hop", lit(0))
-      var frontier = seeds
       // broadcast the node-sized sides (guide §3.1, the pagerank r18
       // lesson): frontier and visited are O(reached nodes); un-hinted,
       // the RDD-backed edge surface carries no stats and the planner
       // shuffled the 1.1M-row edge list against them each hop
-      // (measured 1.6-1.8 → 1.0-1.2 s at sf0.1). Both hints are gated
-      // on [[NodeBroadcastCap]] (r18 verdict item 2); the counts are
-      // maintained incrementally — seeds once (dimension-sized scan),
-      // then each hop's frontier count off its own eager checkpoint —
-      // so no corpus-sized frame is ever re-counted. Past the cap the
-      // hints drop and the hop becomes a keyed join against the
-      // bucketed-by-src edge table — identical algebra.
-      var frontierCount = seeds.count()
-      var visitedCount = frontierCount
+      // (measured 1.6-1.8 → 1.0-1.2 s at sf0.1). Every frontier (the
+      // seeds included) goes through [[BroadcastGuard]], and the visited
+      // count is the running sum of the frontier counts, so no frame is
+      // ever counted twice. Past the cap the hints drop and the hop
+      // becomes a keyed join against the bucketed-by-src edge table —
+      // identical algebra.
+      var frontier = BroadcastGuard(seeds, SlimRowCap)
+      var visited = frontier.df.withColumn("hop", lit(0))
+      var visitedCount = frontier.rows
       for (h <- 1 to 3) {
-        frontier = edges.join(nodeBc(frontierCount)(frontier), edges("src") === frontier("node"))
-          .select(col("dst").as("node")).distinct()
-          .join(nodeBc(visitedCount)(visited.select("node")), Seq("node"), "left_anti")
-          .localCheckpoint()
-        frontierCount = frontier.count()
-        visitedCount += frontierCount
-        visited = visited.unionByName(frontier.withColumn("hop", lit(h)))
+        frontier = BroadcastGuard(
+          edges.join(frontier.hint(frontier.df), edges("src") === frontier.df("node"))
+            .select(col("dst").as("node")).distinct()
+            .join(BroadcastGuard.hint(visitedCount, SlimRowCap)(visited.select("node")),
+              Seq("node"), "left_anti"),
+          SlimRowCap)
+        visitedCount += frontier.rows
+        visited = visited.unionByName(frontier.df.withColumn("hop", lit(h)))
       }
       visited
         .groupBy("hop")
@@ -281,13 +265,6 @@ object GraphIterative {
     s"""flatten(transform($setCol, (x, i) ->
         transform(slice($setCol, i + 2, size($setCol)), y -> struct(x AS a, y AS b))))""")
 
-  /** Size guard for broadcasting the oriented out-adjacency arrays in
-    * [[triangleCount]]'s census (array mass = |oriented edges|): within
-    * the cap the two adjacency joins broadcast (~16 bytes/edge framed);
-    * past it the hints drop and the planner keys both joins — the
-    * candBroadcaster pattern (r8 advice). */
-  private val AdjBroadcastCap = 4000000L
-
   private[operators] def buildCoOrderEdges(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey"))
@@ -324,16 +301,18 @@ object GraphIterative {
       val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("d"))
         .localCheckpoint(true)
-      // orient each edge from the (degree, id)-smaller endpoint
-      val ori = und
+      // orient each edge from the (degree, id)-smaller endpoint; the
+      // guard's count of the oriented edges (= the adjacency array mass)
+      // decides the census broadcasts below
+      val Guarded(ori, _, adjBc) = BroadcastGuard(und
         .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
         .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
         .select(
           when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
             col("a")).otherwise(col("b")).as("u"),
           when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-            col("b")).otherwise(col("a")).as("w"))
-        .localCheckpoint(true)
+            col("b")).otherwise(col("a")).as("w")),
+        SlimRowCap)
       // Closure check = the EDGE ITERATOR over the oriented DAG: each
       // oriented edge (u,w) contributes |N⁺(u) ∩ N⁺(w)| — every triangle
       // a→b→c (+a→c) is counted exactly once, at its (a,b) edge with
@@ -347,13 +326,11 @@ object GraphIterative {
       // orientation) and the intersection runs codegen-side inside the
       // edge scan. Measured 4.6 → 2.8 s full-query at sf0.1 (the census
       // half ~2.4 → ~0.7 s; the rest is the honest surface build).
-      // The adjacency side is broadcast behind the same size guard as
-      // Dedup.candBroadcaster: past the cap the hints drop and both
-      // joins stay keyed equi-joins (shuffle by u / by w) — the standard
-      // bucketed-adjacency layout at 100 TB, identical algebra.
+      // The adjacency side is broadcast behind [[BroadcastGuard]]: past
+      // the cap the hints drop and both joins stay keyed equi-joins
+      // (shuffle by u / by w) — the standard bucketed-adjacency layout
+      // at 100 TB, identical algebra.
       val adj = ori.groupBy(col("u")).agg(collect_list(col("w")).as("ns"))
-      val adjBc: DataFrame => DataFrame =
-        if (ori.count() <= AdjBroadcastCap) broadcast _ else identity[DataFrame] _
       val tri = ori
         .join(adjBc(adj.select(col("u"), col("ns").as("nu"))), Seq("u"))
         .join(adjBc(adj.select(col("u").as("w"), col("ns").as("nw"))), Seq("w"))
@@ -492,24 +469,21 @@ object GraphIterative {
       // exchanging+sorting the big side — measured 2.1-2.3 → 1.9-2.1 s
       // at sf0.1, and the exchanges of the adjacency/degree tables are
       // gone from the plan). Both seed-side frames are unbounded on
-      // hub-heavy graphs, so the hints are gated on [[NodeBroadcastCap]]
-      // (r18 verdict item 2): seedAdj and cn are eagerly checkpointed
-      // (each feeds two consumers anyway — seedAdj the expansion and the
-      // anti-join, cn the count and the join chain) and their counts
-      // decide the hints; past the cap the joins stay keyed.
-      val seedAdj = adj.filter(col("u") < 10)
-        .localCheckpoint(true)
-      val seedBc = nodeBc(seedAdj.count())
+      // hub-heavy graphs, so both go through [[BroadcastGuard]] (r18
+      // verdict item 2): each feeds two consumers anyway (seedAdj the
+      // expansion and the anti-join, cn its count and the join chain)
+      // and its count decides the hints; past the cap the joins stay
+      // keyed.
+      val Guarded(seedAdj, _, seedBc) = BroadcastGuard(adj.filter(col("u") < 10), SlimRowCap)
       val twoHop = seedBc(seedAdj.as("e1"))
         .join(adj.as("e2"), col("e1.v") === col("e2.u"))
         .select(col("e1.u").as("seed"), col("e2.v").as("cand"))
         .filter(col("seed") =!= col("cand"))
-      val cn = twoHop
+      val Guarded(cn, _, cnBc) = BroadcastGuard(twoHop
         .join(seedBc(seedAdj.select(col("u").as("seed"), col("v").as("cand"))),
           Seq("seed", "cand"), "left_anti")
-        .groupBy("seed", "cand").agg(count(lit(1)).as("common_neighbors"))
-        .localCheckpoint(true)
-      val cnBc = nodeBc(cn.count())
+        .groupBy("seed", "cand").agg(count(lit(1)).as("common_neighbors")),
+        SlimRowCap)
       val w = Window.partitionBy("seed")
         .orderBy(desc("common_neighbors"), asc("cand"))
       cnBc(cnBc(cn)

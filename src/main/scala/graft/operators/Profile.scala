@@ -1,19 +1,20 @@
 package graft.operators
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.SparkSession
 
-/** Scratch profiling main — contents vary per investigation (currently:
-  * round-18 batch-2 optimization A/Bs — (a) kcore/bfs/ppr iterative
-  * joins: un-hinted vs broadcast-the-node-sized-side [the pagerank
-  * batch-1 lesson]; (b) triangle census: wedge-explosion+bloom vs
-  * adjacency-array intersection; (c) kmeans assignment: crossJoin(8)+
-  * groupBy(vec_id) vs map-side array_min fold; (d) subsample-merge
-  * quantile phase attribution; (e) generic declared-query timer `q`.
-  * Prior rounds' measured numbers live in DESIGN.md / OPTIMIZATION_*.md.)
+/** Declared-query timer: times named `SparkEntry` queries, each on a
+  * settled session (pinned surfaces swept, GC run), for a number of
+  * passes.
+  *
+  *     Profile q <n_passes> <name>[,name...]
+  *
+  * Reads the tables from `$SPARK_GRAFT_SF_DIR` on
+  * `local[$SPARK_GRAFT_CPUS]` (default 32 cores).
+  * Prior rounds' measured numbers live in DESIGN.md / OPTIMIZATION_*.md.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
+    require(args.length == 3 && args(0) == "q",
+      "usage: Profile q <n_passes> <name>[,name...]")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
@@ -22,402 +23,16 @@ object Profile {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[prof] $name%-52s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-    def settle(): Unit = {
-      graft.PinnedStorage.sweep(spark, blocking = true)
-      System.gc()
-    }
-    val what = args.headOption.getOrElse("all")
-
-    if (what == "q") {
-      // generic declared-query timer: Profile q <n_passes> <name>[,name...]
-      val passes = args(1).toInt
-      val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-      for (pass <- 1 to passes) {
-        println(s"-- q pass $pass")
-        names.foreach { n =>
-          settle()
-          t(n) { graft.SparkEntry.queries(n)(spark, dir).count() }
-        }
-      }
-    }
-
-    if (what == "kcore") {
-      // --- kcore: un-hinted semi-joins vs broadcast(keep) --------------
-      for (pass <- 1 to 3) {
-        println(s"-- kcore pass $pass")
-        settle()
-        t("declared graph_kcore_peel") {
-          GraphIterative.kcorePeel.run(spark, dir).count()
-        }
-        settle()
-        t("variant: broadcast(keep) semi-joins") {
-          val k = 3
-          var edges = GraphIterative.graphSurface(spark, dir)
-          val rounds = (1 to 3).map { round =>
-            val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-            val keep = deg.filter(col("d") >= k).select(col("src").as("v"))
-              .localCheckpoint(true)
-            edges = edges
-              .join(broadcast(keep.select(col("v").as("src"))), Seq("src"), "left_semi")
-              .join(broadcast(keep.select(col("v").as("dst"))), Seq("dst"), "left_semi")
-              .select("src", "dst")
-              .localCheckpoint(true)
-            keep.agg(
-              count(when(col("v") % 2 === 0, 1)).as("n_suppliers"),
-              count(when(col("v") % 2 === 1, 1)).as("n_parts"))
-              .crossJoin(broadcast(edges.agg(
-                expr("COUNT(1) DIV 2").as("n_edges_remaining"))))
-              .select(lit(round.toLong).as("round"), col("n_suppliers"),
-                col("n_parts"), col("n_edges_remaining"))
-          }
-          rounds.reduce(_.unionByName(_)).orderBy("round").count()
-        }
-      }
-    }
-
-    if (what == "bfs") {
-      for (pass <- 1 to 3) {
-        println(s"-- bfs pass $pass")
-        settle()
-        t("declared graph_bfs_reachability") {
-          GraphIterative.bfsReachability.run(spark, dir).count()
-        }
-        settle()
-        t("variant: broadcast(frontier)/broadcast(visited)") {
-          val edges = GraphIterative.graphSurface(spark, dir)
-          val seeds = graft.Tables.supplier(spark, dir)
-            .filter(col("s_nationkey") === 1)
-            .select((col("s_suppkey") * 2).as("node"))
-          var visited = seeds.withColumn("hop", lit(0))
-          var frontier = seeds
-          for (h <- 1 to 3) {
-            frontier = edges.join(broadcast(frontier), edges("src") === frontier("node"))
-              .select(col("dst").as("node")).distinct()
-              .join(broadcast(visited.select("node")), Seq("node"), "left_anti")
-              .localCheckpoint()
-            visited = visited.unionByName(frontier.withColumn("hop", lit(h)))
-          }
-          visited.groupBy("hop")
-            .agg(count(when(col("node") % 2 === 0, 1)).as("n_suppliers"),
-              count(when(col("node") % 2 === 1, 1)).as("n_parts"))
-            .select(col("hop").cast("long").as("hop"), col("n_suppliers"), col("n_parts"))
-            .orderBy("hop").count()
-        }
-      }
-    }
-
-    if (what == "ppr") {
-      for (pass <- 1 to 3) {
-        println(s"-- ppr pass $pass")
-        settle()
-        t("declared graph_ppr_seeded") {
-          GraphIterative.pprSeeded.run(spark, dir).count()
-        }
-        settle()
-        t("variant: broadcast(contrib) + union-agg ranks") {
-          val edges = GraphIterative.graphSurface(spark, dir)
-          val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-            .select(col("src").as("node"), col("deg"))
-            .localCheckpoint(false)
-          val scalars = deg.agg(count(lit(1)).as("ntot")).crossJoin(
-            broadcast(deg.join(graft.Tables.supplier(spark, dir)
-                .filter(col("s_suppkey") <= 5)
-                .select((col("s_suppkey") * 2).as("node")), "node")
-              .agg(count(lit(1)).as("nseeds"))))
-          val tele = deg.join(graft.Tables.supplier(spark, dir)
-              .filter(col("s_suppkey") <= 5)
-              .select((col("s_suppkey") * 2).as("node")), "node")
-            .crossJoin(broadcast(scalars))
-            .select(col("node"), expr("(150000 * ntot) DIV nseeds").as("t"))
-            .localCheckpoint(false)
-          var ranks = tele.select(col("node"), col("t").as("rank"))
-          for (_ <- 1 to 3) {
-            val contrib = ranks.join(deg, "node")
-              .select(col("node"), expr("rank DIV deg").as("c"))
-            val spread = edges.join(broadcast(contrib), edges("src") === contrib("node"))
-              .groupBy(col("dst").as("node"))
-              .agg(expr("(85 * SUM(c)) DIV 100").as("sp"))
-            ranks = tele.select(col("node"), col("t").as("m"))
-              .unionByName(spread.select(col("node"), col("sp").as("m")))
-              .groupBy("node").agg(sum(col("m")).as("rank"))
-          }
-          ranks.select(
-              when(col("node") % 2 === 0, lit("supplier")).otherwise(lit("part")).as("node_type"),
-              expr("node DIV 2").as("key"), col("node").as("node_id"), col("rank"))
-            .orderBy(desc("rank"), asc("node_id")).limit(20).count()
-        }
-      }
-    }
-
-    if (what == "tri") {
-      // --- triangle census: wedge explosion + bloom vs adjacency arrays
-      graft.functions.BloomExpressions.register(spark)
-      for (pass <- 1 to 3) {
-        println(s"-- tri pass $pass")
-        settle()
-        t("declared graph_triangle_count") {
-          GraphIterative.triangleCount.run(spark, dir).count()
-        }
-        settle()
-        t("variant: adjacency-array intersection census") {
-          val und = GraphIterative.buildCoOrderEdges(spark, dir)
-          val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
-            .groupBy("v").agg(count(lit(1)).as("d"))
-            .localCheckpoint(true)
-          val ori = und
-            .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
-            .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
-            .select(
-              when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-                col("a")).otherwise(col("b")).as("u"),
-              when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-                col("b")).otherwise(col("a")).as("w"))
-            .localCheckpoint(true)
-          val adj = ori.groupBy(col("u")).agg(collect_list(col("w")).as("ns"))
-          val tri = ori
-            .join(broadcast(adj.select(col("u"), col("ns").as("nu"))), Seq("u"))
-            .join(broadcast(adj.select(col("u").as("w"), col("ns").as("nw"))), Seq("w"))
-            .agg(sum(size(array_intersect(col("nu"), col("nw")))).cast("long")
-              .as("n_triangles"))
-          val scalars = deg.agg(
-            count(lit(1)).as("n_nodes"),
-            expr("SUM(d) DIV 2").as("n_edges"),
-            expr("SUM(d * (d - 1) DIV 2)").as("n_wedges"))
-          scalars.crossJoin(broadcast(tri))
-            .select(col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),
-              expr("""CAST((CAST(3 AS DECIMAL(38,0)) * n_triangles * 1000000)
-                      DIV n_wedges AS BIGINT)""").as("closure_ppm")).count()
-        }
-      }
-    }
-
-    if (what == "km") {
-      for (pass <- 1 to 3) {
-        println(s"-- km pass $pass")
-        settle()
-        t("declared ann_ivf_kmeans_train") {
-          AnnSearch.kmeansTrain.run(spark, dir).count()
-        }
-        settle()
-        t("variant: map-side array_min assignment") {
-          val kC = 8
-          val vecs = graft.Tables.embeddings(spark, dir)
-            .select(col("vec_id"),
-              expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-            .localCheckpoint(true)
-          val seeds = TwoStageOrder.kSmallestRows(
-              vecs.select(md5(col("vec_id").cast("string").cast("binary")).as("h"),
-                col("vec_id"), col("v")), "h", kC)
-            .withColumn("cid", row_number().over(Window.orderBy(asc("h"))).cast("long"))
-            .select(col("cid"), col("v").as("c"))
-          def centsRow(cents: DataFrame): DataFrame =
-            cents.agg(sort_array(collect_list(struct(col("cid"), col("c")))).as("cs"))
-          def assign(cr: DataFrame): DataFrame =
-            vecs.crossJoin(broadcast(cr))
-              .withColumn("m", expr(
-                """array_min(transform(cs, s -> struct(
-                  |  aggregate(zip_with(v, s.c, (x, y) -> (x - y) * (x - y)),
-                  |            0.0D, (a, b) -> a + b) AS dist2,
-                  |  s.cid AS cid)))""".stripMargin))
-              .select(col("vec_id"), col("m.cid").as("cid"),
-                col("m.dist2").as("dist2"), col("v"))
-          def update(assigned: DataFrame): DataFrame =
-            assigned
-              .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-              .groupBy("cid", "pos")
-              .agg((sum(col("x").cast("decimal(20,10)")).cast("double") / count(lit(1)))
-                .as("cx"))
-              .groupBy("cid")
-              .agg(expr("transform(array_sort(collect_list(struct(pos, cx))), s -> s.cx)")
-                .as("c"))
-          val c1 = centsRow(update(assign(centsRow(seeds))))
-          val c2 = centsRow(update(assign(c1)))
-          assign(c2)
-            .groupBy("cid")
-            .agg(count(lit(1)).as("n_vectors"),
-              sum(expr("CAST(FLOOR(dist2 * 1000000.0D) AS BIGINT)")).as("inertia_e6"))
-            .select(col("cid").as("cluster"), col("n_vectors"), col("inertia_e6"))
-            .orderBy("cluster").count()
-        }
-      }
-    }
-
-    if (what == "sqm") {
-      // --- subsample-merge quantile: phase attribution ------------------
-      import graft.Tables
-      for (pass <- 1 to 3) {
-        println(s"-- sqm pass $pass")
-        settle()
-        t("declared sketch_quantile_subsample_merge") {
-          SketchOps.quantileSubsampleMerge.run(spark, dir).count()
-        }
-        settle()
-        val QP = 32; val QM = 64
-        val base = t("  phase: base checkpoint") {
-          Tables.lineitem(spark, dir)
-            .select(
-              expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)").as("v"),
-              col("l_orderkey").as("okey"), col("l_linenumber").as("lnum"))
-            .localCheckpoint(true)
-        }
-        val kept = t("  phase: pid window subsample + checkpoint") {
-          base.withColumn("pid", expr(ScalePatterns.hexIntSpark(
-              "md5(CAST(CONCAT(CAST(okey AS STRING), ':', CAST(lnum AS STRING)) AS BINARY))"))
-              % QP)
-            .withColumn("lrank", row_number().over(
-              Window.partitionBy("pid").orderBy(asc("v"), asc("okey"), asc("lnum"))))
-            .filter(expr(s"(lrank - 1) % $QM = 0"))
-            .select("v", "okey", "lnum")
-            .localCheckpoint(true)
-        }
-        t("  phase: pooled rank + sel") {
-          val pooled = TwoStageOrder.withGlobalRank(kept,
-            Seq(col("v").asc, col("okey").asc, col("lnum").asc), "j", "k_tot")
-          val qFrame = base.agg(count(lit(1)).as("n_rows"))
-            .select(col("n_rows"),
-              explode(array(Seq(25, 50, 75, 90, 99).map(lit): _*)).as("q_pct"))
-            .withColumn("target_rank", expr("(q_pct * n_rows + 99) DIV 100"))
-            .withColumn("j_star", expr(s"(target_rank + $QM - 2) DIV $QM + 1"))
-          pooled.join(broadcast(qFrame),
-              col("j") === least(col("j_star"), col("k_tot"))).count()
-        }
-        t("  phase: audit pass (crossJoin x5 + agg)") {
-          // stand-in: the x5 expansion + grouped count-below over base
-          base.crossJoin(broadcast(
-              base.limit(5).select(col("v").as("s_v"), col("okey").as("s_okey"),
-                col("lnum").as("s_lnum"), monotonically_increasing_id().as("q"))))
-            .groupBy("q", "s_v")
-            .agg(sum(when(col("v") < col("s_v"), 1L).otherwise(0L)).as("below"))
-            .count()
-        }
-      }
-    }
-
-    if (what == "zx") {
-      // --- zorder new-form phase attribution ----------------------------
-      for (pass <- 1 to 3) {
-        println(s"-- zx pass $pass")
-        settle()
-        val raw = graft.Tables.orders(spark, dir)
-          .select(col("o_orderkey"),
-            col("o_custkey").cast("bigint").as("ck"),
-            datediff(col("o_orderdate"), lit("1992-01-01")).cast("bigint").as("oday"))
-        val stats = raw.agg(
-          min(col("ck")).as("ckmin"), max(col("ck")).as("ckmax"),
-          min(col("oday")).as("odmin"), max(col("oday")).as("odmax"))
-        val base = t("  phase: base checkpoint") {
-          raw.crossJoin(broadcast(stats))
-            .withColumn("cs", floor((col("ck") - col("ckmin")) * lit(1023.0)
-              / (col("ckmax") - col("ckmin"))).cast("bigint"))
-            .withColumn("os", floor((col("oday") - col("odmin")) * lit(1023.0)
-              / (col("odmax") - col("odmin"))).cast("bigint"))
-            .withColumn("z", expr(ScalePatterns.zSpark("cs", "os", 10)))
-            .localCheckpoint(true)
-        }
-        t("  phase: count") { base.count() }
-        val cuts = t("  phase: cuts (bracket+selection)") {
-          val c = TwoStageOrder.orderStatisticTuples(base,
-            Seq(("z", Seq("o_orderkey"), TwoStageOrder.ntileCutTargets(16, "zb")),
-                ("oday", Seq("o_orderkey"), TwoStageOrder.ntileCutTargets(16, "db"))))
-          c.localCheckpoint(true)
-        }
-        t("  phase: census") {
-          base.crossJoin(broadcast(cuts))
-            .select(explode(array(
-              struct(lit("zorder").as("layout"),
-                TwoStageOrder.bucketByCuts(16, "zb", "z", "o_orderkey",
-                  col("z"), col("o_orderkey")).as("bucket"),
-                col("ck"), col("oday")),
-              struct(lit("datesort").as("layout"),
-                TwoStageOrder.bucketByCuts(16, "db", "oday", "o_orderkey",
-                  col("oday"), col("o_orderkey")).as("bucket"),
-                col("ck"), col("oday")))).as("e"))
-            .select(col("e.layout").as("layout"), col("e.bucket").as("bucket"),
-              col("e.ck").as("ck"), col("e.oday").as("oday"))
-            .groupBy(col("layout"), col("bucket"))
-            .agg(count(lit(1)).as("n_rows"),
-              min(col("ck")).as("min_cust"), max(col("ck")).as("max_cust"),
-              min(col("oday")).cast("int").as("min_day"),
-              max(col("oday")).cast("int").as("max_day"))
-            .orderBy("layout", "bucket").count()
-        }
-      }
-    }
-    if (what == "er") {
-      // er_customer_components: the perRecord BUILD plan (hidden from
-      // Explain by the eager checkpoint) — proves the shuffle_hash hints
-      val (_, matches) = EntityResolution.erMatches(spark, dir)
-      val comp = EntityResolution.blockComponents(matches)
-      val nations = matches.select(col("ka").as("doc_id"), col("nation"))
-        .union(matches.select(col("kb").as("doc_id"), col("nation")))
-        .distinct()
-      val greedy = matches.groupBy(col("kb").as("doc_id"))
-        .agg(count(lit(1)).as("n_smaller"))
-      val perRecord = nations
-        .join(comp.hint("shuffle_hash"), Seq("doc_id"))
-        .join(greedy.hint("shuffle_hash"), Seq("doc_id"), "left_outer")
-        .select(col("nation").cast("long").as("nation"), col("doc_id"),
-          col("comp"), col("n_smaller").isNull.as("greedy_kept"))
-      println("-- perRecord build plan (pre-checkpoint) --")
-      println(perRecord.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    }
-
-    if (what == "sdm") {
-      // --- stream_delta_dedup_minhash: phase attribution + per-batch plan
-      import graft.Tables
-      for (pass <- 1 to 3) {
-        println(s"-- sdm pass $pass")
-        settle()
-        t("declared stream_delta_dedup_minhash") {
-          Dedup.streamDeltaDedup.run(spark, dir).count()
-        }
-        settle()
-        val (sh, mh) = t("  phase: sketchSurface (pinned)") {
-          Dedup.sketchSurface(spark, dir)
-        }
-        val isNew = col("doc_id") % 10 === 0
-        val corpusSh = sh.filter(!isNew)
-        val corpusBands = Dedup.bandsOf(mh).filter(!isNew)
-        val deltaDocs = Tables.documents(spark, dir).filter(isNew)
-          .select("doc_id", "text")
-        val base = graft.TmpDirs.create("graft-sdmprof")
-        t("  phase: two drop writes (ParallelStage)") {
-          graft.ParallelStage(
-            () => deltaDocs.filter(expr("(doc_id div 10) % 2 = 0"))
-              .coalesce(1).write.parquet(s"$base/in/drop0"),
-            () => deltaDocs.filter(expr("(doc_id div 10) % 2 = 1"))
-              .coalesce(1).write.parquet(s"$base/in/drop1"))
-        }
-        t("  phase: stream run (2 micro-batches)") {
-          val arrivals = spark.readStream.schema(deltaDocs.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
-          graft.streaming.DeltaDedupStream.start(spark, arrivals, corpusSh,
-            corpusBands, s"$base/pairs", s"$base/ckpt").awaitTermination()
-        }
-        t("  phase: read-back + orderBy + count") {
-          spark.read.parquet(s"$base/pairs")
-            .select("new_id", "old_id", "jaccard")
-            .orderBy("new_id", "old_id").count()
-        }
-        if (pass == 1 && args.length > 1 && args(1) == "plan") {
-          // the per-batch DAG, under the foreachBatch session conf
-          val batch0 = deltaDocs.filter(expr("(doc_id div 10) % 2 = 0"))
-            .localCheckpoint(true)
-          spark.conf.set("spark.sql.shuffle.partitions", "8")
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          val d = Dedup.deltaNearDups(batch0, corpusSh, corpusBands, eager = false)
-          println("-- per-batch plan --")
-          println(d.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-          spark.conf.set("spark.sql.shuffle.partitions", cpus)
-          spark.conf.set("spark.sql.adaptive.enabled", "true")
-        }
+    val passes = args(1).toInt
+    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
+    for (pass <- 1 to passes) {
+      println(s"-- q pass $pass")
+      names.foreach { n =>
+        graft.PinnedStorage.sweep(spark, blocking = true)
+        System.gc()
+        val t0 = System.nanoTime()
+        graft.SparkEntry.queries(n)(spark, dir).count()
+        println(f"[prof] $n%-52s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
       }
     }
     spark.stop()

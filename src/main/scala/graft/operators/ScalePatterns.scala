@@ -560,23 +560,23 @@ object ScalePatterns {
       // and the value emitted at each is vc alone — the multiset order
       // statistic of vc (the o_orderkey tiebreak decides which tied ROW
       // carries a rank, never which VALUE sits at it). So the quantile
-      // vector comes from TwoStageOrder.orderStatistics: two
-      // aggregation-only scans, ZERO data exchanges (r18; was: eager
-      // checkpoint + range exchange + offset join of the full order
-      // table). Cent values tie only within a price point (~1e7-value
-      // domain), far below the bracket's ε bound.
-      TwoStageOrder.orderStatistics(
+      // vector comes from TwoStageOrder.orderStatisticTuples with no tie
+      // columns: a count plus two aggregation-only scans, ZERO data
+      // exchanges (r18; was: eager checkpoint + range exchange + offset
+      // join of the full order table). Cent values tie only within a
+      // price point (~1e7-value domain), far below the bracket's ε bound.
+      val targets = Seq(
+        ("p50_cents", 0.5, "CAST(CEIL(0.5 * n) AS BIGINT)"),
+        ("p90_cents", 0.9, "CAST(CEIL(0.9 * n) AS BIGINT)"),
+        ("p99_cents", 0.99, "CAST(CEIL(0.99 * n) AS BIGINT)"),
+        ("p999_cents", 0.999, "CAST(CEIL(0.999 * n) AS BIGINT)"),
+        ("max_cents", 1.0, "n"))
+      TwoStageOrder.orderStatisticTuples(
           Tables.orders(s, dir)
             .select((col("o_totalprice").cast(D) * 100).cast("long").as("vc")),
-          "vc",
-          Seq(
-            ("p50_cents", 0.5, "CAST(CEIL(0.5 * n) AS BIGINT)"),
-            ("p90_cents", 0.9, "CAST(CEIL(0.9 * n) AS BIGINT)"),
-            ("p99_cents", 0.99, "CAST(CEIL(0.99 * n) AS BIGINT)"),
-            ("p999_cents", 0.999, "CAST(CEIL(0.999 * n) AS BIGINT)"),
-            ("max_cents", 1.0, "n")))
-        .select(col("n").as("n_orders"), col("p50_cents"), col("p90_cents"),
-          col("p99_cents"), col("p999_cents"), col("max_cents"))
+          Seq(("vc", Nil, targets)))
+        .select(col("n").as("n_orders") +: targets.map { case (o, _, _) =>
+          col(s"$o.vc").as(o) }: _*)
     },
     Some("""
       WITH cents AS (

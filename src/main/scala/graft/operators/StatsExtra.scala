@@ -245,15 +245,16 @@ object StatsExtra {
                                // O(days²) pair join ran twice
       // exact median WITHOUT ranking all ~n²/2 pair slopes: only ranks
       // (tot+1)/2 and (tot+2)/2 are ever read, so the two order
-      // statistics come from TwoStageOrder.orderStatistics — two
-      // aggregation-only passes over the checkpointed pair frame, zero
-      // full-width exchanges (r18; was: range exchange + checkpoint +
-      // offset join of the whole pair frame). avg of the two middle
-      // values is (v1+v2)/2 — bit-identical to AVG over the one or two
-      // median rows (odd tot: v1 = v2 and (v1+v1)/2 is IEEE-exact).
-      val med = TwoStageOrder.orderStatistics(pairs.select("slope"), "slope",
-          Seq(("v1", 0.5, "(n + 1) DIV 2"), ("v2", 0.5, "(n + 2) DIV 2")))
-        .select(((col("v1") + col("v2")) / 2.0).as("theil_sen_slope"))
+      // statistics come from TwoStageOrder.orderStatisticTuples — a
+      // count of the checkpointed pair frame plus two aggregation-only
+      // passes, zero full-width exchanges (r18; was: range exchange +
+      // checkpoint + offset join of the whole pair frame). avg of the
+      // two middle values is (v1+v2)/2 — bit-identical to AVG over the
+      // one or two median rows (odd tot: v1 = v2 and (v1+v1)/2 is
+      // IEEE-exact).
+      val med = TwoStageOrder.orderStatisticTuples(pairs.select("slope"),
+          Seq(("slope", Nil, Seq(("v1", 0.5, "(n + 1) DIV 2"), ("v2", 0.5, "(n + 2) DIV 2")))))
+        .select(((col("v1.slope") + col("v2.slope")) / 2.0).as("theil_sen_slope"))
       val stat = pairs
         .agg(sum(col("sgn")).as("mk_s"))
         .crossJoin(daily.agg(count(lit(1)).as("n_days")))

@@ -28,6 +28,10 @@ import org.apache.spark.sql.functions._
   *  - [[ntileExact]]: SQL-standard NTILE(t) from the global rank by the
   *    closed-form bucket formula (first n%t buckets get ⌈n/t⌉ rows) —
   *    a per-row expression over rank and total, no second pass.
+  *  - [[orderStatisticTuples]]: the exact rows at a FEW target ranks
+  *    (medians, tail quantiles, NTILE cuts) from aggregations alone —
+  *    the one order-statistic primitive; its scaladoc is the cost
+  *    contract.
   *  - [[kSmallest]]: the K smallest values (KMV sketch build) without
   *    ranking the full table: per-partition K-smallest under a
   *    (group, partition-id) window — every global top-K row survives
@@ -172,170 +176,89 @@ object TwoStageOrder {
            |END AS INT)""".stripMargin))
       .drop("__rank", "__ntot")
 
-  /** Exact multiset order statistics at a FEW target ranks — the
-    * replacement for "rank the whole table, then read k rows of it"
-    * when the consumer only probes a handful of ranks (the Theil–Sen
-    * median, tail quantiles): [[withGlobalRank]] pays one full-width
-    * range exchange plus a materialization so that EVERY row gets a
-    * rank; when only r₁..r_t are read, the exact value at each target
-    * rank can be found with ZERO data exchanges in two aggregation-only
-    * passes (guide §2.4 — remove shuffles outright):
-    *
-    *  1. bracket pass: n = COUNT(*) plus, per target, an
-    *     `approx_percentile(v, q ± 3ε, 1/ε)` value bracket [lo, hi].
-    *     Greenwald–Khanna summaries carry a HARD rank-error bound ≤ ε·n
-    *     (not probabilistic), so rank(lo) ≤ (q−2ε)·n < target and
-    *     rank(hi) ≥ (q+2ε)·n ≥ target — the bracket provably contains
-    *     the target-ranked value (and when ε·n < 1 the sketch is exact).
-    *     Fraction edges clamp to exact MIN/MAX.
-    *  2. selection pass (bracket broadcast as a 1-row frame): per
-    *     target, cnt_lt = Σ[v < lo] and the SORTED in-band values
-    *     [lo ≤ v ≤ hi]; the exact multiset order statistic is
-    *     band[rank − cnt_lt]. Any valid bracket yields the same value,
-    *     so the result is deterministic even though the GK merge order
-    *     is not.
-    *
-    * Single-task state is BOUNDED AT ANY n (r18 verdict item 3): the
-    * in-band collect at sketch accuracy A holds ~8·t·n/A values (plus
-    * the tie-runs at the two bracket endpoints) and the GK summary
-    * itself holds O(A·log(n/A)) entries, so a FIXED A makes the band
-    * linear in n — at 10¹¹ rows a multi-GB single aggregation row. The
-    * bracket pass therefore runs at the caller's `accuracy` first (its
-    * own count column makes n known for free), and when the projected
-    * band exceeds [[BandMaxValues]] a SECOND bracket pass re-sketches at
-    * A' = √(8·t·n) — the balance point of the two ~inverse costs — so
-    * band and sketch are both O(√(t·n)): ~3×10⁶ entries at n = 10¹¹,
-    * never the old ε·n. At bench scale (n/A below the bound) the
-    * refinement never fires and the cost is exactly the two passes.
-    * Callers whose value column can mass-tie AT the probed quantile
-    * (e.g. small-integer counts) should not use this form — the band
-    * inherits the tie-run. The value column must be non-null.
-    *
-    * `targets` = (outCol, q, rankSql): `rankSql` is a SQL expression
-    * over `n` giving the 1-based target rank (e.g. "(n + 1) DIV 2");
-    * `q` centers the bracket and must satisfy
-    * ⌈(q−ε)·n⌉ ≤ rank ≤ ⌊(q+ε)·n⌋ at every n where ε·n ≥ 1 — true for
-    * the usual rank = ⌈q·n⌉ / (n+1) DIV 2 forms (refinement only ever
-    * RAISES accuracy, shrinking ε, and the rank forms deviate from q·n
-    * by O(1), so the contract survives it). A rank that lands outside
-    * its band — a contract violation (mass-tie, bad rankSql) — raises
-    * a runtime error instead of silently reading a wrong element
-    * (r18 advice: element_at with a negative index reads from the END
-    * of the array). Returns ONE row: `n` (LONG) plus one column per
-    * target, typed like `valueCol`.
-    */
-  private[operators] val BandMaxValues = 4000000L
-
-  /** Clamped band lookup shared by [[orderStatistics]] and
-    * [[orderStatisticTuples]]: element_at only when 1 ≤ idx ≤
-    * size(band), else raise_error — out-of-band is a broken caller
-    * contract and must fail loudly, not fold a wrong/NULL value into
-    * downstream buckets (r18 advice). */
+  /** Clamped band lookup: element_at only when 1 ≤ idx ≤ size(band),
+    * else raise_error — out-of-band is a broken caller contract and must
+    * fail loudly, not fold a wrong/NULL value into downstream buckets
+    * (r18 advice). The range check compares `idx` as a LONG and casts to
+    * INT only after it has passed: ranks are BIGINT over n, and an
+    * int-cast first would wrap an out-of-contract rank back into the
+    * band. */
   private def bandAt(band: Column, idx: Column, what: String): Column =
-    when(idx >= 1 && idx <= size(band), element_at(band, idx))
+    when(idx >= 1L && idx <= size(band).cast("long"), element_at(band, idx.cast("int")))
       .otherwise(raise_error(concat(
         lit(s"TwoStageOrder: rank for '$what' outside its band (idx="),
         idx.cast("string"), lit(", band="), size(band).cast("string"),
         lit(") — caller contract violated (mass-tie at the quantile?)"))))
 
-  def orderStatistics(df: DataFrame, valueCol: String,
-                      targets: Seq[(String, Double, String)],
-                      accuracy: Int = 10000,
-                      bandMax: Long = BandMaxValues): DataFrame = {
-    require(df.columns.forall(!_.startsWith("__")),
-      s"input uses reserved __-prefixed columns: ${df.columns.filter(_.startsWith("__")).mkString(",")}")
-    def bracketAt(acc: Int): DataFrame = {
-      val delta = 3.0 / acc
-      val aggs: Seq[Column] = count(lit(1)).as("__n") +:
-        targets.flatMap { case (out, q, _) =>
-          val loQ = q - delta
-          val hiQ = q + delta
-          val lo = if (loQ <= 0.0) min(col(valueCol))
-                   else expr(s"approx_percentile($valueCol, $loQ, $acc)")
-          val hi = if (hiQ >= 1.0) max(col(valueCol))
-                   else expr(s"approx_percentile($valueCol, $hiQ, $acc)")
-          Seq(lo.as(s"__lo_$out"), hi.as(s"__hi_$out"))
-        }
-      // checkpointed 1-row frame: executed once, read by the n-probe
-      // below AND broadcast into the selection pass
-      df.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
-    }
-    val bracket0 = bracketAt(accuracy)
-    val n = bracket0.select(col("__n")).first().getLong(0)
-    val cBand = 8.0 * targets.size
-    val bracket =
-      if (cBand * n / accuracy <= bandMax) bracket0
-      else bracketAt(math.max(accuracy, math.ceil(math.sqrt(cBand * n)).toInt))
-    val selAggs: Seq[Column] = max(col("__n")).as("n") +:
-      targets.flatMap { case (out, _, _) =>
-        Seq(
-          sort_array(collect_list(when(
-            col(valueCol) >= col(s"__lo_$out") && col(valueCol) <= col(s"__hi_$out"),
-            col(valueCol)))).as(s"__band_$out"),
-          sum(when(col(valueCol) < col(s"__lo_$out"), 1L).otherwise(0L))
-            .as(s"__blw_$out"))
-      }
-    df.crossJoin(broadcast(bracket))
-      .agg(selAggs.head, selAggs.tail: _*)
-      .select(col("n") +: targets.map { case (out, _, rankSql) =>
-        // n NULL/0 guard (empty input): emit NULL, not a raised error
-        when(col("n") > 0L, bandAt(col(s"__band_$out"),
-          (expr(rankSql) - col(s"__blw_$out")).cast("int"), out)).as(out)
-      }: _*)
-  }
-
-  /** Exact order-statistic TUPLES at a few target ranks under COMPOSITE
-    * total orders (valueCol asc, tieCols asc…) — the bucket-boundary
-    * sibling of [[orderStatistics]], for consumers that never read a
-    * per-row rank but only compare rows AGAINST a handful of ranked
-    * boundary tuples (NTILE-bucketed censuses, write-layout bucket
-    * audits, sketch-summary selection). Same two aggregation-only
-    * passes, ZERO data exchanges (guide §2.4):
+  /** Exact order statistics at a FEW target ranks — the one
+    * order-statistic primitive. It replaces "rank the whole table, then
+    * read k rows of it" when the consumer only probes a handful of ranks
+    * (a median, tail quantiles, NTILE cut tuples): [[withGlobalRank]]
+    * pays a full-width range exchange plus a materialization so that
+    * EVERY row gets a rank; here the row at each target rank comes from
+    * aggregations alone, with ZERO data exchanges (guide §2.4).
     *
-    *  1. bracket pass: n = COUNT(*) plus per target a GK value bracket
-    *     [lo, hi] on valueCol at q ± deltaUnits·ε. The composite rank ρ
-    *     of the target tuple t* satisfies cnt(v < t*.v) < ρ ≤
-    *     cnt(v ≤ t*.v), so the single-column bracket contains t*.v by
-    *     the same hard GK rank bound as [[orderStatistics]]: if
-    *     t*.v < lo then cnt(v ≤ t*.v) ≤ rank(lo) ≤ (q−(Δ−1)ε)·n < ρ,
-    *     contradiction, and symmetrically for hi (Δ = deltaUnits).
-    *  2. selection pass: per target, the band of FULL (value, tie…)
-    *     structs with lo ≤ v ≤ hi, sorted (struct ordering IS the
-    *     composite order), plus cnt_lt = Σ[v < lo]; the exact tuple is
-    *     band[ρ − cnt_lt].
-    *
-    * Validity contract: each target's runtime rank (rankSql over `n`)
-    * must deviate from q·n by at most `maxRankDev` ranks — NTILE(t) cut
-    * ranks c_j = j·(n DIV t) + LEAST(j, n % t) at q = j/t deviate by
-    * ≤ ⌈t/4⌉ (|LEAST(j,r) − j·r/t| maximizes at r ≈ t/2). The GK
-    * bracket's rank slack is (deltaUnits−1)·ε·n, so the primitive
-    * COUNTS its input once (callers pass a materialized frame) and only
-    * uses the bracket path when 5εn ≥ maxRankDev + 1; below that
-    * threshold the quantile step per rank (1/n) exceeds the bracket
-    * width and a "correct" GK answer can still sit maxRankDev ranks
-    * off-target (live sighting: NTILE(16) cuts at n = 1.5k), so the
-    * selection falls back to ONE exact aggregation collecting the whole
-    * (≤ (maxRankDev+1)·accuracy/5-row) sorted tuple list — bounded by
-    * the same threshold that disables it.
-    *
-    * Band size is ~(2·deltaUnits+2)·ε·n per spec plus the tie runs at
-    * the two bracket endpoints AT THE VALUE GRAIN — the
-    * [[orderStatistics]] mass-tie caveat applies to valueCol exactly as
-    * there (tiebreak columns bound correctness, not band size): do not
-    * probe a quantile where valueCol mass-ties. valueCol must be
-    * non-null and GK-sketchable (numeric/date/timestamp). Single-task
-    * state is bounded at any n like [[orderStatistics]] (r18 verdict
-    * item 3): the primitive already counts its input for the validity
-    * gate, so the EFFECTIVE accuracy is max(accuracy, √(c·n)) with
-    * c = Σ_specs (2·deltaUnits+2)·|targets| — band and GK summary both
-    * O(√(c·n)), never the old ε·n; at bench scale the caller's accuracy
-    * wins and nothing changes.
-    *
-    * `specs` = (valueCol, tieCols, targets); targets = (outCol, q,
-    * rankSql). Returns ONE row: `n` (LONG) plus per target a struct
-    * column `outCol` with fields (valueCol, tieCols…) — compare with
-    * `struct(valueCol, tieCols…)` rows downstream (struct comparison is
+    * `specs` = (valueCol, tieCols, targets): rows are ordered by the
+    * composite total order (valueCol asc, tieCols asc…); with no
+    * tieCols the result is the multiset order statistic of valueCol.
+    * targets = (outCol, q, rankSql): `rankSql` is a SQL expression over
+    * `n` giving the 1-based target rank (e.g. "(n + 1) DIV 2") and `q`
+    * centers the bracket. Returns ONE row: `n` (LONG) plus per target a
+    * struct column `outCol` with fields (valueCol, tieCols…) — read
+    * `outCol.valueCol` for the value, or compare `struct(valueCol,
+    * tieCols…)` rows against it downstream (struct comparison is
     * lexicographic, i.e. the composite order itself).
+    *
+    * Cost contract: one eager count, then a bracket pass and a
+    * selection pass that run lazily inside the caller's final action.
+    * Nothing is checkpointed.
+    *
+    *  1. count (at call time): n = COUNT(*) of `df`, which picks the
+    *     effective accuracy and the bracket form (see Validity) — pass a
+    *     materialized or cheaply countable frame.
+    *  2. bracket pass: per spec ONE array-form GK sketch of valueCol at
+    *     accuracy A, queried at q ± δ for every target (δ =
+    *     deltaUnits·ε, ε = 1/A, quantiles clamped to [0, 1]; the
+    *     sketch keeps the exact min/max at the edges). The composite
+    *     rank ρ of the target tuple t* satisfies cnt(v < t*.v) < ρ ≤
+    *     cnt(v ≤ t*.v), and a Greenwald–Khanna summary has a HARD rank
+    *     error ≤ ε·n (not probabilistic), so the bracket [lo, hi]
+    *     contains t*.v: if t*.v < lo then cnt(v ≤ t*.v) ≤ rank(lo) ≤
+    *     (q−(Δ−1)ε)·n < ρ, a contradiction, and symmetrically for hi
+    *     (Δ = deltaUnits).
+    *  3. selection pass (the 1-row bracket broadcast into it): per spec
+    *     the SORTED band of (value, tie…) structs inside any target's
+    *     bracket, plus per target cnt_lt = Σ[v < lo]; the exact tuple is
+    *     band[ρ − cnt_lt]. Any valid bracket yields the same tuple, so
+    *     the result is deterministic although the GK merge order is not.
+    *
+    * Accuracy: A = max(accuracy, √(c·n)) with c = Σ_specs
+    * (2·deltaUnits+2)·|targets|. The band holds ~c·n/A values and the
+    * GK summary O(A·log(n/A)) entries, so √(c·n) is the BALANCE POINT
+    * of the two costs, not a cap: both stay O(√(c·n)) at any n (~3·10⁶
+    * entries at n = 10¹¹) instead of growing as ε·n. At bench scale the
+    * caller's accuracy wins and nothing changes.
+    *
+    * Validity: each target's runtime rank must deviate from q·n by at
+    * most `maxRankDev` ranks — true for ⌈q·n⌉ and (n+1) DIV 2, and for
+    * the NTILE(t) cut ranks c_j = j·(n DIV t) + LEAST(j, n % t) at
+    * q = j/t, which deviate by ≤ ⌈t/4⌉. The bracket's rank slack is
+    * (deltaUnits−1)·ε·n, so the GK bracket is used only when that
+    * slack is ≥ maxRankDev + 1. Below it the quantile step per rank
+    * exceeds the bracket width (live sighting: NTILE(16) cuts at
+    * n = 1.5k), so every bracket is the exact [min, max] instead and the
+    * band is each spec's whole sorted tuple list — at most
+    * (maxRankDev+1)·A/(deltaUnits−1) rows, bounded by the same
+    * threshold. The plan is the same on both sides of the threshold.
+    *
+    * The band also holds the tie runs at its two endpoints at the VALUE
+    * grain — tie columns bound correctness, not band size — so do not
+    * probe a quantile where valueCol mass-ties (e.g. small-integer
+    * counts). valueCol must be non-null and GK-sketchable
+    * (numeric/date/timestamp). A rank that lands outside its band — a
+    * contract violation (mass tie, bad rankSql) — raises a runtime
+    * error instead of reading a wrong element; an empty input yields
+    * NULL targets.
     */
   def orderStatisticTuples(df: DataFrame,
       specs: Seq[(String, Seq[String], Seq[(String, Double, String)])],
@@ -354,103 +277,90 @@ object TwoStageOrder {
       math.ceil(math.sqrt(cBand * nIn)).toInt)
     val gkValid =
       (deltaUnits - 1).toDouble * nIn / accEff >= (maxRankDev + 1).toDouble
-    def out(withBands: DataFrame): DataFrame =
-      withBands.select(col("n") +: specs.flatMap { case (_, _, targets) =>
-        targets.map { case (o, _, rankSql) =>
-          // n = 0 guard: an empty input yields empty bands and rank 0 —
-          // emit NULL instead of an invalid index; a non-empty input
-          // whose rank lands outside its band raises (bandAt, r18 advice)
-          when(col("n") > 0L, bandAt(col(s"__band_$o"),
-            (expr(rankSql) - col(s"__blw_$o")).cast("int"), o)).as(o)
+    val delta = deltaUnits.toDouble / accEff
+    // Per spec ONE bracket array (lo, hi per target). On the GK side of
+    // the threshold it is ONE GK sketch per value column, queried at
+    // every target's two bracket quantiles via the array form —
+    // approx_percentile with a scalar percentage builds an independent
+    // summary per CALL, so the per-target form paid 2·|targets| sketch
+    // passes over every row (measured: the 16-bucket two-dimension
+    // zorder bracket ran 60 sketches); the array form pays one insert
+    // per row per column. Quantiles are clamped to [0, 1]: the sketch
+    // keeps the exact min/max at the edges (a q = 1 target reads the
+    // max). Below the threshold every bracket is the exact [min, max],
+    // so the band is the whole sorted tuple list — the same plan either
+    // way.
+    val bracketAggs: Seq[Column] = count(lit(1)).as("__n") +:
+      specs.map { case (valueCol, _, targets) =>
+        val brk =
+          if (gkValid) {
+            val qs = targets.flatMap { case (_, q, _) =>
+              Seq(math.max(q - delta, 0.0), math.min(q + delta, 1.0))
+            }
+            expr(s"approx_percentile($valueCol, array(${qs.mkString(", ")}), $accEff)")
+          } else array(targets.flatMap(_ => Seq(min(col(valueCol)), max(col(valueCol)))): _*)
+        brk.as(s"__brk_$valueCol")
+      }
+    val bracket = df.agg(bracketAggs.head, bracketAggs.tail: _*)
+      .select(col("__n") +: specs.flatMap { case (valueCol, _, targets) =>
+        targets.zipWithIndex.flatMap { case ((o, _, _), i) =>
+          Seq(element_at(col(s"__brk_$valueCol"), 2 * i + 1).as(s"__lo_$o"),
+            element_at(col(s"__brk_$valueCol"), 2 * i + 2).as(s"__hi_$o"))
         }
       }: _*)
-    if (!gkValid) {
-      // exact path: one aggregation collecting each spec's full sorted
-      // tuple list ONCE, aliased per target (cnt-below = 0)
-      val collectAggs: Seq[Column] = count(lit(1)).as("n") +:
-        specs.map { case (valueCol, tieCols, _) =>
-          val tup = struct((valueCol +: tieCols).map(col): _*)
-          sort_array(collect_list(tup)).as(s"__full_$valueCol")
+    // ONE combined band per spec (the union of its targets' brackets —
+    // a single collect buffer instead of one per target; measured: 30
+    // per-target collect_lists made the zorder selection the dominant
+    // phase) plus two codegen'd LONG sums per target. The position of
+    // target o's tuple in the combined sorted band is
+    // (#band elements with v < lo_o) + (rank_o − #all rows with
+    // v < lo_o): every band element with lo_o ≤ v ≤ hi_o is in o's own
+    // bracket, so the within-bracket offset is the target's bracket
+    // position and the cross-bracket prefix is the first sum.
+    // the any-bracket membership and per-target below-flags are
+    // PROJECTED once per row (codegen'd booleans) so no aggregate
+    // re-evaluates the 2(t−1)-way range disjunction
+    val projected = df.crossJoin(broadcast(bracket))
+      .select(Seq(col("*")) ++ specs.flatMap { case (valueCol, _, targets) =>
+        targets.map { case (o, _, _) =>
+          (col(valueCol) >= col(s"__lo_$o") && col(valueCol) <= col(s"__hi_$o"))
+            .as(s"__in_$o")
+        } ++ targets.map { case (o, _, _) =>
+          (col(valueCol) < col(s"__lo_$o")).as(s"__lt_$o")
         }
-      val collected = df.agg(collectAggs.head, collectAggs.tail: _*)
-      val aliased = specs.foldLeft(collected) { case (d, (valueCol, _, targets)) =>
-        targets.foldLeft(d) { case (dd, (o, _, _)) =>
-          dd.withColumn(s"__band_$o", col(s"__full_$valueCol"))
-            .withColumn(s"__blw_$o", lit(0L))
-        }
+      }: _*)
+    val selAggs: Seq[Column] = max(col("__n")).as("n") +:
+      specs.flatMap { case (valueCol, tieCols, targets) =>
+        val tup = struct((valueCol +: tieCols).map(col): _*)
+        val inAny = targets.map { case (o, _, _) => col(s"__in_$o") }
+          .reduce(_ || _)
+        sort_array(collect_list(when(inAny, tup))).as(s"__band_$valueCol") +:
+          targets.flatMap { case (o, _, _) =>
+            Seq(
+              // band elements BELOW o's bracket (union-band prefix)
+              sum(when(inAny && col(s"__lt_$o"), 1L).otherwise(0L))
+                .as(s"__inb_$o"),
+              sum(when(col(s"__lt_$o"), 1L).otherwise(0L)).as(s"__blw_$o"))
+          }
       }
-      out(aliased)
-    } else {
-      val delta = deltaUnits.toDouble / accEff
-      // ONE GK sketch per value column, queried at every target's two
-      // bracket quantiles via the array form — approx_percentile with a
-      // scalar percentage builds an independent summary per CALL, so the
-      // per-target form paid 2·|targets| sketch passes over every row
-      // (measured: the 16-bucket two-dimension zorder bracket ran 60
-      // sketches); the array form pays one insert per row per column.
-      // Quantiles are clamped to [0, 1] (the sketch retains exact
-      // min/max at the edges); every current caller's q ± δ is interior.
-      val bracketAggs: Seq[Column] = count(lit(1)).as("__n") +:
-        specs.map { case (valueCol, _, targets) =>
-          val qs = targets.flatMap { case (_, q, _) =>
-            Seq(math.max(q - delta, 0.0), math.min(q + delta, 1.0))
-          }
-          expr(s"approx_percentile($valueCol, array(${qs.mkString(", ")}), $accEff)")
-            .as(s"__brk_$valueCol")
-        }
-      val bracket = df.agg(bracketAggs.head, bracketAggs.tail: _*)
-        .select(col("__n") +: specs.flatMap { case (valueCol, _, targets) =>
-          targets.zipWithIndex.flatMap { case ((o, _, _), i) =>
-            Seq(element_at(col(s"__brk_$valueCol"), 2 * i + 1).as(s"__lo_$o"),
-              element_at(col(s"__brk_$valueCol"), 2 * i + 2).as(s"__hi_$o"))
-          }
-        }: _*)
-      // ONE combined band per spec (the union of its targets' brackets —
-      // a single collect buffer instead of one per target; measured: 30
-      // per-target collect_lists made the zorder selection the dominant
-      // phase) plus two codegen'd LONG sums per target. The position of
-      // target o's tuple in the combined sorted band is
-      // (#band elements with v < lo_o) + (rank_o − #all rows with
-      // v < lo_o): every band element with lo_o ≤ v ≤ hi_o is in o's own
-      // bracket, so the within-bracket offset is the target's bracket
-      // position and the cross-bracket prefix is the first sum.
-      // the any-bracket membership and per-target below-flags are
-      // PROJECTED once per row (codegen'd booleans) so no aggregate
-      // re-evaluates the 2(t−1)-way range disjunction
-      val projected = df.crossJoin(broadcast(bracket))
-        .select(Seq(col("*")) ++ specs.flatMap { case (valueCol, _, targets) =>
-          targets.map { case (o, _, _) =>
-            (col(valueCol) >= col(s"__lo_$o") && col(valueCol) <= col(s"__hi_$o"))
-              .as(s"__in_$o")
-          } ++ targets.map { case (o, _, _) =>
-            (col(valueCol) < col(s"__lo_$o")).as(s"__lt_$o")
-          }
-        }: _*)
-      val selAggs: Seq[Column] = max(col("__n")).as("n") +:
-        specs.flatMap { case (valueCol, tieCols, targets) =>
-          val tup = struct((valueCol +: tieCols).map(col): _*)
-          val inAny = targets.map { case (o, _, _) => col(s"__in_$o") }
-            .reduce(_ || _)
-          sort_array(collect_list(when(inAny, tup))).as(s"__band_$valueCol") +:
-            targets.flatMap { case (o, _, _) =>
-              Seq(
-                // band elements BELOW o's bracket (union-band prefix)
-                sum(when(inAny && col(s"__lt_$o"), 1L).otherwise(0L))
-                  .as(s"__inb_$o"),
-                sum(when(col(s"__lt_$o"), 1L).otherwise(0L)).as(s"__blw_$o"))
-            }
-        }
-      val selected = projected.agg(selAggs.head, selAggs.tail: _*)
-      val aliased = specs.foldLeft(selected) { case (d, (valueCol, _, targets)) =>
-        targets.foldLeft(d) { case (dd, (o, _, _)) =>
-          dd.withColumn(s"__band_$o", col(s"__band_$valueCol"))
-            .withColumn(s"__blw2_$o", col(s"__blw_$o") - col(s"__inb_$o"))
-            .drop(s"__blw_$o")
-            .withColumnRenamed(s"__blw2_$o", s"__blw_$o")
-        }
+    val selected = projected.agg(selAggs.head, selAggs.tail: _*)
+    val aliased = specs.foldLeft(selected) { case (d, (valueCol, _, targets)) =>
+      targets.foldLeft(d) { case (dd, (o, _, _)) =>
+        dd.withColumn(s"__band_$o", col(s"__band_$valueCol"))
+          .withColumn(s"__blw2_$o", col(s"__blw_$o") - col(s"__inb_$o"))
+          .drop(s"__blw_$o")
+          .withColumnRenamed(s"__blw2_$o", s"__blw_$o")
       }
-      out(aliased)
     }
+    aliased.select(col("n") +: specs.flatMap { case (_, _, targets) =>
+      targets.map { case (o, _, rankSql) =>
+        // n = 0 guard: an empty input yields empty bands and rank 0 —
+        // emit NULL instead of an invalid index; a non-empty input whose
+        // rank lands outside its band raises (bandAt, r18 advice)
+        when(col("n") > 0L, bandAt(col(s"__band_$o"),
+          (expr(rankSql) - col(s"__blw_$o")).cast("long"), o)).as(o)
+      }
+    }: _*)
   }
 
   /** The t−1 NTILE(t) cut-rank targets for [[orderStatisticTuples]]:

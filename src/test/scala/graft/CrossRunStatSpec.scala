@@ -45,4 +45,14 @@ class CrossRunStatSpec extends AnyFunSuite {
     assert(Bench.crossRunStat(Nil) == ((1.0, 0, 1.0, 0)))
     assert(Bench.crossRunStat(Seq((0.0, 1.0), (1.0, 0.0))) == ((1.0, 0, 1.0, 0)))
   }
+
+  test("a corroboration re-run that throws is recorded as failed, not corroborated") {
+    // a fast re-run lowers the kept time to the re-run's and corroborates
+    val (fast, ok) = Bench.corroborate(1000.0)(())
+    assert(ok == "true" && fast < 1000.0, s"($fast, $ok)")
+    // a throwing re-run gives no second sample: first time kept, "failed"
+    val (kept, failed) = Bench.corroborate(2.5)(throw new RuntimeException("boom"))
+    assert(kept == 2.5)
+    assert(failed == "\"failed\"", failed)
+  }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,6 +22,10 @@ class TwoStageOrderSpec extends SparkSpec {
     (1 to n).map(i => (i.toLong, rnd.nextInt(n / 4 + 1).toLong))
       .toDF("id", "v").repartition(7)
   }
+
+  /** `n` plus each target struct's `field`, in target order. */
+  private def values(stats: DataFrame, field: String): DataFrame =
+    stats.select(col("n") +: stats.columns.filter(_ != "n").map(o => col(s"$o.$field")): _*)
 
   test("withGlobalRank matches global row_number under the same total order") {
     for ((n, seed) <- Seq((1, 1L), (5, 2L), (257, 3L), (1000, 4L))) {
@@ -162,13 +167,13 @@ class TwoStageOrderSpec extends SparkSpec {
         (257, 100, 53L), (4096, 100, 54L))) {
       val df = randomDf(n, seed).select("v")
       val sorted = df.as[Long].collect().sorted
-      val got = TwoStageOrder.orderStatistics(df, "v",
-        Seq(
+      val got = values(TwoStageOrder.orderStatisticTuples(df,
+        Seq(("v", Nil, Seq(
           ("lo", 0.0, "1"),
           ("med1", 0.5, "(n + 1) DIV 2"),
           ("med2", 0.5, "(n + 2) DIV 2"),
           ("p90", 0.9, "CAST(CEIL(0.9 * n) AS BIGINT)"),
-          ("hi", 1.0, "n")), acc).collect().head
+          ("hi", 1.0, "n")))), accuracy = acc), "v").collect().head
       assert(got.getLong(0) == n.toLong, s"n mismatch at n=$n")
       val expect = Seq(
         sorted(0), sorted(((n + 1) / 2) - 1), sorted(((n + 2) / 2) - 1),
@@ -188,9 +193,9 @@ class TwoStageOrderSpec extends SparkSpec {
       .withGlobalRank(df, Seq(asc("slope")), "r", "tot")
       .filter(col("r") === expr("(tot + 1) DIV 2") || col("r") === expr("(tot + 2) DIV 2"))
       .agg(avg(col("slope"))).as[Double].collect().head
-    val viaSel = TwoStageOrder.orderStatistics(df, "slope",
-        Seq(("v1", 0.5, "(n + 1) DIV 2"), ("v2", 0.5, "(n + 2) DIV 2")))
-      .select((col("v1") + col("v2")) / 2.0).as[Double].collect().head
+    val viaSel = TwoStageOrder.orderStatisticTuples(df,
+        Seq(("slope", Nil, Seq(("v1", 0.5, "(n + 1) DIV 2"), ("v2", 0.5, "(n + 2) DIV 2")))))
+      .select((col("v1.slope") + col("v2.slope")) / 2.0).as[Double].collect().head
     assert(java.lang.Double.doubleToRawLongBits(viaRank) ==
       java.lang.Double.doubleToRawLongBits(viaSel),
       s"median mismatch: $viaRank vs $viaSel")
@@ -272,28 +277,6 @@ class TwoStageOrderSpec extends SparkSpec {
     }
   }
 
-  test("orderStatistics stays exact when the band-bound refinement pass fires (r19)") {
-    // the r18-verdict scale-safety fix: at a forced-tiny bandMax the
-    // projected band 8·t·n/accuracy exceeds the bound, so the second
-    // bracket pass re-sketches at √(8·t·n) — results must be the same
-    // exact multiset order statistics either way
-    val n = 4096
-    val df = randomDf(n, 54L).select("v")
-    val sorted = df.as[Long].collect().sorted
-    val targets = Seq(
-      ("lo", 0.0, "1"),
-      ("med1", 0.5, "(n + 1) DIV 2"),
-      ("p90", 0.9, "CAST(CEIL(0.9 * n) AS BIGINT)"),
-      ("hi", 1.0, "n"))
-    val got = TwoStageOrder.orderStatistics(df, "v", targets,
-      accuracy = 100, bandMax = 100L).collect().head
-    assert(got.getLong(0) == n.toLong)
-    val expect = Seq(sorted(0), sorted(((n + 1) / 2) - 1),
-      sorted(math.ceil(0.9 * n).toInt - 1), sorted(n - 1))
-    assert((1 to 4).map(got.getLong) == expect,
-      "refined-path order statistics mismatch")
-  }
-
   test("orderStatisticTuples stays exact when √(c·n) scaling raises a tiny accuracy (r19)") {
     // forced-small caller accuracy (100) at n = 60k: the effective
     // accuracy becomes √(c·n) ≈ 3.5k — the n-independent-band scaling
@@ -314,17 +297,47 @@ class TwoStageOrderSpec extends SparkSpec {
     assert(diff.isEmpty, "scaled-accuracy bucket mismatch")
   }
 
+  test("orderStatistics stays exact when the band-bound refinement pass fires (r19)") {
+    // no-tiebreak multiset order statistics of a duplicate-heavy column at
+    // a forced-small accuracy: at n = 4096 the band bound √(c·n) ≈ 479
+    // raises accuracy 100, and the selected values must stay exact
+    val n = 4096
+    val vs = randomDf(n, 54L).select("v")
+    val sorted = vs.as[Long].collect().sorted
+    val stats = values(TwoStageOrder.orderStatisticTuples(vs,
+      Seq(("v", Nil, Seq(
+        ("lo", 0.0, "1"),
+        ("med1", 0.5, "(n + 1) DIV 2"),
+        ("p90", 0.9, "CAST(CEIL(0.9 * n) AS BIGINT)"),
+        ("hi", 1.0, "n")))), accuracy = 100), "v").collect().head
+    assert(stats.getLong(0) == n.toLong)
+    val expect = Seq(sorted(0), sorted(((n + 1) / 2) - 1),
+      sorted(math.ceil(0.9 * n).toInt - 1), sorted(n - 1))
+    assert((1 to 4).map(stats.getLong) == expect,
+      "scaled-accuracy order statistics mismatch")
+  }
+
   test("an out-of-band rank fails loudly instead of reading a wrong element (r19)") {
     // r18 advice: element_at with a negative index silently reads from
     // the END of the band — the clamp must raise instead
+    // (rank far below the bracket). A rank offset by 2^32 must fail the
+    // same way: with ANSI off an int cast before the range check wraps it
+    // back into the band and reads a wrong element
     val df = randomDf(257, 77L).select("v")
-    val bad = TwoStageOrder.orderStatistics(df, "v",
-      Seq(("med", 0.5, "n DIV 2 - 200"))) // rank far below the bracket
-    val e = intercept[Exception] { bad.collect() }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("outside its band")),
-      s"expected the band-clamp error, got: ${messages(e).mkString(" | ")}")
+    def assertOutOfBand(rankSql: String): Unit = {
+      val bad = TwoStageOrder.orderStatisticTuples(df,
+        Seq(("v", Nil, Seq(("med", 0.5, rankSql)))))
+      val e = intercept[Exception] { bad.collect() }
+      assert(messages(e).exists(_.contains("outside its band")),
+        s"$rankSql: expected the band-clamp error, got: ${messages(e).mkString(" | ")}")
+    }
+    assertOutOfBand("n DIV 2 - 200")
+    val prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try assertOutOfBand("n DIV 2 + 4294967296")
+    finally spark.conf.set("spark.sql.ansi.enabled", prior)
   }
 
   test("the primitives plan no unpartitioned Window") {
