@@ -42,15 +42,23 @@ object PipelineBench {
     // each measured pass carries its own /proc/stat steal fraction (r14
     // verdict item 6: the 8,169 changes/s figure predates the steal
     // instrumentation — the throughput claim should be wave-proof)
+    // a pass writes all four outputs, as the mirror does, through the
+    // noop sink (every column computed, nothing stored); the row counts
+    // are read from the pass's cache after the clock stops, and the cache
+    // is cleared so the next pass replays from the feed (the feed itself
+    // is a local checkpoint, which clearCache keeps)
     def once(): (Long, Long, Double, Option[Double]) = {
       val s0 = Bench.cpuStat()
       val t0 = System.nanoTime()
       val r = npm.Pipeline.replay(feed)
-      val nCatalog = r.catalog.count()
-      val nSkipped = r.skipped.count()
+      Seq(r.catalog, r.skipped, r.audit, r.deletions)
+        .foreach(_.write.format("noop").mode("overwrite").save())
       val dt = (System.nanoTime() - t0) / 1e9
       val steal = for { (a0, b0) <- s0; (a1, b1) <- Bench.cpuStat() if b1 > b0 }
         yield (a1 - a0) * 100.0 / (b1 - b0)
+      val nCatalog = r.catalog.count()
+      val nSkipped = r.skipped.count()
+      spark.catalog.clearCache()
       (nCatalog, nSkipped, dt, steal)
     }
     once() // warmup (JIT + codegen)

@@ -98,11 +98,13 @@ object Normalize {
 
   /** T3 as pure Column DSL — the performance path (SURVEY §4.2's upgrade
     * applied end-to-end): identical semantics to [[normalizeDoc]]
-    * (verified by NormalizeColumnsSpec against the typed path), but the
-    * whole stage stays inside whole-stage codegen: semver cleaning runs
-    * through the native SemverClean expression, map rewrites through
-    * transform/map_from_entries/transform_values/map_filter — no encoder
-    * round-trip per row.
+    * (verified by NormalizeColumnsSpec against the typed path), but no
+    * encoder round-trip per row: semver cleaning runs through the native
+    * SemverClean expression, map rewrites through
+    * transform/map_from_entries/transform_values/map_filter (which Spark
+    * evaluates interpreted, inside the codegen'd projection). Each
+    * version key is cleaned once and each rewritten map built once per
+    * doc.
     *
     * Requires `semver_clean` registered in the session
     * (SemverExpressions.register — idempotent).
@@ -114,6 +116,13 @@ object Normalize {
     * raises DUPLICATED_MAP_KEY under the default mapKeyDedupPolicy.
     */
   def normalizedDocColumn(doc: Column): Column = {
+    // Higher-order functions run interpreted, outside subexpression
+    // elimination: a subexpression written twice is evaluated twice, and
+    // once per element inside a lambda. `let` binds a value to a lambda
+    // variable so it is evaluated once, whatever reads it.
+    def let(value: Column)(body: Column => Column): Column =
+      transform(array(value), body).getItem(0)
+
     // Rename-wins dedup of an array<struct<key,value,ren>> before
     // map_from_entries: a renamed entry beats any plain entry with the
     // same key regardless of position (the reference's
@@ -125,9 +134,8 @@ object Normalize {
     // default mapKeyDedupPolicy. Cheap path: no collision (the
     // overwhelmingly common case) → entries as-is; the O(n²) scan runs
     // only on collision.
-    def dedupRenameWins(ents: Column): Column = {
-      val keys = transform(ents, _.getField("key"))
-      val collides = size(array_distinct(keys)) =!= size(keys)
+    def dedupRenameWins(entries: Column): Column = let(entries) { ents =>
+      val collides = size(array_distinct(transform(ents, _.getField("key")))) =!= size(ents)
       def laterSameKey(e: Column, i: Column, ren: Boolean) =
         exists(slice(ents, i + lit(2), size(ents)),
           e2 => e2.getField("key") === e.getField("key") && (if (ren) e2.getField("ren") else !e2.getField("ren")))
@@ -166,43 +174,50 @@ object Normalize {
           coalesce(v0.getField("directories"), map().cast(MapType(StringType, StringType))))
         .withField("ctime", noStr)
         .withField("mtime", noStr)
-      val ck = clean(k)
-      val renamed = ck.isNotNull && ck =!= k
-      struct(
-        coalesce(ck, k).as("key"),
-        when(renamed,
-          v.withField("version", ck)
-            .withField("_id", concat(id, lit("@"), ck)))
-          .otherwise(v).as("value"),
-        renamed.as("ren"))
+      let(clean(k)) { ck =>
+        val renamed = ck.isNotNull && ck =!= k
+        struct(
+          coalesce(ck, k).as("key"),
+          when(renamed,
+            v.withField("version", ck)
+              .withField("_id", concat(id, lit("@"), ck)))
+            .otherwise(v).as("value"),
+          renamed.as("ren"))
+      }
     }))
 
     // move time keys in lockstep with version-key renames; a moved entry
     // overwrites a plain one at the cleaned key (reference assignment)
     val time2 = dedupRenameWins(transform(map_entries(doc.getField("time")), { e =>
       val k = e.getField("key")
-      val ck = clean(k)
-      val moved = ck.isNotNull && ck =!= k && map_contains_key(versions, k)
-      struct(when(moved, ck).otherwise(k).as("key"), e.getField("value").as("value"),
-        moved.as("ren"))
+      let(clean(k)) { ck =>
+        val moved = ck.isNotNull && ck =!= k && map_contains_key(versions, k)
+        struct(when(moved, ck).otherwise(k).as("key"), e.getField("value").as("value"),
+          moved.as("ren"))
+      }
     }))
 
     // (3) dist-tags repair against the NEW version key set: retarget
     // renamed values, keep resolvable ones, clean-then-retry, else drop
     val tags = doc.getField("dist-tags")
-    val retargeted = transform_values(tags, { (_, v) =>
-      val cv = clean(v)
-      when(cv.isNotNull && map_contains_key(versions2, cv), cv)
-        .when(map_contains_key(versions2, v), v)
-        .otherwise(lit(null).cast("string"))
-    })
-    val tags2 = map_filter(retargeted, (_, v) => v.isNotNull)
+    def tags2(newVersions: Column): Column = {
+      val retargeted = transform_values(tags, { (_, v) =>
+        let(clean(v)) { cv =>
+          when(cv.isNotNull && map_contains_key(newVersions, cv), cv)
+            .when(map_contains_key(newVersions, v), v)
+            .otherwise(lit(null).cast("string"))
+        }
+      })
+      map_filter(retargeted, (_, v) => v.isNotNull)
+    }
 
     when(dropDoc, lit(null).cast(docType))
       .when(versions.isNull, base)
-      .otherwise(base
-        .withField("versions", versions2)
-        .withField("time", when(doc.getField("time").isNotNull, time2))
-        .withField("`dist-tags`", when(tags.isNotNull, tags2)))
+      .otherwise(let(versions2) { v2 =>
+        base
+          .withField("versions", v2)
+          .withField("time", when(doc.getField("time").isNotNull, time2))
+          .withField("`dist-tags`", when(tags.isNotNull, tags2(v2)))
+      })
   }
 }

@@ -36,8 +36,8 @@ object NpmReplayOps {
       // immune to spark.catalog.clearCache() between bench passes;
       // pinned so the per-query storage sweep doesn't drop blocks the
       // other replay-backed queries still dereference. replay()'s
-      // internal caches are pinned DELIBERATELY here (unlike the pair
-      // surface): the returned audit/deletions frames dereference them.
+      // routed cache is pinned DELIBERATELY here (unlike the pair
+      // surface): the returned audit/deletions frames dereference it.
       graft.PinnedStorage.pin(s) {
         val r = Pipeline.replay(feed(s, dir))
         r.copy(

@@ -1,7 +1,8 @@
 package graft.npm
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import model._
 
@@ -10,11 +11,20 @@ import model._
   * source — stages are DataFrame→DataFrame functions, so batch replay is
   * fully testable without Kafka (SURVEY.md §7.1 build order).
   *
-  * Stage chain and the reference operators each one re-expresses:
-  *   parse (T1)  → normalize (T3/F7) → validity+size filters (F1,F2,F4)
-  *   → enrichment (S6/F5, injectable) → catalog projection (P1,T4,T6,T7,F6)
-  *   → routing: catalog (K4) ⊕ skipped DLQ (K3), audit events (K2),
-  *     retention evictions (A5 → K5).
+  * [[replay]] is one pass: the feed is scanned and parsed once, and every
+  * line gets exactly one route. Stage chain and the reference operators
+  * each one re-expresses:
+  *   scan: parse (T1) + line byte size (F8)
+  *   → normalize (T3/F7; not run for oversized or unparseable lines)
+  *   → derived columns + validity/size checks (F1,F2,F4,P3)
+  *   → slim projection: catalog (P1,T4,T6,T7,F6) and retention-arrival columns
+  *   → enrichment (S6/F5, injectable; row-preserving, one fetch per row
+  *     that passed the checks)
+  *   → route: the first of msg_too_large/produce, corrupt_json/parse, the
+  *     [[withDerived]] reject chain, http_<status>/download; none → catalog
+  *   → one cached routed frame, of which catalog (K4), skipped DLQ (K3),
+  *     audit events (K2) and retention evictions (A5 → K5) are filters and
+  *     projections.
   *
   * Declarative-wins note (§4.1): size caps run BEFORE any payload work
   * (the reference's F4 pre-download variant, legacy mirror.ts:119), so the
@@ -38,13 +48,23 @@ object Pipeline {
       catalog: DataFrame,   // CatalogRecord rows
       skipped: DataFrame,   // Skipped rows (DLQ)
       audit: DataFrame,     // AuditEvent rows
-      deletions: DataFrame) // Retention.Eviction rows
+      deletions: DataFrame, // Retention.Eviction rows
+      routed: DataFrame)    // the cached frame the four read; unpersist once they are written
 
   /** T1: raw JSON lines → typed change column + retained raw string. */
   def parse(raw: DataFrame): DataFrame =
     raw.select(
       from_json(col("value"), changeSchema).as("c"),
       col("value").as("raw"))
+
+  /** Byte size of a raw feed line, for the F8 broker cap. octet_length,
+    * not length: the cap is a BYTE limit and npm docs carry multibyte
+    * UTF-8 (CJK descriptions, emoji) — a 6M-char line can be 12 MiB of
+    * bytes. NULL values (Kafka tombstones) count as 0 bytes so they are
+    * parsed and land in the DLQ as corrupt_json — a bare filter would
+    * drop them from both routes.
+    */
+  private def lineBytes(value: Column): Column = coalesce(octet_length(value), lit(0L))
 
   /** F8/E2: split the raw feed on the broker message cap. Rows whose
     * serialized change exceeds MaxKafkaMessageBytes can never be produced
@@ -56,12 +76,7 @@ object Pipeline {
     * is already in DLQ shape (seq, package_name, reason, stage).
     */
   def splitOversized(raw: DataFrame): (DataFrame, DataFrame) = {
-    // octet_length, not length: the broker cap is a BYTE limit and npm
-    // docs carry multibyte UTF-8 (CJK descriptions, emoji) — a 6M-char
-    // line can be 12 MiB of bytes. NULL values (Kafka tombstones) count
-    // as 0 bytes so they flow to parse() and land in the DLQ as
-    // corrupt_json — a bare filter would drop them from BOTH branches.
-    val bytes = coalesce(octet_length(col("value")), lit(0L))
+    val bytes = lineBytes(col("value"))
     val fit = raw.filter(bytes <= MaxKafkaMessageBytes)
     val oversized = parse(raw.filter(bytes > MaxKafkaMessageBytes))
       .select(
@@ -138,80 +153,104 @@ object Pipeline {
           .otherwise("catalog"))
   }
 
-  /** S6 enrichment on the surviving rows: per-partition fetcher reuse
-    * (mapPartitions, never a per-row UDF — connection amortization), then
-    * F5 status routing.
+  /** S6 enrichment, row-preserving: appends `tarball_status` and
+    * `fetched_bytes` to every row of `rows` (which must carry
+    * `reject_reason` and `tarball_url`). The fetcher is called once for
+    * each row whose `reject_reason` is null, with one fetcher binding per
+    * partition (mapPartitions, never a per-row UDF — connection
+    * amortization); rejected rows get nulls and no fetch. No join, so no
+    * Exchange; F5 status routing is the caller's.
     */
-  def enrich(kept: DataFrame, fetcher: Fetcher)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val urls = kept.select(col("seq").as[Long], coalesce(col("tarball_url"), lit("")).as[String])
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        // one fetcher binding per partition ≈ one connection pool per task
-        it.map { case (seq, url) =>
-          val (status, n) = fetcher(url)
-          (seq, status, n)
+  def enrich(rows: DataFrame, fetcher: Fetcher)(implicit spark: SparkSession): DataFrame = {
+    val schema = rows.schema
+      .add("tarball_status", IntegerType)
+      .add("fetched_bytes", LongType)
+    val rejected = rows.schema.fieldIndex("reject_reason")
+    val url = rows.schema.fieldIndex("tarball_url")
+    rows.mapPartitions { it =>
+      // one fetcher binding per partition ≈ one connection pool per task
+      it.map { r =>
+        if (!r.isNullAt(rejected)) Row.fromSeq(r.toSeq :+ null :+ null)
+        else {
+          val (status, n) = fetcher(if (r.isNullAt(url)) "" else r.getString(url))
+          Row.fromSeq(r.toSeq :+ status :+ n)
         }
       }
-      .toDF("seq", "tarball_status", "fetched_bytes")
-    kept.join(urls, "seq")
+    }(Encoders.row(schema))
   }
 
-  /** Full batch replay. */
+  /** P1 catalog columns over [[withDerived]]'s output, by CatalogRecord
+    * name (package_name and change_seq_id come from id and seq).
+    */
+  private val catalogColumns: Seq[(String, Column)] = Seq(
+    "package_revision_id" -> col("doc._rev"),
+    "package_latest_version" -> col("latest"),
+    "package_versions_count" -> size(map_keys(col("doc.versions"))),
+    "package_modification_count" -> size(map_keys(col("doc.time"))),
+    "package_latest_change_time" ->
+      to_timestamp(col("latest_time_str"), "yyyy-MM-dd'T'HH:mm:ss.SSSX"),
+    "package_latest_authors" -> col("latest_version_doc.author"),
+    "package_latest_maintainers" -> col("latest_version_doc.maintainers"),
+    "package_latest_dependencies" -> col("latest_version_doc.dependencies"),
+    "change_save_path" -> col("save_path"),
+    "package_deleted" -> coalesce(col("deleted"), lit(false)),
+    "package_distribution_tags" -> col("doc.`dist-tags`"))
+  private val catalogNames = catalogColumns.map(_._1)
+
+  /** A5 arrival columns over [[withDerived]]'s output. */
+  private val arrivalNames = Seq("package_dir", "zip_name", "retention_triggered")
+
+  /** Full batch replay, in one pass (see the object doc). Only the routed
+    * frame is cached — seq, id, reason, stage, the catalog and the arrival
+    * columns, never the normalized doc — so the feed is read once and each
+    * passing row is fetched once however many of the outputs are written.
+    */
   def replay(
       raw: DataFrame,
       fetcher: Fetcher = AlwaysOk)(implicit spark: SparkSession): PipelineResult = {
     import spark.implicits._
+    graft.functions.SemverExpressions.register(raw.sparkSession)
+    implicit val enc: Encoder[Change] = Encoders.product[Change]
 
-    val (fit, oversized) = splitOversized(raw)
-    val parsed = parse(fit)
-    val corrupt = parsed.filter(col("c").isNull || col("c.seq").isNull)
-      .select(
-        col("c.seq").as("seq"), col("c.id").as("package_name"),
-        lit("corrupt_json").as("reason"), lit("parse").as("stage"))
+    val oversized = lineBytes(col("raw")) > MaxKafkaMessageBytes
+    val unparsed = col("c.seq").isNull
+    val lines = parse(raw).select(
+      col("c.seq").as("seq"), col("c.id").as("id"), col("c.deleted").as("deleted"),
+      when(!oversized && !unparsed, Normalize.normalizedDocColumn(col("c.doc"))).as("doc"),
+      when(oversized, "msg_too_large").when(unparsed, "corrupt_json").as("line_reason"),
+      when(oversized, "produce").when(unparsed, "parse").as("line_stage"))
 
-    val derived = withDerived(normalize(parsed)).cache()
+    // as[Change] keeps the line_* columns; their null doc makes withDerived
+    // reject those lines, so enrich never fetches for them
+    val slim = withDerived(lines.as[Change]).select(
+      Seq(col("seq"), col("id"), col("line_reason"), col("line_stage"),
+        col("reject_reason"), col("reject_stage"), col("tarball_url")) ++
+      catalogColumns.map { case (n, c) => c.as(n) } ++ arrivalNames.map(col): _*)
 
-    val preRejected = derived.filter(col("reject_reason").isNotNull)
-      .select(col("seq"), col("id").as("package_name"),
-        col("reject_reason").as("reason"), col("reject_stage").as("stage"))
+    val fetchFailed = col("tarball_status") =!= 200
+    val routed = enrich(slim, fetcher).select(
+      Seq(col("seq"), col("id"),
+        coalesce(col("line_reason"), col("reject_reason"),
+          when(fetchFailed, concat(lit("http_"), col("tarball_status")))).as("reason"),
+        coalesce(col("line_stage"), when(col("reject_reason").isNotNull, col("reject_stage")),
+          when(fetchFailed, lit("download"))).as("stage")) ++
+      (catalogNames ++ arrivalNames).map(col): _*)
+      .cache()
 
-    val enriched = enrich(derived.filter(col("reject_reason").isNull), fetcher)
-    val fetchRejected = enriched.filter(col("tarball_status") =!= 200)
-      .select(col("seq"), col("id").as("package_name"),
-        concat(lit("http_"), col("tarball_status")).as("reason"),
-        lit("download").as("stage"))
-
-    val kept = enriched.filter(col("tarball_status") === 200).cache()
-
+    val kept = routed.filter(col("reason").isNull)
     val catalog = kept.select(
-      col("id").as("package_name"),
-      col("seq").as("change_seq_id"),
-      col("doc._rev").as("package_revision_id"),
-      col("latest").as("package_latest_version"),
-      size(map_keys(col("doc.versions"))).as("package_versions_count"),
-      size(map_keys(col("doc.time"))).as("package_modification_count"),
-      to_timestamp(col("latest_time_str"), "yyyy-MM-dd'T'HH:mm:ss.SSSX")
-        .as("package_latest_change_time"),
-      col("latest_version_doc.author").as("package_latest_authors"),
-      col("latest_version_doc.maintainers").as("package_latest_maintainers"),
-      col("latest_version_doc.dependencies").as("package_latest_dependencies"),
-      col("save_path").as("change_save_path"),
-      coalesce(col("deleted"), lit(false)).as("package_deleted"),
-      col("doc.`dist-tags`").as("package_distribution_tags"))
-
+      Seq(col("id").as("package_name"), col("seq").as("change_seq_id")) ++ catalogNames.map(col): _*)
+    val skipped = routed.filter(col("reason").isNotNull)
+      .select(col("seq"), col("id").as("package_name"), col("reason"), col("stage"))
     val audit = kept.select(col("seq"),
         explode(array(lit("downloaded_in_local"), lit("moved_to_remote"), lit("added_to_db")))
           .as("stage"))
-
-    val skipped = oversized.unionByName(corrupt).unionByName(preRejected).unionByName(fetchRejected)
-
     val arrivals = kept.select(
         col("package_dir"), col("zip_name").as("file_name"),
         col("seq").as("ctime"), col("retention_triggered"))
       .as[Retention.ZipArrival]
     val deletions = Retention.evictions(arrivals).toDF()
 
-    PipelineResult(catalog, skipped, audit, deletions)
+    PipelineResult(catalog, skipped, audit, deletions, routed)
   }
 }

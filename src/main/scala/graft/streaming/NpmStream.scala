@@ -96,6 +96,8 @@ object NpmStream {
     * row (within-batch dropDuplicates can't see the earlier run's
     * output); overwrite-own-partition makes the re-run replace its
     * previous output instead — exactly-once per seq end to end.
+    * Releases the replay's cached routed frame afterwards, so a
+    * long-running stream holds no cache from finished batches.
     */
   def writeBatchOutputs(r: Pipeline.PipelineResult, outDir: String, batchId: Long): Unit = {
     def write(df: DataFrame, path: String): Unit =
@@ -104,10 +106,12 @@ object NpmStream {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")
         .parquet(path)
-    write(r.catalog.dropDuplicates("change_seq_id"), s"$outDir/catalog")
-    write(r.skipped, s"$outDir/skipped")
-    write(r.audit, s"$outDir/audit")
-    write(r.deletions, s"$outDir/deleted_zips")
+    try {
+      write(r.catalog.dropDuplicates("change_seq_id"), s"$outDir/catalog")
+      write(r.skipped, s"$outDir/skipped")
+      write(r.audit, s"$outDir/audit")
+      write(r.deletions, s"$outDir/deleted_zips")
+    } finally r.routed.unpersist()
   }
 
   /** Run the pipeline as one streaming query writing the four parquet

@@ -1,8 +1,33 @@
 package graft.npm
 
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.graftaccess.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+/** Fetchers that record every call; local mode runs tasks in this JVM, so
+  * the counts see every call the executors make.
+  */
+object FetchLog {
+  private val perUrl = new ConcurrentHashMap[String, AtomicLong]()
+  def reset(): Unit = perUrl.clear()
+  /** Records one call for `url`; returns how many calls it has had. */
+  def record(url: String): Long = perUrl.computeIfAbsent(url, _ => new AtomicLong).incrementAndGet()
+  def total: Long = perUrl.values.stream.mapToLong(_.get).sum
+
+  object Counting extends (String => (Int, Long)) with Serializable {
+    def apply(url: String): (Int, Long) = { record(url); (200, 10L) }
+  }
+  /** 200 on a URL's first call, 503 on every later one. */
+  object FirstCallOk extends (String => (Int, Long)) with Serializable {
+    def apply(url: String): (Int, Long) = if (record(url) == 1) (200, 10L) else (503, 0L)
+  }
+}
 
 class PipelineSpec extends SparkSpec {
 
@@ -115,5 +140,81 @@ class PipelineSpec extends SparkSpec {
     // seq 13 has len(time)-len(versions)=3 → arrival flagged untriggered;
     // with single-arrival packages there are no evictions at all here
     assert(result.deletions.count() == 0)
+  }
+
+  private def writeAll(r: Pipeline.PipelineResult): Unit =
+    Seq(r.catalog, r.skipped, r.audit, r.deletions)
+      .foreach(_.write.format("noop").mode("overwrite").save())
+
+  /** `n` distinct packages, each with its own tarball URL; all pass the
+    * pre-fetch checks.
+    */
+  private def distinctFeed(n: Int): Seq[String] = (1 to n).map { i =>
+    s"""{"seq":${1000 + i},"id":"pkg-$i","doc":{"_id":"pkg-$i","_rev":"1-a","name":"pkg-$i","dist-tags":{"latest":"1.0.0"},"versions":{"1.0.0":{"version":"1.0.0","dist":{"tarball":"http://r/pkg-$i.tgz","unpackedSize":5,"shasum":"s"}}},"time":{"1.0.0":"2023-01-01T00:00:00.000Z","created":"2023-01-01T00:00:00.000Z","modified":"2023-01-01T00:00:00.000Z"}}}"""
+  }
+
+  test("a replay fetches each tarball once however many outputs are written") {
+    // the 7 fixtures that pass the pre-fetch checks (seqs 1-4, 8, 11, 13)
+    // plus 2,000 distinct packages; the 6 pre-rejected fixtures and the
+    // corrupt line are never fetched
+    FetchLog.reset()
+    val r = Pipeline.replay((Fixtures.withFetch404 ++ distinctFeed(2000)).toDF("value"),
+      FetchLog.Counting)
+    writeAll(r)
+    assert(FetchLog.total == 2007L)
+    r.routed.unpersist()
+  }
+
+  test("a fetcher that fails on a retry cannot route one seq to both catalog and DLQ") {
+    FetchLog.reset()
+    val r = Pipeline.replay(distinctFeed(2000).toDF("value"), FetchLog.FirstCallOk)
+    val dir = Files.createTempDirectory("pipeline-once").toString
+    r.catalog.write.parquet(s"$dir/catalog")
+    r.skipped.write.parquet(s"$dir/skipped")
+    r.audit.write.parquet(s"$dir/audit")
+    r.deletions.write.parquet(s"$dir/deletions")
+    val cat = spark.read.parquet(s"$dir/catalog").select("change_seq_id").as[Long].collect()
+    val dlq = spark.read.parquet(s"$dir/skipped").select("seq").as[Long].collect()
+    assert(cat.length + dlq.length == 2000)
+    assert((cat.toSet ++ dlq.toSet) == (1001L to 3000L).toSet)
+    assert(dlq.isEmpty, s"${dlq.length} seqs were fetched again and routed to the DLQ")
+    r.routed.unpersist()
+  }
+
+  test("a replay reads each input line once for all four outputs") {
+    val pad = "x" * (model.MaxKafkaMessageBytes.toInt + 64)
+    val lines = Fixtures.withFetch404 :+ s"""{"seq":99,"id":"bigpkg","pad":"$pad"}"""
+    val dir = Files.createTempDirectory("pipeline-reads")
+    Files.write(dir.resolve("changes.jsonl"), lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val read = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val r = Pipeline.replay(spark.read.text(dir.toString), Fixtures.RoutingFetcher)
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      writeAll(r)
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the scan reads each line once; skipped, audit and deletions then
+    // read the cached routed frame, which counts one record per cached
+    // batch read (the feed is one split, so one batch each)
+    assert(read.get == lines.length + 3L)
+    r.routed.unpersist()
+  }
+
+  test("catalog, skipped and audit plan no Exchange; deletions one, on the package dir") {
+    // the plan string includes the cached frame's own plan; any exchange
+    // counts, broadcast ones too
+    def exchanges(df: DataFrame): Seq[String] =
+      df.queryExecution.executedPlan.toString.split("\n").toSeq.filter(_.contains("Exchange"))
+    Seq(result.catalog, result.skipped, result.audit).foreach { df =>
+      assert(exchanges(df).isEmpty, df.queryExecution.executedPlan.toString)
+    }
+    val ex = exchanges(result.deletions)
+    assert(ex.size == 1 && ex.head.contains("hashpartitioning"),
+      result.deletions.queryExecution.executedPlan.toString)
   }
 }

@@ -95,4 +95,17 @@ class NpmStreamSpec extends SparkSpec {
     assert(catalog.groupBy("change_seq_id").count().filter(col("count") > 1).count() == 0)
     assert(NpmStream.currentLag(spark, newestSeq = 20L, s"$base/out") == 0L)
   }
+
+  test("a stream releases each micro-batch's replay cache once its outputs are written") {
+    val base = Files.createTempDirectory("npmrelease").toString
+    val feedDir = s"$base/feed"
+    val (first, second) = Fixtures.withFetch404.splitAt(7)
+    writeFeed(feedDir, first, "changes-0.jsonl")
+    writeFeed(feedDir, second, "changes-1.jsonl")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    NpmStream.start(spark, NpmStream.fileSource(spark, feedDir, maxFilesPerTrigger = 1),
+      s"$base/out", s"$base/ckpt", Fixtures.RoutingFetcher).awaitTermination()
+    assert(spark.read.parquet(s"$base/out/catalog").select("batch_id").distinct().count() == 2)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
 }
