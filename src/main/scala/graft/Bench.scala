@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.util.Locale
 
 object Bench {
@@ -251,21 +250,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode checkpoint I/O: java.nio + atomic rename, no Hadoop
-      // ChecksumFs (.crc siblings) — FloorExperiment measured ~125 ms of
-      // each ~315 ms AvailableNow micro-batch in walCommit/commitOffsets/
-      // latestOffset under the default manager, ~1 ms under this one.
-      // Cluster deployments keep the default by not setting the conf.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.LocalNioCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(LocalSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     // Silence two benign WARN families in the bench tail (a reviewer reads
     // the tail first; both signals are carried by build gates instead):
@@ -311,33 +296,8 @@ object Bench {
     //    inside later queries' timed windows. unloadAll() between
     //    queries; a provider reloads from its checkpoint on next use.
     //  - staged temp dirs: every streaming query stages its feed +
-    //    checkpoint in a fresh java.io.tmpdir directory (~40/pass).
-    //    Ownership is exact, not heuristic: every staged dir carries this
-    //    process's nonce in its name (TmpDirs), so a concurrent sbt test
-    //    or second Bench/Verify run staging under the same prefixes is
-    //    never touched (r12 advisory — the old created-after-start
-    //    snapshot could delete a sibling process's live checkpoint).
-    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val sweepPrefixes = Seq("graft-", "floor-", "streamdemo")
-    def ownTmpEntries(): Set[java.nio.file.Path] = {
-      val s = java.nio.file.Files.list(tmpRoot)
-      try {
-        val it = s.iterator()
-        val b = Set.newBuilder[java.nio.file.Path]
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (sweepPrefixes.exists(n.startsWith) && TmpDirs.ownedByThisProcess(n))
-            b += p
-        }
-        b.result()
-      } finally s.close()
-    }
-    def deleteRec(p: java.nio.file.Path): Unit = {
-      val f = p.toFile
-      Option(f.listFiles()).foreach(_.foreach(c => deleteRec(c.toPath)))
-      f.delete(): Unit
-    }
+    //    checkpoint in a fresh java.io.tmpdir directory (~40/pass);
+    //    TmpDirs.sweepOwned deletes only this process's.
     def settle(): Unit = {
       // settle the JVM OUTSIDE the timed window: blocking sweep waits for
       // the block manager to drop the previous query's storage, provider
@@ -349,8 +309,7 @@ object Bench {
       PinnedStorage.sweep(spark, blocking = true)
       try org.apache.spark.sql.graftaccess.StateStoreAccess.unloadAll()
       catch { case _: Throwable => () }
-      ownTmpEntries().foreach(p =>
-        try deleteRec(p) catch { case _: Throwable => () })
+      TmpDirs.sweepOwned(TmpDirs.root)
       System.gc()
     }
     // Pre-warmup probes (r14): every full-suite run r13-r14 read the

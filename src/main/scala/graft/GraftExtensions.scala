@@ -11,10 +11,8 @@ import graft.functions.{BloomExpressions, FloatDotProduct, SemverClean, SemverEx
   * imperative `register` call:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)          // programmatic, or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")  // config
-  *   .getOrCreate()
+  * builder.withExtensions(new GraftExtensions)                 // programmatic, or
+  * builder.config("spark.sql.extensions", "graft.GraftExtensions")  // config
   * }}}
   *
   * (Queries that receive an already-built session — the driver contract —

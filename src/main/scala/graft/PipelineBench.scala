@@ -16,21 +16,7 @@ import org.apache.spark.sql.SparkSession
 object PipelineBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode checkpoint I/O: java.nio + atomic rename, no Hadoop
-      // ChecksumFs (.crc siblings) — FloorExperiment measured ~125 ms of
-      // each ~315 ms AvailableNow micro-batch in walCommit/commitOffsets/
-      // latestOffset under the default manager, ~1 ms under this one.
-      // Cluster deployments keep the default by not setting the conf.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.LocalNioCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    implicit val spark: SparkSession = LocalSession(LocalSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
 
     // the same deterministic change feed the correctness gate replays
@@ -95,10 +81,6 @@ object PipelineBench {
       val feedBig = npm.NpmReplayOps.syntheticFeedReplicated(spark, sfDir, rep)
         .localCheckpoint(true)
       val nBig = feedBig.count()
-      def deleteRec(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(deleteRec))
-        p.delete(): Unit
-      }
       Seq(1000L, 10000L, 100000L).foreach { bs =>
         val nFiles = math.max(1L, math.round(nBig.toDouble / bs)).toInt
         val stage = TmpDirs.create("graft-pipesweep-feed")
@@ -120,7 +102,7 @@ object PipelineBench {
         val actualRows = if (nBatches > 0) nBig / nBatches else nBig
         println(
           s"""{"metric":"pipeline_sweep_changes_per_sec","batch_rows":$bs,"batch_rows_actual":$actualRows,"value":${f("%.0f", nBig / dt2)},"unit":"changes/sec","changes":$nBig,"n_batches":$nBatches,"sec":${f("%.3f", dt2)},"host_steal_pct":${steal2.map(f("%.3f", _)).getOrElse("null")},"sf":"$sfDir"}""")
-        Seq(stage, outDir, ck).foreach(p => deleteRec(new java.io.File(p)))
+        Seq(stage, outDir, ck).foreach(TmpDirs.deleteRec)
       }
     }
     spark.stop()

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode checkpoint I/O: java.nio + atomic rename, no Hadoop
-      // ChecksumFs (.crc siblings) — FloorExperiment measured ~125 ms of
-      // each ~315 ms AvailableNow micro-batch in walCommit/commitOffsets/
-      // latestOffset under the default manager, ~1 ms under this one.
-      // Cluster deployments keep the default by not setting the conf.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.LocalNioCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(LocalSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for local iteration (driver runs all)
@@ -29,31 +14,7 @@ object Verify {
       .filter(_.nonEmpty)
     // same suite hygiene as Bench: drop staged tmp dirs and cached
     // state-store providers between queries so ~260 sequential dumps in
-    // one JVM don't accumulate disk + background maintenance work. The
-    // sweep deletes ONLY dirs carrying this process's nonce (TmpDirs) —
-    // exact ownership, never a concurrent process's live staging (r12
-    // advisory).
-    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val sweepPrefixes = Seq("graft-", "floor-", "streamdemo")
-    def ownTmpEntries(): Set[java.nio.file.Path] = {
-      val s = java.nio.file.Files.list(tmpRoot)
-      try {
-        val it = s.iterator()
-        val b = Set.newBuilder[java.nio.file.Path]
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (sweepPrefixes.exists(n.startsWith) && TmpDirs.ownedByThisProcess(n))
-            b += p
-        }
-        b.result()
-      } finally s.close()
-    }
-    def deleteRec(p: java.nio.file.Path): Unit = {
-      val f = p.toFile
-      Option(f.listFiles()).foreach(_.foreach(c => deleteRec(c.toPath)))
-      f.delete(): Unit
-    }
+    // one JVM don't accumulate disk + background maintenance work
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -67,8 +28,7 @@ object Verify {
       PinnedStorage.sweep(spark)
       try org.apache.spark.sql.graftaccess.StateStoreAccess.unloadAll()
       catch { case _: Throwable => () }
-      ownTmpEntries().foreach(p =>
-        try deleteRec(p) catch { case _: Throwable => () })
+      TmpDirs.sweepOwned(TmpDirs.root)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

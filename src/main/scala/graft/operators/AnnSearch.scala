@@ -883,9 +883,9 @@ object AnnSearch {
     * a fresh grid) once cumulative |delta| exceeds
     * [[DeltaRebuildFrac]] × |corpus at last census|, or immediately
     * when [[newCellArrivals]] is non-empty. The fraction is MEASURED,
-    * not chosen ([[DeltaGridProbe]], DESIGN r18): the frozen grid
-    * inflates the capped maintenance pair frame vs a re-censused one
-    * (occupancy grows with (1+f) while nsplits stays frozen) — at
+    * not chosen (DESIGN.md r18): the frozen grid inflates the capped
+    * maintenance pair frame vs a re-censused one (occupancy grows
+    * with (1+f) while nsplits stays frozen) — at
     * cumulative f ≈ 1/3, 2/3, 1, 4/3 the stale/fresh pair ratio reads
     * 1.08/1.22/1.30/1.45 at sf0.01 and 1.20/1.55/1.74/1.91 at sf0.1:
     * the larger corpus crosses 1.5× — the hot-cell territory the cap
@@ -896,35 +896,6 @@ object AnnSearch {
   private[operators] def rebuildDue(cumDelta: Long, censusCorpus: Long,
       newCells: Long): Boolean =
     newCells > 0 || cumDelta > DeltaRebuildFrac * censusCorpus
-
-  /** Grid-staleness kernel behind [[DeltaRebuildFrac]]'s measured
-    * crossover ([[DeltaGridProbe]]): census corpus = residues {0,1,2},
-    * cumulative delta = `deltaResidues` ⊆ {3..6}. Returns (delta
-    * fraction f = |delta|/|census corpus|, capped pair count on the
-    * STALE corpus0 grid, pair count on a FRESH re-census grid, max
-    * stale sub-cell occupancy ÷ CellCap). The stale/fresh pair ratio
-    * is the maintenance cost inflation a frozen grid accumulates —
-    * sub-cell occupancy grows with (1+f) while nsplits stays frozen,
-    * so pairs grow ~(1+f)² against a flat fresh-grid baseline. */
-  private[operators] def gridStalenessStats(s: SparkSession, dir: String,
-      deltaResidues: Seq[Int]): (Double, Long, Long, Double) = {
-    val e = index(s, dir)
-    val res = pmod(col("vec_id"), lit(7L))
-    val isC0 = res.isin(0, 1, 2)
-    val isNew = res.isin(deltaResidues.map(r => r: Any): _*)
-    val c0 = e.filter(isC0)
-    val all = e.filter(isC0 || isNew)
-    val sizes0 = c0.groupBy("label").agg(count(lit(1)).as("cellN"))
-    val sizesF = all.groupBy("label").agg(count(lit(1)).as("cellN"))
-    val f = e.filter(isNew).count().toDouble / c0.count()
-    val staleS = subSplit(all, sizes0)
-    val freshS = subSplit(all, sizesF)
-    val stalePairs = cappedRounds(staleS, staleS).count()
-    val freshPairs = cappedRounds(freshS, freshS).count()
-    val maxOcc = staleS.groupBy("label", "sub").agg(count(lit(1)).as("n"))
-      .agg(max(col("n"))).head().getLong(0)
-    (f, stalePairs, freshPairs, maxOcc.toDouble / CellCap)
-  }
 
   /** Cell-capped k-NN graph: cells larger than Cap=16 are split into
     * ceil(cellN/16) deterministic sub-cells and neighbors are ranked
@@ -1096,7 +1067,7 @@ object AnnSearch {
   /** Adjacent cells per node for the navigable graph (top-A centroid
     * neighbors — r16 verdict item 1: rank-1-only gave the walk a
     * single-cell escape radius and global recall stalled at 4/30).
-    * Chosen by [[NavTuningProbe]]'s sweep at sf0.01 (DESIGN.md r17):
+    * Chosen by a sweep at sf0.01 (DESIGN.md r17):
     * (A, kPerCell) = (4, 3) measured global 10/30 / quality 0.907 —
     * the sweep's peak; wider configs plateaued or fell. Per-node edge
     * budget = 3 intra + A·kPerCell = 15, NSW-typical. */
@@ -1110,7 +1081,7 @@ object AnnSearch {
   private[operators] val CrossKPerCell = 3
 
   /** Declared navigation dials, folded from the r17 measured laws
-    * (NavTuningProbe, DESIGN.md r17 §2 → r18 fold):
+    * (DESIGN.md r17 §2 → r18 fold):
     *
     *  - HOP BUDGET: the walk converges by hop 5 at BOTH measured corpus
     *    sizes (sf0.01: global 10→11/30, top1 3→4/10, quality
@@ -1164,15 +1135,15 @@ object AnnSearch {
         WHERE rn <= (SELECT b FROM dial))"""
 
   /** Cross-cell candidate pairs: each node against the members of its
-    * top-`a` ADJACENT cells (nearest-centroid other cells) that share
-    * the node's sub-cell digit under each adjacent cell's own split
-    * grid — the same CellCap bound as the intra-cell rounds, so
-    * per-node candidates stay ≤ ~a·CellCap at any corpus size and the
-    * generator remains a keyed equi-join on (blabel, digit). Output
+    * top-[[CrossA]] ADJACENT cells (nearest-centroid other cells) that
+    * share the node's sub-cell digit under each adjacent cell's own
+    * split grid — the same CellCap bound as the intra-cell rounds, so
+    * per-node candidates stay ≤ ~CrossA·CellCap at any corpus size and
+    * the generator remains a keyed equi-join on (blabel, digit). Output
     * carries `blabel` so edge selection can rank per adjacent cell. */
-  private def crossCellCandidates(e: DataFrame, a: Int): DataFrame = {
+  private def crossCellCandidates(e: DataFrame): DataFrame = {
     val sizes = e.groupBy("label").agg(count(lit(1)).as("cellN"))
-    val adj = cellAdjacency(e, a)
+    val adj = cellAdjacency(e, CrossA)
     val bmeta = sizes.select(col("label").as("blabel"),
       ceil(col("cellN") / lit(CellCap.toDouble)).cast("long").as("bns"))
     val qside = e.join(broadcast(adj), "label")
@@ -1186,14 +1157,14 @@ object AnnSearch {
         (expr(dotExpr) / (col("q.nrm") * col("c.nrm"))).as("cos"))
   }
 
-  /** The selected cross-cell edge set: top-`kPerCell` per (node,
-    * adjacent cell) over the candidates — ≤ a·kPerCell edges per node,
-    * each batch of kPerCell landing in a DIFFERENT cell. */
-  private def crossCellEdges(e: DataFrame, a: Int, kPerCell: Int): DataFrame = {
+  /** The selected cross-cell edge set: top-[[CrossKPerCell]] per (node,
+    * adjacent cell) over the candidates — ≤ CrossA·CrossKPerCell edges
+    * per node, each batch of CrossKPerCell landing in a DIFFERENT cell. */
+  private def crossCellEdges(e: DataFrame): DataFrame = {
     val wpc = Window.partitionBy("qid", "blabel").orderBy(desc("cos"), asc("cand_id"))
-    crossCellCandidates(e, a)
+    crossCellCandidates(e)
       .withColumn("rnc", row_number().over(wpc))
-      .filter(col("rnc") <= kPerCell)
+      .filter(col("rnc") <= CrossKPerCell)
       .select("qid", "blabel", "cand_id", "cos")
   }
 
@@ -1274,7 +1245,7 @@ object AnnSearch {
     (s, dir) => {
       val e = index(s, dir)
       val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-      crossCellEdges(e, CrossA, CrossKPerCell)
+      crossCellEdges(e)
         .withColumn("rank", row_number().over(w).cast("long"))
         .select("qid", "rank", "cand_id", "cos")
         .orderBy("qid", "rank")
@@ -2159,8 +2130,8 @@ object AnnSearch {
   private[graft] val AdcBroadcastRowsPerQuery: Long = 2L * PqM * PqKC
 
   /** The batched probe at an arbitrary batch size — the declared query
-    * pins NQ=100; [[BatchScalingProbe]] sweeps NQ to measure how
-    * per-query cost falls with Q (r14 verdict item 5). */
+    * pins NQ=100; how per-query cost falls with Q is measured in
+    * DESIGN.md round 15. */
   private[operators] def ivfAdcBatchProbe(s: SparkSession, dir: String,
       NQ: Long): DataFrame = {
       require(NQ <= MaxBatchQ,
@@ -2319,7 +2290,7 @@ object AnnSearch {
         // top-CrossKPerCell edges into EACH of its CrossA adjacent
         // cells — disjoint from the intra set by construction
         // (different label), so the union needs no dedup
-        val cross = crossCellEdges(e, CrossA, CrossKPerCell)
+        val cross = crossCellEdges(e)
           .select("qid", "cand_id")
         intra.union(cross).localCheckpoint(true)
       }
@@ -2435,21 +2406,16 @@ object AnnSearch {
     * uncapped one read exponent 1.73.
     */
   /** The batched navigation at an arbitrary batch size — the declared
-    * query pins NQ=10; [[BatchScalingProbe]] sweeps NQ (r14 verdict
-    * item 5). `hops`/`beamB` default to the declared dials ([[NavHops]],
-    * corpus-aware [[navBeam]]); [[NavTuningProbe]] passes explicit
-    * values to sweep them. */
+    * query pins NQ=10; the NQ sweep behind it is DESIGN.md round 15. The
+    * walk runs the declared dials: [[NavHops]] hops at the corpus-aware
+    * [[navBeam]] width, over the pinned canonical graph. */
   private[operators] def greedyBatchProbe(s: SparkSession, dir: String,
-      NQ: Long, edgesOverride: Option[DataFrame] = None,
-      hops: Int = NavHops, beamB: Option[Int] = None): DataFrame = {
+      NQ: Long): DataFrame = {
       require(NQ <= MaxBatchQ,
         s"batch Q=$NQ exceeds MaxBatchQ=$MaxBatchQ (broadcast ceiling)")
       val e = index(s, dir)
-      val B = beamB.getOrElse(navBeam(e.count()))
-      // edgesOverride: NavTuningProbe sweeps candidate edge sets through
-      // the SAME walk the declared queries run; the declared queries all
-      // navigate the pinned canonical artifact
-      val edges = edgesOverride.getOrElse(knnEdges(s, dir))
+      val B = navBeam(e.count())
+      val edges = knnEdges(s, dir)
       val qset = e.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
           col("nrm").as("qn"), col("label").as("qlabel"))
@@ -2490,10 +2456,9 @@ object AnnSearch {
           .localCheckpoint(true)
       }
       val b0 = scoredB(entries).localCheckpoint(true)
-      // b0..b{hops}; the declared queries run the NavHops=5 convergence
-      // budget, NavTuningProbe sweeps the dial (hopB's localCheckpoint
-      // keeps each step eager, so the chain cost is linear in hops)
-      val beams = Iterator.iterate(b0)(hopB).take(hops + 1).toSeq
+      // b0..b{NavHops} (hopB's localCheckpoint keeps each step eager, so
+      // the chain cost is linear in hops)
+      val beams = Iterator.iterate(b0)(hopB).take(NavHops + 1).toSeq
       val wr = Window.partitionBy("hop", "qid").orderBy(desc("cos"), asc("vec_id"))
       beams.zipWithIndex
         .map { case (b, h) =>
@@ -2745,63 +2710,6 @@ object AnnSearch {
       GROUP BY 1
       ORDER BY grp
     """.stripMargin.trim))
-
-  /** Recall readout of one CANDIDATE navigable edge set (intra top-3 ∪
-    * cross top-`kPerCell` per `a` adjacent cells) through the exact
-    * walk the declared queries run — the sweep kernel
-    * [[NavTuningProbe]] uses to pick ([[CrossA]], [[CrossKPerCell]]).
-    * Returns (n_found_global/30, n_found_cell/30, n_top1/10, quality)
-    * at the recall gate's NQ=10; `hops`/`beamB` default to the declared
-    * dials so the no-arg kernel measures the shipped configuration. */
-  private[operators] def navRecallStats(s: SparkSession, dir: String,
-      a: Int, kPerCell: Int, hops: Int = NavHops,
-      beamB: Option[Int] = None): (Long, Long, Long, Double) = {
-    val e = index(s, dir)
-    // the exact universe stays the recall gate's top-3 regardless of
-    // the walk's beam width — a wider beam is judged on the same target
-    val NQ = 10L; val B = 3
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-    val intra = cappedPairCandidates(e)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select("qid", "cand_id")
-    val cross = crossCellEdges(e, a, kPerCell).select("qid", "cand_id")
-    val edges = intra.union(cross).localCheckpoint(true)
-    val finFull = greedyBatchProbe(s, dir, NQ, Some(edges), hops, beamB)
-      .filter(col("hop") === hops)
-    val fin = finFull.select(col("qid").as("fq"), col("vec_id").as("fv"))
-    val qset = e.filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("label").as("qlabel"))
-    val wq = Window.partitionBy("qid").orderBy(desc("cos"), asc("vec_id"))
-    def scoredAll(cond: org.apache.spark.sql.Column) =
-      e.join(broadcast(qset), cond)
-        .select(col("qid"), col("vec_id"),
-          (expr("float_dot(embedding, qe)") / (col("nrm") * col("qn"))).as("cos"))
-        .withColumn("rank", row_number().over(wq))
-        .filter(col("rank") <= B)
-    def found(exact: DataFrame): DataFrame =
-      exact.join(broadcast(fin),
-        col("qid") === col("fq") && col("vec_id") === col("fv"))
-    val nGlobal = found(scoredAll(col("vec_id") =!= col("qid"))).count()
-    val exCell = scoredAll(col("label") === col("qlabel") &&
-      col("vec_id") =!= col("qid"))
-    val cellHits = found(exCell)
-    val nCell = cellHits.count()
-    val nTop1 = cellHits.filter(col("rank") === 1).count()
-    // navigation QUALITY independent of id membership: how much of the
-    // best-possible cosine the final beam reaches, averaged over queries
-    // (mean of per-query beam_best / global_best — the dial that must
-    // not fall when an edge-budget change trades cell hits for global)
-    val beamBest = finFull.groupBy("qid").agg(max(col("cos")).as("bb"))
-    val globBest = scoredAll(col("vec_id") =!= col("qid"))
-      .filter(col("rank") === 1)
-      .select(col("qid").as("gq"), col("cos").as("gb"))
-    val quality = beamBest.join(globBest, col("qid") === col("gq"))
-      .agg(avg(col("bb") / col("gb"))).head().getDouble(0)
-    edges.unpersist(true)
-    (nGlobal, nCell, nTop1, quality)
-  }
 
   val defs: Seq[QueryDef] =
     Seq(bruteForce, ivfLabel, ivfPrebuilt, hyperplaneLsh, lshPrebuilt,

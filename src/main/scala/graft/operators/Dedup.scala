@@ -782,9 +782,9 @@ object Dedup {
 
   /** Core of the incremental near-dup probe — the reusable form of
     * [[minhashIncrementalDelta]]'s computation, shared by the streaming
-    * wrapper (graft.streaming.DeltaDedupStream), the throughput bench
-    * (DeltaDedupBench) and the oracle-gated stream query: one arrival
-    * batch (its [[deltaSketch]]) against a corpus sketch index.
+    * wrapper (graft.streaming.DeltaDedupStream) and the oracle-gated
+    * stream query (its steady-state throughput: DESIGN.md round 7): one
+    * arrival batch (its [[deltaSketch]]) against a corpus sketch index.
     * Candidates come from the one-sided band join (batch bands ⋈ index
     * bands — O(|batch| × bucket), never corpus²); exact verification is
     * the estimate_quality shape (broadcast-prune the combined shingle
@@ -798,7 +798,7 @@ object Dedup {
   private[graft] def deltaNearDupsFromSketch(
       bsh: DataFrame, bbands: DataFrame,
       corpusSh: DataFrame, corpusBands: DataFrame,
-      eager: Boolean = true): DataFrame = {
+      eager: Boolean): DataFrame = {
     // `eager = false` (the streaming per-batch path): skip the
     // intermediate checkpoints and leave the repeated subtrees to
     // ReuseExchange inside the batch's single write action — at

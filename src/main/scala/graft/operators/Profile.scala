@@ -1,5 +1,4 @@
 package graft.operators
-import org.apache.spark.sql.SparkSession
 
 /** Declared-query timer: times named `SparkEntry` queries, each on a
   * settled session (pinned surfaces swept, GC run), for a number of
@@ -16,12 +15,7 @@ object Profile {
     require(args.length == 3 && args(0) == "q",
       "usage: Profile q <n_passes> <name>[,name...]")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSession(graft.LocalSession.envCores)
     spark.sparkContext.setLogLevel("ERROR")
     val passes = args(1).toInt
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)

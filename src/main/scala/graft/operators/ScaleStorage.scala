@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Tables, TmpDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,15 +18,6 @@ import org.apache.spark.sql.functions._
   * the pruned scan carries a `dynamicpruning` partition filter.
   */
 object ScaleStorage {
-
-  private def tmp(prefix: String): String =
-    graft.TmpDirs.create(prefix)
-
-  private def deleteRec(path: String): Unit = {
-    val f = new java.io.File(path)
-    Option(f.listFiles()).foreach(_.foreach(c => deleteRec(c.getPath)))
-    f.delete(): Unit
-  }
 
   /** Per-invocation layout id + DEFERRED cleanup of the previous
     * invocation's tables/dirs. The returned DataFrame is lazy — the
@@ -73,10 +64,10 @@ object ScaleStorage {
               ps.sql(s"DROP TABLE IF EXISTS graft_bkt_orders_$pn")
               ps.sql(s"DROP TABLE IF EXISTS graft_bkt_lineitem_$pn")
             } catch { case _: Throwable => () }
-            try deleteRec(pb) catch { case _: Throwable => () }
+            try TmpDirs.deleteRec(pb) catch { case _: Throwable => () }
           } else if (ps.sparkContext.isStopped) {
             // dead session: its catalog is gone, just reclaim the files
-            try deleteRec(pb) catch { case _: Throwable => () }
+            try TmpDirs.deleteRec(pb) catch { case _: Throwable => () }
           }
           // ps live but != s: ANOTHER session may still be reading this
           // layout — leave it; that session's next invocation (or the
@@ -84,7 +75,7 @@ object ScaleStorage {
         }
         laySeq.incrementAndGet()
       }
-      val base = tmp("graft-bkt")
+      val base = TmpDirs.create("graft-bkt")
       Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderpriority"))
         .repartition(8, col("o_orderkey")) // partition i == bucket i → 1 file/bucket
@@ -136,8 +127,8 @@ object ScaleStorage {
     "scale_dpp_partition_prune",
     (s, dir) => {
       val base = synchronized {
-        lastDpp.foreach(p => try deleteRec(p) catch { case _: Throwable => () })
-        val b = tmp("graft-dpp")
+        lastDpp.foreach(p => try TmpDirs.deleteRec(p) catch { case _: Throwable => () })
+        val b = TmpDirs.create("graft-dpp")
         lastDpp = Some(b)
         b
       }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Per-batch cost is O(|batch| sketch + one-sided band join +
   * candidate-scoped verification) — the measured ~2 ms marginal per
-  * document (DeltaDedupBench) — and the sink is idempotent per batch:
+  * document (DESIGN.md round 7) — and the sink is idempotent per batch:
   * each foreachBatch invocation overwrites its OWN `batch_id=N`
   * partition directory wholesale (mode=overwrite on the per-batch
   * path), so a crash-replayed batch replaces exactly its prior output

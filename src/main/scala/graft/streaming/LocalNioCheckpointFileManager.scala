@@ -14,9 +14,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * rename, no checksum siblings, no FileContext layer.
   *
   * Why it exists (r14 verdict item 4): the streaming family's suite cost
-  * is dominated by a fixed per-micro-batch engine floor, and
-  * FloorExperiment's durationMs decomposition attributes ~125 ms of each
-  * ~315 ms AvailableNow batch to METADATA-LOG I/O (walCommit +
+  * is dominated by a fixed per-micro-batch engine floor, and the
+  * durationMs decomposition in DESIGN.md round 15 attributes ~125 ms
+  * of each ~315 ms AvailableNow batch to METADATA-LOG I/O (walCommit +
   * commitOffsets + latestOffset), all routed through the default
   * checkpoint manager. That default stacks Hadoop's ChecksumFs (every
   * tiny offsets/commit/state-delta file gets a `.crc` sibling — double
@@ -26,7 +26,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * protocol needs.
   *
   * Selected via `spark.sql.streaming.checkpointFileManagerClass` in the
-  * local entry points (Bench/Verify/tests); a cluster deployment with a
+  * local sessions ([[graft.LocalSession]], tests); a cluster deployment with a
   * durable checkpoint store keeps the default by simply not setting the
   * conf. Semantics preserved end to end: createAtomic stays
   * write-temp-then-atomic-rename (crash-consistent — a reader never

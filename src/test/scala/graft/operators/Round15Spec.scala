@@ -67,10 +67,10 @@ class Round15Spec extends SparkSpec {
   }
 
   test("batched probes at swept batch sizes stay consistent with the declared arms") {
-    // BatchScalingProbe's sweep is only meaningful if a bigger batch is
-    // a SUPERSET run of the smaller one: every query present in both
-    // must get identical neighbors (the shared ADC scan/hop joins serve
-    // each query independently)
+    // the batch-size sweep (DESIGN.md round 15) is only meaningful if a
+    // bigger batch is a SUPERSET run of the smaller one: every query
+    // present in both must get identical neighbors (the shared ADC
+    // scan/hop joins serve each query independently)
     val q100 = AnnSearch.ivfAdcBatchProbe(spark, dir, 100L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(5)))
     val q250 = AnnSearch.ivfAdcBatchProbe(spark, dir, 250L).collect()

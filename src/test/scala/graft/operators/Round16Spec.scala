@@ -17,7 +17,7 @@ class Round16Spec extends SparkSpec {
     // (quantizer routes, graph serves) pruned whatever the quantizer
     // pruned and global recall was ~0 BY CONSTRUCTION. r17 widened the
     // layer to CrossA=4 adjacent cells × CrossKPerCell=3 (measured at
-    // sf0.01: global 10/30, quality 0.907 — the NavTuningProbe sweep's
+    // sf0.01: global 10/30, quality 0.907 — the DESIGN.md r17 sweep's
     // peak). The old cell-column floors (cell ≥ 10, top-1 ≥ 3) are
     // deliberately superseded: on this corpus labels are random w.r.t.
     // cosine (TESTDATA), so the own-cell top-3 and the global top-3 are

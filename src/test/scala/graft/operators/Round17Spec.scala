@@ -15,7 +15,7 @@ class Round17Spec extends SparkSpec {
     // r16 verdict item 1: global recall sat at token level (4/30)
     // because the cross-cell layer reached exactly ONE adjacent cell.
     // The r17 layer is CrossA=4 adjacent cells × CrossKPerCell=3 edges
-    // (NavTuningProbe sweep, DESIGN.md r17): measured at sf0.01 global
+    // (the sweep in DESIGN.md r17): measured at sf0.01 global
     // 10/30 (was 4), beam quality — mean over queries of
     // beam_best_cos / global_best_cos — 0.907 (was 0.755). Floors
     // pinned with headroom under the deterministic measured values.

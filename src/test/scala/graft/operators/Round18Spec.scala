@@ -17,8 +17,8 @@ class Round18Spec extends SparkSpec {
     // r17 verdict item 1 + 6: the measured laws (hop-5 convergence,
     // corpus-aware beam) are now the DECLARED configuration; at the
     // 2,000-vector corpus the dial picks B=3 and the deterministic
-    // measurement is global 11/30, quality 0.9357 (NavTuningProbe,
-    // DESIGN r18). Floors with headroom under those exact values.
+    // measurement is global 11/30, quality 0.9357 (DESIGN.md r18).
+    // Floors with headroom under those exact values.
     val rows = graft.SparkEntry.queries("ann_recall_greedy_vs_exact")(spark, dir).collect()
     assert(rows.length == 10, s"${rows.length} qids")
     val nGlobal = rows.map(_.getLong(3)).sum
@@ -94,9 +94,9 @@ class Round18Spec extends SparkSpec {
   }
 
   test("rebuild trigger arithmetic: DeltaRebuildFrac and the new-cell override") {
-    // the declared trigger (measured crossover in DeltaGridProbe /
-    // DESIGN r18: stale/fresh pair inflation crosses 1.5x between
-    // f=1/3 and f=2/3 at sf0.1; 0.5 re-censuses before it)
+    // the declared trigger (measured crossover in DESIGN.md r18:
+    // stale/fresh pair inflation crosses 1.5x between f=1/3 and f=2/3
+    // at sf0.1; 0.5 re-censuses before it)
     assert(AnnSearch.DeltaRebuildFrac == 0.5)
     assert(!AnnSearch.rebuildDue(cumDelta = 500, censusCorpus = 1000, newCells = 0))
     assert(AnnSearch.rebuildDue(cumDelta = 501, censusCorpus = 1000, newCells = 0))
