@@ -1,12 +1,34 @@
 #!/usr/bin/env python3
 """Derive an sf0.N-equivalent slice from the driver's sf0.1 testdata for
-the carrier growth-curve study — make_sf03.py generalized to N copies
-(r12 verdict item 5 extends the two carriers nearest the flag bar,
-er_customer_components and ann_pq_adc_topk, one notch to sf0.5).
+the carrier growth-curve studies (r11 at N=3; r12 extends the two
+carriers nearest the flag bar, er_customer_components and
+ann_pq_adc_topk, to N=5).
 
-Same protocol as make_sf03.py: upsample sf0.1 xN deterministically with
-DISJOINT key spaces per copy (see that script's header for the
-per-table reasoning); all other tables byte-identical copies.
+The generator of the sf0.1 data is not available locally, so this upsamples
+sf0.1 xN deterministically with DISJOINT key spaces per copy k:
+
+- lineitem: l_orderkey/l_partkey/l_suppkey offset by k * (max+1) -- the
+  co-order graph becomes N disjoint sf0.1 graphs (edges, wedges,
+  triangles each xN: exactly the linear-growth null the carriers are
+  measured against).
+- customer: c_custkey offset, c_name REGENERATED from the new key with
+  the generator's own 'Customer#%09d' format -- block structure and
+  within-block match density stay exactly sf0.1's (cloned names would
+  make every record a cross-copy levenshtein-0 match and blow the pair
+  count up by N^2).
+- documents: doc_id offset; for copies k >= 1 every token gets a
+  copy-specific suffix '_k' so cross-copy Jaccard is 0 -- each copy
+  keeps sf0.1's intrinsic near-dup rate (cloned texts would multiply the
+  dup rate instead of the corpus). n_chars recomputed.
+- events: disjoint user/event key spaces per copy, timestamps unchanged
+  -- N x the keyed state (users) at sf0.1's per-user event density, the
+  linear-growth null for the stateful-stream carriers.
+- embeddings: disjoint vec_ids, vectors unchanged (the ANN carriers are
+  timed, not oracle-checked, at these SFs -- cost scales with rows).
+- orders: multiplied since r13 (before that, copied unchanged); see the
+  comment at its gen() below.
+- part, supplier, nation, region: byte-identical copies (present so
+  Tables.* resolves).
 
 Usage: make_sfn.py N   (e.g. N=5 -> /root/repo/target/testdata/sf0.5)
 """

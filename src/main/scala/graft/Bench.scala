@@ -424,7 +424,9 @@ object Bench {
     def obj(entries: Seq[(String, Double)]): String =
       entries.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val detailPath = "/root/repo/BENCH_DETAIL.json"
+    // resolved against the working directory (scripts/capture_baseline.sh
+    // runs from the repo root)
+    val detailPath = java.nio.file.Paths.get("BENCH_DETAIL.json").toAbsolutePath.toString
     // Round-over-round adjudication, COMPUTED instead of prose (r12
     // verdict item 2): load the previous round's per-query mins (env
     // SPARK_GRAFT_PREV_DETAIL, else the committed BENCH_DETAIL.json —
@@ -549,7 +551,7 @@ object Bench {
     val hostShiftWarn = hostShift < 0.7 || hostShift > 1.2
     // the tracked artifact records FULL-suite runs only; a SPARK_GRAFT_ONLY
     // subset A/B run must not overwrite the committed full-run record
-    if (only.isEmpty) {
+    val detailFailure: Option[Throwable] = if (only.isEmpty) {
       // per-query in-suite spread: ratio = max/min over the valid samples.
       // n_ratio_over_1p3 is the headline jitter count — queries whose
       // samples disagree by >30% within ONE run even after the adaptive
@@ -564,9 +566,9 @@ object Bench {
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
       val failedArr = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val detail = s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"calibration":${f(calib)},"calibration_start":${f(calibStart)},"calibration_end":${f(calibEnd)},"calibration_prewarm":${f(calibPrewarm)},"calibration_parallel":${f(calibPar)},"calibration_parallel_start":${f(calibParStart)},"calibration_parallel_end":${f(calibParEnd)},"calibration_parallel_prewarm":${f(calibParPrewarm)},"host_steal_pct":${stealPct.map(f).getOrElse("null")},"probe_mode":"loaded","probe_steal_pct":${probeSteal.map(f).getOrElse("null")},"probe_accept":${probeSteal.exists(probeAccept)},"jitter":{"informational":true,"median_max_over_min":${f(medRatio)},"n_ratio_over_1p3":$nOver,"n_third_pass":${needThird.size},"n_fourth_pass":${needFourth.size}},"cross_run":{"n_over_1p3":$crossOver,"median_ratio":${f(crossMed)},"host_shift":${f(hostShift)},"host_shift_warn":$hostShiftWarn,"noise_floor_s":0.15,"n_compared":$crossCompared,"target":"n_over_1p3 <= 10% of n_compared on unchanged code; improves with pass count"},"regressions":{"n":${regressions.size},"n_window":$nWindow,"n_code":${regressions.size - nWindow},"host_shift":${f(hostShift)},"prev_detail":"$prevPath","prev_calibration":${prevCalib.map(f).getOrElse("null")},"calib_adj":${f(calibAdj)},"items":$regBlock},"failed":$failedArr,"queries":${obj(results.toSeq.sortBy(_._1))},"pass1":${obj(pass1.toSeq.sortBy(_._1))},"pass2":${obj(pass2.toSeq.sortBy(_._1))},"pass3":${obj(pass3.toSeq.sortBy(_._1))},"pass4":${obj(pass4.toSeq.sortBy(_._1))},"sf":"$sfDir"}"""
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detail)
-      catch { case _: Throwable => () }
-    }
+      try { java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detail); None }
+      catch { case scala.util.control.NonFatal(e) => Some(e) }
+    } else None
     // Printed line: headline subset, ALWAYS including the run's own top-5
     // most expensive queries (merged in ahead of the static list) — a slow
     // query can never be invisible in the printed line (r6/r8 finding: the
@@ -587,6 +589,12 @@ object Bench {
     }
     println(line)
     spark.stop()
+    // after the JSON line, so a failed detail write still leaves the run's
+    // numbers on stdout
+    detailFailure.foreach { e =>
+      System.err.println(s"graft.Bench: could not write $detailPath: $e")
+      sys.exit(1)
+    }
   }
 }
 

@@ -685,10 +685,10 @@ object Dedup {
 
   /** The incremental near-dup check as a REAL Structured Streaming run
     * (graft.streaming.DeltaDedupStream): the delta documents arrive as
-    * two parquet file drops on a file stream (`maxFilesPerTrigger=1` ⇒
-    * one micro-batch per drop, so the pipeline genuinely crosses
-    * micro-batch boundaries), each batch probes the session-pinned
-    * corpus sketch index through the shared [[deltaNearDups]] core, and
+    * two [[graft.streaming.LiveFeed]] drops (one micro-batch per drop,
+    * so the pipeline genuinely crosses micro-batch boundaries), each
+    * batch probes the session-pinned corpus sketch index through the
+    * shared [[deltaNearDups]] core, and
     * confirmed pairs land in a batch_id-partitioned idempotent parquet
     * sink. Near-dup pairs are delta-vs-corpus only on both paths, and
     * each delta doc's pairs are independent of its batch assignment, so
@@ -699,27 +699,20 @@ object Dedup {
   val streamDeltaDedup: QueryDef = QueryDef(
     "stream_delta_dedup_minhash",
     (s, dir) => {
+      // the pinned surface is read on the caller's session: the sketch
+      // cache keys on it, so the feed's child session would rebuild it
       val (sh, mh) = sketchSurface(s, dir)
       val isNew = col("doc_id") % 10 === 0
       val corpusSh = sh.filter(!isNew)
       val corpusBands = bandsOf(mh).filter(!isNew)
       val deltaDocs = Tables.documents(s, dir).filter(isNew).select("doc_id", "text")
-      val base = graft.TmpDirs.create("graft-stream-delta")
-      // two crawl drops, written executor-side (no driver collect);
-      // coalesce(1) gives one file per drop = one micro-batch per drop;
-      // the two single-task writes run concurrently (r9)
-      graft.ParallelStage(
-        () => deltaDocs.filter(expr("(doc_id div 10) % 2 = 0"))
-          .coalesce(1).write.parquet(s"$base/in/drop0"),
-        () => deltaDocs.filter(expr("(doc_id div 10) % 2 = 1"))
-          .coalesce(1).write.parquet(s"$base/in/drop1"))
-      val arrivals = s.readStream
-        .schema(deltaDocs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$base/in/*")
-      graft.streaming.DeltaDedupStream.start(s, arrivals, corpusSh, corpusBands,
-        s"$base/pairs", s"$base/ckpt").awaitTermination()
-      s.read.parquet(s"$base/pairs")
+      val feed = graft.streaming.LiveFeed(s, "graft-stream-delta")
+      // two crawl drops, written by executor tasks (nothing collected)
+      val arrivals = feed.stream(deltaDocs.filter(expr("(doc_id div 10) % 2 = 0")),
+        deltaDocs.filter(expr("(doc_id div 10) % 2 = 1")))
+      graft.streaming.DeltaDedupStream.start(feed.session, arrivals, corpusSh, corpusBands,
+        s"${feed.base}/pairs", feed.checkpoint).awaitTermination()
+      s.read.parquet(s"${feed.base}/pairs")
         .select("new_id", "old_id", "jaccard")
         .orderBy("new_id", "old_id")
     },

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.streaming.LiveFeed
 
 /** Fixed-memory frequency sketches with cross-engine determinism.
   *
@@ -364,25 +365,19 @@ object SketchOps {
   val kmvDistinctLive: QueryDef = QueryDef(
     "stream_kmv_distinct_live",
     (s0, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val feed = LiveFeed(s0, "graft-kmv-live")
+      val s = feed.session
       val ev = Tables.events(s, dir)
         .select(col("event_type"), col("user_id")).localCheckpoint(true)
-      val base = graft.TmpDirs.create("graft-kmv-live")
-      val sketchDir = s"$base/sketch"
-      // two feed drops = two micro-batches under maxFilesPerTrigger=1
-      graft.ParallelStage(
-        () => ev.filter(col("user_id") % 2 === 0).coalesce(1).write.parquet(s"$base/in/d0"),
-        () => ev.filter(col("user_id") % 2 === 1).coalesce(1).write.parquet(s"$base/in/d1"))
+      val sketchDir = s"${feed.base}/sketch"
+      val arrivals = feed.stream(ev.filter(col("user_id") % 2 === 0),
+        ev.filter(col("user_id") % 2 === 1))
       val hashOf = expr(hex12Spark(
         "md5(CAST(CAST(user_id AS STRING) AS BINARY))"))
       // seed an empty sketch so every batch is the same read-merge-write
       ev.limit(0).select(col("event_type"), hashOf.as("h"))
         .write.parquet(sketchDir)
-      s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
-        .writeStream
+      feed.run(arrivals.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           val sb = batch.sparkSession
           val bh = batch.select(col("event_type"), hashOf.as("h")).distinct()
@@ -391,11 +386,7 @@ object SketchOps {
             .localCheckpoint(true)
           merged.write.mode("overwrite").parquet(sketchDir)
           ()
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+        })
       // vk = the K-th smallest = the sketch maximum when the sketch is
       // full, null when the type has fewer than K distinct users
       val sketch = s.read.parquet(sketchDir)
@@ -454,16 +445,13 @@ object SketchOps {
   val countMinLive: QueryDef = QueryDef(
     "stream_countmin_live",
     (s0, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val feed = LiveFeed(s0, "graft-cm-live")
+      val s = feed.session
       val ev = Tables.events(s, dir)
         .select(col("user_id")).localCheckpoint(true)
-      val base = graft.TmpDirs.create("graft-cm-live")
-      val sketchDir = s"$base/sketch"
-      graft.ParallelStage(
-        () => ev.filter(col("user_id") % 2 === 0).coalesce(1).write.parquet(s"$base/in/d0"),
-        () => ev.filter(col("user_id") % 2 === 1).coalesce(1).write.parquet(s"$base/in/d1"))
+      val sketchDir = s"${feed.base}/sketch"
+      val arrivals = feed.stream(ev.filter(col("user_id") % 2 === 0),
+        ev.filter(col("user_id") % 2 === 1))
       def cellsOf(df: org.apache.spark.sql.DataFrame) = df
         .groupBy("user_id").agg(count(lit(1)).as("c"))
         .select(col("user_id"), col("c"),
@@ -473,11 +461,9 @@ object SketchOps {
         .groupBy("j", "h").agg(sum(col("c")).as("cell_total"))
       // seed the d×w state empty so every batch is the same read-merge-write
       cellsOf(ev.limit(0)).write.parquet(sketchDir)
-      s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
-        .writeStream
+      feed.run(arrivals.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-          val marker = java.nio.file.Paths.get(s"$base/applied/$bid")
+          val marker = java.nio.file.Paths.get(s"${feed.base}/applied/$bid")
           if (!java.nio.file.Files.exists(marker)) {
             val sb = batch.sparkSession
             val merged = cellsOf(batch.toDF())
@@ -489,11 +475,7 @@ object SketchOps {
             java.nio.file.Files.createFile(marker)
           }
           ()
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+        })
       // probe the LIVE-built sketch with the batch audit: exact top-20
       // heavy hitters vs their count-min estimates
       val cells = s.read.parquet(sketchDir)

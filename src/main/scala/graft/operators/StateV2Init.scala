@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessorWithInitialState,
-  TimeMode, TimerValues, Trigger, TTLConfig, ValueState, MapState}
+  TimeMode, TimerValues, TTLConfig, ValueState, MapState}
 
 import graft.{QueryDef, Tables}
+import graft.streaming.LiveFeed
 
 /** The backfilled state a user carries into the stream: the batch
   * aggregate of everything BEFORE the cutover, including the per-type
@@ -77,8 +78,8 @@ object StateV2Init {
   val warmStart: QueryDef = QueryDef(
     "stream_tws_initial_state_live",
     (s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val feed = LiveFeed(s0, "graft-tws-init")
+      val s = feed.session
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val ev = Tables.events(s, dir).select(
@@ -104,41 +105,17 @@ object StateV2Init {
             .as("types"))
         .as[UInit]
         .groupByKey(_.user_id)(Encoders.scalaLong)
-      // --- the live side: post-cutover events, two pinned drops ---
-      val base = graft.TmpDirs.create("graft-tws-init")
+      // --- the live side: post-cutover events, two drops ---
       val tsCol = expr("timestamp_micros(ts_us)")
-      ev.filter(tsCol >= lit(CUT1).cast("timestamp") &&
-          tsCol < lit(CUT2).cast("timestamp"))
-        .coalesce(1).write.parquet(s"$base/in/d0")
-      ev.filter(tsCol >= lit(CUT2).cast("timestamp"))
-        .coalesce(1).write.parquet(s"$base/in/d1")
-      val t0 = java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 120000L)
-      val t1 = java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 60000L)
-      for ((d, t) <- Seq("d0" -> t0, "d1" -> t1)) {
-        java.nio.file.Files.list(java.nio.file.Paths.get(s"$base/in/$d"))
-          .forEach(p => java.nio.file.Files.setLastModifiedTime(p, t))
-      }
-      val ckptScheme =
-        if (s.sparkContext.hadoopConfiguration.get("fs.file.impl", "")
-            .contains("RawLocalFileSystem")) "localfs://" else ""
-      val snaps = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
+      val snaps = feed.stream(
+          ev.filter(tsCol >= lit(CUT1).cast("timestamp") && tsCol < lit(CUT2).cast("timestamp")),
+          ev.filter(tsCol >= lit(CUT2).cast("timestamp")))
         .as[UEvt]
         .groupByKey(_.user_id)(Encoders.scalaLong)
         .transformWithState(new WarmStartProcessor(usOf(CUT2)),
           TimeMode.None(), OutputMode.Append(), init,
           Encoders.product[USnap], Encoders.product[UInit])
-      snaps.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$ckptScheme$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", s"$base/out")
-        .start()
-        .awaitTermination()
-      s.read.parquet(s"$base/out").orderBy("user_id", "batch_half")
+      feed.toParquet(snaps).orderBy("user_id", "batch_half")
         .select("user_id", "batch_half", "upto_ts_us", "n_cum",
           "sum_cum_e2", "n_types_cum")
     },

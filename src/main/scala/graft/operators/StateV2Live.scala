@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, Trigger, TTLConfig, ValueState, MapState}
+  TimeMode, TimerValues, TTLConfig, ValueState, MapState}
 
 import graft.{QueryDef, Tables}
+import graft.streaming.LiveFeed
 
 /** The event row as the stateful processor sees it: timestamps as UTC
   * microseconds and money as exact cents, so every piece of state is a
@@ -119,20 +120,13 @@ object StateV2Live {
   private val MID_US = java.time.LocalDate.parse(MID).atStartOfDay
     .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
 
-  /** Shared staging for the order-dependent TWS queries: child session
-    * (4 state partitions, RocksDB — the provider the v2 state API is
-    * built on), the feed projected to [[UEvt]], the two drops written
-    * SEQUENTIALLY with modTimes pinned 60 s apart (FileStreamSource
-    * orders by modTime; the concurrent-write trick the order-independent
-    * live queries use would leave batch order to filesystem timing),
-    * and the checkpoint scheme for the test JVM's RawLocalFileSystem
-    * (RocksDB's file manager hard-casts to the checksum LocalFileSystem
-    * — same discipline as RetentionSpec).
-    */
+  /** Shared staging for the two TWS queries: a [[LiveFeed]] on RocksDB
+    * (the provider the v2 state API is built on) replaying the feed,
+    * projected to [[UEvt]], as its two event-time halves. */
   private def stagedFeed(s0: SparkSession, dir: String)
-      : (SparkSession, org.apache.spark.sql.Dataset[UEvt], String, String) = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+      : (LiveFeed, org.apache.spark.sql.Dataset[UEvt]) = {
+    val feed = LiveFeed(s0, "graft-tws")
+    val s = feed.session
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ev = Tables.events(s, dir).select(
@@ -141,48 +135,22 @@ object StateV2Live {
       col("event_type"),
       (col("value").cast("decimal(12,2)") * 100).cast("long").as("v2"),
       col("event_id"))
-    val base = graft.TmpDirs.create("graft-tws")
     val mid = lit(MID).cast("timestamp")
     val tsCol = expr("timestamp_micros(ts_us)")
-    ev.filter(tsCol < mid).coalesce(1).write.parquet(s"$base/in/d0")
-    ev.filter(tsCol >= mid).coalesce(1).write.parquet(s"$base/in/d1")
-    val t0 = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - 120000L)
-    val t1 = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - 60000L)
-    for ((d, t) <- Seq("d0" -> t0, "d1" -> t1)) {
-      val dp = java.nio.file.Paths.get(s"$base/in/$d")
-      java.nio.file.Files.list(dp).forEach(p =>
-        java.nio.file.Files.setLastModifiedTime(p, t))
-    }
     implicit val evtEnc: Encoder[UEvt] = Encoders.product[UEvt]
-    val ckptScheme =
-      if (s.sparkContext.hadoopConfiguration.get("fs.file.impl", "")
-          .contains("RawLocalFileSystem")) "localfs://" else ""
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
-      .as[UEvt]
-    (s, stream, base, ckptScheme)
+    (feed, feed.stream(ev.filter(tsCol < mid), ev.filter(tsCol >= mid)).as[UEvt])
   }
 
   val cumStats: QueryDef = QueryDef(
     "stream_transform_with_state_live",
     (s0, dir) => {
-      val (s, stream, base, ckptScheme) = stagedFeed(s0, dir)
+      val (feed, stream) = stagedFeed(s0, dir)
       implicit val snapEnc: Encoder[USnap] = Encoders.product[USnap]
-      stream
+      feed.toParquet(stream
         .groupByKey(_.user_id)(Encoders.scalaLong)
         .transformWithState(new CumStatsProcessor(MID_US),
-          TimeMode.None(), OutputMode.Append())
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$ckptScheme$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", s"$base/out")
-        .start()
-        .awaitTermination()
-      s.read.parquet(s"$base/out").orderBy("user_id", "batch_half")
+          TimeMode.None(), OutputMode.Append()))
+        .orderBy("user_id", "batch_half")
         .select("user_id", "batch_half", "upto_ts_us", "n_cum",
           "sum_cum_e2", "n_types_cum")
     },
@@ -210,21 +178,13 @@ object StateV2Live {
   val lastN: QueryDef = QueryDef(
     "stream_tws_list_state_lastn",
     (s0, dir) => {
-      val (s, stream, base, ckptScheme) = stagedFeed(s0, dir)
+      val (feed, stream) = stagedFeed(s0, dir)
       implicit val outEnc: Encoder[ULastN] = Encoders.product[ULastN]
-      stream
+      feed.toParquet(stream
         .groupByKey(_.user_id)(Encoders.scalaLong)
         .transformWithState(new LastNProcessor(3, MID_US),
-          TimeMode.None(), OutputMode.Append())
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$ckptScheme$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", s"$base/out")
-        .start()
-        .awaitTermination()
-      s.read.parquet(s"$base/out").orderBy("user_id", "batch_half", "rank")
+          TimeMode.None(), OutputMode.Append()))
+        .orderBy("user_id", "batch_half", "rank")
         .select("user_id", "batch_half", "rank", "ts_us", "event_id")
     },
     Some(s"""

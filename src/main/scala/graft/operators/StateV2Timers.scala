@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+  StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.{QueryDef, Tables}
+import graft.streaming.LiveFeed
 
 /** Input/output rows for the event-time-timer processor, everything in
   * epoch MILLIS (the unit `registerTimer`/watermark speak natively). */
@@ -55,53 +56,29 @@ object StateV2Timers {
   private val MID = "2024-01-16"
   val GAP_MS: Long = 24L * 3600 * 1000 // one day of event-time silence
 
-  /** Run the quiet-user stream over the events feed split into the two
-    * standard modTime-pinned drops; see [[QuietUserProcessor]]. */
+  /** Run the quiet-user stream over the events feed split into two
+    * [[LiveFeed]] drops; see [[QuietUserProcessor]]. */
   val quietUsers: QueryDef = QueryDef(
     "stream_tws_event_timers",
     (s0, dir) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "4")
+      val feed = LiveFeed(s0, "graft-tws-timer")
+      val s = feed.session
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val ev = Tables.events(s, dir).select(
         col("user_id"),
         col("ts").cast("timestamp").as("ts"))
-      val base = graft.TmpDirs.create("graft-tws-timer")
       val mid = lit(MID).cast("timestamp")
-      ev.filter(col("ts") < mid).coalesce(1).write.parquet(s"$base/in/d0")
-      ev.filter(col("ts") >= mid).coalesce(1).write.parquet(s"$base/in/d1")
-      val t0 = java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 120000L)
-      val t1 = java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 60000L)
-      for ((d, t) <- Seq("d0" -> t0, "d1" -> t1)) {
-        val dp = java.nio.file.Paths.get(s"$base/in/$d")
-        java.nio.file.Files.list(dp).forEach(p =>
-          java.nio.file.Files.setLastModifiedTime(p, t))
-      }
       implicit val evtEnc: Encoder[TEvt] = Encoders.product[TEvt]
       implicit val fireEnc: Encoder[TFire] = Encoders.product[TFire]
-      val ckptScheme =
-        if (s.sparkContext.hadoopConfiguration.get("fs.file.impl", "")
-            .contains("RawLocalFileSystem")) "localfs://" else ""
-      val fired = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
+      val fired = feed.stream(ev.filter(col("ts") < mid), ev.filter(col("ts") >= mid))
         .withWatermark("ts", "0 seconds")
         .selectExpr("user_id", "unix_millis(ts) AS ts_ms")
         .as[TEvt]
         .groupByKey(_.user_id)(Encoders.scalaLong)
         .transformWithState(new QuietUserProcessor(GAP_MS),
           TimeMode.EventTime(), OutputMode.Append())
-      fired.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$ckptScheme$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", s"$base/out")
-        .start()
-        .awaitTermination()
-      s.read.parquet(s"$base/out").orderBy("user_id", "fired_at_ms")
+      feed.toParquet(fired).orderBy("user_id", "fired_at_ms")
         .select("user_id", "last_seen_ms", "fired_at_ms")
     },
     Some(s"""

@@ -1,20 +1,18 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
 import graft.{QueryDef, Tables}
+import graft.streaming.LiveFeed
 
 /** LIVE Structured Streaming forms of the two stateful stream operators
   * the batch analogs (EventOps / StreamAnalogs) cannot exercise: the
   * watermarked stream-stream interval join and streaming key dedup
   * (`dropDuplicatesWithinWatermark`). Each query replays the events
-  * table as real file-source micro-batches (two drops, executor-side
-  * writes, `maxFilesPerTrigger=1`), runs the unbounded query under
-  * `Trigger.AvailableNow` with checkpointing, and returns a batch read
-  * of the append sink — so the DuckDB oracle checks the STREAMING
-  * engine's output, state management included.
+  * table as two file drops through [[LiveFeed]], one micro-batch per
+  * drop, and returns a batch read of the sink — so the DuckDB oracle
+  * checks the STREAMING engine's output, state management included.
   *
   * Both queries set a full-horizon watermark (35 days > the 30-day
   * feed): every row joins/dedups exactly as in batch, making the result
@@ -38,14 +36,8 @@ object StreamLive {
     QueryDef(
       "stream_stream_join_attribution",
       (s0, dir) => {
-        // the stateful stage's partition count is a per-query deployment
-        // knob (baked into the checkpoint at start): 32 shuffle
-        // partitions would mean 32×4 join state stores per micro-batch,
-        // almost all holding a handful of rows locally — size it to the
-        // state volume instead (production: size to the cluster). An
-        // isolated child session scopes the conf to this query.
-        val s = s0.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", "4")
+        val feed = LiveFeed(s0, "graft-ss-join")
+        val s = feed.session
         // one scan feeds all four drop-writes below (localCheckpoint, not
         // cache: GC-freed after the query, and the four writes are the
         // only consumers)
@@ -59,37 +51,21 @@ object StreamLive {
           .select(col("user_id").as("p_user_id"),
             col("event_id").as("purchase_event_id"),
             col("ts").cast("timestamp").as("purchase_ts"))
-        val base = graft.TmpDirs.create("graft-ss-join")
         val mid = lit("2024-01-16").cast("timestamp")
-        // two crawl drops per side, executor-side writes; one file per
-        // drop = one micro-batch per drop under maxFilesPerTrigger=1.
-        // The four single-task writes run CONCURRENTLY (r9): serially
-        // they were ~1/4 of this query's wall time, each using one core.
-        graft.ParallelStage(
-          () => views.filter(col("view_ts") < mid).coalesce(1).write.parquet(s"$base/v/d0"),
-          () => views.filter(col("view_ts") >= mid).coalesce(1).write.parquet(s"$base/v/d1"),
-          () => purchases.filter(col("purchase_ts") < mid).coalesce(1).write.parquet(s"$base/p/d0"),
-          () => purchases.filter(col("purchase_ts") >= mid).coalesce(1).write.parquet(s"$base/p/d1"))
-        val vStream = s.readStream.schema(views.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$base/v/*")
-          .withWatermark("view_ts", "35 days")
-        val pStream = s.readStream.schema(purchases.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$base/p/*")
-          .withWatermark("purchase_ts", "35 days")
-        vStream.join(pStream,
+        // two crawl drops per side, the later half first: the watermark
+        // then reaches its final value in batch 0, so no trailing no-data
+        // batch runs for state eviction; the 35-day delay keeps every
+        // row of the earlier half on time
+        val Seq(vStream, pStream) = feed.streams(
+          "v" -> Seq(views.filter(col("view_ts") >= mid), views.filter(col("view_ts") < mid)),
+          "p" -> Seq(purchases.filter(col("purchase_ts") >= mid),
+            purchases.filter(col("purchase_ts") < mid)))
+        feed.toParquet(vStream.withWatermark("view_ts", "35 days")
+          .join(pStream.withWatermark("purchase_ts", "35 days"),
             col("user_id") === col("p_user_id") &&
             col("purchase_ts") > col("view_ts") &&
             col("purchase_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"))
-          .select("user_id", "view_event_id", "purchase_event_id")
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .format("parquet")
-          .option("path", s"$base/out")
-          .start()
-          .awaitTermination()
-        s.read.parquet(s"$base/out")
+          .select("user_id", "view_event_id", "purchase_event_id"))
           .orderBy("user_id", "view_event_id", "purchase_event_id")
       },
       Some("""
@@ -110,33 +86,15 @@ object StreamLive {
     QueryDef(
       "stream_dedup_within_watermark",
       (s0, dir) => {
-        // same per-query state-partition sizing as the join above
-        val s = s0.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val ev = Tables.events(s, dir).select(col("event_id"),
+        val feed = LiveFeed(s0, "graft-stream-dedup")
+        val ev = Tables.events(feed.session, dir).select(col("event_id"),
           col("ts").cast("timestamp").as("ts"), // watermark needs TIMESTAMP; UTC session → value-exact
           col("event_type"), col("value"))
-        val base = graft.TmpDirs.create("graft-stream-dedup")
-        // first delivery + full redelivery, staged concurrently (r9);
-        // ev is NOT checkpointed here, so each write runs its own scan —
-        // all the more reason to overlap them
-        graft.ParallelStage(
-          () => ev.coalesce(1).write.parquet(s"$base/in/d0"),
-          () => ev.coalesce(1).write.parquet(s"$base/in/d1"))
-        val arrivals = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
-        arrivals
+        // first delivery + full redelivery; ev is NOT checkpointed here,
+        // so each drop write runs its own scan
+        feed.toParquet(feed.stream(ev, ev)
           .withWatermark("ts", "35 days")
-          .dropDuplicatesWithinWatermark("event_id")
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .format("parquet")
-          .option("path", s"$base/out")
-          .start()
-          .awaitTermination()
-        s.read.parquet(s"$base/out")
+          .dropDuplicatesWithinWatermark("event_id"))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_after_dedup"),
             sum(col("value").cast(D)).cast("double").as("total_value"))
@@ -167,11 +125,10 @@ object StreamLive {
     QueryDef(
       "stream_cdc_merge_live",
       (s0, dir) => {
-        val s = s0.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", "4")
+        val feed = LiveFeed(s0, "graft-cdc-live")
         val cutoff = lit("2024-01-16").cast("timestamp")
         val mid2 = lit("2024-01-23").cast("timestamp")
-        val ev = Tables.events(s, dir)
+        val ev = Tables.events(feed.session, dir)
           .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
             col("event_id"), col("event_type"))
           .localCheckpoint(true)
@@ -182,13 +139,8 @@ object StreamLive {
             col("event_type").as("state"), lit(false).as("tombstone"))
         var table = base.localCheckpoint(true)
         val delta = ev.filter(col("ts") > cutoff)
-        val staging = graft.TmpDirs.create("graft-cdc-live")
-        graft.ParallelStage(
-          () => delta.filter(col("ts") <= mid2).coalesce(1).write.parquet(s"$staging/in/d0"),
-          () => delta.filter(col("ts") > mid2).coalesce(1).write.parquet(s"$staging/in/d1"))
-        val arrivals = s.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$staging/in/*")
-        arrivals.writeStream
+        val arrivals = feed.stream(delta.filter(col("ts") <= mid2), delta.filter(col("ts") > mid2))
+        feed.run(arrivals.writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             val upserts = EventOps.latestPerUser(batch)
               .select(col("user_id"), col("ts"), col("event_id"),
@@ -197,11 +149,7 @@ object StreamLive {
             table = EventOps.latestPerUser(table.unionByName(upserts))
               .localCheckpoint(true)
             ()
-          }
-          .option("checkpointLocation", s"$staging/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
+          })
         table.filter(!col("tombstone"))
           .groupBy(col("state"))
           .agg(count(lit(1)).as("n_users"))
@@ -233,9 +181,8 @@ object StreamLive {
     //    batch-2 event (ts > cutoff) could only merge into a session
     //    with last-event > cutoff − gap — an empty intersection, so no
     //    finalized session can ever need reopening. (The feed must
-    //    arrive in event-time-ordered batches for this, which is why
-    //    the two drops are staged SEQUENTIALLY — the file source orders
-    //    batches by file modification time.)
+    //    arrive in event-time-ordered batches for this, which LiveFeed's
+    //    pinned drop order guarantees.)
     //  - a far-future sentinel row (user −1, filtered from the final
     //    read) rides in the last batch so the closing watermark passes
     //    every real session's end — append mode emits them all.
@@ -244,50 +191,21 @@ object StreamLive {
     QueryDef(
       "stream_session_window_live",
       (s0, dir) => {
-        val s = s0.newSession()
-        s.conf.set("spark.sql.shuffle.partitions", "4")
+        val feed = LiveFeed(s0, "graft-sess-live")
+        val s = feed.session
         val cutoff = lit("2024-01-16").cast("timestamp")
         val ev = Tables.events(s, dir)
           .select(col("user_id"), col("ts").cast("timestamp").as("ts"), col("value"))
           .localCheckpoint(true)
-        val base = graft.TmpDirs.create("graft-sess-live")
-        // ordered staging (NOT ParallelStage): batch 2 must carry the
-        // later event-time range, see the watermark argument above
-        ev.filter(col("ts") <= cutoff).coalesce(1).write.parquet(s"$base/in/d0")
-        ev.filter(col("ts") > cutoff)
-          .unionByName(s.range(1).select(lit(-1L).as("user_id"),
-            lit("2024-06-01").cast("timestamp").as("ts"), lit(0.0).as("value")))
-          .coalesce(1).write.parquet(s"$base/in/d1")
-        // PIN the drops' modification times 60 s apart (StateV2Live
-        // stagedFeed discipline): the file source orders batches by mtime,
-        // and on a coarse-mtime filesystem the two sequential writes can
-        // land on the SAME timestamp — d1 read first would make the
-        // watermark silently drop every pre-cutoff event as late, a
-        // wrong-but-uncaught partial result rather than a failure.
-        val tEarly = java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 120000L)
-        val tLate = java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 60000L)
-        for ((d, t) <- Seq("d0" -> tEarly, "d1" -> tLate)) {
-          val dp = java.nio.file.Paths.get(s"$base/in/$d")
-          java.nio.file.Files.list(dp).forEach(p =>
-            java.nio.file.Files.setLastModifiedTime(p, t))
-        }
-        s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
+        val arrivals = feed.stream(ev.filter(col("ts") <= cutoff),
+          ev.filter(col("ts") > cutoff)
+            .unionByName(s.range(1).select(lit(-1L).as("user_id"),
+              lit("2024-06-01").cast("timestamp").as("ts"), lit(0.0).as("value"))))
+        feed.toParquet(arrivals
           .withWatermark("ts", "30 minutes")
           .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
           .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast(D)).cast("double").as("session_value"))
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .format("parquet")
-          .option("path", s"$base/out")
-          .start()
-          .awaitTermination()
-        s.read.parquet(s"$base/out")
+            sum(col("value").cast(D)).cast("double").as("session_value")))
           .filter(col("user_id") >= 0)
           .select(col("user_id"),
             col("sw.start").cast("timestamp_ntz").as("session_start"),

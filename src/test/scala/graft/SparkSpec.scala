@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession across suites (object-held so the JVM
@@ -33,10 +34,20 @@ object SparkSpec {
     .getOrCreate()
 }
 
-trait SparkSpec extends AnyFunSuite {
+/** After each suite (suites run one at a time in the forked test JVM),
+  * the same teardown `graft.Bench` runs between queries: unload the state
+  * stores, then delete every tmp dir this JVM staged. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   implicit lazy val spark: SparkSession = {
     val s = SparkSpec.spark
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally {
+      org.apache.spark.sql.graftaccess.StateStoreAccess.unloadAll()
+      TmpDirs.sweepOwned(TmpDirs.root)
+    }
 }
