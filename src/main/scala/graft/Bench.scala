@@ -569,16 +569,24 @@ object Bench {
       try { java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detail); None }
       catch { case scala.util.control.NonFatal(e) => Some(e) }
     } else None
-    // Printed line: headline subset, ALWAYS including the run's own top-5
-    // most expensive queries (merged in ahead of the static list) — a slow
-    // query can never be invisible in the printed line (r6/r8 finding: the
-    // curated list twice omitted the most expensive new entry). Hard-capped
-    // at 1600 chars so the line + sbt's trailing "[success]" always fit the
-    // driver's 2000-char tail; the cap trims the static tail, never the
-    // top-5 head. `regressions` is the spread-gated round-over-round count
-    // (details in BENCH_DETAIL.json).
-    val top5 = results.toSeq.sortBy(-_._2).take(5).map(_._1)
-    val hlNames = (top5 ++ headline.filter(results.contains).filterNot(top5.contains))
+    // Printed line: a full run prints a headline subset, ALWAYS including
+    // the run's own top-5 most expensive queries (merged in ahead of the
+    // static list) — a slow query can never be invisible in the printed
+    // line (r6/r8 finding: the curated list twice omitted the most
+    // expensive new entry). A SPARK_GRAFT_ONLY subset run writes no detail
+    // file, so it prints every query it ran instead, slowest first.
+    // Hard-capped at 1600 chars so the line + sbt's trailing "[success]"
+    // always fit the driver's 2000-char tail; the cap trims the tail
+    // (the static list, or a subset's fastest), never a full run's top-5.
+    // `regressions` is the spread-gated round-over-round count (details
+    // in BENCH_DETAIL.json).
+    val slowest = results.toSeq.sortBy(-_._2).map(_._1)
+    val hlNames =
+      if (only.isDefined) slowest
+      else {
+        val top5 = slowest.take(5)
+        top5 ++ headline.filter(results.contains).filterNot(top5.contains)
+      }
     var hl = hlNames.map(n => n -> results(n))
     def mkLine(entries: Seq[(String, Double)]): String =
       s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"calibration":${f(calib)},"calibration_parallel":${f(calibPar)},"host_steal_pct":${stealPct.map(f).getOrElse("null")},"regressions":${regressions.size},"regressions_code":${regressions.size - nWindow},"queries":${obj(entries)},"detail":"$detailPath","sf":"$sfDir"}"""

@@ -21,8 +21,8 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
   * hashing matches `mightContainLong` used here.
   */
 object BloomExpressions {
-  /** Arity-checked builder, shared with GraftExtensions. */
-  val builder: Seq[Expression] => Expression =
+  /** Arity-checked builder that [[register]] installs. */
+  private val builder: Seq[Expression] => Expression =
     Arity.checked("bloom_might_contain", 2)(
       exprs => BloomFilterMightContain(exprs(0), exprs(1)))
 

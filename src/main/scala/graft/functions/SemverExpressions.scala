@@ -53,8 +53,8 @@ case class SemverClean(child: Expression) extends UnaryExpression {
 }
 
 object SemverExpressions {
-  /** Arity-checked builder, shared with GraftExtensions. */
-  val builder: Seq[Expression] => Expression =
+  /** Arity-checked builder that [[register]] installs. */
+  private val builder: Seq[Expression] => Expression =
     Arity.checked("semver_clean", 1)(exprs => SemverClean(exprs(0)))
 
   /** Idempotently register `semver_clean` for SQL/expr use. */

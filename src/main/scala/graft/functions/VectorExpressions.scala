@@ -73,8 +73,8 @@ case class FloatDotProduct(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  /** Arity-checked builder, shared with GraftExtensions. */
-  val builder: Seq[Expression] => Expression =
+  /** Arity-checked builder that [[register]] installs. */
+  private val builder: Seq[Expression] => Expression =
     Arity.checked("float_dot", 2)(exprs => FloatDotProduct(exprs(0), exprs(1)))
 
   /** Idempotently register `float_dot` for SQL/expr use in this session. */

@@ -198,9 +198,11 @@ object AnalyticsExtra {
     // integers (⌊N_h·S_h⌋) and the allocation is a DECIMAL(38,0)
     // cross-multiplied integer division. The draw itself is the
     // content-hash discipline: the alloc_h smallest md5(o_orderkey) per
-    // stratum, via a CONSTANT-K per-stratum rank (the WindowTopKRewrite
-    // turns the rank-filter into the native TopKPerKeyExec — never a
-    // per-stratum full sort) refined by the data-dependent alloc_h join.
+    // stratum, via a CONSTANT-K per-stratum rank refined by the
+    // data-dependent alloc_h join. Spark's InferWindowGroupLimit plans the
+    // constant-K rank filter as a partial WindowGroupLimit (local sort,
+    // ≤ K rows per stratum) before the stratum Exchange and a final one
+    // under the Window, so only the kept rows are shuffled.
     QueryDef(
       "sample_stratified_neyman",
       (s, dir) => {
@@ -225,7 +227,7 @@ object AnalyticsExtra {
             s"CAST(CAST(wq AS DECIMAL(38,0)) * $K DIV t AS BIGINT)"))
         val ranked = base.withColumn("rank", row_number().over(
             Window.partitionBy("stratum").orderBy(asc("h"), asc("o_orderkey"))))
-          .filter(col("rank") <= K) // constant-K native per-key top-K
+          .filter(col("rank") <= K) // constant-K: planned as a WindowGroupLimit
         val sampled = ranked
           .join(broadcast(alloc.select(col("stratum"), col("alloc"))), "stratum")
           .filter(col("rank") <= col("alloc"))

@@ -156,41 +156,6 @@ object Dedup {
       .filter(col("jaccard") >= 0.5)
   }
 
-  /** Candidate (ia < ib, inter) pairs from the co-shingle surface —
-    * split out so DedupCapSpec can pin the candidate-count bound the
-    * df cap buys.
-    *
-    * Two strategies produce IDENTICAL inter counts (each shared shingle
-    * contributes exactly one pair occurrence), selected by
-    * `spark.graft.dedup.pairStrategy`:
-    *
-    *  - `selfjoin` (default): equi self-join on shingle + pair groupBy.
-    *    Shuffles the shingle table twice but stays in plain codegen'd
-    *    join/agg operators. The r6 A/B (3 isolated runs each, sf0.1,
-    *    fixed harness) measured it ~30% faster single-node:
-    *    ngram 1.6-2.0 s vs 2.4-2.6 s, components 2.6-3.2 s vs 3.2-3.5 s
-    *    — the posting-list's array build/explode CPU outweighs the
-    *    saved shuffle when shuffle is an in-memory local exchange.
-    *  - `postinglist`: groupBy shingle → sorted posting list → explode
-    *    pairs. ONE shuffle of the shingle table instead of two — at
-    *    cluster scale, where shuffle is network+disk, halving shingle
-    *    shuffle volume is the dominant term; prefer it there.
-    *
-    * Memory: posting-list keeps O(posting-list) per bucket (explode
-    * streams the pairs); CPU skew on a hot shingle is the same Σd²
-    * either side until maxDocFreq cuts it.
-    * CORRECTNESS DEPENDENCY (both arms): shingles() emits DISTINCT
-    * (doc_id, shingle) rows — a duplicate would inflate inter counts
-    * (and in the posting-list arm generate ia==ib self-pairs); if the
-    * distinct is ever removed, add array_distinct(ds) here.
-    */
-  private[operators] def candidatePairsOf(sh: DataFrame, maxDocFreq: Int): DataFrame =
-    sh.sparkSession.conf.getOption("spark.graft.dedup.pairStrategy")
-        .getOrElse("selfjoin") match {
-      case "postinglist" => candidatePairsPostingList(sh, maxDocFreq)
-      case _             => candidatePairsSelfJoin(sh, maxDocFreq)
-    }
-
   /** Shingle table with over-cap (hot) shingles removed: anti-join
     * against the hot-shingle set — a tiny broadcast at any cap worth
     * setting, since by definition few shingles exceed the cap.
@@ -201,23 +166,27 @@ object Dedup {
         .filter(col("df") > maxDocFreq).select("shingle")),
       Seq("shingle"), "left_anti")
 
-  private def candidatePairsSelfJoin(sh: DataFrame, maxDocFreq: Int): DataFrame = {
+  /** Candidate (ia < ib, inter) pairs from the co-shingle surface —
+    * split out so DedupCapSpec can pin the candidate-count bound the
+    * df cap buys.
+    *
+    * Equi self-join on shingle + pair groupBy: shuffles the shingle
+    * table twice but stays in plain codegen'd join/agg operators. The
+    * r6 A/B (3 isolated runs each, sf0.1) measured it ~30% faster
+    * single-node than a posting-list explode (one shuffle, but array
+    * build/explode CPU outweighs the saved in-memory local exchange).
+    * CPU skew on a hot shingle is Σd² until maxDocFreq cuts it.
+    * CORRECTNESS DEPENDENCY: shingles() emits DISTINCT (doc_id, shingle)
+    * rows — a duplicate would inflate inter counts; if the distinct is
+    * ever removed, dedup the shingle table here.
+    */
+  private[operators] def candidatePairsOf(sh: DataFrame, maxDocFreq: Int): DataFrame = {
     val capped = if (maxDocFreq == Int.MaxValue) sh else cappedShingles(sh, maxDocFreq)
     capped.as("a").join(capped.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
       .agg(count(lit(1)).as("inter"))
   }
-
-  private def candidatePairsPostingList(sh: DataFrame, maxDocFreq: Int): DataFrame =
-    sh.groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")).between(2, maxDocFreq))
-      .select(explode(expr(
-        """flatten(transform(ds, (a, i) ->
-          |  transform(slice(ds, i + 2, size(ds)), b -> struct(a AS ia, b AS ib))))""".stripMargin)).as("p"))
-      .groupBy(col("p.ia").as("ia"), col("p.ib").as("ib"))
-      .agg(count(lit(1)).as("inter"))
 
   /** SQL twin of [[jaccardPairs]] — a CTE body yielding (ia, ib, jaccard). */
   private[operators] val jaccardPairsSql: String =
@@ -295,8 +264,8 @@ object Dedup {
     * common shingle in the global order is therefore in BOTH prefixes.
     * Every true pair survives; only the candidate set shrinks.
     *
-    * Scale contrast with the other two arms (selfjoin/postinglist join
-    * on ALL shingles): candidate generation joins only prefix rows —
+    * Scale contrast with [[candidatePairsOf]] (which joins on ALL
+    * shingles): candidate generation joins only prefix rows —
     * rare shingles by construction, so bucket sizes are small WITHOUT
     * the lossy df cap; the frequent-shingle mass that dominates
     * co-occurrence joins never enters the exchange. The t=0.5 prefix is

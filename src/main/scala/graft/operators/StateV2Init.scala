@@ -2,72 +2,27 @@ package graft.operators
 
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessorWithInitialState,
-  TimeMode, TimerValues, TTLConfig, ValueState, MapState}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 import graft.{QueryDef, Tables}
 import graft.streaming.LiveFeed
 
-/** The backfilled state a user carries into the stream: the batch
-  * aggregate of everything BEFORE the cutover, including the per-type
-  * counts (a Map column — each entry lands as its own RocksDB key via
-  * MapState, so a wide history never round-trips as one blob). */
-final case class UInit(user_id: Long, n: Long, sum_e2: Long, max_ts_us: Long,
-    types: Map[String, Long])
-
-/** `StatefulProcessorWithInitialState` — the LAMBDA-MIGRATION shape:
-  * bootstrap the streaming state store from a BATCH backfill, then
+/** `transformWithState` with an initial state — the LAMBDA-MIGRATION
+  * shape: bootstrap the streaming state store from a BATCH backfill, then
   * continue live. The batch job aggregates the historical half of the
-  * feed into one row per user; `handleInitialState` seeds ValueState +
-  * MapState from it before the first micro-batch, and the stream then
-  * processes only post-cutover events — emitting cumulative snapshots
-  * that must be indistinguishable from a stream that had seen the
-  * whole feed. That equivalence is the oracle: DuckDB computes the
-  * full-history cumulative algebra, restricted to post-cutover
-  * activity windows.
+  * feed into one row per user; [[CumStatsProcessor]]'s
+  * `handleInitialState` seeds ValueState + MapState from it before the
+  * first micro-batch, and the stream then processes only post-cutover
+  * events — emitting cumulative snapshots that must be
+  * indistinguishable from a stream that had seen the whole feed. That
+  * equivalence is the oracle: DuckDB computes the full-history
+  * cumulative algebra, restricted to post-cutover activity windows.
   *
   * At 100 TB this is how a stateful pipeline deploys at all: replaying
   * months of history through micro-batches to warm state is a
   * non-starter; the backfill is one batch aggregation and the stream
   * starts at the cutover offset.
   */
-private class WarmStartProcessor(cut2Us: Long)
-    extends StatefulProcessorWithInitialState[Long, UEvt, USnap, UInit] {
-
-  @transient private var agg: ValueState[(Long, Long, Long)] = _
-  @transient private var typeCounts: MapState[String, Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    agg = getHandle.getValueState[(Long, Long, Long)]("agg",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
-      TTLConfig.NONE)
-    typeCounts = getHandle.getMapState[String, Long]("typeCounts",
-      Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInitialState(key: Long, initialState: UInit,
-      timerValues: TimerValues): Unit = {
-    agg.update((initialState.n, initialState.sum_e2, initialState.max_ts_us))
-    initialState.types.foreach { case (t, c) => typeCounts.updateValue(t, c) }
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[UEvt],
-      timerValues: TimerValues): Iterator[USnap] = {
-    var (n, sum, mx) =
-      if (agg.exists()) agg.get() else (0L, 0L, Long.MinValue)
-    rows.foreach { e =>
-      n += 1; sum += e.v2
-      if (e.ts_us > mx) mx = e.ts_us
-      val prev = if (typeCounts.containsKey(e.event_type))
-        typeCounts.getValue(e.event_type) else 0L
-      typeCounts.updateValue(e.event_type, prev + 1L)
-    }
-    agg.update((n, sum, mx))
-    val seq = if (mx >= cut2Us) 1L else 0L
-    Iterator.single(USnap(key, seq, mx, n, sum, typeCounts.keys().size.toLong))
-  }
-}
-
 object StateV2Init {
 
   private val CUT1 = "2024-01-16" // batch/stream cutover
@@ -112,7 +67,7 @@ object StateV2Init {
           ev.filter(tsCol >= lit(CUT2).cast("timestamp")))
         .as[UEvt]
         .groupByKey(_.user_id)(Encoders.scalaLong)
-        .transformWithState(new WarmStartProcessor(usOf(CUT2)),
+        .transformWithState(new CumStatsProcessor(usOf(CUT2)),
           TimeMode.None(), OutputMode.Append(), init,
           Encoders.product[USnap], Encoders.product[UInit])
       feed.toParquet(snaps).orderBy("user_id", "batch_half")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState, MapState}
+  StatefulProcessorWithInitialState, TimeMode, TimerValues, TTLConfig, ValueState, MapState}
 
 import graft.{QueryDef, Tables}
 import graft.streaming.LiveFeed
@@ -22,6 +22,13 @@ final case class UEvt(user_id: Long, ts_us: Long, event_type: String, v2: Long,
 final case class USnap(user_id: Long, batch_half: Long, upto_ts_us: Long,
     n_cum: Long, sum_cum_e2: Long, n_types_cum: Long)
 
+/** The backfilled state a user carries into the stream: the batch
+  * aggregate of everything BEFORE the cutover, including the per-type
+  * counts (a Map column — each entry lands as its own RocksDB key via
+  * MapState, so a wide history never round-trips as one blob). */
+final case class UInit(user_id: Long, n: Long, sum_e2: Long, max_ts_us: Long,
+    types: Map[String, Long])
+
 /** Spark 4 `transformWithState` — the arbitrary-state streaming API that
   * replaces `flatMapGroupsWithState` (SPARK-40434, "State API v2"):
   * typed named state primitives (`ValueState`, `MapState`) on the
@@ -32,15 +39,20 @@ final case class USnap(user_id: Long, batch_half: Long, upto_ts_us: Long,
   * grows per-ENTRY in RocksDB (each type is its own store key), so a
   * key with a million map entries never round-trips as one blob, which
   * is the scale reason this API exists. Each micro-batch emits one
-  * cumulative snapshot per active user.
+  * cumulative snapshot per active user; `batch_half` is 1 once the
+  * user's latest event reaches `cutUs`.
+  *
+  * `handleInitialState` seeds both states from a [[UInit]] backfill when
+  * the query passes one (`stream_tws_initial_state_live`); without one
+  * (`stream_transform_with_state_live`) every key starts empty.
   *
   * Reference scope: the NPM mirror's consumer keeps exactly this shape
   * of per-key running state (last seq, per-status counters —
   * `data_pipeline/npm-mirror/app/changes_consumer.py:44-56`) in process
   * memory; this is the fault-tolerant, checkpointed form.
   */
-private class CumStatsProcessor(midUs: Long)
-    extends StatefulProcessor[Long, UEvt, USnap] {
+private class CumStatsProcessor(cutUs: Long)
+    extends StatefulProcessorWithInitialState[Long, UEvt, USnap, UInit] {
 
   @transient private var agg: ValueState[(Long, Long, Long)] = _
   @transient private var typeCounts: MapState[String, Long] = _
@@ -51,6 +63,12 @@ private class CumStatsProcessor(midUs: Long)
       TTLConfig.NONE)
     typeCounts = getHandle.getMapState[String, Long]("typeCounts",
       Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
+  }
+
+  override def handleInitialState(key: Long, initialState: UInit,
+      timerValues: TimerValues): Unit = {
+    agg.update((initialState.n, initialState.sum_e2, initialState.max_ts_us))
+    initialState.types.foreach { case (t, c) => typeCounts.updateValue(t, c) }
   }
 
   override def handleInputRows(key: Long, rows: Iterator[UEvt],
@@ -65,19 +83,11 @@ private class CumStatsProcessor(midUs: Long)
       typeCounts.updateValue(e.event_type, prev + 1L)
     }
     agg.update((n, sum, mx))
-    val half = if (mx >= midUs) 1L else 0L
+    val half = if (mx >= cutUs) 1L else 0L
     Iterator.single(USnap(key, half, mx, n, sum, typeCounts.keys().size.toLong))
   }
 }
 
-/** LIVE `transformWithState` query — see [[CumStatsProcessor]]. The two
-  * event-time halves of the feed are dropped as two files whose
-  * modification times are explicitly pinned (batch 0 strictly older),
-  * so the file source's modTime ordering — and therefore the cumulative
-  * snapshots — is deterministic. The DuckDB oracle re-derives the
-  * snapshot algebra relationally: for every (user, half) with activity,
-  * aggregate everything at or before that half.
-  */
 /** One ranked row of a user's last-3 buffer as of a micro-batch. */
 final case class ULastN(user_id: Long, batch_half: Long, rank: Long,
     ts_us: Long, event_id: Long)
@@ -141,6 +151,14 @@ object StateV2Live {
     (feed, feed.stream(ev.filter(tsCol < mid), ev.filter(tsCol >= mid)).as[UEvt])
   }
 
+  /** LIVE `transformWithState` query — see [[CumStatsProcessor]]. The two
+    * event-time halves of the feed are dropped as two files whose
+    * modification times are explicitly pinned (batch 0 strictly older),
+    * so the file source's modTime ordering — and therefore the cumulative
+    * snapshots — is deterministic. The DuckDB oracle re-derives the
+    * snapshot algebra relationally: for every (user, half) with activity,
+    * aggregate everything at or before that half.
+    */
   val cumStats: QueryDef = QueryDef(
     "stream_transform_with_state_live",
     (s0, dir) => {

@@ -374,20 +374,15 @@ private[plans] class TopKPartitionProcessor(
 /** Public DataFrame API + per-session strategy registration. */
 object TopK {
 
-  /** Ensure the planner strategy is present on an already-built session
-    * (the driver contract hands us one); GraftExtensions covers sessions
-    * built with `.withExtensions`.
+  /** Ensure the planner strategy is present on the session a query runs
+    * on. Every caller receives an already-built session, so the strategy
+    * is added here, lazily and idempotently, on first use of [[perKey]].
     */
   def ensureRegistered(spark: SparkSession): Unit = {
     val ex = spark.experimental
     if (!ex.extraStrategies.contains(TopKPerKeyStrategy))
       ex.extraStrategies = ex.extraStrategies :+ TopKPerKeyStrategy
   }
-
-  /** Enable the [[WindowTopKRewrite]] optimizer rule too: plain
-    * `row_number <= k` window queries then plan through this operator.
-    */
-  def enableRewrite(spark: SparkSession): Unit = WindowTopKRewriteSession.enable(spark)
 
   /** Top-k rows per key. `order` is (columnName, ascending) pairs; rows
     * come back unranked (apply a window over the pruned result for rank).

@@ -493,10 +493,10 @@ class PlanShapeSpec extends SparkSpec {
   test("P1/P3 derived chain materializes each doc map lookup exactly once") {
     // the catalog projection / tarball-URL extraction derive latest,
     // latest_version_doc and latest_time_str from three map lookups;
-    // staged withColumn aliases (plus MapAccessFusion as the backstop
-    // for inline-duplicated chains) must keep each lookup single in the
-    // optimized plan — a collapse regression would re-evaluate the
-    // versions-map access once per derived column
+    // staged withColumn aliases must keep each lookup single in the
+    // optimized plan, with no custom optimizer rule loaded — a collapse
+    // regression would re-evaluate the versions-map access once per
+    // derived column
     import spark.implicits._
     val raw = spark.createDataset(graft.npm.Fixtures.withFetch404).toDF("value")
     val derived = graft.npm.Pipeline.withDerived(

@@ -8,6 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * reuses it; per-suite sessions would pay ~5 s startup each).
   */
 object SparkSpec {
+  /** The session's warehouse dir. It must outlive every suite, so it is
+    * made outside the owned family that each suite's teardown sweeps,
+    * and deleted when the test JVM exits. */
+  private lazy val warehouseDir: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft-wh").toString
+    sys.addShutdownHook(TmpDirs.deleteRec(d))
+    d
+  }
+
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
@@ -28,9 +37,8 @@ object SparkSpec {
     // so RocksDB-backed checkpoints use localfs:// paths (RetentionSpec)
     // while file:// stays raw for the colon-bearing payload filenames
     .config("spark.hadoop.fs.localfs.impl", "graft.testfs.ChecksumLocalFs")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
+    .config("spark.sql.warehouse.dir", warehouseDir)
+    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
 

@@ -45,13 +45,4 @@ class VectorExpressionsSpec extends SparkSpec {
         s"$bad → ${e.getCondition}")
     }
   }
-
-  test("GraftExtensions injects the same builder") {
-    // exercised through the extensions API surface: the injected builder
-    // must construct the same expression as the imperative registration
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val viaBuilder = FloatDotProduct(Literal(1), Literal(2))
-    assert(viaBuilder.prettyName == "float_dot")
-    assert(new graft.GraftExtensions() != null) // class loadable for spark.sql.extensions
-  }
 }

@@ -1,8 +1,6 @@
 package graft.npm
 
-import java.nio.file.Files
-
-import graft.SparkSpec
+import graft.{SparkSpec, TmpDirs}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
@@ -17,7 +15,7 @@ import org.apache.spark.sql.functions._
 class PartitionedCatalogSpec extends SparkSpec {
 
   test("catalog partitioned by dir prefix is pruned on prefix filters") {
-    val out = Files.createTempDirectory("graft-cat-part").toString
+    val out = TmpDirs.create("graft-cat-part")
     val r = Pipeline.replay(NpmReplayOps.syntheticFeed(spark, "/root/testdata/sf0.001"))
     r.catalog
       .withColumn("dir_prefix", upper(substring(col("package_name"), 1, 3)))

@@ -42,22 +42,6 @@ class DedupCapSpec extends SparkSpec {
     assert(p.getAs[Double]("jaccard") == 1.0) // identical docs, no hot shingles lost
   }
 
-  test("selfjoin and postinglist strategies produce identical candidate pairs") {
-    // isolated newSession (r7, ADVICE r6): the strategy conf is read at
-    // plan-build time from the frame's own session, so flipping it on
-    // the shared session could change the plan of a Dedup query another
-    // suite is building in parallel
-    val iso = spark.newSession()
-    val isoDocs = iso.createDataFrame(
-      java.util.Arrays.asList(docs.collect(): _*), docs.schema)
-    def run(strategy: String) = {
-      iso.conf.set("spark.graft.dedup.pairStrategy", strategy)
-      Dedup.candidatePairsOf(Dedup.shingles(isoDocs), Int.MaxValue)
-        .orderBy("ia", "ib").collect().map(_.toSeq).toSeq
-    }
-    assert(run("selfjoin") == run("postinglist"))
-  }
-
   test("capped jaccard scores over the capped vocabulary (consistent denominator)") {
     // two identical docs that ALSO contain the hot prefix: with the cap,
     // the hot shingle leaves both the intersection AND the sizes, so the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
 
-import graft.SparkSpec
+import graft.{SparkSpec, TmpDirs}
 
 /** Pins the event-time-timer semantics the oracle encodes: input rows
   * are processed before timer evaluation (a user active in the batch
@@ -42,7 +42,7 @@ class StateV2TimersSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ev = graft.Tables.events(s, dir)
       .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
-    val base = java.nio.file.Files.createTempDirectory("graft-tws-3b").toString
+    val base = TmpDirs.create("graft-tws-3b")
     val cuts = Seq("2024-01-11", "2024-01-21")
     ev.filter(col("ts") < lit(cuts(0)).cast("timestamp"))
       .coalesce(1).write.parquet(s"$base/in/d0")

@@ -70,9 +70,8 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("works via SparkSessionExtensions registration too") {
-    // GraftExtensions injects the same strategy at session build; on the
-    // shared test session ensureRegistered already ran — assert it's
-    // idempotent rather than duplicated
+    // on the shared test session ensureRegistered already ran — assert
+    // it's idempotent rather than duplicated
     TopK.ensureRegistered(spark)
     TopK.ensureRegistered(spark)
     assert(spark.experimental.extraStrategies.count(_ == TopKPerKeyStrategy) == 1)

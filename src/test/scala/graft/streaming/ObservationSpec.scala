@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{SparkSpec, TmpDirs}
 
 /** K8's in-query counter vehicle, exercised for real: `observe()` plants
   * a zero-shuffle metrics collector inside the plan (CollectMetrics —
@@ -50,7 +50,7 @@ class ObservationSpec extends SparkSpec {
       val ev = graft.Tables.events(s, dir)
         .select(col("event_id"), col("event_type"),
           col("ts").cast("timestamp").as("ts"))
-      val base = java.nio.file.Files.createTempDirectory("graft-obs").toString
+      val base = TmpDirs.create("graft-obs")
       val mid = lit("2024-01-16").cast("timestamp")
       ev.filter(col("ts") < mid).coalesce(1).write.parquet(s"$base/in/d0")
       ev.filter(col("ts") >= mid).coalesce(1).write.parquet(s"$base/in/d1")
