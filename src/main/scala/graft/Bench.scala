@@ -588,8 +588,11 @@ object Bench {
         top5 ++ headline.filter(results.contains).filterNot(top5.contains)
       }
     var hl = hlNames.map(n => n -> results(n))
+    // names the detail file only when this run wrote it
+    val detailField =
+      if (only.isEmpty && detailFailure.isEmpty) "\"" + detailPath + "\"" else "null"
     def mkLine(entries: Seq[(String, Double)]): String =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"calibration":${f(calib)},"calibration_parallel":${f(calibPar)},"host_steal_pct":${stealPct.map(f).getOrElse("null")},"regressions":${regressions.size},"regressions_code":${regressions.size - nWindow},"queries":${obj(entries)},"detail":"$detailPath","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"calibration":${f(calib)},"calibration_parallel":${f(calibPar)},"host_steal_pct":${stealPct.map(f).getOrElse("null")},"regressions":${regressions.size},"regressions_code":${regressions.size - nWindow},"queries":${obj(entries)},"detail":$detailField,"sf":"$sfDir"}"""
     var line = mkLine(hl)
     while (line.length > 1600 && hl.nonEmpty) {
       hl = hl.dropRight(1)

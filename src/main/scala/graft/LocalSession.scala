@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The session every driver main (Bench, Verify, PipelineBench, Profile,
-  * Explain) runs on: `local[cores]` with `cores` shuffle partitions, UTC
+/** The session every main (Bench, Verify, PipelineBench, Explain) runs
+  * on: `local[cores]` with `cores` shuffle partitions, UTC
   * session time, parquet nanos read as LONG, the local checkpoint
   * manager and no UI. Each main sets its own log level.
   */

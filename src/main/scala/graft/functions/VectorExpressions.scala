@@ -72,6 +72,14 @@ case class FloatDotProduct(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** `float_dot` for Spark, and its DuckDB spellings for the oracles.
+  *
+  * The oracles are exact only because both engines run the same
+  * sequential left-to-right double fold; the SQL builders below are the
+  * one place that fold order is written for DuckDB, so every vector
+  * oracle spells the dot product, the norm and the cosine top-k ranking
+  * the same way as [[FloatDotProduct]] computes them.
+  */
 object VectorExpressions {
   /** Arity-checked builder that [[register]] installs. */
   private val builder: Seq[Expression] => Expression =
@@ -83,4 +91,41 @@ object VectorExpressions {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "float_dot", builder, "built-in")
     }
+
+  /** `float_dot(a, b)` in DuckDB: (double)a[i] * (double)b[i] folded left
+    * to right over the length of `a`. */
+  def dotSql(a: String, b: String): String =
+    s"""list_reduce(list_transform(generate_series(1, len($a)),
+       |  i -> CAST($a[CAST(i AS INT)] AS DOUBLE) * CAST($b[CAST(i AS INT)] AS DOUBLE)),
+       |  (x, y) -> x + y)""".stripMargin
+
+  /** Cosine of two relations `q` and `c` that carry `embedding` and its
+    * `nrm`: the dot fold over the product of the norms. */
+  def cosSql(q: String, c: String): String =
+    s"${dotSql(s"$q.embedding", s"$c.embedding")} / ($q.nrm * $c.nrm)"
+
+  /** The norm CTE `name AS (...)`: `cols` of `embeddings` plus `nrm`, the
+    * DuckDB spelling of `sqrt(float_dot(embedding, embedding))`. */
+  def normCteSql(name: String, cols: String): String =
+    s"""$name AS (
+       |  SELECT $cols,
+       |         sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
+       |  FROM embeddings)""".stripMargin
+
+  /** Row number within each `key` by `cos`, best first, ties to the
+    * smaller `id`: the order of every cosine top-k. */
+  def cosRankSql(key: String = "qid", id: String = "cand_id"): String =
+    s"ROW_NUMBER() OVER (PARTITION BY $key ORDER BY cos DESC, $id ASC)"
+
+  /** The per-key top-k CTE `name AS (...)`: the rows of `src` (which has
+    * `cols`, `cand_id` and `cos` among them) whose [[cosRankSql]] within
+    * `key` is at most `k`, projected to `out` (`cols` when empty). */
+  def topkCteSql(name: String, src: String, k: Int, key: String = "qid",
+      cols: String = "qid, cand_id", out: String = ""): String =
+    s"""$name AS (
+       |  SELECT ${if (out.isEmpty) cols else out} FROM (
+       |    SELECT $cols,
+       |           ${cosRankSql(key)} AS rank
+       |    FROM $src) t
+       |  WHERE rank <= $k)""".stripMargin
 }

@@ -1,26 +1,44 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.{QueryDef, Tables}
+import graft.functions.VectorExpressions.{cosRankSql, cosSql, dotSql, normCteSql, topkCteSql}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
   *
-  * Two variants, same scoring expression:
-  *  - brute-force cosine top-k: the exactness baseline. Query set ⋈ full
-  *    corpus; at cluster scale the corpus side stays partitioned and the
-  *    (small) query set broadcasts, so the join is shuffle-free.
-  *  - IVF-style cluster-pruned top-k: candidates restricted to the query's
-  *    cluster (`label` = the precomputed coarse-quantizer assignment).
-  *    Cuts the candidate set by the cluster count — this is the 100 TB
-  *    path; the corpus can additionally be stored bucketed by label so
-  *    the probe join is co-located.
+  * The family, by the question each query answers:
+  *  - probe top-5 of the ten query vectors (vec_id < 10): the exact
+  *    brute-force baseline, IVF (candidates in the query's `label`
+  *    cell, per-query and prebuilt), IVF multiprobe (the two nearest
+  *    centroids' cells), hyperplane LSH (8-bit sign signature, per-query
+  *    and prebuilt); int8 quantization error beside them.
+  *  - k-NN graphs, top-3 per vector: the uncapped cell graph (exact
+  *    baseline), the cell-capped graph (three sub-split rounds), its
+  *    incremental maintenance (forward delta, reverse delta, apply) on
+  *    the stored census grid, the cross-cell edge layer, and the capped
+  *    graph's recall against the exact one.
+  *  - quantizers: k-means IVF training, PQ with ADC shortlist and exact
+  *    re-rank, residual quantization gain, IVFADC (inline, prebuilt,
+  *    batched).
+  *  - graph search: greedy beam walks over the navigable graph (single
+  *    and batched) and their search recall; the engaged AuditGuard row.
   *
-  * Dot products fold left-to-right in double on both engines (Spark
-  * `aggregate` HOF vs DuckDB `list_reduce`), so scores are bit-identical
-  * and the (cos DESC, vec_id ASC) ranking is deterministic.
+  * Shared vocabulary. Scores are `float_dot` on the Spark side and its
+  * DuckDB spelling in the oracles: both fold (double)a[i]·(double)b[i]
+  * left to right, so cosines are bit-identical and the (cos DESC, id
+  * ASC) ranks agree. The DuckDB dot, cosine, norm CTE and per-key top-k
+  * CTE live once in [[graft.functions.VectorExpressions]], next to
+  * `float_dot`; this object composes them into the probe pairs
+  * ([[pairsSql]], [[probeScoredSql]]), the ranked tail
+  * ([[rankedTopkSql]]), the LSH signature ([[sigCtesSql]]), the
+  * multiprobe CTEs and the capped sub-split twins, which the recall
+  * gates in PipelineCompositions reuse. On the Spark side the capped
+  * family shares one census ([[census]]), one sub-split, the capped
+  * rounds and one top-k rank step ([[topByCos]]; the stored edge sets
+  * use [[storedTop3]]). The oracles never call Spark-side code.
   */
 object AnnSearch {
 
@@ -28,11 +46,50 @@ object AnnSearch {
     e.select(col("vec_id"), col("label"), col("embedding"),
       expr("sqrt(float_dot(embedding, embedding))").as("nrm"))
 
-  private val dotExpr = "float_dot(q.embedding, c.embedding)"
+  /** The q×c pair cosine of two index frames aliased q and c. */
+  private def pairCos: Column =
+    (expr("float_dot(q.embedding, c.embedding)") / (col("q.nrm") * col("c.nrm"))).as("cos")
 
   /** Sub-cell cap for every capped graph derivation (declared ahead of
     * all its use sites — SQL twins interpolate it at object init). */
   private val CellCap = 16
+
+  /** The rank order of every cosine top-k: (cos DESC, cand_id ASC) per qid. */
+  private val byCos = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
+
+  /** Each qid's `k` best `pairs` rows as (qid, rank, cand_id, cos), rank LONG. */
+  private def topByCos(pairs: DataFrame, k: Int): DataFrame =
+    pairs.withColumn("rank", row_number().over(byCos).cast("long"))
+      .filter(col("rank") <= k)
+      .select("qid", "rank", "cand_id", "cos")
+
+  /** The `e` CTE the twins read: (vec_id, label, embedding, nrm). */
+  private lazy val eCteSql = normCteSql("e", "vec_id, label, embedding")
+
+  /** (`qidCol`, cand_id, cos) of the q×c pairs of `from`, a join of two
+    * relations aliased q and c that carry `embedding` and `nrm`. */
+  private def pairsSql(from: String, qidCol: String = "qid"): String =
+    s"""SELECT q.vec_id AS $qidCol, c.vec_id AS cand_id,
+       |       ${cosSql("q", "c")} AS cos
+       |FROM $from""".stripMargin
+
+  /** `scored AS (...)`: the probe pairs of the ten query vectors
+    * (vec_id < 10) against the rest of `from`; `pred` is appended to the
+    * join condition. */
+  private[operators] def probeScoredSql(scored: String, from: String, pred: String): String =
+    s"""$scored AS (
+       |  ${pairsSql(s"$from q JOIN $from c ON q.vec_id < 10 AND q.vec_id != c.vec_id$pred")})""".stripMargin
+
+  /** The tail of the top-k twins: each qid's top-`k` rows of `src` as
+    * (qid, rank, cand_id, cos) with a BIGINT rank, ordered. */
+  private def rankedTopkSql(src: String, k: Int): String =
+    s"""ranked AS (
+       |  SELECT qid, cand_id, cos,
+       |         CAST(${cosRankSql()} AS BIGINT) AS rank
+       |  FROM $src)
+       |SELECT qid, rank, cand_id, cos FROM ranked
+       |WHERE rank <= $k
+       |ORDER BY qid, rank""".stripMargin
 
   /** Prebuilt IVF index: (vec_id, label, embedding, nrm), computed ONCE
     * per (session, corpus) and pinned in storage — the amortization a
@@ -67,13 +124,9 @@ object AnnSearch {
     val joinCond = pruneKey
       .map(k => col(s"q.$k") === col(s"c.$k") && distinctVec)
       .getOrElse(distinctVec)
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-    broadcast(queries).as("q").join(e.as("c"), joinCond)
+    topByCos(broadcast(queries).as("q").join(e.as("c"), joinCond)
       .select(col("q.vec_id").as("qid"), col("c.vec_id").as("cand_id"),
-        (expr(dotExpr) / (col("q.nrm") * col("c.nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("qid", "rank", "cand_id", "cos")
+        pairCos), 5)
       .orderBy("qid", "rank")
   }
 
@@ -87,23 +140,9 @@ object AnnSearch {
 
   private def topkSql(clusterPred: String): String =
     s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      scored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id != c.vec_id $clusterPred),
-      ranked AS (
-        SELECT qid, cand_id, cos,
-               CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS BIGINT) AS rank
-        FROM scored)
-      SELECT qid, rank, cand_id, cos FROM ranked
-      WHERE rank <= 5
-      ORDER BY qid, rank
+      WITH $eCteSql,
+      ${probeScoredSql("scored", "e", s" $clusterPred")},
+      ${rankedTopkSql("scored", 5)}
     """.stripMargin.trim
 
   val bruteForce: QueryDef = QueryDef(
@@ -134,15 +173,28 @@ object AnnSearch {
     * DuckDB oracle regenerates them bit-for-bit; each sign projection is
     * a codegen `float_dot` against a literal array.
     */
-  private[operators] val Dim = 64
+  private val Dim = 64
   private def planeSql(j: Int): String =
     (0 until Dim).map(i => if ((i * (j + 1)) % 3 == 0) "1.0F" else "-1.0F")
       .mkString("array(", ", ", ")")
 
   /** The 8 sign-bit columns of the hyperplane signature — shared by the
     * per-query LSH build and the prebuilt index. */
-  private lazy val sigBits: Seq[org.apache.spark.sql.Column] = (0 until 8).map(j =>
+  private lazy val sigBits: Seq[Column] = (0 until 8).map(j =>
     when(expr(s"float_dot(embedding, ${planeSql(j)})") > 0, lit("1")).otherwise(lit("0")))
+
+  /** DuckDB twin of [[sigBits]] over an `e` CTE: `bits` (each sign bit),
+    * `sig` (the signature string) and `es` (`e` with its `sig`). */
+  private[operators] lazy val sigCtesSql: String = s"""bits AS (
+        SELECT e.vec_id, CAST(j.range AS INT) AS j,
+               CASE WHEN list_reduce(list_transform(generate_series(1, $Dim),
+                      i -> CAST(embedding[CAST(i AS INT)] AS DOUBLE) *
+                           (CASE WHEN ((i - 1) * (CAST(j.range AS INT) + 1)) % 3 = 0
+                                 THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END)),
+                      (x, y) -> x + y) > 0 THEN '1' ELSE '0' END AS b
+        FROM e CROSS JOIN range(0, 8) j),
+      sig AS (SELECT vec_id, string_agg(b, '' ORDER BY j) AS sig FROM bits GROUP BY vec_id),
+      es AS (SELECT e.vec_id, e.embedding, e.nrm, s.sig FROM e JOIN sig s ON e.vec_id = s.vec_id)"""
 
   val hyperplaneLsh: QueryDef = QueryDef(
     "ann_cosine_topk_hyperlsh",
@@ -165,33 +217,10 @@ object AnnSearch {
     Some(hyperLshSql))
 
   private lazy val hyperLshSql: String = s"""
-      WITH e AS (
-        SELECT vec_id, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      bits AS (
-        SELECT e.vec_id, CAST(j.range AS INT) AS j,
-               CASE WHEN list_reduce(list_transform(generate_series(1, $Dim),
-                      i -> CAST(embedding[CAST(i AS INT)] AS DOUBLE) *
-                           (CASE WHEN ((i - 1) * (CAST(j.range AS INT) + 1)) % 3 = 0
-                                 THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END)),
-                      (x, y) -> x + y) > 0 THEN '1' ELSE '0' END AS b
-        FROM e CROSS JOIN range(0, 8) j),
-      sig AS (SELECT vec_id, string_agg(b, '' ORDER BY j) AS sig FROM bits GROUP BY vec_id),
-      es AS (SELECT e.vec_id, e.embedding, e.nrm, s.sig FROM e JOIN sig s ON e.vec_id = s.vec_id),
-      scored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM es q JOIN es c ON q.vec_id < 10 AND q.vec_id != c.vec_id AND q.sig = c.sig),
-      ranked AS (
-        SELECT qid, cand_id, cos,
-               CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS BIGINT) AS rank
-        FROM scored)
-      SELECT qid, rank, cand_id, cos FROM ranked
-      WHERE rank <= 5
-      ORDER BY qid, rank
+      WITH ${normCteSql("e", "vec_id, embedding")},
+      $sigCtesSql,
+      ${probeScoredSql("scored", "es", " AND q.sig = c.sig")},
+      ${rankedTopkSql("scored", 5)}
     """.stripMargin.trim
 
   /** THE int8 quantizer, defined once for every gate that measures it
@@ -298,10 +327,21 @@ object AnnSearch {
         "sqrt(aggregate(transform(centroid, x -> x * x), 0.0D, (a, b) -> a + b))"))
   }
 
+  /** Cosine of an index vector `q` and a centroid `ct` of [[centroidsOf]]
+    * (the centroid is already double), and its DuckDB twin over `centn`. */
+  private def centroidCos: Column =
+    (expr("""aggregate(zip_with(q.embedding, ct.centroid,
+             (a, b) -> cast(a as double) * b), 0.0D, (acc, x) -> acc + x)""")
+      / (col("q.nrm") * col("ct.cnrm"))).as("ccos")
+  private lazy val centroidCosSql: String =
+    s"""list_reduce(list_transform(generate_series(1, $Dim),
+       |  i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * ct.centroid[CAST(i AS INT)]),
+       |  (x, y) -> x + y) / (q.nrm * ct.cnrm)""".stripMargin
+
   /** The centroid CTE chain (comp → cent → centn) for the oracles;
     * `pred` scopes which embeddings contribute (e.g. the corpus side of
     * the incremental split). */
-  private[operators] def centroidSql(pred: String): String = s"""
+  private def centroidSql(pred: String): String = s"""
       comp AS (
         SELECT label, CAST(i.range AS INT) + 1 AS pos,
                CAST(SUM(CAST(embedding[CAST(i.range AS INT) + 1] AS DECIMAL(20,10))) AS DOUBLE) / COUNT(*) AS c
@@ -315,6 +355,26 @@ object AnnSearch {
                sqrt(list_reduce(list_transform(centroid, x -> x * x), (x, y) -> x + y)) AS cnrm
         FROM cent)"""
 
+  /** The multiprobe twin after the `e` CTE: the centroid chain, `probes`
+    * (each query's two nearest centroids) and `scored` (the pairs of each
+    * query against the members of its probed cells). */
+  private[operators] def multiprobeCtesSql(scored: String): String = {
+    val probed = """e q
+        JOIN probes p ON p.qid = q.vec_id
+        JOIN e c ON c.label = p.label AND c.vec_id != q.vec_id"""
+    s"""${centroidSql("")},
+      probes AS (
+        SELECT qid, label FROM (
+          SELECT q.vec_id AS qid, ct.label,
+                 ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
+                   $centroidCosSql DESC, ct.label ASC) AS cr
+          FROM e q CROSS JOIN centn ct
+          WHERE q.vec_id < 10) t
+        WHERE cr <= 2),
+      $scored AS (
+        ${pairsSql(probed)})"""
+  }
+
   val ivfMultiprobe: QueryDef = QueryDef(
     "ann_cosine_topk_ivf_multiprobe",
     (s, dir) => {
@@ -326,56 +386,23 @@ object AnnSearch {
       val probes = broadcast(e.filter(col("vec_id") < 10).as("q"))
         .join(broadcast(cent).as("ct"))
         .select(col("q.vec_id").as("qid"), col("ct.label").as("label"),
-          (expr("""aggregate(zip_with(q.embedding, ct.centroid,
-                   (a, b) -> cast(a as double) * b), 0.0D, (acc, x) -> acc + x)""")
-            / (col("q.nrm") * col("ct.cnrm"))).as("ccos"))
+          centroidCos)
         .withColumn("cr", row_number().over(wq))
         .filter(col("cr") <= 2)
         .select("qid", "label")
       // exact re-rank over the union of the probed clusters
-      val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-      broadcast(e.filter(col("vec_id") < 10).as("q"))
+      topByCos(broadcast(e.filter(col("vec_id") < 10).as("q"))
         .join(broadcast(probes).as("p"), col("q.vec_id") === col("p.qid"))
         .join(e.as("c"),
           col("c.label") === col("p.label") && col("c.vec_id") =!= col("q.vec_id"))
         .select(col("p.qid").as("qid"), col("c.vec_id").as("cand_id"),
-          (expr(dotExpr) / (col("q.nrm") * col("c.nrm"))).as("cos"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 5)
-        .select("qid", "rank", "cand_id", "cos")
+          pairCos), 5)
         .orderBy("qid", "rank")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      ${centroidSql("")},
-      probes AS (
-        SELECT qid, label FROM (
-          SELECT q.vec_id AS qid, ct.label,
-                 ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-                   list_reduce(list_transform(generate_series(1, $Dim),
-                     i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * ct.centroid[CAST(i AS INT)]),
-                     (x, y) -> x + y) / (q.nrm * ct.cnrm) DESC, ct.label ASC) AS cr
-          FROM e q CROSS JOIN centn ct
-          WHERE q.vec_id < 10) t
-        WHERE cr <= 2),
-      scored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q
-        JOIN probes p ON p.qid = q.vec_id
-        JOIN e c ON c.label = p.label AND c.vec_id != q.vec_id),
-      ranked AS (
-        SELECT qid, cand_id, cos,
-               CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS BIGINT) AS rank
-        FROM scored)
-      SELECT qid, rank, cand_id, cos FROM ranked
-      WHERE rank <= 5
-      ORDER BY qid, rank
+      WITH $eCteSql,
+      ${multiprobeCtesSql("scored")},
+      ${rankedTopkSql("scored", 5)}
     """.stripMargin.trim))
 
   /** INCREMENTAL IVF growth: newly arrived vectors (vec_id % 7 == 3
@@ -408,9 +435,7 @@ object AnnSearch {
       broadcast(delta).as("q").join(broadcast(cent).as("ct"))
         .select(col("q.vec_id").as("vec_id"), col("q.label").as("given_label"),
           col("ct.label").as("assigned_label"),
-          (expr("""aggregate(zip_with(q.embedding, ct.centroid,
-                   (a, b) -> cast(a as double) * b), 0.0D, (acc, x) -> acc + x)""")
-            / (col("q.nrm") * col("ct.cnrm"))).as("ccos"))
+          centroidCos)
         .withColumn("ccos_r", round(col("ccos"), 6))
         .withColumn("cr", row_number().over(w))
         .filter(col("cr") === 1)
@@ -423,19 +448,14 @@ object AnnSearch {
         .orderBy("vec_id")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      WITH $eCteSql,
       ${centroidSql("WHERE vec_id % 7 <> 3")},
       assigned AS (
         SELECT vec_id, given_label, assigned_label, ccos,
                ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY round(ccos, 6) DESC, assigned_label ASC) AS cr
         FROM (
           SELECT q.vec_id, q.label AS given_label, ct.label AS assigned_label,
-                 list_reduce(list_transform(generate_series(1, $Dim),
-                   i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * ct.centroid[CAST(i AS INT)]),
-                   (x, y) -> x + y) / (q.nrm * ct.cnrm) AS ccos
+                 $centroidCosSql AS ccos
           FROM e q CROSS JOIN centn ct
           WHERE q.vec_id % 7 = 3) t)
       SELECT vec_id, given_label, assigned_label,
@@ -469,36 +489,43 @@ object AnnSearch {
     "ann_knn_graph_ivf",
     (s, dir) => {
       val e = index(s, dir)
-      val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-      AuditGuard.sample(e, "vec_id").as("q").join(e.as("c"),
+      topByCos(AuditGuard.sample(e, "vec_id").as("q").join(e.as("c"),
           col("q.label") === col("c.label") && col("q.vec_id") =!= col("c.vec_id"))
         .select(col("q.vec_id").as("qid"), col("c.vec_id").as("cand_id"),
-          (expr(dotExpr) / (col("q.nrm") * col("c.nrm"))).as("cos"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
-        .select("qid", "rank", "cand_id", "cos")
+          pairCos), 3)
         .orderBy("qid", "rank")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      WITH $eCteSql,
       scored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q JOIN e c ON q.label = c.label AND q.vec_id != c.vec_id
-        WHERE ${AuditGuard.sqlPred("q.vec_id", "embeddings")}),
-      ranked AS (
-        SELECT qid, cand_id, cos,
-               CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS BIGINT) AS rank
-        FROM scored)
-      SELECT qid, rank, cand_id, cos FROM ranked
-      WHERE rank <= 3
-      ORDER BY qid, rank
+        $cellPairsSql),
+      ${rankedTopkSql("scored", 3)}
     """.stripMargin.trim))
+
+  /** The exact cell-scoped pairs of [[knnGraph]] (audited query side),
+    * shared with the [[recallKnnCapped]] twin. */
+  private lazy val cellPairsSql: String =
+    pairsSql(s"""e q JOIN e c ON q.label = c.label AND q.vec_id != c.vec_id
+        WHERE ${AuditGuard.sqlPred("q.vec_id", "embeddings")}""")
+
+  /** Arrival batch of the incremental family (the delta split). */
+  private val isArrival = col("vec_id") % 7 === 3
+
+  /** A corpus and its arrival batch, both sub-split on the CORPUS's
+    * census — the stored grid incremental maintenance keeps. */
+  private def storedGrid(e: DataFrame, isNew: Column): (DataFrame, DataFrame) = {
+    val old = e.filter(!isNew)
+    val sizes = census(old)
+    (subSplit(old, sizes), subSplit(e.filter(isNew), sizes))
+  }
+
+  /** The delta twins' grid after `e`: the corpus `old`, its census, and
+    * both cohorts sub-split on it (`osubx`, `nsubx`) — [[storedGrid]]. */
+  private lazy val storedGridSql: String =
+    s"""old AS (SELECT * FROM e WHERE vec_id % 7 <> 3),
+      ${sizesSql("old")},
+      ${subSplitSql("osub", "old", "")},
+      ${subSplitSql("nsub", "e", " WHERE e.vec_id % 7 = 3")}"""
 
   /** INCREMENTAL k-NN graph growth: newly arrived vectors (vec_id % 7
     * == 3, the same arrival convention as [[ivfAssignDelta]]) get their
@@ -532,46 +559,16 @@ object AnnSearch {
   val knnGraphDelta: QueryDef = QueryDef(
     "ann_knn_graph_delta",
     (s, dir) => {
-      val e = index(s, dir)
-      val isNew = col("vec_id") % 7 === 3
-      val old = e.filter(!isNew)
-      // census of the EXISTING corpus: arrivals adopt its sub-cell grid
-      val sizes = old.groupBy("label").agg(count(lit(1)).as("cellN"))
-      val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-      cappedRounds(subSplit(e.filter(isNew), sizes), subSplit(old, sizes))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
-        .select("qid", "rank", "cand_id", "cos")
-        .orderBy("qid", "rank")
+      // arrivals adopt the EXISTING corpus's sub-cell grid
+      val (oldS, newS) = storedGrid(index(s, dir), isArrival)
+      topByCos(cappedRounds(newS, oldS), 3).orderBy("qid", "rank")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      old AS (SELECT * FROM e WHERE vec_id % 7 <> 3),
-      sizes AS (SELECT label, COUNT(*) AS cellN FROM old GROUP BY 1),
-      osub AS (
-        SELECT old.*, CAST(ceil(cellN / $CellCap.0) AS BIGINT) AS ns
-        FROM old JOIN sizes USING (label)),
-      osubx AS (
-        SELECT *, vec_id % ns AS sub, (vec_id // ns) % ns AS subb,
-               (vec_id // ns // ns) % ns AS subc FROM osub),
-      nsub AS (
-        SELECT e.*, CAST(ceil(cellN / $CellCap.0) AS BIGINT) AS ns
-        FROM e JOIN sizes USING (label) WHERE e.vec_id % 7 = 3),
-      nsubx AS (
-        SELECT *, vec_id % ns AS sub, (vec_id // ns) % ns AS subb,
-               (vec_id // ns // ns) % ns AS subc FROM nsub),
+      WITH $eCteSql,
+      $storedGridSql,
       cand AS (
         ${cappedCandBranchesSql("qid", "nsubx", "osubx")}),
-      ranked AS (
-        SELECT qid, cand_id, cos,
-               CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS BIGINT) AS rank
-        FROM cand)
-      SELECT qid, rank, cand_id, cos FROM ranked
-      WHERE rank <= 3
-      ORDER BY qid, rank
+      ${rankedTopkSql("cand", 3)}
     """.stripMargin.trim))
 
   /** SYMMETRIC incremental maintenance — the reverse direction of
@@ -596,12 +593,9 @@ object AnnSearch {
   val knnGraphDeltaReverse: QueryDef = QueryDef(
     "ann_knn_graph_delta_reverse",
     (s, dir) => {
-      val e = index(s, dir)
-      val isNew = col("vec_id") % 7 === 3
-      val old = e.filter(!isNew)
-      val sizes = old.groupBy("label").agg(count(lit(1)).as("cellN"))
+      val (oldS, newS) = storedGrid(index(s, dir), isArrival)
       val w = Window.partitionBy("cand_id").orderBy(desc("cos"), asc("qid"))
-      cappedRounds(subSplit(e.filter(isNew), sizes), subSplit(old, sizes))
+      cappedRounds(newS, oldS)
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 3)
         .select(col("cand_id").as("node"), col("rank"),
@@ -609,29 +603,13 @@ object AnnSearch {
         .orderBy("node", "rank")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      old AS (SELECT * FROM e WHERE vec_id % 7 <> 3),
-      sizes AS (SELECT label, COUNT(*) AS cellN FROM old GROUP BY 1),
-      osub AS (
-        SELECT old.*, CAST(ceil(cellN / $CellCap.0) AS BIGINT) AS ns
-        FROM old JOIN sizes USING (label)),
-      osubx AS (
-        SELECT *, vec_id % ns AS sub, (vec_id // ns) % ns AS subb,
-               (vec_id // ns // ns) % ns AS subc FROM osub),
-      nsub AS (
-        SELECT e.*, CAST(ceil(cellN / $CellCap.0) AS BIGINT) AS ns
-        FROM e JOIN sizes USING (label) WHERE e.vec_id % 7 = 3),
-      nsubx AS (
-        SELECT *, vec_id % ns AS sub, (vec_id // ns) % ns AS subb,
-               (vec_id // ns // ns) % ns AS subc FROM nsub),
+      WITH $eCteSql,
+      $storedGridSql,
       cand AS (
         ${cappedCandBranchesSql("qid", "nsubx", "osubx")}),
       ranked AS (
         SELECT cand_id AS node, qid AS arrival_id, cos,
-               CAST(ROW_NUMBER() OVER (PARTITION BY cand_id ORDER BY cos DESC, qid ASC) AS BIGINT) AS rank
+               CAST(${cosRankSql("cand_id", "qid")} AS BIGINT) AS rank
         FROM cand)
       SELECT node, rank, arrival_id, cos FROM ranked
       WHERE rank <= 3
@@ -651,16 +629,9 @@ object AnnSearch {
   private def storedOldEdges(s: SparkSession, dir: String): DataFrame =
     storedOldEdgesCache.getOrElseUpdate(s, dir) {
       graft.PinnedStorage.pin(s) {
-        val e = index(s, dir)
-        val old = e.filter(!(col("vec_id") % 7 === 3))
-        val sizes = old.groupBy("label").agg(count(lit(1)).as("cellN"))
-        val oldS = subSplit(old, sizes)
-        val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-        cappedRounds(oldS, oldS)
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
-          .select("qid", "cand_id", "cos")
-          .localCheckpoint(true)
+        val old = index(s, dir).filter(!isArrival)
+        val oldS = subSplit(old, census(old))
+        storedTop3(cappedRounds(oldS, oldS)).localCheckpoint(true)
       }
     }
 
@@ -709,38 +680,14 @@ object AnnSearch {
     "ann_knn_graph_delta_apply",
     (s, dir) => {
       val e = index(s, dir)
-      val isNew = col("vec_id") % 7 === 3
-      val old = e.filter(!isNew)
-      val sizes = old.groupBy("label").agg(count(lit(1)).as("cellN"))
-      applyDeltaStep(storedOldEdges(s, dir),
-          subSplit(old, sizes), subSplit(e.filter(isNew), sizes))
-        .orderBy("qid", "rank")
+      val (oldS, newS) = storedGrid(e, isArrival)
+      applyDeltaStep(storedOldEdges(s, dir), oldS, newS).orderBy("qid", "rank")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      old AS (SELECT * FROM e WHERE vec_id % 7 <> 3),
-      sizes AS (SELECT label, COUNT(*) AS cellN FROM old GROUP BY 1),
-      osub AS (
-        SELECT old.*, CAST(ceil(cellN / $CellCap.0) AS BIGINT) AS ns
-        FROM old JOIN sizes USING (label)),
-      osubx AS (
-        SELECT *, vec_id % ns AS sub, (vec_id // ns) % ns AS subb,
-               (vec_id // ns // ns) % ns AS subc FROM osub),
-      nsub AS (
-        SELECT e.*, CAST(ceil(cellN / $CellCap.0) AS BIGINT) AS ns
-        FROM e JOIN sizes USING (label) WHERE e.vec_id % 7 = 3),
-      nsubx AS (
-        SELECT *, vec_id % ns AS sub, (vec_id // ns) % ns AS subb,
-               (vec_id // ns // ns) % ns AS subc FROM nsub),
-      stored AS (
-        SELECT qid, cand_id, cos FROM (
-          SELECT qid, cand_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM (${cappedCandBranchesSql("qid", "osubx", "osubx")}) oc) t
-        WHERE rank <= 3),
+      WITH $eCteSql,
+      $storedGridSql,
+      ${topkCteSql("stored", s"(${cappedCandBranchesSql("qid", "osubx", "osubx")}) oc", 3,
+          cols = "qid, cand_id, cos")},
       fwd AS (
         ${cappedCandBranchesSql("qid", "nsubx", "osubx")}),
       rev AS (SELECT cand_id AS qid, qid AS cand_id, cos FROM fwd),
@@ -749,13 +696,7 @@ object AnnSearch {
       merged AS (
         SELECT * FROM stored UNION ALL SELECT * FROM fwd
         UNION ALL SELECT * FROM rev UNION ALL SELECT * FROM nn),
-      ranked AS (
-        SELECT qid, cand_id, cos,
-               CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS BIGINT) AS rank
-        FROM merged)
-      SELECT qid, rank, cand_id, cos FROM ranked
-      WHERE rank <= 3
-      ORDER BY qid, rank
+      ${rankedTopkSql("merged", 3)}
     """.stripMargin.trim))
 
   /** The maintenance invariant's reference arm (Round17Spec): the
@@ -765,15 +706,14 @@ object AnnSearch {
     * cosines match exactly. */
   private[operators] def deltaApplyRebuild(s: SparkSession, dir: String): DataFrame = {
     val e = index(s, dir)
-    val old = e.filter(!(col("vec_id") % 7 === 3))
-    val sizes = old.groupBy("label").agg(count(lit(1)).as("cellN"))
-    val allS = subSplit(e, sizes)
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-    cappedRounds(allS, allS)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
-      .select("qid", "rank", "cand_id", "cos")
-      .orderBy("qid", "rank")
+    rebuildOn(e, e.filter(!isArrival))
+  }
+
+  /** The capped top-3 graph rebuilt from scratch over all of `e`, cut on
+    * the census of `corpus` (the stored grid). */
+  private def rebuildOn(e: DataFrame, corpus: DataFrame): DataFrame = {
+    val allS = subSplit(e, census(corpus))
+    topByCos(cappedRounds(allS, allS), 3).orderBy("qid", "rank")
   }
 
   /** ONE apply step of incremental maintenance as a pure frame
@@ -794,12 +734,7 @@ object AnnSearch {
     val rev = fwd.select(col("cand_id").as("qid"), col("qid").as("cand_id"),
       col("cos"))
     val nn = cappedRounds(newS, newS)
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-    stored.select("qid", "cand_id", "cos")
-      .union(fwd).union(rev).union(nn)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
-      .select("qid", "rank", "cand_id", "cos")
+    topByCos(stored.select("qid", "cand_id", "cos").union(fwd).union(rev).union(nn), 3)
   }
 
   /** TWO-batch sequential maintenance (r17 verdict item 3): corpus0 =
@@ -815,14 +750,10 @@ object AnnSearch {
     val isB1 = col("vec_id") % 7 === 3
     val isB2 = col("vec_id") % 7 === 5
     val c0 = e.filter(!isB1 && !isB2)
-    val sizes = c0.groupBy("label").agg(count(lit(1)).as("cellN"))
+    val sizes = census(c0)
     val c0S = subSplit(c0, sizes)
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-    val stored0 = cappedRounds(c0S, c0S)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select("qid", "cand_id", "cos")
-    val m1 = applyDeltaStep(stored0, c0S, subSplit(e.filter(isB1), sizes))
+    val m1 = applyDeltaStep(storedTop3(cappedRounds(c0S, c0S)), c0S,
+        subSplit(e.filter(isB1), sizes))
       .select("qid", "cand_id", "cos")
       .localCheckpoint(true)
     val m2 = applyDeltaStep(m1, c0S.union(subSplit(e.filter(isB1), sizes)),
@@ -836,17 +767,7 @@ object AnnSearch {
   private[operators] def deltaApplySequentialRebuild(s: SparkSession,
       dir: String): DataFrame = {
     val e = index(s, dir)
-    val isB1 = col("vec_id") % 7 === 3
-    val isB2 = col("vec_id") % 7 === 5
-    val c0 = e.filter(!isB1 && !isB2)
-    val sizes = c0.groupBy("label").agg(count(lit(1)).as("cellN"))
-    val allS = subSplit(e, sizes)
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-    cappedRounds(allS, allS)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
-      .select("qid", "rank", "cand_id", "cos")
-      .orderBy("qid", "rank")
+    rebuildOn(e, e.filter(!isArrival && !(col("vec_id") % 7 === 5)))
   }
 
   /** The arrivals the delta path CANNOT place: labels absent from the
@@ -856,7 +777,7 @@ object AnnSearch {
     * assuming it is empty; Round18Spec gates both the empty case (this
     * corpus) and detection on a synthetic new-cell batch. */
   private[operators] def newCellArrivals(e: DataFrame,
-      isNew: org.apache.spark.sql.Column): DataFrame = {
+      isNew: Column): DataFrame = {
     val census = e.filter(!isNew).select("label").distinct()
     e.filter(isNew).join(broadcast(census), Seq("label"), "left_anti")
   }
@@ -866,16 +787,9 @@ object AnnSearch {
     * the pinned corpus, exposed so the new-cell gate can feed a
     * synthetic frame whose arrival labels are absent from the census. */
   private[operators] def applyDeltaOn(e: DataFrame,
-      isNew: org.apache.spark.sql.Column): DataFrame = {
-    val old = e.filter(!isNew)
-    val sizes = old.groupBy("label").agg(count(lit(1)).as("cellN"))
-    val oldS = subSplit(old, sizes)
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-    val stored = cappedRounds(oldS, oldS)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select("qid", "cand_id", "cos")
-    applyDeltaStep(stored, oldS, subSplit(e.filter(isNew), sizes))
+      isNew: Column): DataFrame = {
+    val (oldS, newS) = storedGrid(e, isNew)
+    applyDeltaStep(storedTop3(cappedRounds(oldS, oldS)), oldS, newS)
   }
 
   /** Declared REBUILD TRIGGER for incremental maintenance (r17 verdict
@@ -897,6 +811,107 @@ object AnnSearch {
       newCells: Long): Boolean =
     newCells > 0 || cumDelta > DeltaRebuildFrac * censusCorpus
 
+  /** The (label → cellN) census of a corpus: the cell sizes its capped
+    * sub-split is cut against. */
+  private def census(df: DataFrame): DataFrame =
+    df.groupBy("label").agg(count(lit(1)).as("cellN"))
+
+  /** DuckDB twin of [[census]]: the `sizes` CTE over `from`. */
+  private def sizesSql(from: String): String =
+    s"sizes AS (SELECT label, COUNT(*) AS cellN FROM $from GROUP BY 1)"
+
+  /** The three-digit sub-split of a frame against a [[census]] — the
+    * capped universe's coordinates. The census is passed in (not derived
+    * from `df`) so DELTA maintenance can place arrivals into the EXISTING
+    * corpus's sub-cells. */
+  private def subSplit(df: DataFrame, sizes: DataFrame): DataFrame =
+    df.join(broadcast(sizes), "label")
+      .withColumn("nsplits", ceil(col("cellN") / lit(CellCap.toDouble)).cast("long"))
+      .withColumn("sub", pmod(col("vec_id"), col("nsplits")))
+      // second and third independent groupings: the next two
+      // base-nsplits digits of vec_id
+      .withColumn("subb", pmod(expr("vec_id div nsplits"), col("nsplits")))
+      .withColumn("subc", pmod(expr("(vec_id div nsplits) div nsplits"), col("nsplits")))
+
+  /** DuckDB twin of [[subSplit]] against the `sizes` CTE: `name` (the rows
+    * of `from`, filtered by `where`, with their split count `ns`) and
+    * `{name}x` (with the three digits). */
+  private def subSplitSql(name: String, from: String, where: String): String =
+    s"""$name AS (
+       |  SELECT $from.*, CAST(ceil(cellN / $CellCap.0) AS BIGINT) AS ns
+       |  FROM $from JOIN sizes USING (label)$where),
+       |${name}x AS (
+       |  SELECT *, vec_id % ns AS sub, (vec_id // ns) % ns AS subb,
+       |         (vec_id // ns // ns) % ns AS subc FROM $name)""".stripMargin
+
+  /** The three capped rounds between a query-side and a candidate-side
+    * sub-split frame: each an equi-join on (label, digit), later rounds
+    * mismatch-gated so the union is disjoint. */
+  private def cappedRounds(qs: DataFrame, cs: DataFrame): DataFrame = {
+    def round(cond: Column) =
+      qs.as("q").join(cs.as("c"), cond)
+        .select(col("q.vec_id").as("qid"), col("c.vec_id").as("cand_id"),
+          pairCos)
+    val r1 = round(col("q.label") === col("c.label") &&
+      col("q.sub") === col("c.sub") && col("q.vec_id") =!= col("c.vec_id"))
+    val r2 = round(col("q.label") === col("c.label") &&
+      col("q.subb") === col("c.subb") && col("q.sub") =!= col("c.sub") &&
+      col("q.vec_id") =!= col("c.vec_id"))
+    val r3 = round(col("q.label") === col("c.label") &&
+      col("q.subc") === col("c.subc") && col("q.sub") =!= col("c.sub") &&
+      col("q.subb") =!= col("c.subb") && col("q.vec_id") =!= col("c.vec_id"))
+    r1.union(r2).union(r3)
+  }
+
+  /** Each qid's 3 best `pairs` rows as (qid, cand_id, cos), ranked by
+    * [[byCos]] with the INT rank dropped — the stored edge set that
+    * incremental maintenance carries between batches and the navigable
+    * graph pins. */
+  private def storedTop3(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("rank", row_number().over(byCos))
+      .filter(col("rank") <= 3)
+      .select("qid", "cand_id", "cos")
+
+  /** Shared candidate generator of the capped build: (qid, cand_id, cos)
+    * pairs from all three sub-split rounds, exactly as priced by
+    * ann_recall_knn_capped_vs_exact. Used verbatim by the
+    * ann_knn_graph_capped carrier and the pinned [[knnEdges]] artifact,
+    * so the graph the greedy arms navigate IS the graph the recall gate
+    * prices. */
+  private def cappedPairCandidates(e: DataFrame): DataFrame = {
+    val s = subSplit(e, census(e))
+    cappedRounds(s, s)
+  }
+
+  /** The three capped-round branches between SQL tables `qt` (query
+    * side) and `ct` (candidate side), both pre-annotated with
+    * sub/subb/subc — the [[cappedRounds]] twin. */
+  private def cappedCandBranchesSql(qidCol: String, qt: String, ct: String): String = {
+    def round(cond: String) = pairsSql(s"$qt q JOIN $ct c ON q.label = c.label AND $cond", qidCol)
+    s"""${round("q.sub = c.sub AND q.vec_id != c.vec_id")}
+        UNION ALL
+        ${round("q.subb = c.subb AND q.sub != c.sub AND q.vec_id != c.vec_id")}
+        UNION ALL
+        ${round("q.subc = c.subc AND q.sub != c.sub AND q.subb != c.subb AND q.vec_id != c.vec_id")}"""
+  }
+
+  /** DuckDB twin of [[cappedPairCandidates]]: sizes / three-round
+    * sub-split / candidate-pair CTEs (expects a prior `e` CTE exposing vec_id,
+    * label, embedding, nrm). `qidCol` names the pair's source column
+    * ("qid" for the graph carriers, "node" for the batch-search twin). */
+  private def cappedCandSqlCtes(qidCol: String): String =
+    s"""${sizesSql("e")},
+      ${subSplitSql("sub", "e", "")},
+      cand AS (
+        ${cappedCandBranchesSql(qidCol, "subx", "subx")})"""
+
+  /** [[cappedCandSqlCtes]] plus the top-3 edge ranking — the full edge
+    * set the greedy-search twins navigate. */
+  private def cappedEdgesSqlCtes(qidCol: String): String =
+    s"""${cappedCandSqlCtes(qidCol)},
+      ${topkCteSql("edges", "cand", 3, key = qidCol, cols = s"$qidCol, cand_id")}"""
+
   /** Cell-capped k-NN graph: cells larger than Cap=16 are split into
     * ceil(cellN/16) deterministic sub-cells and neighbors are ranked
     * within the SUB-cell — the hot-cell defense the graph build needs at
@@ -916,120 +931,13 @@ object AnnSearch {
     * sets disjoint by construction: the union needs no dedup shuffle.
     * Measured at sf0.01: 0.273 → 0.472 (two rounds) → 0.625 (three).
     */
-
-  /** The three-digit sub-split of a frame against a (label → cellN)
-    * census — the capped universe's coordinates. The census is passed
-    * in (not derived from `df`) so DELTA maintenance can place arrivals
-    * into the EXISTING corpus's sub-cells. */
-  private def subSplit(df: DataFrame, sizes: DataFrame): DataFrame =
-    df.join(broadcast(sizes), "label")
-      .withColumn("nsplits", ceil(col("cellN") / lit(CellCap.toDouble)).cast("long"))
-      .withColumn("sub", pmod(col("vec_id"), col("nsplits")))
-      // second and third independent groupings: the next two
-      // base-nsplits digits of vec_id
-      .withColumn("subb", pmod(expr("vec_id div nsplits"), col("nsplits")))
-      .withColumn("subc", pmod(expr("(vec_id div nsplits) div nsplits"), col("nsplits")))
-
-  /** The three capped rounds between a query-side and a candidate-side
-    * sub-split frame: each an equi-join on (label, digit), later rounds
-    * mismatch-gated so the union is disjoint. */
-  private def cappedRounds(qs: DataFrame, cs: DataFrame): DataFrame = {
-    def round(cond: org.apache.spark.sql.Column) =
-      qs.as("q").join(cs.as("c"), cond)
-        .select(col("q.vec_id").as("qid"), col("c.vec_id").as("cand_id"),
-          (expr(dotExpr) / (col("q.nrm") * col("c.nrm"))).as("cos"))
-    val r1 = round(col("q.label") === col("c.label") &&
-      col("q.sub") === col("c.sub") && col("q.vec_id") =!= col("c.vec_id"))
-    val r2 = round(col("q.label") === col("c.label") &&
-      col("q.subb") === col("c.subb") && col("q.sub") =!= col("c.sub") &&
-      col("q.vec_id") =!= col("c.vec_id"))
-    val r3 = round(col("q.label") === col("c.label") &&
-      col("q.subc") === col("c.subc") && col("q.sub") =!= col("c.sub") &&
-      col("q.subb") =!= col("c.subb") && col("q.vec_id") =!= col("c.vec_id"))
-    r1.union(r2).union(r3)
-  }
-
-  /** Shared candidate generator of the capped build: (qid, cand_id, cos)
-    * pairs from all three sub-split rounds, exactly as priced by
-    * ann_recall_knn_capped_vs_exact. Used verbatim by the
-    * ann_knn_graph_capped carrier and the pinned [[knnEdges]] artifact,
-    * so the graph the greedy arms navigate IS the graph the recall gate
-    * prices. */
-  private def cappedPairCandidates(e: DataFrame): DataFrame = {
-    val s = subSplit(e, e.groupBy("label").agg(count(lit(1)).as("cellN")))
-    cappedRounds(s, s)
-  }
-
-  /** The three capped-round branches between SQL tables `qt` (query
-    * side) and `ct` (candidate side), both pre-annotated with
-    * sub/subb/subc — the [[cappedRounds]] twin. */
-  private def cappedCandBranchesSql(qidCol: String, qt: String, ct: String): String = {
-    val cos = """list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm)"""
-    s"""SELECT q.vec_id AS $qidCol, c.vec_id AS cand_id, $cos AS cos
-        FROM $qt q JOIN $ct c ON q.label = c.label AND q.sub = c.sub
-                                AND q.vec_id != c.vec_id
-        UNION ALL
-        SELECT q.vec_id AS $qidCol, c.vec_id AS cand_id, $cos AS cos
-        FROM $qt q JOIN $ct c ON q.label = c.label AND q.subb = c.subb
-                                AND q.sub != c.sub AND q.vec_id != c.vec_id
-        UNION ALL
-        SELECT q.vec_id AS $qidCol, c.vec_id AS cand_id, $cos AS cos
-        FROM $qt q JOIN $ct c ON q.label = c.label AND q.subc = c.subc
-                                AND q.sub != c.sub AND q.subb != c.subb
-                                AND q.vec_id != c.vec_id"""
-  }
-
-  /** DuckDB twin of [[cappedPairCandidates]]: sizes / three-round
-    * sub-split / candidate-pair CTEs (expects a prior `e` CTE exposing vec_id,
-    * label, embedding, nrm). `qidCol` names the pair's source column
-    * ("qid" for the graph carriers, "node" for the batch-search twin). */
-  private def cappedCandSqlCtes(qidCol: String): String =
-    s"""sizes AS (SELECT label, COUNT(*) AS cellN FROM e GROUP BY 1),
-      sub AS (
-        SELECT e.*, CAST(ceil(cellN / $CellCap.0) AS BIGINT) AS ns
-        FROM e JOIN sizes USING (label)),
-      subx AS (
-        SELECT *, vec_id % ns AS sub, (vec_id // ns) % ns AS subb,
-               (vec_id // ns // ns) % ns AS subc FROM sub),
-      cand AS (
-        ${cappedCandBranchesSql(qidCol, "subx", "subx")})"""
-
-  /** [[cappedCandSqlCtes]] plus the top-3 edge ranking — the full edge
-    * set the greedy-search twins navigate. */
-  private def cappedEdgesSqlCtes(qidCol: String): String =
-    s"""${cappedCandSqlCtes(qidCol)},
-      edges AS (
-        SELECT $qidCol, cand_id FROM (
-          SELECT $qidCol, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY $qidCol ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM cand) t WHERE rank <= 3)"""
-
   val knnGraphCapped: QueryDef = QueryDef(
     "ann_knn_graph_capped",
-    (s, dir) => {
-      val e = index(s, dir)
-      val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-      cappedPairCandidates(e)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
-        .select("qid", "rank", "cand_id", "cos")
-        .orderBy("qid", "rank")
-    },
+    (s, dir) => topByCos(cappedPairCandidates(index(s, dir)), 3).orderBy("qid", "rank"),
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      WITH $eCteSql,
       ${cappedCandSqlCtes("qid")},
-      ranked AS (
-        SELECT qid, cand_id, cos,
-               CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS BIGINT) AS rank
-        FROM cand)
-      SELECT qid, rank, cand_id, cos FROM ranked
-      WHERE rank <= 3
-      ORDER BY qid, rank
+      ${rankedTopkSql("cand", 3)}
     """.stripMargin.trim))
 
   /** Per-label centroid frame (label, pos, cx). Means use the decimal-
@@ -1115,6 +1023,9 @@ object AnnSearch {
     s"""dial AS (SELECT CASE WHEN (SELECT COUNT(*) FROM e) <= $NavSmallCorpusMax
             THEN $NavBeamSmall ELSE $NavBeamLarge END AS b)"""
 
+  /** Cosine of each `e` row against the single query `qv` (qe, qn). */
+  private lazy val queryCosSql = s"${dotSql("e.embedding", "qv.qe")} / (e.nrm * qv.qn)"
+
   /** One single-query hop of the DuckDB greedy-walk twin: expand the
     * previous beam's nav_edges neighbors (plus the beam itself), score
     * exactly against the query vector `qv`, keep the dialed-B best. */
@@ -1127,9 +1038,7 @@ object AnnSearch {
                  ROW_NUMBER() OVER (ORDER BY t.cos DESC, t.vec_id ASC) AS rn
           FROM (
             SELECT e.vec_id,
-                   list_reduce(list_transform(generate_series(1, len(e.embedding)),
-                     i -> CAST(e.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(qv.qe[CAST(i AS INT)] AS DOUBLE)),
-                     (x, y) -> x + y) / (e.nrm * qv.qn) AS cos
+                   $queryCosSql AS cos
             FROM e JOIN $n USING (vec_id) CROSS JOIN qv
             WHERE e.vec_id != 1) t) u
         WHERE rn <= (SELECT b FROM dial))"""
@@ -1142,7 +1051,7 @@ object AnnSearch {
     * the generator remains a keyed equi-join on (blabel, digit). Output
     * carries `blabel` so edge selection can rank per adjacent cell. */
   private def crossCellCandidates(e: DataFrame): DataFrame = {
-    val sizes = e.groupBy("label").agg(count(lit(1)).as("cellN"))
+    val sizes = census(e)
     val adj = cellAdjacency(e, CrossA)
     val bmeta = sizes.select(col("label").as("blabel"),
       ceil(col("cellN") / lit(CellCap.toDouble)).cast("long").as("bns"))
@@ -1154,7 +1063,7 @@ object AnnSearch {
         col("q.blabel") === col("c.label") && col("q.qsub") === col("c.sub"))
       .select(col("q.vec_id").as("qid"), col("q.blabel").as("blabel"),
         col("c.vec_id").as("cand_id"),
-        (expr(dotExpr) / (col("q.nrm") * col("c.nrm"))).as("cos"))
+        pairCos)
   }
 
   /** The selected cross-cell edge set: top-[[CrossKPerCell]] per (node,
@@ -1173,10 +1082,7 @@ object AnnSearch {
     * [[cappedCandSqlCtes]]'s `sizes` and `subx` (the candidate-side
     * sub-split); unreferenced CTEs of that block (e.g. `cand`) are
     * never evaluated by DuckDB. */
-  private def crossCellSqlCtes(qidCol: String): String = {
-    val cos = """list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm)"""
+  private def crossCellSqlCtes(qidCol: String): String =
     s"""cent AS (
         SELECT label, CAST(t.i AS INT) AS pos,
                CAST(SUM(CAST(CAST(embedding[CAST(t.i AS INT)] AS DOUBLE) AS DECIMAL(20,10))) AS DOUBLE) / COUNT(*) AS cx
@@ -1200,14 +1106,10 @@ object AnnSearch {
         FROM e JOIN adj USING (label) JOIN sizes bs ON bs.label = adj.blabel),
       xqs AS (SELECT *, vec_id % bns AS qsub FROM xq),
       xcand AS (
-        SELECT q.vec_id AS $qidCol, q.blabel AS blabel, c.vec_id AS cand_id, $cos AS cos
+        SELECT q.vec_id AS $qidCol, q.blabel AS blabel, c.vec_id AS cand_id, ${cosSql("q", "c")} AS cos
         FROM xqs q JOIN subx c ON q.blabel = c.label AND q.qsub = c.sub),
-      xedges AS (
-        SELECT $qidCol, cand_id FROM (
-          SELECT $qidCol, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY $qidCol, blabel ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM xcand) t WHERE rank <= $CrossKPerCell)"""
-  }
+      ${topkCteSql("xedges", "xcand", CrossKPerCell, key = s"$qidCol, blabel",
+          cols = s"$qidCol, cand_id")}"""
 
   /** The NAVIGABLE edge set's SQL twin: capped intra-cell top-3 UNION
     * cross-cell top-[[CrossK]] (disjoint by construction — cross edges
@@ -1242,28 +1144,19 @@ object AnnSearch {
     */
   val knnGraphCrossCell: QueryDef = QueryDef(
     "ann_knn_graph_crosscell",
-    (s, dir) => {
-      val e = index(s, dir)
-      val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-      crossCellEdges(e)
-        .withColumn("rank", row_number().over(w).cast("long"))
+    (s, dir) =>
+      crossCellEdges(index(s, dir))
+        .withColumn("rank", row_number().over(byCos).cast("long"))
         .select("qid", "rank", "cand_id", "cos")
-        .orderBy("qid", "rank")
-    },
+        .orderBy("qid", "rank"),
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      WITH $eCteSql,
       ${cappedCandSqlCtes("qid")},
       ${crossCellSqlCtes("qid")},
-      xsel AS (
-        SELECT qid, cand_id, cos FROM (
-          SELECT qid, blabel, cand_id, cos,
-                 ROW_NUMBER() OVER (PARTITION BY qid, blabel ORDER BY cos DESC, cand_id ASC) AS rnc
-          FROM xcand) t WHERE rnc <= $CrossKPerCell)
+      ${topkCteSql("xsel", "xcand", CrossKPerCell, key = "qid, blabel",
+          cols = "qid, blabel, cand_id, cos", out = "qid, cand_id, cos")}
       SELECT qid,
-             CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS BIGINT) AS rank,
+             CAST(${cosRankSql()} AS BIGINT) AS rank,
              cand_id, cos
       FROM xsel
       ORDER BY qid, rank
@@ -1292,22 +1185,10 @@ object AnnSearch {
           (col("n_retained").cast("double") / col("n_exact_edges")).as("recall"))
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      WITH $eCteSql,
       exact_scored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q JOIN e c ON q.label = c.label AND q.vec_id != c.vec_id
-        WHERE ${AuditGuard.sqlPred("q.vec_id", "embeddings")}),
-      exact_edges AS (
-        SELECT qid, cand_id FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM exact_scored) WHERE rank <= 3),
+        $cellPairsSql),
+      ${topkCteSql("exact_edges", "exact_scored", 3)},
       ${cappedEdgesSqlCtes("qid")}
       SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_edges,
              CAST(SUM(CASE WHEN c.qid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_retained,
@@ -1374,10 +1255,7 @@ object AnnSearch {
       def assign(cr: DataFrame): DataFrame =
         vecs.crossJoin(broadcast(cr))
           .withColumn("m", expr(
-            """array_min(transform(cs, s -> struct(
-              |  aggregate(zip_with(v, s.c, (x, y) -> (x - y) * (x - y)),
-              |            0.0D, (a, b) -> a + b) AS dist2,
-              |  s.cid AS cid)))""".stripMargin))
+            s"array_min(transform(cs, s -> struct(${dist2("v", "s.c")} AS dist2, s.cid AS cid)))"))
           .select(col("vec_id"), col("m.cid").as("cid"),
             col("m.dist2").as("dist2"), col("v"))
       def update(assigned: DataFrame): DataFrame =
@@ -1410,29 +1288,11 @@ object AnnSearch {
           SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) AS cid, v
           FROM v) s
         WHERE cid <= 8),
-      a1 AS (
-        SELECT vec_id, cid, dist2 FROM (
-          SELECT vv.vec_id, s.cid, ${kmDist2Duck("vv.v", "s.c")} AS dist2,
-                 ROW_NUMBER() OVER (PARTITION BY vv.vec_id
-                   ORDER BY ${kmDist2Duck("vv.v", "s.c")}, s.cid) AS rn
-          FROM v vv CROSS JOIN seeds s) d
-        WHERE rn = 1),
+      ${kmAssignDuck("a1", "seeds")},
       c1 AS (${kmUpdateDuck("a1")}),
-      a2 AS (
-        SELECT vec_id, cid, dist2 FROM (
-          SELECT vv.vec_id, s.cid, ${kmDist2Duck("vv.v", "s.c")} AS dist2,
-                 ROW_NUMBER() OVER (PARTITION BY vv.vec_id
-                   ORDER BY ${kmDist2Duck("vv.v", "s.c")}, s.cid) AS rn
-          FROM v vv CROSS JOIN c1 s) d
-        WHERE rn = 1),
+      ${kmAssignDuck("a2", "c1")},
       c2 AS (${kmUpdateDuck("a2")}),
-      a3 AS (
-        SELECT vec_id, cid, dist2 FROM (
-          SELECT vv.vec_id, s.cid, ${kmDist2Duck("vv.v", "s.c")} AS dist2,
-                 ROW_NUMBER() OVER (PARTITION BY vv.vec_id
-                   ORDER BY ${kmDist2Duck("vv.v", "s.c")}, s.cid) AS rn
-          FROM v vv CROSS JOIN c2 s) d
-        WHERE rn = 1)
+      ${kmAssignDuck("a3", "c2")}
       SELECT cid AS cluster, COUNT(*) AS n_vectors,
              CAST(SUM(CAST(FLOOR(dist2 * 1000000.0) AS BIGINT)) AS BIGINT) AS inertia_e6
       FROM a3
@@ -1440,13 +1300,17 @@ object AnnSearch {
       ORDER BY cluster
     """.stripMargin.trim))
 
-  /** DuckDB twins of the trainer's two kernels, emitted once: the
-    * index-ordered squared-L2 fold and the decimal-mean update. */
-  private def kmDist2Duck(v: String, c: String): String =
-    s"""list_reduce(list_transform(generate_series(1, $Dim),
-       |              i -> ($v[CAST(i AS INT)] - $c[CAST(i AS INT)])
-       |                   * ($v[CAST(i AS INT)] - $c[CAST(i AS INT)])),
-       |            (a, b) -> a + b)""".stripMargin
+  /** DuckDB twins of the trainer's two kernels: the CTE `name`, each
+    * vector's nearest centroid of `cents` by ([[dist2Duck]], cid), and the
+    * decimal-mean update over an assignment `a`. */
+  private def kmAssignDuck(name: String, cents: String): String =
+    s"""$name AS (
+       |        SELECT vec_id, cid, dist2 FROM (
+       |          SELECT vv.vec_id, s.cid, ${dist2Duck("vv.v", "s.c", Dim)} AS dist2,
+       |                 ROW_NUMBER() OVER (PARTITION BY vv.vec_id
+       |                   ORDER BY ${dist2Duck("vv.v", "s.c", Dim)}, s.cid) AS rn
+       |          FROM v vv CROSS JOIN $cents s) d
+       |        WHERE rn = 1)""".stripMargin
   private def kmUpdateDuck(a: String): String =
     s"""SELECT cid, list(cx ORDER BY pos) AS c FROM (
        |          SELECT $a.cid, CAST(i.range AS INT) + 1 AS pos,
@@ -1456,9 +1320,16 @@ object AnnSearch {
        |          GROUP BY 1, 2) m
        |        GROUP BY cid""".stripMargin
 
-  /** Squared-L2 fold over a `len`-element slice, index-ordered — the
-    * subspace sibling of [[kmDist2Duck]]. */
-  private def pqDist2Duck(v: String, c: String, len: Int): String =
+  /** Squared-L2 distance of two double arrays, folded index-ordered — the
+    * one distance of the trainers and probes; [[dist2E6]] is its
+    * FLOOR(·10⁶) integer, [[dist2Duck]] its DuckDB twin. */
+  private def dist2(a: String, b: String): String =
+    s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b)"
+  private def dist2E6(a: String, b: String): String =
+    s"CAST(FLOOR(${dist2(a, b)} * 1000000.0D) AS BIGINT)"
+
+  /** DuckDB twin of [[dist2]] over the first `len` elements. */
+  private def dist2Duck(v: String, c: String, len: Int): String =
     s"""list_reduce(list_transform(generate_series(1, $len),
        |              i -> ($v[CAST(i AS INT)] - $c[CAST(i AS INT)])
        |                   * ($v[CAST(i AS INT)] - $c[CAST(i AS INT)])),
@@ -1491,10 +1362,7 @@ object AnnSearch {
     data.join(broadcast(cb.groupBy("s")
         .agg(sort_array(collect_list(struct(col("cid"), col("c")))).as("__cs"))), "s")
       .withColumn("__m", expr(
-        s"""array_min(transform(__cs, t -> struct(
-           |  aggregate(zip_with($vcol, t.c, (x, y) -> (x - y) * (x - y)),
-           |            0.0D, (a, b) -> a + b) AS dist2,
-           |  t.cid AS cid)))""".stripMargin))
+        s"array_min(transform(__cs, t -> struct(${dist2(vcol, "t.c")} AS dist2, t.cid AS cid)))"))
       .select(data.columns.map(col) :+ col("__m.cid").as("cid"): _*)
 
   /** Per-(subspace, centroid, dim) decimal-mean codebook update — the
@@ -1511,6 +1379,52 @@ object AnnSearch {
         .as("c"))
 
   private val pqL1Cache = new graft.SessionCache[PqLevel1]
+
+  /** DuckDB twin of [[pqAssign]]: `name` (vec_id, s, cid), each (vec_id,
+    * s) row of `data` given its nearest `cb` codeword by (distance of
+    * `vcol`, cid). */
+  private def pqAssignSql(name: String, data: String, vcol: String, cb: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, s, cid FROM (
+       |    SELECT $data.vec_id, $data.s, $cb.cid,
+       |           ROW_NUMBER() OVER (PARTITION BY $data.vec_id, $data.s
+       |             ORDER BY ${dist2Duck(s"$data.$vcol", s"$cb.c", PqSD)}, $cb.cid) AS rn
+       |    FROM $data JOIN $cb USING (s)) t WHERE rn = 1)""".stripMargin
+
+  /** DuckDB twin of [[pqUpdate]]: `name` (s, cid, c), the decimal-mean
+    * codebook of the `vcol` slices of `data` under the assignment `a`. */
+  private def pqUpdateSql(name: String, a: String, data: String, vcol: String): String =
+    s"""$name AS (
+       |  SELECT s, cid, list(cx ORDER BY pos) AS c FROM (
+       |    SELECT $a.s, $a.cid, CAST(i.range AS INT) + 1 AS pos,
+       |           CAST(SUM(CAST($data.$vcol[CAST(i.range AS INT) + 1] AS DECIMAL(20,10))) AS DOUBLE)
+       |             / COUNT(*) AS cx
+       |    FROM $a JOIN $data USING (vec_id, s) CROSS JOIN range(0, $PqSD) i
+       |    GROUP BY 1, 2, 3) m GROUP BY s, cid)""".stripMargin
+
+  /** DuckDB twin of [[pqLevel1]] up to its codes: `v`, the subspace slices
+    * `sub`, the hash `seeds` (carrying `seedCols`), `cb0`, `a0`, the
+    * one-Lloyd-pass `cb1` and the level-1 assignment `codes`. */
+  private def pqLevel1Sql(seedCols: String, codes: String): String =
+    s"""v AS (
+        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        FROM embeddings),
+      sub AS (
+        SELECT vec_id, CAST(m.range AS INT) AS s,
+               list_slice(v, CAST(m.range AS INT) * 8 + 1, CAST(m.range AS INT) * 8 + 8) AS vs
+        FROM v CROSS JOIN range(0, 8) m),
+      seeds AS (
+        SELECT cid, $seedCols FROM (
+          SELECT CAST(ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) AS BIGINT) AS cid,
+                 $seedCols
+          FROM v) t WHERE cid <= 16),
+      cb0 AS (
+        SELECT CAST(m.range AS INT) AS s, cid,
+               list_slice(v, CAST(m.range AS INT) * 8 + 1, CAST(m.range AS INT) * 8 + 8) AS c
+        FROM seeds CROSS JOIN range(0, 8) m),
+      ${pqAssignSql("a0", "sub", "vs", "cb0")},
+      ${pqUpdateSql("cb1", "a0", "sub", "vs")},
+      ${pqAssignSql(codes, "sub", "vs", "cb1")}"""
 
   /** Level-1 PQ training, done ONCE per (session, corpus) and pinned —
     * [[pqAdcTopk]] and [[rqReconGain]] train IDENTICAL level-1 codebooks
@@ -1603,8 +1517,7 @@ object AnnSearch {
       val codes = l1.codes
       val qsub = sub.filter(col("vec_id") === QID).select(col("s"), col("vs").as("qs"))
       val dtab = cb1.join(broadcast(qsub), "s")
-        .withColumn("d", expr(
-          "aggregate(zip_with(qs, c, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b)"))
+        .withColumn("d", expr(dist2("qs", "c")))
         .select(col("s"), col("cid"), col("d"))
       val shortlist = codes.filter(col("vec_id") =!= QID)
         .join(broadcast(dtab), Seq("s", "cid"))
@@ -1617,15 +1530,13 @@ object AnnSearch {
       // corpus size, never a second scan) and keep the exact top-10
       val rerank = vecs.join(broadcast(shortlist), "vec_id")
         .crossJoin(broadcast(qfull))
-        .withColumn("exact_e6", expr(
-          "CAST(FLOOR(aggregate(zip_with(v, q, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b) * 1000000.0D) AS BIGINT)"))
+        .withColumn("exact_e6", expr(dist2E6("v", "q")))
         .orderBy(asc("exact_e6"), asc("vec_id")).limit(TOPK)
         .select(col("vec_id"), col("adc_e6"), col("exact_e6"))
       // recall audit arm (NOT part of the operator's scale path): the
       // brute-force exact top-10 the membership flag is checked against
       val exact = vecs.filter(col("vec_id") =!= QID).crossJoin(broadcast(qfull))
-        .withColumn("exact_e6", expr(
-          "CAST(FLOOR(aggregate(zip_with(v, q, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b) * 1000000.0D) AS BIGINT)"))
+        .withColumn("exact_e6", expr(dist2E6("v", "q")))
         .select(col("vec_id"), col("exact_e6"))
       val exTop = exact.orderBy(asc("exact_e6"), asc("vec_id")).limit(TOPK)
         .select(col("vec_id").as("evid"))
@@ -1640,43 +1551,10 @@ object AnnSearch {
         .orderBy("rank")
     },
     Some(s"""
-      WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      sub AS (
-        SELECT vec_id, CAST(m.range AS INT) AS s,
-               list_slice(v, CAST(m.range AS INT) * 8 + 1, CAST(m.range AS INT) * 8 + 8) AS vs
-        FROM v CROSS JOIN range(0, 8) m),
-      seeds AS (
-        SELECT cid, v FROM (
-          SELECT CAST(ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) AS BIGINT) AS cid, v
-          FROM v) t WHERE cid <= 16),
-      cb0 AS (
-        SELECT CAST(m.range AS INT) AS s, cid,
-               list_slice(v, CAST(m.range AS INT) * 8 + 1, CAST(m.range AS INT) * 8 + 8) AS c
-        FROM seeds CROSS JOIN range(0, 8) m),
-      a0 AS (
-        SELECT vec_id, s, cid FROM (
-          SELECT sub.vec_id, sub.s, cb0.cid,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ${pqDist2Duck("sub.vs", "cb0.c", 8)}, cb0.cid) AS rn
-          FROM sub JOIN cb0 USING (s)) t WHERE rn = 1),
-      cb1 AS (
-        SELECT s, cid, list(cx ORDER BY pos) AS c FROM (
-          SELECT a0.s, a0.cid, CAST(i.range AS INT) + 1 AS pos,
-                 CAST(SUM(CAST(sub.vs[CAST(i.range AS INT) + 1] AS DECIMAL(20,10))) AS DOUBLE)
-                   / COUNT(*) AS cx
-          FROM a0 JOIN sub USING (vec_id, s) CROSS JOIN range(0, 8) i
-          GROUP BY 1, 2, 3) m GROUP BY s, cid),
-      codes AS (
-        SELECT vec_id, s, cid FROM (
-          SELECT sub.vec_id, sub.s, cb1.cid,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ${pqDist2Duck("sub.vs", "cb1.c", 8)}, cb1.cid) AS rn
-          FROM sub JOIN cb1 USING (s)) t WHERE rn = 1),
+      WITH ${pqLevel1Sql("v", "codes")},
       qsub AS (SELECT s, vs AS qs FROM sub WHERE vec_id = 1),
       dtab AS (
-        SELECT cb1.s, cb1.cid, ${pqDist2Duck("qsub.qs", "cb1.c", 8)} AS d
+        SELECT cb1.s, cb1.cid, ${dist2Duck("qsub.qs", "cb1.c", 8)} AS d
         FROM cb1 JOIN qsub USING (s)),
       shortlist AS (
         SELECT vec_id, CAST(SUM(CAST(FLOOR(d * 1000000.0) AS BIGINT)) AS BIGINT) AS adc_e6
@@ -1687,12 +1565,12 @@ object AnnSearch {
       qfull AS (SELECT v AS q FROM v WHERE vec_id = 1),
       rerank AS (
         SELECT sl.vec_id, sl.adc_e6,
-               CAST(FLOOR(${pqDist2Duck("v.v", "qfull.q", 64)} * 1000000.0) AS BIGINT) AS exact_e6
+               CAST(FLOOR(${dist2Duck("v.v", "qfull.q", 64)} * 1000000.0) AS BIGINT) AS exact_e6
         FROM shortlist sl JOIN v USING (vec_id) CROSS JOIN qfull
         ORDER BY exact_e6, vec_id LIMIT 10),
       exact AS (
         SELECT vec_id,
-               CAST(FLOOR(${pqDist2Duck("v.v", "qfull.q", 64)} * 1000000.0) AS BIGINT) AS exact_e6
+               CAST(FLOOR(${dist2Duck("v.v", "qfull.q", 64)} * 1000000.0) AS BIGINT) AS exact_e6
         FROM v CROSS JOIN qfull WHERE vec_id <> 1),
       extop AS (SELECT vec_id FROM exact ORDER BY exact_e6, vec_id LIMIT 10)
       SELECT CAST(ROW_NUMBER() OVER (ORDER BY r.exact_e6, r.vec_id) AS BIGINT) AS rank,
@@ -1737,8 +1615,7 @@ object AnnSearch {
         .join(broadcast(cb2), Seq("s", "cid"))
         .withColumn("e1", expr(
           "CAST(FLOOR(aggregate(zip_with(r, r, (x, y) -> x * y), 0.0D, (a, b) -> a + b) * 1000000.0D) AS BIGINT)"))
-        .withColumn("e2", expr(
-          "CAST(FLOOR(aggregate(zip_with(r, c, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b) * 1000000.0D) AS BIGINT)"))
+        .withColumn("e2", expr(dist2E6("r", "c")))
         .groupBy(col("s"))
         .agg(count(lit(1)).as("n_vectors"),
           sum(col("e1")).as("e1_sum"), sum(col("e2")).as("e2_sum"))
@@ -1749,41 +1626,7 @@ object AnnSearch {
         .orderBy("subspace")
     },
     Some(s"""
-      WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-      sub AS (
-        SELECT vec_id, CAST(m.range AS INT) AS s,
-               list_slice(v, CAST(m.range AS INT) * 8 + 1, CAST(m.range AS INT) * 8 + 8) AS vs
-        FROM v CROSS JOIN range(0, 8) m),
-      seeds AS (
-        SELECT cid, vec_id, v FROM (
-          SELECT CAST(ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) AS BIGINT) AS cid,
-                 vec_id, v
-          FROM v) t WHERE cid <= 16),
-      cb0 AS (
-        SELECT CAST(m.range AS INT) AS s, cid,
-               list_slice(v, CAST(m.range AS INT) * 8 + 1, CAST(m.range AS INT) * 8 + 8) AS c
-        FROM seeds CROSS JOIN range(0, 8) m),
-      a0 AS (
-        SELECT vec_id, s, cid FROM (
-          SELECT sub.vec_id, sub.s, cb0.cid,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ${pqDist2Duck("sub.vs", "cb0.c", 8)}, cb0.cid) AS rn
-          FROM sub JOIN cb0 USING (s)) t WHERE rn = 1),
-      cb1 AS (
-        SELECT s, cid, list(cx ORDER BY pos) AS c FROM (
-          SELECT a0.s, a0.cid, CAST(i.range AS INT) + 1 AS pos,
-                 CAST(SUM(CAST(sub.vs[CAST(i.range AS INT) + 1] AS DECIMAL(20,10))) AS DOUBLE)
-                   / COUNT(*) AS cx
-          FROM a0 JOIN sub USING (vec_id, s) CROSS JOIN range(0, 8) i
-          GROUP BY 1, 2, 3) m GROUP BY s, cid),
-      codes1 AS (
-        SELECT vec_id, s, cid FROM (
-          SELECT sub.vec_id, sub.s, cb1.cid,
-                 ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                   ORDER BY ${pqDist2Duck("sub.vs", "cb1.c", 8)}, cb1.cid) AS rn
-          FROM sub JOIN cb1 USING (s)) t WHERE rn = 1),
+      WITH ${pqLevel1Sql("vec_id, v", "codes1")},
       res AS (
         SELECT sub.vec_id, sub.s,
                list_transform(generate_series(1, 8),
@@ -1792,31 +1635,15 @@ object AnnSearch {
       cb20 AS (
         SELECT res.s, seeds.cid, res.r AS c
         FROM res JOIN seeds ON res.vec_id = seeds.vec_id),
-      a2 AS (
-        SELECT vec_id, s, cid FROM (
-          SELECT res.vec_id, res.s, cb20.cid,
-                 ROW_NUMBER() OVER (PARTITION BY res.vec_id, res.s
-                   ORDER BY ${pqDist2Duck("res.r", "cb20.c", 8)}, cb20.cid) AS rn
-          FROM res JOIN cb20 USING (s)) t WHERE rn = 1),
-      cb2 AS (
-        SELECT s, cid, list(cx ORDER BY pos) AS c FROM (
-          SELECT a2.s, a2.cid, CAST(i.range AS INT) + 1 AS pos,
-                 CAST(SUM(CAST(res.r[CAST(i.range AS INT) + 1] AS DECIMAL(20,10))) AS DOUBLE)
-                   / COUNT(*) AS cx
-          FROM a2 JOIN res USING (vec_id, s) CROSS JOIN range(0, 8) i
-          GROUP BY 1, 2, 3) m GROUP BY s, cid),
-      codes2 AS (
-        SELECT vec_id, s, cid FROM (
-          SELECT res.vec_id, res.s, cb2.cid,
-                 ROW_NUMBER() OVER (PARTITION BY res.vec_id, res.s
-                   ORDER BY ${pqDist2Duck("res.r", "cb2.c", 8)}, cb2.cid) AS rn
-          FROM res JOIN cb2 USING (s)) t WHERE rn = 1),
+      ${pqAssignSql("a2", "res", "r", "cb20")},
+      ${pqUpdateSql("cb2", "a2", "res", "r")},
+      ${pqAssignSql("codes2", "res", "r", "cb2")},
       err AS (
         SELECT res.s,
                CAST(FLOOR(list_reduce(list_transform(generate_series(1, 8),
                       i -> res.r[CAST(i AS INT)] * res.r[CAST(i AS INT)]),
                     (a, b) -> a + b) * 1000000.0) AS BIGINT) AS e1,
-               CAST(FLOOR(${pqDist2Duck("res.r", "cb2.c", 8)} * 1000000.0) AS BIGINT) AS e2
+               CAST(FLOOR(${dist2Duck("res.r", "cb2.c", 8)} * 1000000.0) AS BIGINT) AS e2
         FROM codes2 JOIN res USING (vec_id, s) JOIN cb2 USING (s, cid))
       SELECT CAST(s AS BIGINT) AS subspace, COUNT(*) AS n_vectors,
              CAST(SUM(e1) AS BIGINT) AS e1_sum, CAST(SUM(e2) AS BIGINT) AS e2_sum,
@@ -1913,8 +1740,7 @@ object AnnSearch {
       // probe the W cells whose centroids are exactly nearest the query
       val qfull = vecs.filter(col("vec_id") === QID).select(col("v").as("q"))
       val qcells = cents.crossJoin(broadcast(qfull))
-        .withColumn("cd_e6", expr(
-          "CAST(FLOOR(aggregate(zip_with(q, c, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b) * 1000000.0D) AS BIGINT)"))
+        .withColumn("cd_e6", expr(dist2E6("q", "c")))
         .orderBy(asc("cd_e6"), asc("label")).limit(W)
         .select(col("label"), col("c"))
       // per-cell asymmetric distance tables: query residual vs codebooks
@@ -1924,8 +1750,7 @@ object AnnSearch {
           struct(lit(m).as("s"), slice(col("qr"), m * PqSD + 1, PqSD).as("qrs"))): _*)).as("e"))
         .select(col("label"), col("e.s").as("s"), col("e.qrs").as("qrs"))
       val dtab = cb1.join(broadcast(qrsub), "s")
-        .withColumn("d", expr(
-          "aggregate(zip_with(qrs, c, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b)"))
+        .withColumn("d", expr(dist2("qrs", "c")))
         .select(col("label"), col("s"), col("cid"), col("d"))
       // ADC scan over the PROBED CELLS' codes only (the dtab join prunes)
       val shortlist = codes.filter(col("vec_id") =!= QID)
@@ -1935,14 +1760,12 @@ object AnnSearch {
         .orderBy(asc("adc_e6"), asc("vec_id")).limit(R)
       val rerank = vecs.join(broadcast(shortlist.select("vec_id", "adc_e6")), "vec_id")
         .crossJoin(broadcast(qfull))
-        .withColumn("exact_e6", expr(
-          "CAST(FLOOR(aggregate(zip_with(v, q, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b) * 1000000.0D) AS BIGINT)"))
+        .withColumn("exact_e6", expr(dist2E6("v", "q")))
         .orderBy(asc("exact_e6"), asc("vec_id")).limit(TOPK)
         .select(col("vec_id"), col("label"), col("adc_e6"), col("exact_e6"))
       // recall audit arm: the GLOBAL exact top-10 (includes cell misses)
       val exTop = vecs.filter(col("vec_id") =!= QID).crossJoin(broadcast(qfull))
-        .withColumn("exact_e6", expr(
-          "CAST(FLOOR(aggregate(zip_with(v, q, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b) * 1000000.0D) AS BIGINT)"))
+        .withColumn("exact_e6", expr(dist2E6("v", "q")))
         .orderBy(asc("exact_e6"), asc("vec_id")).limit(TOPK)
         .select(col("vec_id").as("evid"))
       rerank
@@ -2028,24 +1851,13 @@ object AnnSearch {
       cb0 AS (
         SELECT rsub.s, seeds.cid, rsub.rs AS c
         FROM rsub JOIN seeds USING (vec_id)),
-      a0 AS (
-        SELECT vec_id, s, cid FROM (
-          SELECT rsub.vec_id, rsub.s, cb0.cid,
-                 ROW_NUMBER() OVER (PARTITION BY rsub.vec_id, rsub.s
-                   ORDER BY ${pqDist2Duck("rsub.rs", "cb0.c", 8)}, cb0.cid) AS rn
-          FROM rsub JOIN cb0 USING (s)) t WHERE rn = 1),
-      cb1 AS (
-        SELECT s, cid, list(cx ORDER BY pos) AS c FROM (
-          SELECT a0.s, a0.cid, CAST(i.range AS INT) + 1 AS pos,
-                 CAST(SUM(CAST(rsub.rs[CAST(i.range AS INT) + 1] AS DECIMAL(20,10))) AS DOUBLE)
-                   / COUNT(*) AS cx
-          FROM a0 JOIN rsub USING (vec_id, s) CROSS JOIN range(0, 8) i
-          GROUP BY 1, 2, 3) m GROUP BY s, cid),
+      ${pqAssignSql("a0", "rsub", "rs", "cb0")},
+      ${pqUpdateSql("cb1", "a0", "rsub", "rs")},
       codes AS (
         SELECT t.vec_id, v.label, t.s, t.cid FROM (
           SELECT rsub.vec_id, rsub.s, cb1.cid,
                  ROW_NUMBER() OVER (PARTITION BY rsub.vec_id, rsub.s
-                   ORDER BY ${pqDist2Duck("rsub.rs", "cb1.c", 8)}, cb1.cid) AS rn
+                   ORDER BY ${dist2Duck("rsub.rs", "cb1.c", 8)}, cb1.cid) AS rn
           FROM rsub JOIN cb1 USING (s)) t
         JOIN v ON t.vec_id = v.vec_id WHERE t.rn = 1)""".stripMargin.trim
 
@@ -2058,7 +1870,7 @@ object AnnSearch {
       qcells AS (
         SELECT label, c FROM (
           SELECT c.label, c.c,
-                 CAST(FLOOR(${pqDist2Duck("qv.q", "c.c", Dim)} * 1000000.0) AS BIGINT) AS cd
+                 CAST(FLOOR(${dist2Duck("qv.q", "c.c", Dim)} * 1000000.0) AS BIGINT) AS cd
           FROM cents c CROSS JOIN qv) t
         ORDER BY cd, label LIMIT 2),
       qrsub AS (
@@ -2069,7 +1881,7 @@ object AnnSearch {
         FROM qcells qc CROSS JOIN qv CROSS JOIN range(0, 8) m),
       dtab AS (
         SELECT qrsub.label, cb1.s, cb1.cid,
-               ${pqDist2Duck("qrsub.qrs", "cb1.c", 8)} AS d
+               ${dist2Duck("qrsub.qrs", "cb1.c", 8)} AS d
         FROM cb1 JOIN qrsub USING (s)),
       short AS (
         SELECT codes.vec_id, codes.label,
@@ -2080,13 +1892,13 @@ object AnnSearch {
         ORDER BY adc_e6, vec_id LIMIT 100),
       rr AS (
         SELECT sl.vec_id, sl.label, sl.adc_e6,
-               CAST(FLOOR(${pqDist2Duck("v.v", "qv.q", Dim)} * 1000000.0) AS BIGINT) AS exact_e6
+               CAST(FLOOR(${dist2Duck("v.v", "qv.q", Dim)} * 1000000.0) AS BIGINT) AS exact_e6
         FROM short sl JOIN v USING (vec_id) CROSS JOIN qv
         ORDER BY exact_e6, vec_id LIMIT 10),
       extop AS (
         SELECT vec_id FROM (
           SELECT vec_id,
-                 CAST(FLOOR(${pqDist2Duck("v.v", "qv.q", Dim)} * 1000000.0) AS BIGINT) AS e
+                 CAST(FLOOR(${dist2Duck("v.v", "qv.q", Dim)} * 1000000.0) AS BIGINT) AS e
           FROM v CROSS JOIN qv WHERE vec_id <> 1) t
         ORDER BY e, vec_id LIMIT 10)
       SELECT CAST(ROW_NUMBER() OVER (ORDER BY rr.exact_e6, rr.vec_id) AS BIGINT) AS rank,
@@ -2147,8 +1959,7 @@ object AnnSearch {
       // sides bounded: |cells| fixed, Q=100)
       val wq = Window.partitionBy("qid").orderBy(asc("cd_e6"), asc("label"))
       val qcells = cents.crossJoin(broadcast(qset))
-        .withColumn("cd_e6", expr(
-          "CAST(FLOOR(aggregate(zip_with(q, c, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b) * 1000000.0D) AS BIGINT)"))
+        .withColumn("cd_e6", expr(dist2E6("q", "c")))
         .withColumn("rn", row_number().over(wq))
         .filter(col("rn") <= W)
         .select(col("qid"), col("label"), col("c"), col("q"))
@@ -2160,8 +1971,7 @@ object AnnSearch {
           struct(lit(m).as("s"), slice(col("qr"), m * PqSD + 1, PqSD).as("qrs"))): _*)).as("e"))
         .select(col("qid"), col("label"), col("e.s").as("s"), col("e.qrs").as("qrs"))
       val dtab = cb1.join(broadcast(qrsub), "s")
-        .withColumn("d", expr(
-          "aggregate(zip_with(qrs, c, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b)"))
+        .withColumn("d", expr(dist2("qrs", "c")))
         .select(col("qid"), col("label"), col("s"), col("cid"), col("d"))
       // ONE ADC scan serves all Q queries: probed codes × broadcast table
       val ws = Window.partitionBy("qid").orderBy(asc("adc_e6"), asc("vec_id"))
@@ -2177,8 +1987,7 @@ object AnnSearch {
       val wr = Window.partitionBy("qid").orderBy(asc("exact_e6"), asc("vec_id"))
       vecs.join(broadcast(shortlist), "vec_id")
         .join(broadcast(qset), "qid")
-        .withColumn("exact_e6", expr(
-          "CAST(FLOOR(aggregate(zip_with(v, q, (x, y) -> (x - y) * (x - y)), 0.0D, (a, b) -> a + b) * 1000000.0D) AS BIGINT)"))
+        .withColumn("exact_e6", expr(dist2E6("v", "q")))
         .withColumn("rank", row_number().over(wr).cast("long"))
         .filter(col("rank") <= TOPK)
         .select(col("qid"), col("rank"), col("vec_id"),
@@ -2196,7 +2005,7 @@ object AnnSearch {
         SELECT qid, label, c, q FROM (
           SELECT qs.qid, c.label, c.c, qs.q,
                  ROW_NUMBER() OVER (PARTITION BY qs.qid ORDER BY
-                   CAST(FLOOR(${pqDist2Duck("qs.q", "c.c", Dim)} * 1000000.0) AS BIGINT),
+                   CAST(FLOOR(${dist2Duck("qs.q", "c.c", Dim)} * 1000000.0) AS BIGINT),
                    c.label) AS rn
           FROM cents c CROSS JOIN qset qs) t WHERE rn <= 2),
       qrsub AS (
@@ -2207,7 +2016,7 @@ object AnnSearch {
         FROM qcells CROSS JOIN range(0, 8) m),
       dtab AS (
         SELECT qrsub.qid, qrsub.label, cb1.s, cb1.cid,
-               ${pqDist2Duck("qrsub.qrs", "cb1.c", 8)} AS d
+               ${dist2Duck("qrsub.qrs", "cb1.c", 8)} AS d
         FROM cb1 JOIN qrsub USING (s)),
       short AS (
         SELECT qid, vec_id, adc_e6 FROM (
@@ -2222,7 +2031,7 @@ object AnnSearch {
             GROUP BY 1, 2) g) t WHERE rn <= 50),
       rr AS (
         SELECT sl.qid, sl.vec_id, v.label, sl.adc_e6,
-               CAST(FLOOR(${pqDist2Duck("v.v", "qs.q", Dim)} * 1000000.0) AS BIGINT) AS exact_e6
+               CAST(FLOOR(${dist2Duck("v.v", "qs.q", Dim)} * 1000000.0) AS BIGINT) AS exact_e6
         FROM short sl JOIN v USING (vec_id) JOIN qset qs ON sl.qid = qs.qid)
       SELECT qid, rank, vec_id, cell, adc_e6, exact_e6 FROM (
         SELECT qid,
@@ -2279,11 +2088,7 @@ object AnnSearch {
     knnEdgesCache.getOrElseUpdate(s, dir) {
       graft.PinnedStorage.pin(s) {
         val e = index(s, dir)
-        val w = Window.partitionBy("qid").orderBy(desc("cos"), asc("cand_id"))
-        val intra = cappedPairCandidates(e)
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
-          .select("qid", "cand_id")
+        val intra = storedTop3(cappedPairCandidates(e)).select("qid", "cand_id")
         // r15 verdict item 2: without long-range links the walk can
         // never leave its entry cell (the capped rounds are all
         // label-equal), so the navigable artifact adds each node's
@@ -2355,10 +2160,7 @@ object AnnSearch {
         .orderBy("hop", "rank")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      WITH $eCteSql,
       ${navEdgesSqlCtes("qid")},
       $navDialSqlCte,
       qv AS (SELECT embedding AS qe, nrm AS qn, label AS qlabel FROM e WHERE vec_id = 1),
@@ -2369,16 +2171,14 @@ object AnnSearch {
         WHERE vec_id IS NOT NULL),
       b0 AS (
         SELECT e.vec_id,
-               list_reduce(list_transform(generate_series(1, len(e.embedding)),
-                 i -> CAST(e.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(qv.qe[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (e.nrm * qv.qn) AS cos
+               $queryCosSql AS cos
         FROM e JOIN entry USING (vec_id) CROSS JOIN qv),
       ${(1 to NavHops).map(h => greedySingleHopSql(s"b${h - 1}", s"n$h", s"b$h")).mkString(",")},
       trace AS (
         SELECT 0 AS hop, vec_id, cos FROM b0
         ${(1 to NavHops).map(h => s"UNION ALL SELECT $h, vec_id, cos FROM b$h").mkString("\n        ")})
       SELECT CAST(hop AS BIGINT) AS hop,
-             CAST(ROW_NUMBER() OVER (PARTITION BY hop ORDER BY cos DESC, vec_id ASC) AS BIGINT) AS rank,
+             CAST(${cosRankSql("hop", "vec_id")} AS BIGINT) AS rank,
              vec_id, cos
       FROM trace
       ORDER BY hop, rank
@@ -2469,15 +2269,15 @@ object AnnSearch {
         .orderBy("hop", "qid", "rank")
   }
 
+  /** Cosine of each `e` row against its batch query `qs` (qe, qn). */
+  private lazy val batchCosSql = s"${dotSql("e.embedding", "qs.qe")} / (e.nrm * qs.qn)"
+
   /** DuckDB twin of [[greedyBatchProbe]]'s hop chain (expects the `e`
     * and `edges` CTEs; emits its own `dial` CTE): query set, per-query
     * entry node, and the exact-scored beams b0..b[[NavHops]] at the
     * dialed beam width. Shared by the batch-search twin and the greedy
     * recall gate so the searched trace IS the priced trace. */
   private def greedyBatchSqlCtes(nq: Int): String = {
-    val cosQ = """list_reduce(list_transform(generate_series(1, len(e.embedding)),
-                 i -> CAST(e.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(qs.qe[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (e.nrm * qs.qn)"""
     def hop(prev: String, n: String, b: String): String = s"""
       $n AS (
         SELECT DISTINCT qid, vec_id FROM (
@@ -2488,7 +2288,7 @@ object AnnSearch {
           SELECT s1.qid, s1.vec_id, s1.cos,
                  ROW_NUMBER() OVER (PARTITION BY s1.qid ORDER BY s1.cos DESC, s1.vec_id ASC) AS rn
           FROM (
-            SELECT n.qid, n.vec_id, $cosQ AS cos
+            SELECT n.qid, n.vec_id, $batchCosSql AS cos
             FROM $n n JOIN e USING (vec_id) JOIN qset qs ON n.qid = qs.qid) s1) t
         WHERE rn <= (SELECT b FROM dial))"""
     s"""$navDialSqlCte,
@@ -2500,7 +2300,7 @@ object AnnSearch {
         FROM e JOIN qset qs ON e.label = qs.qlabel AND e.vec_id != qs.qid
         GROUP BY qs.qid),
       b0 AS (
-        SELECT en.qid, en.vec_id, $cosQ AS cos
+        SELECT en.qid, en.vec_id, $batchCosSql AS cos
         FROM entries en JOIN e USING (vec_id) JOIN qset qs ON en.qid = qs.qid),
       ${(1 to NavHops).map(h => hop(s"b${h - 1}", s"n$h", s"b$h")).mkString(",")}"""
   }
@@ -2509,17 +2309,14 @@ object AnnSearch {
     "ann_knn_graph_greedy_batch",
     (s, dir) => greedyBatchProbe(s, dir, NQ = 10L),
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      WITH $eCteSql,
       ${navEdgesSqlCtes("node")},
       ${greedyBatchSqlCtes(10)},
       trace AS (
         SELECT 0 AS hop, qid, vec_id, cos FROM b0
         ${(1 to NavHops).map(h => s"UNION ALL SELECT $h, qid, vec_id, cos FROM b$h").mkString("\n        ")})
       SELECT CAST(hop AS BIGINT) AS hop, qid,
-             CAST(ROW_NUMBER() OVER (PARTITION BY hop, qid ORDER BY cos DESC, vec_id ASC) AS BIGINT) AS rank,
+             CAST(${cosRankSql("hop, qid", "vec_id")} AS BIGINT) AS rank,
              vec_id, cos
       FROM trace
       ORDER BY hop, qid, rank
@@ -2597,25 +2394,20 @@ object AnnSearch {
         .orderBy("qid")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      WITH $eCteSql,
       ${navEdgesSqlCtes("node")},
       ${greedyBatchSqlCtes(10)},
       exact0 AS (
         SELECT qs.qid, e.vec_id, (e.label = qs.qlabel) AS same_cell,
-               list_reduce(list_transform(generate_series(1, len(e.embedding)),
-                 i -> CAST(e.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(qs.qe[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (e.nrm * qs.qn) AS cos
+               $batchCosSql AS cos
         FROM e CROSS JOIN qset qs WHERE e.vec_id != qs.qid),
       exg AS (
         SELECT qid, vec_id, cos,
-               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
+               ${cosRankSql("qid", "vec_id")} AS rank
         FROM exact0),
       exc AS (
         SELECT qid, vec_id, cos,
-               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
+               ${cosRankSql("qid", "vec_id")} AS rank
         FROM exact0 WHERE same_cell),
       bb AS (SELECT qid, MAX(cos) AS beam_best_cos FROM b$NavHops GROUP BY qid),
       cside AS (
@@ -2686,10 +2478,7 @@ object AnnSearch {
         .orderBy("grp")
     },
     Some(s"""
-      WITH emb AS (
-        SELECT vec_id, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      WITH ${normCteSql("emb", "vec_id, embedding")},
       frame AS (
         SELECT t.range AS id, t.range % 50 AS bucket, e.embedding, e.nrm
         FROM range(0, 6000) t
@@ -2698,9 +2487,7 @@ object AnnSearch {
       pairs AS (
         SELECT q.id AS qid,
                CAST(FLOOR(1000000.0 *
-                 list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                   i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                   (x, y) -> x + y) / (q.nrm * c.nrm)) AS BIGINT) AS cos_e6
+                 ${cosSql("q", "c")}) AS BIGINT) AS cos_e6
         FROM q JOIN frame c ON q.bucket = c.bucket AND q.id != c.id)
       SELECT CAST(qid % 7 AS BIGINT) AS grp,
              CAST(COUNT(DISTINCT qid) AS BIGINT) AS n_audited,

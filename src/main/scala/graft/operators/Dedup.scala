@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.functions.VectorExpressions.{cosSql, normCteSql}
 import BroadcastGuard.{Guarded, PairRowCap, ShingleRowCap}
 
 /** Deduplication operators over the `documents` / `embeddings` tables —
@@ -943,18 +944,11 @@ object Dedup {
         .orderBy("ia", "ib")
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings)
+      WITH ${normCteSql("e", "vec_id, embedding")}
       SELECT a.vec_id AS ia, b.vec_id AS ib,
-             list_reduce(list_transform(generate_series(1, len(a.embedding)),
-               i -> CAST(a.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(b.embedding[CAST(i AS INT)] AS DOUBLE)),
-               (x, y) -> x + y) / (a.nrm * b.nrm) AS cos
+             ${cosSql("a", "b")} AS cos
       FROM e a JOIN e b ON a.vec_id < b.vec_id
-      WHERE list_reduce(list_transform(generate_series(1, len(a.embedding)),
-               i -> CAST(a.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(b.embedding[CAST(i AS INT)] AS DOUBLE)),
-               (x, y) -> x + y) / (a.nrm * b.nrm) >= 0.4
+      WHERE ${cosSql("a", "b")} >= 0.4
         AND ${AuditGuard.sqlPred("a.vec_id", "embeddings")}
       ORDER BY ia, ib
     """.stripMargin.trim))
@@ -995,17 +989,12 @@ object Dedup {
           col("dup_of").isNull.as("kept"))
         .orderBy("vec_id")
     },
-    Some("""
-      WITH n AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+    Some(s"""
+      WITH ${normCteSql("n", "vec_id, label, embedding")},
       d AS (
         SELECT c.vec_id AS vec_id, MIN(q.vec_id) AS dup_of
         FROM n q JOIN n c ON q.label = c.label AND q.vec_id < c.vec_id
-        WHERE list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                (x, y) -> x + y) / (q.nrm * c.nrm) >= 0.30
+        WHERE ${cosSql("q", "c")} >= 0.30
         GROUP BY c.vec_id)
       SELECT n.vec_id, CAST(n.label AS BIGINT) AS label, d.dup_of,
              d.dup_of IS NULL AS kept
@@ -1129,9 +1118,9 @@ object Dedup {
       labels
   }
 
-  /** Observability for the propagation loop (read by specs and Profile
-    * runs): rounds the LAST [[propagateMinLabels]] call took to reach
-    * its fixpoint. Driver-side, not thread-safe across concurrent runs.
+  /** Observability for the propagation loop (read by specs): rounds the
+    * LAST [[propagateMinLabels]] call took to reach its fixpoint.
+    * Process-global, not thread-safe across concurrent runs.
     */
   private[operators] val lastPropagationRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)

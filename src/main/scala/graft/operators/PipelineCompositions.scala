@@ -1,9 +1,11 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.{QueryDef, Tables}
+import graft.functions.VectorExpressions.{cosSql, normCteSql, topkCteSql}
 
 /** End-to-end training-data-pipeline compositions: the queries a curation
   * team actually runs, built from the primitive operators (near-dup
@@ -11,6 +13,43 @@ import graft.{QueryDef, Tables}
   * the shared helper and its SQL twin so the oracle stays independent.
   */
 object PipelineCompositions {
+
+  /** The recall gates' shared twins over AnnSearch's vocabulary: the norm
+    * CTE with the IVF label, the brute-force top-5 ground truth `exact`,
+    * and the IVF probe pairs `iscored`. */
+  private lazy val labeledNormCteSql = normCteSql("e", "vec_id, label, embedding")
+  private lazy val exactTop5Sql = s"""${AnnSearch.probeScoredSql("scored", "e", "")},
+      ${topkCteSql("exact", "scored", 5)}"""
+  private lazy val ivfScoredSql = AnnSearch.probeScoredSql("iscored", "e", " AND q.label = c.label")
+
+  /** Recall@5 per query of an approximate top-5 (aqid, acand) against the
+    * exact brute-force top-5 (qid, cand_id, ...) — every recall gate's
+    * Spark side. */
+  private def recallAt5(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.select(col("qid"), col("cand_id"))
+      .join(approx, col("qid") === col("aqid") && col("cand_id") === col("acand"), "left")
+      .groupBy("qid")
+      .agg(
+        count(col("acand")).as("n_hits"),
+        (count(col("acand")).cast("double") / lit(5.0)).as("recall_at_5"))
+      .orderBy("qid")
+
+  /** An AnnSearch top-5 as the approximate side of [[recallAt5]]. */
+  private def asApprox(top5: DataFrame): DataFrame =
+    top5.select(col("qid").as("aqid"), col("cand_id").as("acand"))
+
+  /** The recall gates' twin: `ctes` (defining `exact` and `approx`), then
+    * recall@5 per query. */
+  private def recallAt5Sql(ctes: String): String = s"""
+      WITH $ctes
+      SELECT e.qid,
+             COUNT(a.cand_id) AS n_hits,
+             CAST(COUNT(a.cand_id) AS DOUBLE) / 5.0 AS recall_at_5
+      FROM exact e
+      LEFT JOIN approx a ON e.qid = a.qid AND e.cand_id = a.cand_id
+      GROUP BY e.qid
+      ORDER BY e.qid
+    """.stripMargin.trim
 
   /** Canonical-document selection: one keeper per near-dup component —
     * the longest document wins (doc_id breaks ties), everything else is
@@ -114,16 +153,11 @@ object PipelineCompositions {
     },
     Some(s"""
       WITH ${Dedup.jaccardPairsSql},
-      e AS (
-        SELECT vec_id, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      ${normCteSql("e", "vec_id, embedding")},
       ep AS (
         SELECT a.vec_id AS ia, b.vec_id AS ib
         FROM e a JOIN e b ON a.vec_id < b.vec_id
-        WHERE list_reduce(list_transform(generate_series(1, len(a.embedding)),
-                i -> CAST(a.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(b.embedding[CAST(i AS INT)] AS DOUBLE)),
-                (x, y) -> x + y) / (a.nrm * b.nrm) >= 0.4
+        WHERE ${cosSql("a", "b")} >= 0.4
           AND ${AuditGuard.sqlPred("a.vec_id", "embeddings")}),
       jpa AS (
         SELECT ia, ib FROM jp
@@ -144,66 +178,13 @@ object PipelineCompositions {
     */
   val annRecall: QueryDef = QueryDef(
     "ann_recall_lsh_vs_exact",
-    (s, dir) => {
-      val exact = AnnSearch.bruteForce.run(s, dir)
-        .select(col("qid"), col("cand_id"))
-      val approx = AnnSearch.hyperplaneLsh.run(s, dir)
-        .select(col("qid").as("aqid"), col("cand_id").as("acand"))
-      exact.join(approx,
-          col("qid") === col("aqid") && col("cand_id") === col("acand"), "left")
-        .groupBy("qid")
-        .agg(
-          count(col("acand")).as("n_hits"),
-          (count(col("acand")).cast("double") / lit(5.0)).as("recall_at_5"))
-        .orderBy("qid")
-    },
-    Some(s"""
-      WITH e AS (
-        SELECT vec_id, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      scored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id != c.vec_id),
-      exact AS (
-        SELECT qid, cand_id FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM scored) t
-        WHERE rank <= 5),
-      bits AS (
-        SELECT e.vec_id, CAST(j.range AS INT) AS j,
-               CASE WHEN list_reduce(list_transform(generate_series(1, ${AnnSearch.Dim}),
-                      i -> CAST(embedding[CAST(i AS INT)] AS DOUBLE) *
-                           (CASE WHEN ((i - 1) * (CAST(j.range AS INT) + 1)) % 3 = 0
-                                 THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END)),
-                      (x, y) -> x + y) > 0 THEN '1' ELSE '0' END AS b
-        FROM e CROSS JOIN range(0, 8) j),
-      sig AS (SELECT vec_id, string_agg(b, '' ORDER BY j) AS sig FROM bits GROUP BY vec_id),
-      es AS (SELECT e.vec_id, e.embedding, e.nrm, s.sig FROM e JOIN sig s ON e.vec_id = s.vec_id),
-      lscored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM es q JOIN es c ON q.vec_id < 10 AND q.vec_id != c.vec_id AND q.sig = c.sig),
-      approx AS (
-        SELECT qid, cand_id FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM lscored) t
-        WHERE rank <= 5)
-      SELECT e.qid,
-             COUNT(a.cand_id) AS n_hits,
-             CAST(COUNT(a.cand_id) AS DOUBLE) / 5.0 AS recall_at_5
-      FROM exact e
-      LEFT JOIN approx a ON e.qid = a.qid AND e.cand_id = a.cand_id
-      GROUP BY e.qid
-      ORDER BY e.qid
-    """.stripMargin.trim))
+    (s, dir) => recallAt5(AnnSearch.bruteForce.run(s, dir),
+      asApprox(AnnSearch.hyperplaneLsh.run(s, dir))),
+    Some(recallAt5Sql(s"""${normCteSql("e", "vec_id, embedding")},
+      $exactTop5Sql,
+      ${AnnSearch.sigCtesSql},
+      ${AnnSearch.probeScoredSql("lscored", "es", " AND q.sig = c.sig")},
+      ${topkCteSql("approx", "lscored", 5)}""")))
 
   /** Recall@5 of the IVF label-pruned probe against exact brute force —
     * the twin measurement to ann_recall_lsh_vs_exact, so BOTH shipped
@@ -212,56 +193,12 @@ object PipelineCompositions {
     */
   val annRecallIvf: QueryDef = QueryDef(
     "ann_recall_ivf_vs_exact",
-    (s, dir) => {
-      val exact = AnnSearch.bruteForce.run(s, dir)
-        .select(col("qid"), col("cand_id"))
-      val approx = AnnSearch.ivfPrebuilt.run(s, dir)
-        .select(col("qid").as("aqid"), col("cand_id").as("acand"))
-      exact.join(approx,
-          col("qid") === col("aqid") && col("cand_id") === col("acand"), "left")
-        .groupBy("qid")
-        .agg(
-          count(col("acand")).as("n_hits"),
-          (count(col("acand")).cast("double") / lit(5.0)).as("recall_at_5"))
-        .orderBy("qid")
-    },
-    Some("""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      scored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id != c.vec_id),
-      exact AS (
-        SELECT qid, cand_id FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM scored) t
-        WHERE rank <= 5),
-      iscored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id != c.vec_id AND q.label = c.label),
-      approx AS (
-        SELECT qid, cand_id FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM iscored) t
-        WHERE rank <= 5)
-      SELECT e.qid,
-             COUNT(a.cand_id) AS n_hits,
-             CAST(COUNT(a.cand_id) AS DOUBLE) / 5.0 AS recall_at_5
-      FROM exact e
-      LEFT JOIN approx a ON e.qid = a.qid AND e.cand_id = a.cand_id
-      GROUP BY e.qid
-      ORDER BY e.qid
-    """.stripMargin.trim))
+    (s, dir) => recallAt5(AnnSearch.bruteForce.run(s, dir),
+      asApprox(AnnSearch.ivfPrebuilt.run(s, dir))),
+    Some(recallAt5Sql(s"""$labeledNormCteSql,
+      $exactTop5Sql,
+      $ivfScoredSql,
+      ${topkCteSql("approx", "iscored", 5)}""")))
 
   /** Recall@5 of the multiprobe IVF (nprobe = 2) against exact brute
     * force — the measurement that justifies the extra probe: single-probe
@@ -273,69 +210,12 @@ object PipelineCompositions {
     */
   val annRecallIvfMultiprobe: QueryDef = QueryDef(
     "ann_recall_ivf_multiprobe_vs_exact",
-    (s, dir) => {
-      val exact = AnnSearch.bruteForce.run(s, dir)
-        .select(col("qid"), col("cand_id"))
-      val approx = AnnSearch.ivfMultiprobe.run(s, dir)
-        .select(col("qid").as("aqid"), col("cand_id").as("acand"))
-      exact.join(approx,
-          col("qid") === col("aqid") && col("cand_id") === col("acand"), "left")
-        .groupBy("qid")
-        .agg(
-          count(col("acand")).as("n_hits"),
-          (count(col("acand")).cast("double") / lit(5.0)).as("recall_at_5"))
-        .orderBy("qid")
-    },
-    Some(s"""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      scored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id != c.vec_id),
-      exact AS (
-        SELECT qid, cand_id FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM scored) t
-        WHERE rank <= 5),
-${AnnSearch.centroidSql("")},
-      probes AS (
-        SELECT qid, label FROM (
-          SELECT q.vec_id AS qid, ct.label,
-                 ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-                   list_reduce(list_transform(generate_series(1, ${AnnSearch.Dim}),
-                     i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * ct.centroid[CAST(i AS INT)]),
-                     (x, y) -> x + y) / (q.nrm * ct.cnrm) DESC, ct.label ASC) AS cr
-          FROM e q CROSS JOIN centn ct
-          WHERE q.vec_id < 10) t
-        WHERE cr <= 2),
-      mscored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q
-        JOIN probes p ON p.qid = q.vec_id
-        JOIN e c ON c.label = p.label AND c.vec_id != q.vec_id),
-      approx AS (
-        SELECT qid, cand_id FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM mscored) t
-        WHERE rank <= 5)
-      SELECT e.qid,
-             COUNT(a.cand_id) AS n_hits,
-             CAST(COUNT(a.cand_id) AS DOUBLE) / 5.0 AS recall_at_5
-      FROM exact e
-      LEFT JOIN approx a ON e.qid = a.qid AND e.cand_id = a.cand_id
-      GROUP BY e.qid
-      ORDER BY e.qid
-    """.stripMargin.trim))
+    (s, dir) => recallAt5(AnnSearch.bruteForce.run(s, dir),
+      asApprox(AnnSearch.ivfMultiprobe.run(s, dir))),
+    Some(recallAt5Sql(s"""$labeledNormCteSql,
+      $exactTop5Sql,
+      ${AnnSearch.multiprobeCtesSql("mscored")},
+      ${topkCteSql("approx", "mscored", 5)}""")))
 
   /** Per-source document quota: keep the top-N documents per source
     * (longest first, doc_id tie-break) — the frequency-capping step that
@@ -381,7 +261,6 @@ ${AnnSearch.centroidSql("")},
     "ann_recall_int8_vs_exact",
     (s, dir) => {
       val exact = AnnSearch.bruteForce.run(s, dir)
-        .select(col("qid"), col("cand_id"))
       val e = Tables.embeddings(s, dir)
         .withColumn("dq", expr(
           s"transform(embedding, x -> ${AnnSearch.int8Dequant(AnnSearch.int8Quant("x"))})"))
@@ -398,31 +277,10 @@ ${AnnSearch.centroidSql("")},
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
         .select("aqid", "acand")
-      exact.join(approx,
-          col("qid") === col("aqid") && col("cand_id") === col("acand"), "left")
-        .groupBy("qid")
-        .agg(
-          count(col("acand")).as("n_hits"),
-          (count(col("acand")).cast("double") / lit(5.0)).as("recall_at_5"))
-        .orderBy("qid")
+      recallAt5(exact, approx)
     },
-    Some(s"""
-      WITH e AS (
-        SELECT vec_id, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      scored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id != c.vec_id),
-      exact AS (
-        SELECT qid, cand_id FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM scored) t
-        WHERE rank <= 5),
+    Some(recallAt5Sql(s"""${normCteSql("e", "vec_id, embedding")},
+      $exactTop5Sql,
       qn AS (
         SELECT vec_id,
                list_transform(embedding,
@@ -438,20 +296,7 @@ ${AnnSearch.centroidSql("")},
                  i -> q.dq[CAST(i AS INT)] * c.dq[CAST(i AS INT)]),
                  (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
         FROM qe q JOIN qe c ON q.vec_id < 10 AND q.vec_id != c.vec_id),
-      approx AS (
-        SELECT qid, cand_id FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM qscored) t
-        WHERE rank <= 5)
-      SELECT e.qid,
-             COUNT(a.cand_id) AS n_hits,
-             CAST(COUNT(a.cand_id) AS DOUBLE) / 5.0 AS recall_at_5
-      FROM exact e
-      LEFT JOIN approx a ON e.qid = a.qid AND e.cand_id = a.cand_id
-      GROUP BY e.qid
-      ORDER BY e.qid
-    """.stripMargin.trim))
+      ${topkCteSql("approx", "qscored", 5)}""")))
 
   /** Benchmark decontamination (the GPT-3/Gopher-style n-gram scrub,
     * word-8-grams here): every training document sharing any 8-gram
@@ -836,35 +681,12 @@ ${AnnSearch.centroidSql("")},
         .withColumn("mrr_ppm", expr("SUM(rr_ppm) OVER () DIV COUNT(1) OVER ()"))
         .orderBy("qid")
     },
-    Some("""
-      WITH e AS (
-        SELECT vec_id, label, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
-      scored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id != c.vec_id),
-      truth AS (
-        SELECT qid, cand_id AS true_top1 FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM scored) t
-        WHERE rank = 1),
-      iscored AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cand_id,
-               list_reduce(list_transform(generate_series(1, len(q.embedding)),
-                 i -> CAST(q.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (q.nrm * c.nrm) AS cos
-        FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id != c.vec_id AND q.label = c.label),
-      approx AS (
-        SELECT qid, cand_id, rank FROM (
-          SELECT qid, cand_id,
-                 ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cand_id ASC) AS rank
-          FROM iscored) t
-        WHERE rank <= 5),
+    Some(s"""
+      WITH $labeledNormCteSql,
+      ${AnnSearch.probeScoredSql("scored", "e", "")},
+      ${topkCteSql("truth", "scored", 1, out = "qid, cand_id AS true_top1")},
+      $ivfScoredSql,
+      ${topkCteSql("approx", "iscored", 5, out = "qid, cand_id, rank")},
       fused AS (
         SELECT t.qid, t.true_top1, a.rank AS ivf_rank,
                COALESCE(1000000 // a.rank, 0) AS rr_ppm

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.functions.VectorExpressions.{dotSql, normCteSql}
 
 /** Retrieval-ranking operators for the corpus-curation pipeline:
   * BM25-core lexical scoring and reciprocal-rank fusion of a lexical
@@ -180,16 +181,11 @@ object SearchRank {
         SELECT doc_id,
                CAST(row_number() OVER (ORDER BY tf_total DESC, doc_id) AS BIGINT) AS kw_rank
         FROM kw0),
-      e AS (
-        SELECT vec_id, embedding,
-               sqrt(list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (x, y) -> x + y)) AS nrm
-        FROM embeddings),
+      ${normCteSql("e", "vec_id, embedding")},
       q AS (SELECT embedding AS q_emb, nrm AS q_nrm FROM e WHERE vec_id = 0),
       sem0 AS (
         SELECT vec_id AS doc_id,
-               list_reduce(list_transform(generate_series(1, len(embedding)),
-                 i -> CAST(embedding[CAST(i AS INT)] AS DOUBLE) * CAST(q_emb[CAST(i AS INT)] AS DOUBLE)),
-                 (x, y) -> x + y) / (nrm * q_nrm) AS cos
+               ${dotSql("embedding", "q_emb")} / (nrm * q_nrm) AS cos
         FROM e CROSS JOIN q
         WHERE vec_id <> 0
         ORDER BY cos DESC, doc_id

@@ -16,7 +16,7 @@ class BigramLmSpec extends SparkSpec {
       (2L, "x y", "a"),
       (3L, "z", "b"),          // no bigram → contributes only to vocab
       (4L, "y y y", "b"))
-    val dir = java.nio.file.Files.createTempDirectory("lm").toString
+    val dir = graft.TmpDirs.create("graft-lm")
     corpus.map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -14,7 +14,7 @@ class BpeApplySpec extends SparkSpec {
     val docs = Seq(
       (1L, "abab abab abc", "s"),
       (2L, "abab abc", "s"))
-    val dir = java.nio.file.Files.createTempDirectory("bpeapply").toString
+    val dir = graft.TmpDirs.create("graft-bpeapply")
     docs.toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = TextAnalysis.bpeApplyMerge.run(spark, dir).collect()

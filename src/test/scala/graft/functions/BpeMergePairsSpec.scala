@@ -19,7 +19,7 @@ class BpeMergePairsSpec extends SparkSpec {
       (3L, "aaa"))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
+    val dir = graft.TmpDirs.create("graft-bpe")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val got = TextAnalysis.bpeMergePairs.run(spark, dir).collect()

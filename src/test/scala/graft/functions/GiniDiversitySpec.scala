@@ -15,7 +15,7 @@ class GiniDiversitySpec extends SparkSpec {
       (3L, "x x y", "skew"))          // p=(2/3,1/3) ⇒ 1−5/9 = 444444 ppm
       .map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("gini").toString
+    val dir = graft.TmpDirs.create("graft-gini")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val got = TextAnalysis.giniDiversity.run(spark, dir).collect()

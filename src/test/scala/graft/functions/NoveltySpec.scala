@@ -17,7 +17,7 @@ class NoveltySpec extends SparkSpec {
       (4L, "one two three", "b"))                        // < 5 tokens → dropped
       .map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("novel").toString
+    val dir = graft.TmpDirs.create("graft-novel")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val got = TextAnalysis.noveltyScore.run(spark, dir).collect()

@@ -17,7 +17,7 @@ class SearchConjunctiveSpec extends SparkSpec {
       (5L, "other words only"))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("search").toString
+    val dir = graft.TmpDirs.create("graft-search")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val got = TextAnalysis.searchConjunctive.run(spark, dir).collect()

@@ -18,7 +18,7 @@ class AudioVadSpec extends SparkSpec {
       (2L, loud))                 // %3=2 → video, must not appear
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("vad").toString
+    val dir = graft.TmpDirs.create("graft-vad")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val got = MultimodalOps.audioVad.run(spark, dir).collect()

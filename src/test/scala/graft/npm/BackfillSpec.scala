@@ -9,7 +9,7 @@ class BackfillSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkTree(): String = {
-    val root = Files.createTempDirectory("backfill").toString
+    val root = graft.TmpDirs.create("graft-backfill")
     def put(rel: String, content: String): Unit = {
       val p = Paths.get(root, rel)
       Files.createDirectories(p.getParent)

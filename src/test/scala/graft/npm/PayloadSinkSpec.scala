@@ -18,13 +18,13 @@ class PayloadSinkSpec extends SparkSpec {
 
   test("zipBytes packs doc json + tarball under the reference entry names") {
     val p = PayloadSink.Payload("A/pkg/pkg_1-r.zip", "pkg", """{"x":1}""", Array[Byte](1, 2, 3))
-    val tmp = Files.createTempFile("z", ".zip").toFile
+    val tmp = new java.io.File(graft.TmpDirs.create("graft-zip"), "z.zip")
     Files.write(tmp.toPath, PayloadSink.zipBytes(p))
     assert(entriesOf(tmp) == List("pkg_doc.json", "pkg_package.tgz"))
   }
 
   test("end-to-end: kept changes land as zips in the hashed layout") {
-    val root = Files.createTempDirectory("payloads").toString
+    val root = graft.TmpDirs.create("graft-payloads")
     val parsed = Pipeline.parse(Fixtures.withFetch404.toDF("value"))
     val derived = Pipeline.withDerived(Pipeline.normalize(parsed))
       .filter(col("reject_reason").isNull)

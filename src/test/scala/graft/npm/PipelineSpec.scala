@@ -168,7 +168,7 @@ class PipelineSpec extends SparkSpec {
   test("a fetcher that fails on a retry cannot route one seq to both catalog and DLQ") {
     FetchLog.reset()
     val r = Pipeline.replay(distinctFeed(2000).toDF("value"), FetchLog.FirstCallOk)
-    val dir = Files.createTempDirectory("pipeline-once").toString
+    val dir = graft.TmpDirs.create("graft-pipeline-once")
     r.catalog.write.parquet(s"$dir/catalog")
     r.skipped.write.parquet(s"$dir/skipped")
     r.audit.write.parquet(s"$dir/audit")
@@ -184,7 +184,7 @@ class PipelineSpec extends SparkSpec {
   test("a replay reads each input line once for all four outputs") {
     val pad = "x" * (model.MaxKafkaMessageBytes.toInt + 64)
     val lines = Fixtures.withFetch404 :+ s"""{"seq":99,"id":"bigpkg","pad":"$pad"}"""
-    val dir = Files.createTempDirectory("pipeline-reads")
+    val dir = java.nio.file.Paths.get(graft.TmpDirs.create("graft-pipeline-reads"))
     Files.write(dir.resolve("changes.jsonl"), lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     val read = new AtomicLong
     val listener = new SparkListener {

@@ -80,7 +80,7 @@ class RetentionSpec extends SparkSpec {
     val s2 = spark.newSession()
     import s2.implicits._
     implicit val sqlCtx = s2.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("rocksckpt").toString
+    val ckpt = graft.TmpDirs.create("graft-rocksckpt")
     s2.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[ZipArrival]

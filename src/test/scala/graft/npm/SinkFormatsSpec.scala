@@ -1,7 +1,5 @@
 package graft.npm
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -25,14 +23,14 @@ class SinkFormatsSpec extends SparkSpec {
       .toJSON.collect().toSet
 
   test("catalog round-trips through ORC bit-for-bit") {
-    val dir = Files.createTempDirectory("catorc").toString
+    val dir = graft.TmpDirs.create("graft-catorc")
     catalog.write.mode("overwrite").orc(dir)
     assert(canon(spark.read.orc(dir)) == canon(catalog))
     assert(catalog.count() > 0)
   }
 
   test("catalog round-trips through JSON lines with schema-on-read") {
-    val dir = Files.createTempDirectory("catjson").toString
+    val dir = graft.TmpDirs.create("graft-catjson")
     catalog.write.mode("overwrite").json(dir)
     // schema-on-read: JSON carries no types, the reader must supply them
     // (timestamps would otherwise come back as strings)
@@ -44,7 +42,7 @@ class SinkFormatsSpec extends SparkSpec {
     val skipped = Pipeline
       .replay(Fixtures.withFetch404.toDF("value"), Fixtures.RoutingFetcher)
       .skipped
-    val dir = Files.createTempDirectory("dlqcsv").toString
+    val dir = graft.TmpDirs.create("graft-dlqcsv")
     skipped.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.schema(skipped.schema).option("header", "true").csv(dir)
     assert(back.orderBy("seq").collect().toSeq

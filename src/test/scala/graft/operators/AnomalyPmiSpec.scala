@@ -21,7 +21,7 @@ class AnomalySpec extends SparkSpec {
   }
 
   test("one spike over a stable baseline is the only flagged day") {
-    val dir = java.nio.file.Files.createTempDirectory("anom").toString
+    val dir = graft.TmpDirs.create("graft-anom")
     // 30 flat days with mild alternation (nonzero variance), then a 10x spike
     val days = (1 to 30).map(i =>
       (i.toLong, if (i % 2 == 0) 1010.0 else 990.0, f"2024-01-${i}%02d")) :+
@@ -32,7 +32,7 @@ class AnomalySpec extends SparkSpec {
   }
 
   test("a flat series with variance produces no flags") {
-    val dir = java.nio.file.Files.createTempDirectory("anom2").toString
+    val dir = graft.TmpDirs.create("graft-anom2")
     writeOrders(dir, (1 to 28).map(i =>
       (i.toLong, if (i % 2 == 0) 1010.0 else 990.0, f"2024-03-${i}%02d")))
     assert(run(dir).count() == 0)
@@ -46,7 +46,7 @@ class PmiSpec extends SparkSpec {
 
   test("an exclusive pair tops the lift ranking") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pmi").toString
+    val dir = graft.TmpDirs.create("graft-pmi")
     // "alpha beta" always adjacent and never apart (6 > min-count 5);
     // "the end" also frequent but 'the' occurs widely
     val docs = (1 to 6).map(i => (i.toLong, s"alpha beta the w$i the end")) ++

@@ -29,7 +29,7 @@ class AsofNearestSpec extends SparkSpec {
       (401L, ts("2024-01-01 12:00:00"), 4L, "click"),
       (402L, ts("2024-01-01 12:00:00"), 4L, "error"))
       .toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("asofn").toString
+    val dir = graft.TmpDirs.create("graft-asofn")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val rows = TemporalJoins.asofNearest.run(spark, dir)
       .select("user_id", "error_event_id", "nearest_click_event_id", "dt_us", "direction")

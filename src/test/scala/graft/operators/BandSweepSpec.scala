@@ -14,7 +14,7 @@ class BandSweepSpec extends SparkSpec {
     val docs = Seq(
       (1L, dup), (2L, dup)) ++
       (3L to 6L).map(id => id -> Seq.tabulate(30)(i => s"u${id}_$i").mkString(" "))
-    val dir = java.nio.file.Files.createTempDirectory("sweep").toString
+    val dir = graft.TmpDirs.create("graft-sweep")
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -9,7 +9,7 @@ class BfsSpec extends SparkSpec {
 
   test("level-synchronous BFS with anti-join dedup") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bfs").toString
+    val dir = graft.TmpDirs.create("graft-bfs")
     // s1-p1, s2-p1, s2-p2, s3-p2, s3-p3; s4-p4 is a separate component
     Seq((1L, 1L), (2L, 1L), (2L, 2L), (3L, 2L), (3L, 3L), (4L, 4L))
       .toDF("l_suppkey", "l_partkey")

@@ -25,7 +25,7 @@ class CohortRetentionSpec extends SparkSpec {
       (6L, ts("2024-01-08 10:00:00"), 3L))
       .map { case (e, t, u) => (e, t, u, "click") }
       .toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("cohort").toString
+    val dir = graft.TmpDirs.create("graft-cohort")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val rows = EventOps.defs.find(_.name == "cohort_weekly_retention").get
       .run(spark, dir).collect()
@@ -51,7 +51,7 @@ class PhashNearDupSpec extends SparkSpec {
     val base = "m" * 64                                  // uniform bytes → all-zero signature
     val oneBlock = "m" * 32 + "zz" + "m" * 30            // block 16 mean above global → one bit
     val other = ("ab" * 16) + ("zy" * 16)                // different half-split signature
-    val dir = java.nio.file.Files.createTempDirectory("phash").toString
+    val dir = graft.TmpDirs.create("graft-phash")
     Seq((0L, base, "s", 64L), (3L, base, "s", 64L),
         (6L, oneBlock, "s", 64L), (9L, other, "s", 64L))
       .toDF("doc_id", "text", "source", "n_chars")

@@ -7,7 +7,7 @@ class CorpusDiffMixSpec extends SparkSpec {
 
   private def writeDocs(rows: Seq[(Long, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cdm").toString
+    val dir = graft.TmpDirs.create("graft-cdm")
     rows.map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -23,7 +23,7 @@ class CountMinSpec extends SparkSpec {
     val events = (1 to 40).flatMap(u => (1 to u).map(i =>
       (u * 1000L + i, Timestamp.valueOf("2024-01-01 10:00:00"), u.toLong, "view")))
       .toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("cm").toString
+    val dir = graft.TmpDirs.create("graft-cm")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
 
     val counts = (1 to 40).map(u => u.toLong -> u.toLong).toMap

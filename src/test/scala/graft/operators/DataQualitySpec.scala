@@ -21,7 +21,7 @@ class DataQualitySpec extends SparkSpec {
   test("injected violations are counted by exactly their own check") {
     import spark.implicits._
     import java.sql.Timestamp
-    val dir = java.nio.file.Files.createTempDirectory("audit").toString
+    val dir = graft.TmpDirs.create("graft-audit")
 
     // 3 customers; 4 orders, ONE with an unknown customer and ONE dated 1985
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("c_custkey", "c_name")

@@ -17,7 +17,7 @@ class DedupFunnelSpec extends SparkSpec {
       (1L, base), (2L, base),   // exact dup pair → drop 2 at stage 1
       (3L, base2(base)), (4L, base2(near)), // near pair → drop 4 at stage 2
       (5L, uniq))
-    val dir = java.nio.file.Files.createTempDirectory("funneld").toString
+    val dir = graft.TmpDirs.create("graft-funneld")
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

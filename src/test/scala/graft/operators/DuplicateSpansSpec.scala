@@ -13,7 +13,7 @@ class DuplicateSpansSpec extends SparkSpec {
 
   private def spansOf(docs: org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("spans").toString
+    val dir = graft.TmpDirs.create("graft-spans")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     Dedup.duplicateSpans.run(spark, dir)
       .as[(Long, Long, Int, Int, Long)].collect().toList
@@ -74,7 +74,7 @@ class SpanDedupCutSpec extends SparkSpec {
     val d1 = "a1 a2 a3 " + shared                 // doc 1 keeps its copy
     val d2 = "b1 b2 " + shared + " b3"            // doc 2 loses the span
     val d3 = d1                                   // verbatim dup of doc 1 → emptied
-    val dir = java.nio.file.Files.createTempDirectory("spancut").toString
+    val dir = graft.TmpDirs.create("graft-spancut")
     Seq((1L, d1), (2L, d2), (3L, d3)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = Dedup.spanDedupCut.run(spark, dir)

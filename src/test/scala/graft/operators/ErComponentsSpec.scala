@@ -15,7 +15,7 @@ class ErComponentsSpec extends SparkSpec {
       (2L, "Customer#000000111", 1, 0.0, "A"),  // matches 3 (dist 1), not 1 (dist 2)
       (3L, "Customer#000000101", 1, 0.0, "A"),
       (9L, "Customer#000000999", 2, 0.0, "A"))  // unmatched, absent from census
-    val dir = java.nio.file.Files.createTempDirectory("ercomp").toString
+    val dir = graft.TmpDirs.create("graft-ercomp")
     cust.toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     val rows = EntityResolution.customerComponents.run(spark, dir).collect()

@@ -27,7 +27,7 @@ class ErFuzzSpec extends SparkSpec {
         val stem = 100 + rnd.nextInt(3) * 10 + rnd.nextInt(4)
         (k, f"Customer#000000$stem%03d", nation, 0.0, "A")
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"erf$round").toString
+      val dir = graft.TmpDirs.create(s"graft-erf$round")
       cust.toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
         .write.mode("overwrite").parquet(s"$dir/customer.parquet")
       // brute force with the same blocking

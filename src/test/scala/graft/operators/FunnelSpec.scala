@@ -35,7 +35,7 @@ class FunnelSpec extends SparkSpec {
       (5L, ts("2024-01-01 11:00:00"), "purchase"))
       .map { case (u, t, e) => (u * 1000, t, u, e) }
       .toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("funnel").toString
+    val dir = graft.TmpDirs.create("graft-funnel")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val r = EventOps.defs.find(_.name == "event_funnel_conversion").get
       .run(spark, dir).collect()(0)

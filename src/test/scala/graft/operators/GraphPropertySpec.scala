@@ -57,7 +57,7 @@ class GraphPropertySpec extends SparkSpec {
       val (pairs, suppliers) = graphGen.apply(Gen.Parameters.default, seed).get
       seed = seed.next
       if (pairs.nonEmpty && suppliers.exists(_._2 == 1)) {
-        val dir = java.nio.file.Files.createTempDirectory("gfuzz").toString
+        val dir = graft.TmpDirs.create("graft-gfuzz")
         pairs.toDF("l_suppkey", "l_partkey")
           .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
         suppliers.map { case (sk, n) => (sk, s"s$sk", n, 0.0) }

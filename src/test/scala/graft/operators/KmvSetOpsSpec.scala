@@ -27,7 +27,7 @@ class KmvSetOpsSpec extends SparkSpec {
     val events =
       view.toSeq.map(u => (u, u, "view")) ++
       purch.toSeq.map(u => (1000L + u, u, "purchase"))
-    val dir = java.nio.file.Files.createTempDirectory("kmvset").toString
+    val dir = graft.TmpDirs.create("graft-kmvset")
     events.map { case (e, u, t) => (e, Timestamp.valueOf("2024-01-01 00:00:00"), u, t) }
       .toDF("event_id", "ts", "user_id", "event_type")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -24,7 +24,7 @@ class KmvSpec extends SparkSpec {
       (1 to 200).flatMap(u => Seq((u.toLong * 10, u.toLong, "view"),
                                    (u.toLong * 10 + 1, u.toLong, "view"))) ++
       (1 to 10).map(u => (100000L + u, u.toLong + 5000, "click"))
-    val dir = java.nio.file.Files.createTempDirectory("kmv").toString
+    val dir = graft.TmpDirs.create("graft-kmv")
     events.map { case (e, u, t) => (e, Timestamp.valueOf("2024-01-01 00:00:00"), u, t) }
       .toDF("event_id", "ts", "user_id", "event_type")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -17,7 +17,7 @@ class KsDriftSpec extends SparkSpec {
     val events =
       (1 to 10).map(i => (i.toLong, 1L, "view", i.toDouble)) ++
       (6 to 15).map(i => (100L + i, 2L, "purchase", i.toDouble))
-    val dir = java.nio.file.Files.createTempDirectory("ks").toString
+    val dir = graft.TmpDirs.create("graft-ks")
     events.map { case (e, u, t, v) => (e, Timestamp.valueOf("2024-01-01 00:00:00"), u, t, v) }
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

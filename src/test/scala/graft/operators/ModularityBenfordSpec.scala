@@ -9,7 +9,7 @@ import graft.SparkSpec
   */
 class ModularityBenfordSpec extends SparkSpec {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = graft.TmpDirs.create(s"graft-$p")
 
   private def writeParts(dir: String, brandOf: Long => String, n: Long): Unit = {
     import spark.implicits._

@@ -20,7 +20,7 @@ class PackSequencesSpec extends SparkSpec {
     val docs = toks.toSeq.map { case (id, n) =>
       (id, Seq.fill(n)("w").mkString(" "), "en", "s", n.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("pack").toString
+    val dir = graft.TmpDirs.create("graft-pack")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     // scalar replay

@@ -26,7 +26,7 @@ class PageRankSpec extends SparkSpec {
     import spark.implicits._
     // supplier 1 – parts {1,2,3}; supplier 2 – part 1
     val pairs = Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 1L))
-    val dir = java.nio.file.Files.createTempDirectory("pagerank").toString
+    val dir = graft.TmpDirs.create("graft-pagerank")
     pairs.toDF("l_suppkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
 

@@ -23,7 +23,7 @@ class PeakConcurrencySpec extends SparkSpec {
       // half-open: peak for view must stay 2, not 3
       (31L, ts("2024-01-01 11:00:00"), 3L, "view"))
       .toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("peak").toString
+    val dir = graft.TmpDirs.create("graft-peak")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
 
     val got = EventOps.defs.find(_.name == "event_peak_concurrency").get

@@ -49,7 +49,7 @@ class PointInTimePropertySpec extends SparkSpec {
     (1 to 8).foreach { _ =>
       val rows = gen.apply(Gen.Parameters.default, seed).get
       seed = seed.next
-      val dir = java.nio.file.Files.createTempDirectory("ptjf").toString
+      val dir = graft.TmpDirs.create("graft-ptjf")
       rows.map { case (eid, us, u, t) =>
         (eid, new Timestamp(base + us / 1000), u.toLong, t)
       }.toDF("event_id", "ts", "user_id", "event_type")

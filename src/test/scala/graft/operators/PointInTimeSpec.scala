@@ -27,7 +27,7 @@ class PointInTimeSpec extends SparkSpec {
       (301L, ts("2024-01-01 09:00:00"), 3L, "view"),
       (302L, ts("2024-01-01 10:00:00"), 3L, "purchase"))
       .toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("ptj").toString
+    val dir = graft.TmpDirs.create("graft-ptj")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
 
     val rows = TemporalJoins.pointInTime.run(spark, dir).collect()

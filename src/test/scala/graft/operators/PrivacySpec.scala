@@ -18,7 +18,7 @@ class PrivacySpec extends SparkSpec {
       (4L, "perfectly clean text with no identifiers", "c"))
       .map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("pii").toString
+    val dir = graft.TmpDirs.create("graft-pii")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val got = PrivacyOps.piiScan.run(spark, dir).collect()
@@ -36,7 +36,7 @@ class PrivacySpec extends SparkSpec {
     // pseudonym counts must equal user counts, zero collisions
     val events = (1 to 30).flatMap(u =>
       Seq((u.toLong * 2, t0, u.toLong, "view"), (u.toLong * 2 + 1, t0, u.toLong, "click")))
-    val dir = java.nio.file.Files.createTempDirectory("pseud").toString
+    val dir = graft.TmpDirs.create("graft-pseud")
     events.toDF("event_id", "ts", "user_id", "event_type")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 
@@ -66,7 +66,7 @@ class PrivacySpec extends SparkSpec {
       (1 to 10).map(i => (100L + i, "c", 1, 500.0, "A")) ++
       (1 to 5).map(i => (200L + i, "c", 2, 500.0, "B")) ++
       (1 to 5).map(i => (300L + i, "c", 2, 2500.0, "B"))
-    val dir = java.nio.file.Files.createTempDirectory("tclose").toString
+    val dir = graft.TmpDirs.create("graft-tclose")
     rows.toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     val got = PrivacyOps.tCloseness.run(spark, dir).collect()
@@ -78,7 +78,7 @@ class PrivacySpec extends SparkSpec {
     // add a 4-row class entirely in band 1: cumP=(0,4), cumQ=(15,24),
     // n=24, k=4: |0*24-15*4| = 60 -> t_ppm = 60*1e6/(1*4*24) = 625000
     val rows2 = rows ++ (1 to 4).map(i => (400L + i, "c", 3, 2500.0, "C"))
-    val dir2 = java.nio.file.Files.createTempDirectory("tclose2").toString
+    val dir2 = graft.TmpDirs.create("graft-tclose2")
     rows2.toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir2/customer.parquet")
     val got2 = PrivacyOps.tCloseness.run(spark, dir2).collect()

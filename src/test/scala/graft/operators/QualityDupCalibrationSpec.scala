@@ -14,7 +14,7 @@ class QualityDupCalibrationSpec extends SparkSpec {
       (1L to 3L).map(id => (id, dupText, "s")) ++       // verbatim dups
         (10L to 12L).map(id =>                           // disjoint vocabularies
           (id, (1 to 120).map(i => s"tok${id}_$i").mkString(" "), "s"))
-    val dir = java.nio.file.Files.createTempDirectory("qdc").toString
+    val dir = graft.TmpDirs.create("graft-qdc")
     docs.toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = PipelineCompositions.qualityDupCalibration.run(spark, dir).collect()

@@ -19,7 +19,7 @@ class QuartilesSpec extends SparkSpec {
       Seq((200L, "c", 42L))).flatten
       .map { case (id, src, n) => (id, "w " * 3, src, n) }
       .toDF("doc_id", "text", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("quart").toString
+    val dir = graft.TmpDirs.create("graft-quart")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = AnalyticsExtra.defs.find(_.name == "stats_length_quartiles_by_source").get
       .run(spark, dir).collect()

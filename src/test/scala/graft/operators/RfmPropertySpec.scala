@@ -43,7 +43,7 @@ class RfmPropertySpec extends SparkSpec {
         (1 to f).map(i => (u * 100 + i, Timestamp.valueOf(f"2024-01-0$d%d 10:00:00"),
           u, "view", v.toDouble))
       }
-      val dir = java.nio.file.Files.createTempDirectory("rfmf").toString
+      val dir = graft.TmpDirs.create("graft-rfmf")
       events.toDF("event_id", "ts", "user_id", "event_type", "value")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
 

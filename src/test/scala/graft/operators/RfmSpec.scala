@@ -20,7 +20,7 @@ class RfmSpec extends SparkSpec {
           "view", 10.0 * u / u) // each event value 10·u/u ⇒ total 10·u
       }
     }
-    val dir = java.nio.file.Files.createTempDirectory("rfm").toString
+    val dir = graft.TmpDirs.create("graft-rfm")
     events.toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 

@@ -11,7 +11,7 @@ import graft.SparkSpec
   */
 class Round10FuzzMoreSpec extends SparkSpec {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = graft.TmpDirs.create(s"graft-$p")
 
   test("modularity matches a scalar reference on random graphs and partitions") {
     import spark.implicits._

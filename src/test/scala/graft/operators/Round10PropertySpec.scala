@@ -12,7 +12,7 @@ import graft.SparkSpec
   */
 class Round10PropertySpec extends SparkSpec {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = graft.TmpDirs.create(s"graft-$p")
 
   test("attribution conserves credit: per conversion, 1e6 - (n-2) <= sum <= 1e6") {
     import spark.implicits._

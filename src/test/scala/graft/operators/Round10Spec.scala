@@ -13,7 +13,7 @@ import graft.SparkSpec
   */
 class Round10Spec extends SparkSpec {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = graft.TmpDirs.create(s"graft-$p")
 
   test("chi2: independent uniform cells have near-zero statistic; a loaded cell dominates") {
     import spark.implicits._

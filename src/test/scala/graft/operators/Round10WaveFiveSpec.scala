@@ -8,7 +8,7 @@ import graft.SparkSpec
   */
 class Round10WaveFiveSpec extends SparkSpec {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = graft.TmpDirs.create(s"graft-$p")
 
   test("ols: exact slope and intercept on a constructed linear series") {
     import spark.implicits._

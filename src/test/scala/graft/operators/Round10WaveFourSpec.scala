@@ -9,7 +9,7 @@ import graft.SparkSpec
   */
 class Round10WaveFourSpec extends SparkSpec {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = graft.TmpDirs.create(s"graft-$p")
 
   test("link prediction: two-hop candidate ranked by common neighbors, directs excluded") {
     import spark.implicits._

@@ -10,7 +10,7 @@ import graft.SparkSpec
   */
 class Round10WaveThreeSpec extends SparkSpec {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = graft.TmpDirs.create(s"graft-$p")
 
   test("kcore: peripheral supplier and its parts peel off round by round") {
     import spark.implicits._

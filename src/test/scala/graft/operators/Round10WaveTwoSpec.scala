@@ -10,7 +10,7 @@ import graft.SparkSpec
   */
 class Round10WaveTwoSpec extends SparkSpec {
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = graft.TmpDirs.create(s"graft-$p")
 
   test("er: planted near-dup names match within block; cross-block twins do not") {
     import spark.implicits._

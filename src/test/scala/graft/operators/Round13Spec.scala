@@ -14,7 +14,7 @@ class Round13Spec extends SparkSpec {
 
   test("neyman: allocation discriminates — a high-variance stratum outdraws a constant one") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("neyman").toString
+    val d = graft.TmpDirs.create("graft-neyman")
     // stratum A: 300 orders all exactly 100.00 (S=0); stratum B: 300
     // orders alternating 10.00 / 990.00 (huge S). Neyman gives B nearly
     // the whole budget; proportional allocation would split 50/50.
@@ -59,7 +59,7 @@ class Round13Spec extends SparkSpec {
     // self-loop); this corpus has one (S receives but never emits) and
     // pins BOTH conservation and absorption.
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("sink").toString
+    val d = graft.TmpDirs.create("graft-sink")
     def ev(id: Long, u: Long, sec: Int, t: String) =
       (id, java.sql.Timestamp.valueOf(f"2026-01-01 00:00:$sec%02d"), u, t, 1.0, "{}")
     val rows = Seq(
@@ -90,7 +90,7 @@ class Round13Spec extends SparkSpec {
     // (The driver corpus shows the same gap organically now that the
     // part stream is in the union — see the sf0.01 test below.)
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("fert").toString
+    val d = graft.TmpDirs.create("graft-fert")
     val majWords = Seq("ababab", "efefef", "ghghgh", "ijijij", "klklkl")
     val rows =
       (1 to 90).map(i => (i.toLong, "en", "web",

@@ -21,7 +21,7 @@ class Scd2Spec extends SparkSpec {
       (4L, ts("2024-01-01 13:00:00"), 1L, "view"),    // back again → NEW interval
       (5L, ts("2024-01-01 09:00:00"), 2L, "error"))   // single-state user
       .toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("scd2").toString
+    val dir = graft.TmpDirs.create("graft-scd2")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val rows = EventOps.defs.find(_.name == "scd2_user_state_history").get
       .run(spark, dir)

@@ -28,7 +28,7 @@ class SearchRankSpec extends SparkSpec {
           else filler(rnd.nextInt(filler.size)))
         (id, words.mkString(" "), s"s${id % 3}")
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"sr$round").toString
+      val dir = graft.TmpDirs.create(s"graft-sr$round")
       writeDocs(dir, docs)
 
       // scalar reference: exactly the cleared-denominator integer formula
@@ -70,7 +70,7 @@ class SearchRankSpec extends SparkSpec {
       (1L, "vector stream spark vector stream spark", "s"),
       (2L, "vector alpha", "s"),
       (3L, "alpha beta gamma", "s"))
-    val dir = java.nio.file.Files.createTempDirectory("rrf").toString
+    val dir = graft.TmpDirs.create("graft-rrf")
     writeDocs(dir, docs)
     Seq(
       (0L, Array(1.0f, 0.0f), 0),

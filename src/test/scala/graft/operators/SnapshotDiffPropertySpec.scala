@@ -38,7 +38,7 @@ class SnapshotDiffPropertySpec extends SparkSpec {
     (1 to 8).foreach { _ =>
       val docs = gen.apply(Gen.Parameters.default, seed).get
       seed = seed.next
-      val dir = java.nio.file.Files.createTempDirectory("sdf").toString
+      val dir = graft.TmpDirs.create("graft-sdf")
       docs.map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")

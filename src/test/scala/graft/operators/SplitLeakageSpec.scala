@@ -29,7 +29,7 @@ class SplitLeakageSpec extends SparkSpec {
       (trainIds(1), benign), (trainIds(2), benign)) ++
       trainIds.drop(3).take(4).zipWithIndex.map { case (id, k) =>
         (id, Seq.tabulate(40)(i => s"w${k}_$i").mkString(" ")) }
-    val dir = java.nio.file.Files.createTempDirectory("leak").toString
+    val dir = graft.TmpDirs.create("graft-leak")
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -53,7 +53,7 @@ class StatsPropertySpec extends SparkSpec {
         a.zipWithIndex.map { case (v, i) => (i.toLong, t0, i.toLong, "view", v.toDouble) } ++
         b.zipWithIndex.map { case (v, i) =>
           (1000L + i, t0, 1000L + i, "purchase", v.toDouble) }
-      val dir = java.nio.file.Files.createTempDirectory("statsf").toString
+      val dir = graft.TmpDirs.create("graft-statsf")
       events.toDF("event_id", "ts", "user_id", "event_type", "value")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
 

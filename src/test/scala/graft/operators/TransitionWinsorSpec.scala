@@ -22,7 +22,7 @@ class TransitionWinsorSpec extends SparkSpec {
       // user 3: single event — no transition
       (6L, ts("2024-01-01 10:00:00"), 3L, "click", 0.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("trans").toString
+    val dir = graft.TmpDirs.create("graft-trans")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
 
     val got = EventOps.defs.find(_.name == "event_transition_matrix").get
@@ -42,7 +42,7 @@ class TransitionWinsorSpec extends SparkSpec {
     val events = ((1 to 19).map(i => (i.toLong, i.toDouble)) :+ (20L, 1000.0))
       .map { case (id, v) => (id, ts("2024-01-01 10:00:00"), id, "view", v) }
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("winsor").toString
+    val dir = graft.TmpDirs.create("graft-winsor")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
 
     val r = AnalyticsExtra.defs.find(_.name == "stats_winsorized_mean").get

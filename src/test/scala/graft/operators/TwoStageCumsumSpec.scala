@@ -19,7 +19,7 @@ class TwoStageCumsumSpec extends SparkSpec {
       .map { case (k, d, p) => (k, 1L, "O", p, Timestamp.valueOf(d + " 00:00:00"), "1-URGENT") }
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
-    val dir = java.nio.file.Files.createTempDirectory("cumsum").toString
+    val dir = graft.TmpDirs.create("graft-cumsum")
     orders.write.mode("overwrite").parquet(s"$dir/orders.parquet")
 
     val got = ScalePatterns.twoStageCumsum.run(spark, dir).collect()

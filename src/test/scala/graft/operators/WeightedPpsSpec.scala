@@ -11,7 +11,7 @@ class WeightedPpsSpec extends SparkSpec {
 
   test("a document with >= 1/k of the corpus mass is always picked") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pps").toString
+    val dir = graft.TmpDirs.create("graft-pps")
     // giant doc: 10_000 chars of 1_990 total extra → far above W/100
     val docs = (1 to 199).map(i => (i.toLong, "small", 10L)) :+ (999L, "giant", 10000L)
     docs.toDF("doc_id", "source", "n_chars")

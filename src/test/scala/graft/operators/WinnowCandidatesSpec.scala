@@ -11,7 +11,7 @@ class WinnowCandidatesSpec extends SparkSpec {
 
   private def candidates(docs: Seq[(Long, String)]): Map[(Long, Long), Long] = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("winnow").toString
+    val dir = graft.TmpDirs.create("graft-winnow")
     docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
     Dedup.winnowCandidates.run(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap

@@ -24,7 +24,7 @@ class ChangesFeedSourceSpec extends SparkSpec {
     spark.readStream.format("npm-changes-feed").option("path", dir).load()
 
   test("drives the full pipeline with the same outputs as the file source") {
-    val base = Files.createTempDirectory("feedsrc").toString
+    val base = graft.TmpDirs.create("graft-feedsrc")
     writeFeed(s"$base/feed", Fixtures.withFetch404, "changes-000.jsonl")
     val q = NpmStream.start(spark, source(s"$base/feed"),
       outDir = s"$base/out", checkpointDir = s"$base/ckpt",
@@ -38,7 +38,7 @@ class ChangesFeedSourceSpec extends SparkSpec {
   }
 
   test("restart resumes from the checkpointed offset: only NEW files are read") {
-    val base = Files.createTempDirectory("feedsrc2").toString
+    val base = graft.TmpDirs.create("graft-feedsrc2")
     val feed = s"$base/feed"
     writeFeed(feed, Fixtures.withFetch404, "changes-000.jsonl")
     NpmStream.start(spark, source(feed), s"$base/out", s"$base/ckpt",
@@ -64,7 +64,7 @@ class ChangesFeedSourceSpec extends SparkSpec {
   }
 
   test("offset arithmetic: a batch is the seen-set difference; legacy watermarks reify") {
-    val base = Files.createTempDirectory("feedsrc3").toString
+    val base = graft.TmpDirs.create("graft-feedsrc3")
     (0 until 4).foreach(i => writeFeed(base, Seq(s"""{"seq":$i}"""), f"f-$i%03d.jsonl"))
     val stream = new graft.streaming.source.ChangesFeedMicroBatchStream(base)
     assert(stream.initialOffset().json() == "[]")
@@ -82,7 +82,7 @@ class ChangesFeedSourceSpec extends SparkSpec {
   test("legacy watermark parse fails fast when the directory is unlistable") {
     // reifying a watermark against an empty listing would mark the whole
     // feed unconsumed and re-deliver everything after an upgrade restart
-    val base = Files.createTempDirectory("feedsrc7").toString
+    val base = graft.TmpDirs.create("graft-feedsrc7")
     val stream = new graft.streaming.source.ChangesFeedMicroBatchStream(s"$base/missing")
     val ex = intercept[IllegalStateException] {
       stream.deserializeOffset(s"$base/missing/changes-900.jsonl")
@@ -91,7 +91,7 @@ class ChangesFeedSourceSpec extends SparkSpec {
   }
 
   test("a late-sorting file is delivered exactly once; consumed files never re-deliver") {
-    val base = Files.createTempDirectory("feedsrc4").toString
+    val base = graft.TmpDirs.create("graft-feedsrc4")
     writeFeed(base, Seq("""{"seq":10}"""), "f-010.jsonl")
     val stream = new graft.streaming.source.ChangesFeedMicroBatchStream(base)
     val consumed = stream.latestOffset() // seen = {f-010}
@@ -111,7 +111,7 @@ class ChangesFeedSourceSpec extends SparkSpec {
     // dir B and restart pointing at B: the r6 absolute-path offsets would
     // treat every file as unconsumed and re-deliver the whole feed; the
     // relative-name offsets must deliver nothing old and only what's new
-    val base = Files.createTempDirectory("feedsrc8").toString
+    val base = graft.TmpDirs.create("graft-feedsrc8")
     val feedA = s"$base/feedA"
     writeFeed(feedA, Fixtures.withFetch404, "changes-000.jsonl")
     NpmStream.start(spark, source(feedA), s"$base/out", s"$base/ckpt",
@@ -140,7 +140,7 @@ class ChangesFeedSourceSpec extends SparkSpec {
   }
 
   test("r6-era absolute-path offsets relativize on upgrade (no re-delivery)") {
-    val base = Files.createTempDirectory("feedsrc9").toString
+    val base = graft.TmpDirs.create("graft-feedsrc9")
     (0 until 3).foreach(i => writeFeed(base, Seq(s"""{"seq":$i}"""), f"f-$i%03d.jsonl"))
     val stream = new graft.streaming.source.ChangesFeedMicroBatchStream(base)
     // an r6 checkpoint: the offset array holds ABSOLUTE paths
@@ -157,7 +157,7 @@ class ChangesFeedSourceSpec extends SparkSpec {
     // the path option points at a directory sharing NO file with the
     // checkpoint's consumed set: silently proceeding would mark the whole
     // new feed unconsumed AND interleave two different feeds' data
-    val base = Files.createTempDirectory("feedsrc10").toString
+    val base = graft.TmpDirs.create("graft-feedsrc10")
     writeFeed(base, Seq("""{"seq":1}"""), "other-feed-000.jsonl")
     val stream = new graft.streaming.source.ChangesFeedMicroBatchStream(base)
     val ex = intercept[IllegalStateException] {
@@ -172,7 +172,7 @@ class ChangesFeedSourceSpec extends SparkSpec {
   }
 
   test("latestOffset never regresses when the directory is momentarily unlistable") {
-    val base = Files.createTempDirectory("feedsrc5").toString
+    val base = graft.TmpDirs.create("graft-feedsrc5")
     val feed = s"$base/feed"
     writeFeed(feed, Seq("""{"seq":1}"""), "f-001.jsonl")
     val stream = new graft.streaming.source.ChangesFeedMicroBatchStream(feed)
@@ -187,7 +187,7 @@ class ChangesFeedSourceSpec extends SparkSpec {
   }
 
   test("late-sorting file arriving across a RESTART is consumed exactly once (end-to-end)") {
-    val base = Files.createTempDirectory("feedsrc6").toString
+    val base = graft.TmpDirs.create("graft-feedsrc6")
     val feed = s"$base/feed"
     // first run consumes a high-sorting file
     writeFeed(feed, Fixtures.withFetch404, "changes-900.jsonl")

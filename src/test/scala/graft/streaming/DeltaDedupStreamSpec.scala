@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.operators.Dedup
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -32,7 +30,7 @@ class DeltaDedupStreamSpec extends SparkSpec {
     assert(delta.size >= 4, "fixture too small to split across batches")
     val (wave1, wave2) = delta.splitAt(delta.size / 2)
 
-    val base = Files.createTempDirectory("deltadedupstream").toString
+    val base = graft.TmpDirs.create("graft-deltadedupstream")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, String)]
 

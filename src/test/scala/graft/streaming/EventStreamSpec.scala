@@ -113,7 +113,7 @@ class EventStreamSpec extends SparkSpec {
   test("streaming hourly agg over the real events table matches the batch analog") {
     val dir = "/root/testdata/sf0.001"
     // the file-stream source wants a directory: stage the single parquet
-    val stage = java.nio.file.Files.createTempDirectory("eventsdir")
+    val stage = java.nio.file.Paths.get(graft.TmpDirs.create("graft-eventsdir"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       stage.resolve("events.parquet"))
@@ -138,7 +138,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("streaming session_window sessions match the batch lag/cumsum sessionization") {
     val dir = "/root/testdata/sf0.001"
-    val stage = java.nio.file.Files.createTempDirectory("eventsdir-sess")
+    val stage = java.nio.file.Paths.get(graft.TmpDirs.create("graft-eventsdir-sess"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       stage.resolve("events.parquet"))

@@ -26,7 +26,7 @@ class FeedSinkSpec extends SparkSpec {
       .toSet
 
   test("streams values into epoch-committed files via the engine") {
-    val base = Files.createTempDirectory("feedsink").toString
+    val base = graft.TmpDirs.create("graft-feedsink")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[String]
     ms.addData("a", "b", "c")
@@ -47,7 +47,7 @@ class FeedSinkSpec extends SparkSpec {
   }
 
   test("epoch commit is idempotent and abort cleans temp files") {
-    val base = Files.createTempDirectory("feedsink2").toString
+    val base = graft.TmpDirs.create("graft-feedsink2")
     val w = new FeedStreamingWrite(base, valueIdx = 0)
     def tempWith(name: String, lines: Seq[String]): WriterCommitMessage = {
       val d = Paths.get(base, "_tmp"); Files.createDirectories(d)
@@ -71,7 +71,7 @@ class FeedSinkSpec extends SparkSpec {
   }
 
   test("dropped tombstones are counted in the epoch manifest, not lost silently") {
-    val base = Files.createTempDirectory("feedsink4").toString
+    val base = graft.TmpDirs.create("graft-feedsink4")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[String]
     // "DEL:x" becomes a NULL value — the Kafka-tombstone shape
@@ -93,7 +93,7 @@ class FeedSinkSpec extends SparkSpec {
   }
 
   test("rejects a schema without a value string column") {
-    val base = Files.createTempDirectory("feedsink3").toString
+    val base = graft.TmpDirs.create("graft-feedsink3")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[Long]
     val ex = intercept[Exception] {

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.npm.Fixtures
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -37,7 +35,7 @@ class KafkaSurfaceSpec extends SparkSpec {
   }
 
   test("MemoryStream drives the exact start() chain: catalog/DLQ parity with the file source") {
-    val base = Files.createTempDirectory("kafkasurface").toString
+    val base = graft.TmpDirs.create("graft-kafkasurface")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[String]
     ms.addData(Fixtures.withFetch404)
@@ -53,7 +51,7 @@ class KafkaSurfaceSpec extends SparkSpec {
   }
 
   test("streaming path routes an oversized change to the DLQ sink (F8/E2)") {
-    val base = Files.createTempDirectory("kafkaoversize").toString
+    val base = graft.TmpDirs.create("graft-kafkaoversize")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val pad = "x" * (graft.npm.model.MaxKafkaMessageBytes.toInt + 64)
     val ms = MemoryStream[String]

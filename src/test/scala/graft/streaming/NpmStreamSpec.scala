@@ -16,7 +16,7 @@ class NpmStreamSpec extends SparkSpec {
   }
 
   test("streaming file-source replay produces the same catalog as batch") {
-    val base = Files.createTempDirectory("npmstream").toString
+    val base = graft.TmpDirs.create("graft-npmstream")
     val feedDir = s"$base/feed"
     writeFeed(feedDir, Fixtures.withFetch404, "changes-0.jsonl")
 
@@ -34,7 +34,7 @@ class NpmStreamSpec extends SparkSpec {
   }
 
   test("streaming retention carries per-package state across batches and restarts") {
-    val base = Files.createTempDirectory("npmret").toString
+    val base = graft.TmpDirs.create("graft-npmret")
     val feedDir = s"$base/feed"
     def change(seq: Int): String =
       s"""{"seq":$seq,"id":"hotpkg","doc":{"_id":"hotpkg","_rev":"$seq-r","name":"hotpkg","dist-tags":{"latest":"1.0.$seq"},"versions":{"1.0.$seq":{"version":"1.0.$seq","dist":{"tarball":"http://r/t.tgz","unpackedSize":5,"shasum":"s"}}},"time":{"1.0.$seq":"2023-01-01T00:00:00.000Z","created":"2023-01-01T00:00:00.000Z","modified":"2023-01-01T00:00:00.000Z"}}}"""
@@ -58,7 +58,7 @@ class NpmStreamSpec extends SparkSpec {
     // Structured Streaming re-delivers the batch with the SAME batchId,
     // and the dynamic partition overwrite must replace the previous
     // attempt's rows, not duplicate them
-    val base = Files.createTempDirectory("npmidem").toString
+    val base = graft.TmpDirs.create("graft-npmidem")
     val r = graft.npm.Pipeline.replay(
       Fixtures.withFetch404.toDF("value"), Fixtures.RoutingFetcher)(spark)
     NpmStream.writeBatchOutputs(r, base, batchId = 0)
@@ -73,7 +73,7 @@ class NpmStreamSpec extends SparkSpec {
   }
 
   test("restart from checkpoint does not duplicate already-processed changes") {
-    val base = Files.createTempDirectory("npmstream2").toString
+    val base = graft.TmpDirs.create("graft-npmstream2")
     val feedDir = s"$base/feed"
     writeFeed(feedDir, Fixtures.withFetch404, "changes-0.jsonl")
 
@@ -97,7 +97,7 @@ class NpmStreamSpec extends SparkSpec {
   }
 
   test("a stream releases each micro-batch's replay cache once its outputs are written") {
-    val base = Files.createTempDirectory("npmrelease").toString
+    val base = graft.TmpDirs.create("graft-npmrelease")
     val feedDir = s"$base/feed"
     val (first, second) = Fixtures.withFetch404.splitAt(7)
     writeFeed(feedDir, first, "changes-0.jsonl")
