@@ -13,13 +13,14 @@ object Explain {
     val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { name =>
+    // building a live query's frame stages its feed under TmpDirs
+    try names.foreach { name =>
       println(s"\n========== $name ==========")
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
         println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
       } catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
-    }
+    } finally TmpDirs.sweepOwned(TmpDirs.root)
     spark.stop()
   }
 }

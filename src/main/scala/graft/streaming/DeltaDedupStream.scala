@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * path), so a crash-replayed batch replaces exactly its prior output
   * and never duplicates pairs. Writing the partition path directly —
   * rather than `partitionBy` + dynamic partition overwrite — keeps the
-  * plan IDENTICAL across batches (no per-batch `lit(batchId)` column),
+  * plan IDENTICAL across batches (no per-batch batch-id literal column),
   * so whole-stage codegen compiled for batch 0 is cache-hit by every
   * later batch, and skips the staging-dir commit dance. Batch-local
   * shuffles are sized to the arrival volume on the stream's OWN cloned

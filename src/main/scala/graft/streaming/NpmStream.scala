@@ -1,6 +1,11 @@
 package graft.streaming
 
+import java.util.concurrent.Executors
+
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -14,8 +19,8 @@ import graft.npm.{Pipeline, Retention, model}
   * producer.ts:151) and its restart-from-last-Kafka-message bootstrap
   * (run_scripts.sh:10) collapse into the checkpointLocation; its
   * at-least-once commit-after-process loop (changes_consumer.py:408)
-  * becomes micro-batch + idempotent parquet append, deduplicated by seq
-  * (exactly-once upgrade, SURVEY.md §2.9).
+  * becomes micro-batch + an idempotent per-batch parquet overwrite,
+  * deduplicated by seq (exactly-once upgrade, SURVEY.md §2.9).
   */
 object NpmStream {
 
@@ -88,36 +93,68 @@ object NpmStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .text(dir)
 
-  /** Write one micro-batch's four outputs idempotently: each sink is
-    * partitioned by batch_id and a batch overwrites ONLY its own
-    * partition (dynamic overwrite). A plain append would be
-    * at-least-once: a crash between the parquet appends and the
-    * checkpoint commit re-runs the batch on restart and duplicates every
-    * row (within-batch dropDuplicates can't see the earlier run's
-    * output); overwrite-own-partition makes the re-run replace its
-    * previous output instead — exactly-once per seq end to end.
-    * Releases the replay's cached routed frame afterwards, so a
-    * long-running stream holds no cache from finished batches.
+  /** Write one micro-batch's four outputs idempotently: each sink is a
+    * plain overwrite of its OWN `<sink>/batch_id=<batchId>` directory, so
+    * a re-run of the batch replaces its previous output and a new batch
+    * lands alongside. A plain append would be at-least-once: a crash
+    * between the parquet writes and the checkpoint commit re-runs the
+    * batch on restart and duplicates every row (within-batch
+    * dropDuplicates can't see the earlier run's output); overwriting its
+    * own directory makes the re-run replace that output instead —
+    * exactly-once per seq end to end. Readers see `batch_id` as a
+    * discovered partition column (IntegerType). Writing the directory
+    * directly, rather than `partitionBy` under dynamic partition
+    * overwrite, keeps the plan the same for every batch (no per-batch
+    * literal), skips the staging directory's list-and-rename, and leaves
+    * a schema-bearing file even for an empty output, so every sink reads
+    * back from the first batch on.
+    *
+    * The four writes start at once, on a pool of four daemon threads
+    * made and shut down inside this call; each thread carries the batch's
+    * session and local properties (job group, execution id). All four
+    * read the replay's one cached routed frame, whose block locks compute
+    * each partition once, so each passing row's tarball is still fetched
+    * once. The call waits for every write, even when one fails, then
+    * releases that frame, so a long-running stream holds no cache from
+    * finished batches, and rethrows the first failed write's own
+    * exception.
     */
   def writeBatchOutputs(r: Pipeline.PipelineResult, outDir: String, batchId: Long): Unit = {
-    def write(df: DataFrame, path: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+    val sinks = Seq(
+      "catalog" -> r.catalog.dropDuplicates("change_seq_id"),
+      "skipped" -> r.skipped,
+      "audit" -> r.audit,
+      "deleted_zips" -> r.deletions)
+    val session = r.routed.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val pool = Executors.newFixedThreadPool(sinks.size, { (task: Runnable) =>
+      val t = new Thread(task, s"npm-sink-batch-$batchId")
+      t.setDaemon(true)
+      t
+    })
     try {
-      write(r.catalog.dropDuplicates("change_seq_id"), s"$outDir/catalog")
-      write(r.skipped, s"$outDir/skipped")
-      write(r.audit, s"$outDir/audit")
-      write(r.deletions, s"$outDir/deleted_zips")
-    } finally r.routed.unpersist()
+      val writes = sinks.map { case (sink, df) =>
+        SQLExecution.withThreadLocalCaptured(session, pool) {
+          df.write.mode("overwrite").parquet(s"$outDir/$sink/batch_id=$batchId")
+        }
+      }
+      // join() waits without being interruptible, so no write is still
+      // running when the frame is released; it wraps the write's own
+      // exception in a CompletionException
+      writes.flatMap(w => Try(w.join()).failed.toOption).headOption.foreach(e => throw e.getCause)
+    } finally {
+      pool.shutdown()
+      r.routed.unpersist()
+    }
   }
 
-  /** Run the pipeline as one streaming query writing the four parquet
-    * sinks via foreachBatch. Retention state lives inside the batch
-    * replay here (per-batch exactness); the pure streaming-state variant
-    * is Retention.streamingEvictions, tested separately.
+  /** Run the pipeline as one streaming query: each micro-batch is one
+    * `Pipeline.replay`, then [[writeBatchOutputs]] writes its four
+    * parquet sinks concurrently, each to `<outDir>/<sink>/batch_id=<id>`,
+    * before the checkpoint commits the batch; a restart that re-runs the
+    * last batch overwrites those directories rather than appending.
+    * Retention state lives inside the batch replay here (per-batch
+    * exactness); the pure streaming-state variant is
+    * Retention.streamingEvictions, tested separately.
     */
   def start(
       spark: SparkSession,

@@ -77,4 +77,11 @@ object Fixtures {
     def apply(url: String): (Int, Long) =
       if (url == "http://r/missing.tgz") (404, 0L) else (200, 10L)
   }
+
+  /** `n` distinct packages (seqs 1001 to 1000 + n), one release each with
+    * its own tarball URL; all pass the pre-fetch checks and none evicts.
+    */
+  def distinctFeed(n: Int): Seq[String] = (1 to n).map { i =>
+    s"""{"seq":${1000 + i},"id":"pkg-$i","doc":{"_id":"pkg-$i","_rev":"1-a","name":"pkg-$i","dist-tags":{"latest":"1.0.0"},"versions":{"1.0.0":{"version":"1.0.0","dist":{"tarball":"http://r/pkg-$i.tgz","unpackedSize":5,"shasum":"s"}}},"time":{"1.0.0":"2023-01-01T00:00:00.000Z","created":"2023-01-01T00:00:00.000Z","modified":"2023-01-01T00:00:00.000Z"}}}"""
+  }
 }

@@ -146,19 +146,12 @@ class PipelineSpec extends SparkSpec {
     Seq(r.catalog, r.skipped, r.audit, r.deletions)
       .foreach(_.write.format("noop").mode("overwrite").save())
 
-  /** `n` distinct packages, each with its own tarball URL; all pass the
-    * pre-fetch checks.
-    */
-  private def distinctFeed(n: Int): Seq[String] = (1 to n).map { i =>
-    s"""{"seq":${1000 + i},"id":"pkg-$i","doc":{"_id":"pkg-$i","_rev":"1-a","name":"pkg-$i","dist-tags":{"latest":"1.0.0"},"versions":{"1.0.0":{"version":"1.0.0","dist":{"tarball":"http://r/pkg-$i.tgz","unpackedSize":5,"shasum":"s"}}},"time":{"1.0.0":"2023-01-01T00:00:00.000Z","created":"2023-01-01T00:00:00.000Z","modified":"2023-01-01T00:00:00.000Z"}}}"""
-  }
-
   test("a replay fetches each tarball once however many outputs are written") {
     // the 7 fixtures that pass the pre-fetch checks (seqs 1-4, 8, 11, 13)
     // plus 2,000 distinct packages; the 6 pre-rejected fixtures and the
     // corrupt line are never fetched
     FetchLog.reset()
-    val r = Pipeline.replay((Fixtures.withFetch404 ++ distinctFeed(2000)).toDF("value"),
+    val r = Pipeline.replay((Fixtures.withFetch404 ++ Fixtures.distinctFeed(2000)).toDF("value"),
       FetchLog.Counting)
     writeAll(r)
     assert(FetchLog.total == 2007L)
@@ -167,7 +160,7 @@ class PipelineSpec extends SparkSpec {
 
   test("a fetcher that fails on a retry cannot route one seq to both catalog and DLQ") {
     FetchLog.reset()
-    val r = Pipeline.replay(distinctFeed(2000).toDF("value"), FetchLog.FirstCallOk)
+    val r = Pipeline.replay(Fixtures.distinctFeed(2000).toDF("value"), FetchLog.FirstCallOk)
     val dir = graft.TmpDirs.create("graft-pipeline-once")
     r.catalog.write.parquet(s"$dir/catalog")
     r.skipped.write.parquet(s"$dir/skipped")

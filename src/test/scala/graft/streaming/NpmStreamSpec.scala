@@ -3,7 +3,8 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
-import graft.npm.Fixtures
+import graft.npm.{FetchLog, Fixtures, Pipeline}
+import org.apache.hadoop.fs.ParentNotDirectoryException
 import org.apache.spark.sql.functions._
 
 class NpmStreamSpec extends SparkSpec {
@@ -56,8 +57,8 @@ class NpmStreamSpec extends SparkSpec {
   test("a re-run of the same batch replaces its output instead of appending (idempotent sinks)") {
     // simulates the crash-between-sink-write-and-checkpoint-commit case:
     // Structured Streaming re-delivers the batch with the SAME batchId,
-    // and the dynamic partition overwrite must replace the previous
-    // attempt's rows, not duplicate them
+    // and the overwrite of each sink's own batch_id=<id> directory must
+    // replace the previous attempt's rows, not duplicate them
     val base = graft.TmpDirs.create("graft-npmidem")
     val r = graft.npm.Pipeline.replay(
       Fixtures.withFetch404.toDF("value"), Fixtures.RoutingFetcher)(spark)
@@ -107,5 +108,53 @@ class NpmStreamSpec extends SparkSpec {
       s"$base/out", s"$base/ckpt", Fixtures.RoutingFetcher).awaitTermination()
     assert(spark.read.parquet(s"$base/out/catalog").select("batch_id").distinct().count() == 2)
     assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
+  test("every sink reads back, with its batch_id column, before the first eviction") {
+    // one release per package: no batch evicts, no line is rejected, so
+    // deleted_zips and skipped get only empty outputs
+    val base = graft.TmpDirs.create("graft-npmempty")
+    val feedDir = s"$base/feed"
+    writeFeed(feedDir, Fixtures.distinctFeed(3), "changes-0.jsonl")
+    NpmStream.start(spark, NpmStream.fileSource(spark, feedDir),
+      s"$base/out", s"$base/ckpt").awaitTermination()
+    val counts = Seq("catalog", "skipped", "audit", "deleted_zips").map { sink =>
+      val df = spark.read.parquet(s"$base/out/$sink")
+      assert(df.columns.contains("batch_id"), sink)
+      sink -> df.count()
+    }.toMap
+    assert(counts == Map("catalog" -> 3L, "skipped" -> 0L, "audit" -> 9L, "deleted_zips" -> 0L))
+  }
+
+  test("the concurrent sink writes fetch each tarball once") {
+    // the 7 fixtures that pass the pre-fetch checks plus 2,000 distinct
+    // packages, all four sinks written by one writeBatchOutputs call
+    val base = graft.TmpDirs.create("graft-npmfetch")
+    FetchLog.reset()
+    val r = Pipeline.replay((Fixtures.withFetch404 ++ Fixtures.distinctFeed(2000)).toDF("value"),
+      FetchLog.Counting)(spark)
+    NpmStream.writeBatchOutputs(r, base, batchId = 0)
+    assert(FetchLog.total == 2007L)
+    val cat = spark.read.parquet(s"$base/catalog").select("change_seq_id").as[Long].collect().toSet
+    val dlq = spark.read.parquet(s"$base/skipped").filter(col("seq").isNotNull)
+      .select("seq").as[Long].collect().toSet
+    assert(cat.size == 2007)
+    assert((cat intersect dlq).isEmpty)
+  }
+
+  test("a failed sink write surfaces its own exception after every write has ended") {
+    val base = graft.TmpDirs.create("graft-npmfail")
+    // a regular file where the catalog sink's directory should be: the
+    // first write fails at once while the other three are still running
+    Files.write(Paths.get(base, "catalog"), "not a directory".getBytes("UTF-8"))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val r = Pipeline.replay(Fixtures.withFetch404.toDF("value"), Fixtures.RoutingFetcher)(spark)
+    // the write's own exception, not the future's wrapper
+    val e = intercept[ParentNotDirectoryException](NpmStream.writeBatchOutputs(r, base, batchId = 0))
+    assert(e.getMessage.contains(s"$base/catalog"))
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    // the other three sinks were still written
+    assert(spark.read.parquet(s"$base/skipped").filter(col("seq").isNotNull).count() == 6)
   }
 }
