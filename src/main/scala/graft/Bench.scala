@@ -306,12 +306,21 @@ object Bench {
       // dead checkpoint/codegen garbage — without this, cleanup is
       // charged to whichever query runs next (r4: ann_* measured 5.6 s
       // in-suite vs 0.46 s isolated).
-      PinnedStorage.sweep(spark, blocking = true)
-      try org.apache.spark.sql.graftaccess.StateStoreAccess.unloadAll()
-      catch { case _: Throwable => () }
-      TmpDirs.sweepOwned(TmpDirs.root)
+      LocalSession.settle(spark, blocking = true)
       System.gc()
     }
+    // the exception class of each query's latest failed run
+    val failureClass = scala.collection.mutable.Map.empty[String, String]
+    // one run of `name`; a throw is reported on stderr with the query
+    // name, the pass and the exception, and returns false
+    def runOnce(name: String, pass: String): Boolean =
+      try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+      catch { case e: Throwable =>
+        failureClass(name) = e.getClass.getName
+        System.err.println(
+          s"[bench] $name failed in $pass: ${e.getClass.getName}: ${e.getMessage}")
+        false
+      }
     // Pre-warmup probes (r14): every full-suite run r13-r14 read the
     // in-JVM parallel probe at 0.24-0.35 while subset runs in the SAME
     // minutes read 0.11-0.19 — the post-warmup JVM (16 GiB heap grown,
@@ -331,8 +340,7 @@ object Bench {
       if (probeSecs <= 0) None else loadedStealProbe(probeSecs)
     val stat0 = cpuStat()
     names.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      runOnce(name, "warmup")
       settle()
     }
     // Timed passes, per-query MIN over VALID samples. One pass proved
@@ -352,24 +360,22 @@ object Bench {
     // must not become the min or pollute the spread statistics (r12
     // advisory). All raw passes are emitted in BENCH_DETAIL next to the
     // min, so a round-over-round drift can be adjudicated from data.
-    def timedPass(order: Seq[String]): Map[String, Double] = order.map { name =>
+    def timedPass(order: Seq[String], pass: String): Map[String, Double] = order.map { name =>
       settle()
       // label the jobs (guide §1.5) so an event-log/UI profile can map
       // stages back to queries; description setting is thread-local and
       // costs nothing in the timed window
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
+      val ok = runOnce(name, pass)
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
       name -> (if (ok) dt else -1.0)
     }.toMap
     val calibStart = calibrationProbe()
     val calibParStart = calibrationProbeParallel()
-    val pass1 = timedPass(names)
-    val pass2 = timedPass(names.reverse)
+    val pass1 = timedPass(names, "pass1")
+    val pass2 = timedPass(names.reverse, "pass2")
     // Adaptive third pass (r12 verdict item 3): exactly the queries whose
     // two valid samples still disagree by >1.3× get one more sample —
     // bounded extra cost (~1/3 of the suite in r12's closing run), and it
@@ -386,7 +392,7 @@ object Bench {
       val ss = Seq(pass1(n), pass2(n))
       ss.exists(_ < 0) || spreadOf(ss) > spreadGate
     }
-    val pass3 = timedPass(needThird)
+    val pass3 = timedPass(needThird, "pass3")
     val samples3: Map[String, Seq[Double]] = names.map { n =>
       n -> (Seq(pass1(n), pass2(n)) ++ pass3.get(n))
     }.toMap
@@ -401,7 +407,7 @@ object Bench {
       .filter(n => spreadOf(samples3(n)) > spreadGate)
       .sortBy(n => -spreadOf(samples3(n)))
       .take(math.max(1, names.size / 10))
-    val pass4 = timedPass(needFourth)
+    val pass4 = timedPass(needFourth, "pass4")
     val samples: Map[String, Seq[Double]] = names.map { n =>
       n -> (samples3(n) ++ pass4.get(n))
     }.toMap
@@ -565,7 +571,9 @@ object Bench {
       val regBlock = regressions
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
       val failedArr = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val detail = s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"calibration":${f(calib)},"calibration_start":${f(calibStart)},"calibration_end":${f(calibEnd)},"calibration_prewarm":${f(calibPrewarm)},"calibration_parallel":${f(calibPar)},"calibration_parallel_start":${f(calibParStart)},"calibration_parallel_end":${f(calibParEnd)},"calibration_parallel_prewarm":${f(calibParPrewarm)},"host_steal_pct":${stealPct.map(f).getOrElse("null")},"probe_mode":"loaded","probe_steal_pct":${probeSteal.map(f).getOrElse("null")},"probe_accept":${probeSteal.exists(probeAccept)},"jitter":{"informational":true,"median_max_over_min":${f(medRatio)},"n_ratio_over_1p3":$nOver,"n_third_pass":${needThird.size},"n_fourth_pass":${needFourth.size}},"cross_run":{"n_over_1p3":$crossOver,"median_ratio":${f(crossMed)},"host_shift":${f(hostShift)},"host_shift_warn":$hostShiftWarn,"noise_floor_s":0.15,"n_compared":$crossCompared,"target":"n_over_1p3 <= 10% of n_compared on unchanged code; improves with pass count"},"regressions":{"n":${regressions.size},"n_window":$nWindow,"n_code":${regressions.size - nWindow},"host_shift":${f(hostShift)},"prev_detail":"$prevPath","prev_calibration":${prevCalib.map(f).getOrElse("null")},"calib_adj":${f(calibAdj)},"items":$regBlock},"failed":$failedArr,"queries":${obj(results.toSeq.sortBy(_._1))},"pass1":${obj(pass1.toSeq.sortBy(_._1))},"pass2":${obj(pass2.toSeq.sortBy(_._1))},"pass3":${obj(pass3.toSeq.sortBy(_._1))},"pass4":${obj(pass4.toSeq.sortBy(_._1))},"sf":"$sfDir"}"""
+      val failedClass = failed.map(n => "\"" + n + "\":\"" + failureClass.getOrElse(n, "") + "\"")
+        .mkString("{", ",", "}")
+      val detail = s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"calibration":${f(calib)},"calibration_start":${f(calibStart)},"calibration_end":${f(calibEnd)},"calibration_prewarm":${f(calibPrewarm)},"calibration_parallel":${f(calibPar)},"calibration_parallel_start":${f(calibParStart)},"calibration_parallel_end":${f(calibParEnd)},"calibration_parallel_prewarm":${f(calibParPrewarm)},"host_steal_pct":${stealPct.map(f).getOrElse("null")},"probe_mode":"loaded","probe_steal_pct":${probeSteal.map(f).getOrElse("null")},"probe_accept":${probeSteal.exists(probeAccept)},"jitter":{"informational":true,"median_max_over_min":${f(medRatio)},"n_ratio_over_1p3":$nOver,"n_third_pass":${needThird.size},"n_fourth_pass":${needFourth.size}},"cross_run":{"n_over_1p3":$crossOver,"median_ratio":${f(crossMed)},"host_shift":${f(hostShift)},"host_shift_warn":$hostShiftWarn,"noise_floor_s":0.15,"n_compared":$crossCompared,"target":"n_over_1p3 <= 10% of n_compared on unchanged code; improves with pass count"},"regressions":{"n":${regressions.size},"n_window":$nWindow,"n_code":${regressions.size - nWindow},"host_shift":${f(hostShift)},"prev_detail":"$prevPath","prev_calibration":${prevCalib.map(f).getOrElse("null")},"calib_adj":${f(calibAdj)},"items":$regBlock},"failed":$failedArr,"failed_class":$failedClass,"queries":${obj(results.toSeq.sortBy(_._1))},"pass1":${obj(pass1.toSeq.sortBy(_._1))},"pass2":${obj(pass2.toSeq.sortBy(_._1))},"pass3":${obj(pass3.toSeq.sortBy(_._1))},"pass4":${obj(pass4.toSeq.sortBy(_._1))},"sf":"$sfDir"}"""
       try { java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detail); None }
       catch { case scala.util.control.NonFatal(e) => Some(e) }
     } else None

@@ -27,4 +27,17 @@ object LocalSession {
         "graft.streaming.LocalNioCheckpointFileManager")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  /** Between-query cleanup of the suite mains (Bench, Verify): drop every
+    * non-pinned storage block (`blocking` waits until the block manager
+    * has), unload cached state-store providers (their 60 s background
+    * maintenance would otherwise run inside later queries) and delete
+    * this process's staged feed/checkpoint tmp dirs.
+    */
+  def settle(spark: SparkSession, blocking: Boolean = false): Unit = {
+    PinnedStorage.sweep(spark, blocking)
+    try org.apache.spark.sql.graftaccess.StateStoreAccess.unloadAll()
+    catch { case _: Throwable => () }
+    TmpDirs.sweepOwned(TmpDirs.root)
+  }
 }

@@ -1,41 +1,76 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
-/** Registry of storage blocks that are pinned ON PURPOSE for the lifetime
-  * of a session (e.g. NpmReplayOps' memoized replay catalog, shared by six
-  * queries). Bench/Verify drop every other persistent RDD after each query
-  * — per-query localCheckpoints (AnnSearch embeddings, Dedup shingles)
+/** Session-pinned surfaces: artifacts built once per (session, corpus)
+  * and kept in storage ON PURPOSE for the session's lifetime (the replay
+  * catalog, the ANN signature index, the dedup shingle/sketch/pair
+  * surfaces, the graph edge lists). Bench/Verify drop every other
+  * persistent RDD after each query — per-query localCheckpoints
   * otherwise accumulate old-gen across ~110 sequential query executions
-  * until full-GC pauses dominate the run (r03: alphabetically-late queries
-  * ran 20-90× their isolated cost).
+  * until full-GC pauses dominate the run (r03: alphabetically-late
+  * queries ran 20-90× their isolated cost).
   *
-  * Pins are keyed by SparkContext: RDD ids restart at 0 in every new
-  * context, so a flat id set would let stale pins from a stopped context
-  * collide with (and silently exempt) fresh RDDs in the next one. Entries
-  * for stopped contexts are pruned on every call, bounding growth.
+  * Memo entries and pins are keyed by session / SparkContext, and
+  * entries owned by stopped contexts are pruned on every call: RDD ids
+  * restart at 0 in every new context, so a stale entry would both keep
+  * the stopped session's objects alive and let stale pins collide with
+  * (and silently exempt) fresh RDDs in the next context.
   *
-  * Threading: pin() attributes the context's persistent-RDD delta during
-  * `create` to the pinned set, which assumes no unrelated query is
+  * Threading: a surface's build attributes the context's persistent-RDD
+  * delta to the pinned set, which assumes no unrelated query is
   * persisting concurrently — true for Bench/Verify (single-threaded
   * driver loop), the only callers that also sweep().
   */
 object PinnedStorage {
-  private val ids = scala.collection.mutable.Map.empty[SparkContext, scala.collection.mutable.Set[Int]]
+  private val ids = mutable.Map.empty[SparkContext, mutable.Set[Int]]
+
+  /** One frame per running surface build: storage its [[unpinned]]
+    * blocks added, which that build must not pin. */
+  private var carved: List[mutable.Set[Int]] = Nil
 
   private def prune(): Unit = ids.filterInPlace((sc, _) => !sc.isStopped)
 
-  /** Run `create` (which persists/checkpoints something) and pin whatever
-    * storage it added, so sweep() leaves it alone.
+  /** A memo of one pinned artifact per (session, corpus). The first call
+    * for a key runs `create` and pins every storage block it adds
+    * (except what an [[unpinned]] block inside it adds), so sweep()
+    * leaves the artifact alone; later calls return the memoized value.
     */
-  def pin[T](s: SparkSession)(create: => T): T = synchronized {
+  final class Surface[V] private[PinnedStorage] {
+    private val entries = mutable.Map.empty[(SparkSession, String), V]
+
+    def apply(s: SparkSession, dir: String)(create: => V): V = PinnedStorage.synchronized {
+      entries.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
+      entries.getOrElseUpdate((s, dir), pin(s)(create))
+    }
+  }
+
+  def surface[V]: Surface[V] = new Surface[V]
+
+  private def pin[T](s: SparkSession)(create: => T): T = {
     prune()
     val sc = s.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val r = create
-    ids.getOrElseUpdate(sc, scala.collection.mutable.Set.empty) ++=
-      sc.getPersistentRDDs.keySet.diff(before)
+    val excluded = mutable.Set.empty[Int]
+    carved = excluded :: carved
+    val r = try create finally carved = carved.tail
+    ids.getOrElseUpdate(sc, mutable.Set.empty) ++=
+      sc.getPersistentRDDs.keySet.diff(before).diff(excluded)
+    r
+  }
+
+  /** Runs `build` inside a surface's `create` without pinning the
+    * storage it adds — a build intermediate the between-query sweep must
+    * still reclaim. Surfaces built inside `build` pin their own storage
+    * as usual.
+    */
+  def unpinned[T](s: SparkSession)(build: => T): T = synchronized {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val r = build
+    carved.headOption.foreach(_ ++= s.sparkContext.getPersistentRDDs.keySet.diff(before))
     r
   }
 
@@ -48,7 +83,7 @@ object PinnedStorage {
   def sweep(s: SparkSession, blocking: Boolean = false): Unit = synchronized {
     prune()
     val sc = s.sparkContext
-    val pinned = ids.getOrElse(sc, scala.collection.mutable.Set.empty[Int])
+    val pinned = ids.getOrElse(sc, mutable.Set.empty[Int])
     sc.getPersistentRDDs
       .filterNot { case (id, _) => pinned.contains(id) }
       .values.foreach(_.unpersist(blocking))

@@ -21,14 +21,9 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
-      // drop non-pinned localCheckpoint/cache blocks so ~110 sequential
-      // query dumps don't accumulate storage in one JVM (same as Bench)
-      PinnedStorage.sweep(spark)
-      try org.apache.spark.sql.graftaccess.StateStoreAccess.unloadAll()
-      catch { case _: Throwable => () }
-      TmpDirs.sweepOwned(TmpDirs.root)
+      LocalSession.settle(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

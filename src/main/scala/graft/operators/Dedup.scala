@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -73,20 +73,48 @@ object Dedup {
         FROM sh CROSS JOIN range(0, 16) i
         GROUP BY 1, 2)"""
 
+  /** SQL twin of [[bandsOf]]: CTE `name` (doc_id, band, bkey), the `mh`
+    * signatures cut into bands of `r` rows. */
+  private def bandsSql(name: String, r: Int): String =
+    s"""$name AS (
+        SELECT doc_id, CAST(i // $r AS INT) AS band,
+               md5(concat_ws(',', ${(0 until r).map(j =>
+                 s"max(CASE WHEN i % $r = $j THEN h END)").mkString(", ")})) AS bkey
+        FROM mh GROUP BY 1, 2)"""
+
+  /** SQL twin of [[bandPairs]]: CTE `name` (ia < ib), the distinct pairs
+    * sharing a bucket of the `bands` CTE. */
+  private def bandPairsSql(name: String, bands: String): String =
+    s"""$name AS (
+        SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
+        FROM $bands a JOIN $bands b
+          ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)"""
+
   private[operators] val lshCandsSql: String =
     s"""$shMhSql,
-      bands AS (
-        SELECT doc_id, CAST(i // 4 AS INT) AS band,
-               md5(concat_ws(',',
-                 max(CASE WHEN i % 4 = 0 THEN h END),
-                 max(CASE WHEN i % 4 = 1 THEN h END),
-                 max(CASE WHEN i % 4 = 2 THEN h END),
-                 max(CASE WHEN i % 4 = 3 THEN h END))) AS bkey
-        FROM mh GROUP BY 1, 2),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)"""
+      ${bandsSql("bands", 4)},
+      ${bandPairsSql("cand", "bands")}"""
+
+  /** Over an `sh` CTE: per-doc shingle counts `sz` and the co-shingle
+    * intersection counts `pair` (ia < ib) — the SQL side of
+    * [[verifyJaccard]]'s count stages. */
+  private val szSql: String = "sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)"
+  private val pairSql: String =
+    """pair AS (
+        SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS inter
+        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2)"""
+
+  /** Over an `sh` CTE: `sz`, `pair` and `jp` (ia, ib, jaccard ≥ 0.5). */
+  private val jpSql: String =
+    s"""$szSql,
+      $pairSql,
+      jp AS (
+        SELECT ia, ib, CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
+        FROM pair
+        JOIN sz sa ON sa.doc_id = ia
+        JOIN sz sb ON sb.doc_id = ib
+        WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5)"""
 
   /** Exact dedup: canonical doc per identical text (hash-groupBy). */
   val exact: QueryDef = QueryDef(
@@ -192,17 +220,7 @@ object Dedup {
   /** SQL twin of [[jaccardPairs]] — a CTE body yielding (ia, ib, jaccard). */
   private[operators] val jaccardPairsSql: String =
     s"""sh AS ($shinglesSql),
-      |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      |pair AS (
-      |  SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS inter
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |jp AS (
-      |  SELECT ia, ib, CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-      |  FROM pair
-      |  JOIN sz sa ON sa.doc_id = ia
-      |  JOIN sz sb ON sb.doc_id = ib
-      |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5)""".stripMargin
+      $jpSql"""
 
   /** Exact n-gram Jaccard ≥ 0.5: the pair surface itself. Jaccard is an
     * exact BIGINT/BIGINT division → bit-identical double.
@@ -211,19 +229,8 @@ object Dedup {
     "dedup_ngram_jaccard",
     (s, dir) => jaccardPairs(s, dir).orderBy("ia", "ib"),
     Some(s"""
-      WITH sh AS ($shinglesSql),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pair AS (
-        SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
-      SELECT ia, ib,
-             CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-      FROM pair
-      JOIN sz sa ON sa.doc_id = ia
-      JOIN sz sb ON sb.doc_id = ib
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
-      ORDER BY ia, ib
+      WITH $jaccardPairsSql
+      SELECT ia, ib, jaccard FROM jp ORDER BY ia, ib
     """.stripMargin.trim))
 
   /** The CAPPED pair surface as an oracle-gated query: df cap = 5 (hot
@@ -241,18 +248,8 @@ object Dedup {
       WITH sh0 AS ($shinglesSql),
       hot AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > 5),
       sh AS (SELECT * FROM sh0 WHERE shingle NOT IN (SELECT shingle FROM hot)),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pair AS (
-        SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
-      SELECT ia, ib,
-             CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-      FROM pair
-      JOIN sz sa ON sa.doc_id = ia
-      JOIN sz sb ON sb.doc_id = ib
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
-      ORDER BY ia, ib
+      $jpSql
+      SELECT ia, ib, jaccard FROM jp ORDER BY ia, ib
     """.stripMargin.trim))
 
   /** Prefix-filter candidate pairs (SSJoin/PPJoin family: Chaudhuri et
@@ -299,12 +296,10 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact Jaccard ≥ 0.5 via prefix filtering + candidate-scoped verify:
-    * same result (and oracle) as `dedup_ngram_jaccard`, third physical
-    * strategy. Verification reuses the estimate_quality shape — prune
-    * the shingle table to candidate docs with one broadcast semi-join,
-    * co-shingle-join the pruned table, semi-join back to the candidate
-    * set — so the exact pass never touches non-candidate documents.
+  /** Exact Jaccard ≥ 0.5 via prefix filtering + the candidate-scoped
+    * [[verifyJaccard]]: same result (and oracle) as
+    * `dedup_ngram_jaccard`, third physical strategy — the exact pass
+    * never touches non-candidate documents.
     */
   val prefixFilterJaccard: QueryDef = QueryDef(
     "dedup_prefix_filter_jaccard",
@@ -312,40 +307,76 @@ object Dedup {
       val sh = shingleSurface(s, dir)
       // the candidate pairs are tiny and probed twice below
       val Guarded(cands, _, bc) = BroadcastGuard(prefixCandidatePairs(sh, 0.5), PairRowCap)
-      val candDocs = cands.select(col("ia").as("doc_id"))
-        .union(cands.select(col("ib").as("doc_id"))).distinct()
-      // candidate-pruned shingles (referenced 2×: intersections, sizes)
-      // are small by construction — broadcast one side of the
-      // intersection self-join behind a row-count guard (r18: un-hinted
-      // this planned a SortMergeJoin, exchanging + sorting the shingle
-      // strings twice; past the cap the hint drops and the join stays
-      // keyed). The cap is the SHINGLE-row cap, not the slim-pair cap —
-      // these rows carry the strings (r18 advice)
-      val Guarded(shC, _, shBc) = BroadcastGuard(sh.join(bc(candDocs), Seq("doc_id")),
-        ShingleRowCap)
-      val sz = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val inter = shC.as("ca").join(shBc(shC.as("cb")),
-          col("ca.shingle") === col("cb.shingle") &&
-          col("ca.doc_id") < col("cb.doc_id"))
-        .select(col("ca.doc_id").as("ia"), col("cb.doc_id").as("ib"))
-        .join(bc(cands), Seq("ia", "ib"), "left_semi")
-        .groupBy("ia", "ib").agg(count(lit(1)).as("inter"))
-      inter
-        // sz covers CANDIDATE docs only (shC is candidate-pruned), so it
-        // is small by construction at any corpus scale - broadcast both
-        // sides instead of two shuffled sort-merge joins
-        .join(bc(sz.as("sa")), col("ia") === col("sa.doc_id"))
-        .join(bc(sz.as("sb")), col("ib") === col("sb.doc_id"))
-        .select(col("ia"), col("ib"),
-          (col("inter").cast("double") /
-            (col("sa.n") + col("sb.n") - col("inter"))).as("jaccard"))
+      // candidate-pruned shingles are small by construction — broadcast
+      // one side of the intersection self-join behind a row-count guard
+      // (r18: un-hinted this planned a SortMergeJoin, exchanging +
+      // sorting the shingle strings twice; past the cap the hint drops
+      // and the join stays keyed). The cap is the SHINGLE-row cap, not
+      // the slim-pair cap — these rows carry the strings (r18 advice)
+      verifyJaccard(sh, cands, "ia", "ib", cands, bc,
+        df => { val g = BroadcastGuard(df, ShingleRowCap); (g.df, g.hint) })(
+        identity)(j => Seq(col("ia"), col("ib"), j.as("jaccard")))
         .filter(col("jaccard") >= 0.5)
         .orderBy("ia", "ib")
     },
-    Some(s"""
-      WITH $jaccardPairsSql
-      SELECT ia, ib, jaccard FROM jp ORDER BY ia, ib
-    """.stripMargin.trim))
+    ngramJaccard.oracle)
+
+  /** THE candidate-scoped exact-Jaccard verify, shared by every query
+    * that checks candidate pairs against a shingle table
+    * ([[prefixFilterJaccard]], [[minhashEstimateQuality]],
+    * [[minhashIncrementalDelta]], [[deltaNearDupsFromSketch]]):
+    *  1. prune `sh` to the candidate documents (the ids in columns `a`
+    *     and `b` of `cands`) with one hinted semi-join, materialized by
+    *     `materialize`, which also returns the hint for the self-join's
+    *     build side. Intersections between two candidate docs and their
+    *     shingle counts are unchanged by the pruning, so the output is
+    *     bit-identical to the corpus-wide form while every shuffle below
+    *     moves the pruned table (r5: the unpruned estimate gate took
+    *     11.0 s);
+    *  2. co-shingle self-join of the pruned table, semi-joined back to
+    *     the candidate set on its normalized (ia < ib) `key` and grouped
+    *     into `inter` — never the pair-first expansion (cands ⋈ sh ⋈ sh),
+    *     which materialized |pair| × |shingles(doc)| rows before the
+    *     shingle equi-join could cut them (the r6 12.4 s hotspot);
+    *  3. `orient` turns (ia, ib, inter) into the caller's frame keyed by
+    *     (`a`, `b`); the per-doc counts join on both keys and `project`
+    *     receives the Jaccard column. `orient` may be an outer join that
+    *     leaves `inter` NULL (a candidate pair sharing no shingle), so
+    *     the Jaccard reads NULL as 0.
+    * `hint` goes on every candidate-scoped frame (candidate docs, key,
+    * counts): they are small by construction at any corpus scale, so
+    * each join broadcasts instead of shuffling.
+    * CORRECTNESS DEPENDENCY: `sh` holds DISTINCT (doc_id, shingle) rows,
+    * as [[shingles]] emits them.
+    */
+  private[operators] def verifyJaccard(
+      sh: DataFrame, cands: DataFrame, a: String, b: String, key: DataFrame,
+      hint: DataFrame => DataFrame,
+      materialize: DataFrame => (DataFrame, DataFrame => DataFrame))(
+      orient: DataFrame => DataFrame)(
+      project: Column => Seq[Column]): DataFrame = {
+    val candDocs = cands.select(col(a).as("doc_id"))
+      .union(cands.select(col(b).as("doc_id"))).distinct()
+    // referenced 2× (intersections, sizes)
+    val (shC, buildHint) = materialize(sh.join(hint(candDocs), Seq("doc_id")))
+    val sz = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val inter = shC.as("ca").join(buildHint(shC.as("cb")),
+        col("ca.shingle") === col("cb.shingle") &&
+        col("ca.doc_id") < col("cb.doc_id"))
+      .select(col("ca.doc_id").as("ia"), col("cb.doc_id").as("ib"))
+      .join(hint(key), Seq("ia", "ib"), "left_semi")
+      .groupBy("ia", "ib").agg(count(lit(1)).as("inter"))
+    val n = coalesce(col("inter"), lit(0L))
+    orient(inter)
+      .join(hint(sz.as("sa")), col(a) === col("sa.doc_id"))
+      .join(hint(sz.as("sb")), col(b) === col("sb.doc_id"))
+      .select(project(n.cast("double") / (col("sa.n") + col("sb.n") - n)): _*)
+  }
+
+  /** [[verifyJaccard]]'s materialization for callers that consume the
+    * pruned table in the same action: an eager checkpoint, no hint. */
+  private[operators] val checkpointed: DataFrame => (DataFrame, DataFrame => DataFrame) =
+    df => (df.localCheckpoint(true), identity)
 
   /** Containment dedup: overlap / min(|x|,|y|) ≥ 0.8 — the asymmetric
     * twin of Jaccard. A short document quoted inside a long one has low
@@ -373,11 +404,8 @@ object Dedup {
     },
     Some(s"""
       WITH sh AS ($shinglesSql),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pair AS (
-        SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
+      $szSql,
+      $pairSql
       SELECT ia, ib,
              CAST(inter AS DOUBLE) / LEAST(sa.n, sb.n) AS containment,
              CASE WHEN sa.n <= sb.n THEN ia ELSE ib END AS contained_doc_id
@@ -396,17 +424,42 @@ object Dedup {
     * so the sketch definition cannot drift between them.
     */
   private[operators] def minhashOf(sh: DataFrame): DataFrame = {
-    val minCols = (0 until 16).map(i =>
-      min(md5(concat(lit(s"$i:"), col("shingle")).cast("binary"))).as(s"h$i"))
+    val minCols = minhashSlots
     sh.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
   }
 
-  /** 4×4 banding of [[minhashOf]]'s signature: (doc_id, band, bkey). */
-  private[operators] def bandsOf(mh: DataFrame): DataFrame = {
-    val bandKeys = (0 until 4).map(b =>
-      md5(concat_ws(",", (0 until 4).map(r => col(s"h${b * 4 + r}")): _*).cast("binary")))
+  /** The 16 slot aggregates h0..h15 over a `shingle` column. */
+  private def minhashSlots: Seq[Column] = (0 until 16).map(i =>
+    min(md5(concat(lit(s"$i:"), col("shingle")).cast("binary"))).as(s"h$i"))
+
+  /** Matching slots between the signatures joined as `ma` and `mb`
+    * (16 × the estimated Jaccard). */
+  private def slotMatches: Column = (0 until 16)
+    .map(i => when(col(s"ma.h$i") === col(s"mb.h$i"), 1).otherwise(0))
+    .reduce(_ + _)
+
+  /** (ia, ib) pairs with both docs' signatures joined as `ma` and `mb`. */
+  private def withSignatures(pairs: DataFrame, mh: DataFrame): DataFrame =
+    pairs
+      .join(mh.as("ma"), col("ia") === col("ma.doc_id"))
+      .join(mh.as("mb"), col("ib") === col("mb.doc_id"))
+
+  /** Banding of [[minhashOf]]'s signature into 16 / `r` bands of `r`
+    * rows (default 4×4): (doc_id, band, bkey). */
+  private[operators] def bandsOf(mh: DataFrame, r: Int = 4): DataFrame = {
+    val bandKeys = (0 until 16 / r).map(b =>
+      md5(concat_ws(",", (0 until r).map(j => col(s"h${b * r + j}")): _*).cast("binary")))
     mh.select(col("doc_id"), posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
   }
+
+  /** LSH candidates: the distinct (ia < ib) pairs sharing a band bucket —
+    * O(Σ bucket²), never all-pairs. */
+  private def bandPairs(bands: DataFrame): DataFrame =
+    bands.as("a").join(bands.as("b"),
+        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
+      .distinct()
 
   /** Session-pinned sketch surface: the (shingle table, 16-hash minhash
     * signature table) pair memoized per (session, corpus) — the persisted
@@ -423,8 +476,8 @@ object Dedup {
     * deriving them per probe is cheaper than holding a third pinned
     * frame across the whole bench run.
     */
-  private val shingleCache = new graft.SessionCache[DataFrame]
-  private val sketchCache = new graft.SessionCache[(DataFrame, DataFrame)]
+  private val shingleTable = graft.PinnedStorage.surface[DataFrame]
+  private val sketchTables = graft.PinnedStorage.surface[(DataFrame, DataFrame)]
 
   /** The corpus shingle table alone, pinned per (session, corpus) — the
     * layer of the sketch index the NGRAM family also probes (r7):
@@ -435,17 +488,12 @@ object Dedup {
     * 16-hash signature build to its own timed window.
     */
   private[operators] def shingleSurface(s: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrElseUpdate(s, dir) {
-      graft.PinnedStorage.pin(s) {
-        shingles(Tables.documents(s, dir)).localCheckpoint(true)
-      }
-    }
+    shingleTable(s, dir)(shingles(Tables.documents(s, dir)).localCheckpoint(true))
 
   private[operators] def sketchSurface(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    sketchCache.getOrElseUpdate(s, dir) {
+    sketchTables(s, dir) {
       val sh = shingleSurface(s, dir)
-      val mh = graft.PinnedStorage.pin(s) { minhashOf(sh).localCheckpoint(true) }
-      (sh, mh)
+      (sh, minhashOf(sh).localCheckpoint(true))
     }
 
   /** MinHash + LSH candidate pairs: 16 minhashes, banded 4×4; pairs
@@ -456,13 +504,8 @@ object Dedup {
     "dedup_minhash_lsh",
     (s, dir) => {
       val sh = shingles(Tables.documents(s, dir))
-      val bands = bandsOf(minhashOf(sh))
-        .localCheckpoint(true)  // self-joined below; avoids recomputing the minhash pipeline twice
-      bands.as("a").join(bands.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
-        .distinct()
+      bandPairs(bandsOf(minhashOf(sh))
+          .localCheckpoint(true))  // self-joined; avoids recomputing the minhash pipeline twice
         .orderBy("ia", "ib")
     },
     Some(s"""
@@ -488,46 +531,15 @@ object Dedup {
       val (sh, mh) = sketchSurface(s, dir)
       // the candidate pairs are probed 3× below
       val Guarded(cands, _, bc) = BroadcastGuard(lshCandsFromSketch(s, dir), PairRowCap)
-      // The whole exact side is scoped to CANDIDATE DOCUMENTS before any
-      // further work: one broadcast semi-join prunes the shingle table to
-      // the docs the LSH stage surfaced (at scale: orders of magnitude
-      // smaller than the corpus). Intersections between two candidate
-      // docs and per-doc shingle counts are unchanged by that pruning, so
-      // the output is bit-identical — but the 3 full-shingle-table
-      // shuffles the unpruned form paid (inter ×2, sz) become shuffles of
-      // the pruned table (r5: 11.0 s → this is the round-6 hotspot fix).
-      val candDocs = cands.select(col("ia").as("doc_id"))
-        .union(cands.select(col("ib").as("doc_id"))).distinct()
-      val shC = sh.join(bc(candDocs), Seq("doc_id"))
-        .localCheckpoint(true)  // referenced 2× (intersections, sizes)
-      val matchCount = (0 until 16)
-        .map(i => when(col(s"ma.h$i") === col(s"mb.h$i"), 1).otherwise(0))
-        .reduce(_ + _)
-      val est = bc(cands)
-        .join(mh.as("ma"), col("ia") === col("ma.doc_id"))
-        .join(mh.as("mb"), col("ib") === col("mb.doc_id"))
+      val est = withSignatures(bc(cands), mh)
         .select(col("ia"), col("ib"),
-          (matchCount.cast("double") / 16.0).as("est_jaccard"))
-      val sz = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      // exact intersection counts ONLY for the candidate pairs: a
-      // co-shingle self-join of the pruned shingle table, semi-joined
-      // back to the broadcast candidate set — never the full posting-list
-      // pair expansion over the corpus.
-      val inter = shC.as("ca").join(shC.as("cb"),
-          col("ca.shingle") === col("cb.shingle") &&
-          col("ca.doc_id") < col("cb.doc_id"))
-        .select(col("ca.doc_id").as("ia"), col("cb.doc_id").as("ib"))
-        .join(bc(cands), Seq("ia", "ib"), "left_semi")
-        .groupBy("ia", "ib").agg(count(lit(1)).as("inter"))
-      val exactJac = (coalesce(col("inter"), lit(0L)).cast("double") /
-        (col("sa.n") + col("sb.n") - coalesce(col("inter"), lit(0L))))
-      est.join(inter, Seq("ia", "ib"), "left")
-        // candidate-scoped sz: broadcast (see prefixFilterJaccard note)
-        .join(bc(sz.as("sa")), col("ia") === col("sa.doc_id"))
-        .join(bc(sz.as("sb")), col("ib") === col("sb.doc_id"))
-        .select(col("ia"), col("ib"), col("est_jaccard"),
-          exactJac.as("jaccard"),
-          abs(col("est_jaccard") - exactJac).as("abs_err"))
+          (slotMatches.cast("double") / 16.0).as("est_jaccard"))
+      // every candidate keeps its estimate row: one sharing no shingle
+      // reads jaccard 0
+      verifyJaccard(sh, cands, "ia", "ib", cands, bc, checkpointed)(
+        est.join(_, Seq("ia", "ib"), "left"))(j =>
+        Seq(col("ia"), col("ib"), col("est_jaccard"), j.as("jaccard"),
+          abs(col("est_jaccard") - j).as("abs_err")))
         .orderBy("ia", "ib")
     },
     Some(s"""
@@ -539,11 +551,8 @@ object Dedup {
         JOIN mh ma ON ma.doc_id = c.ia
         JOIN mh mb ON mb.doc_id = c.ib AND mb.i = ma.i
         GROUP BY 1, 2),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pair AS (
-        SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
+      $szSql,
+      $pairSql
       SELECT e.ia, e.ib,
              CAST(e.k AS DOUBLE) / 16.0 AS est_jaccard,
              CAST(COALESCE(p.inter, 0) AS DOUBLE) / (sa.n + sb.n - COALESCE(p.inter, 0)) AS jaccard,
@@ -561,8 +570,8 @@ object Dedup {
     * arrival partition) is checked against the EXISTING corpus only.
     * Candidate generation is the one-sided LSH band join (delta bands ⋈
     * corpus bands), so cost is O(|delta| × bucket), never corpus², and
-    * the exact-Jaccard verification is scoped to candidate documents
-    * with the same broadcast pruning as the estimate-quality gate. The
+    * the exact-Jaccard verification is the candidate-scoped
+    * [[verifyJaccard]] the estimate-quality gate also runs. The
     * sketch itself comes from the session-pinned [[sketchSurface]] — the
     * persisted index a production corpus maintains (AnnSearch's prebuilt
     * pattern) — and is built from one snapshot covering both sides, so
@@ -575,69 +584,31 @@ object Dedup {
       val (sh, mh) = sketchSurface(s, dir)
       val bands = bandsOf(mh)
       val isNew = col("doc_id") % 10 === 0
-      // the candidate pairs are probed 2× (candDocs, normalized pair key)
+      // the candidate pairs are probed 2× (candidate docs, pair key)
       val Guarded(cands, _, bc) = BroadcastGuard(bands.filter(isNew).as("n")
         .join(bands.filter(!isNew).as("o"),
           col("n.band") === col("o.band") && col("n.bkey") === col("o.bkey"))
         .select(col("n.doc_id").as("new_id"), col("o.doc_id").as("old_id"))
         .distinct(), PairRowCap)
-      val candDocs = cands.select(col("new_id").as("doc_id"))
-        .union(cands.select(col("old_id").as("doc_id"))).distinct()
-      val shC = sh.join(bc(candDocs), Seq("doc_id"))
-        .localCheckpoint(true)  // referenced 2× (intersections, sizes)
-      val sz = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      // Exact intersections via the estimate_quality pattern: a co-shingle
-      // self-join of the candidate-pruned shingle table, semi-joined back
-      // to the (broadcast) candidate set on a normalized (lo, hi) pair key
-      // — NOT the r6 pair-first expansion (cands ⋈ shC ⋈ shC), which
-      // materialized |pair| × |shingles(new doc)| rows before the shingle
-      // equi-join could cut them (the 12.4 s driver-bench hotspot).
-      val candsNorm = cands.select(
-        least(col("new_id"), col("old_id")).as("ia"),
-        greatest(col("new_id"), col("old_id")).as("ib"))
       // orientation recovery needs no join-back: every candidate pair is
       // one delta doc (doc_id % 10 == 0) + one corpus doc, so the pair
       // key itself says which side is the new arrival
-      val inter = shC.as("ca").join(shC.as("cb"),
-          col("ca.shingle") === col("cb.shingle") &&
-          col("ca.doc_id") < col("cb.doc_id"))
-        .select(col("ca.doc_id").as("ia"), col("cb.doc_id").as("ib"))
-        .join(bc(candsNorm), Seq("ia", "ib"), "left_semi")
-        .groupBy("ia", "ib").agg(count(lit(1)).as("inter"))
-        .select(
+      verifyJaccard(sh, cands, "new_id", "old_id", normalizedPairs(cands), bc,
+        checkpointed)(_.select(
           when(col("ia") % 10 === 0, col("ia")).otherwise(col("ib")).as("new_id"),
           when(col("ia") % 10 === 0, col("ib")).otherwise(col("ia")).as("old_id"),
-          col("inter"))
-      inter
-        // candidate-scoped sz: broadcast (see prefixFilterJaccard note)
-        .join(bc(sz.as("sa")), col("new_id") === col("sa.doc_id"))
-        .join(bc(sz.as("sb")), col("old_id") === col("sb.doc_id"))
-        .select(col("new_id"), col("old_id"),
-          (col("inter").cast("double") / (col("sa.n") + col("sb.n") - col("inter")))
-            .as("jaccard"))
+          col("inter")))(j => Seq(col("new_id"), col("old_id"), j.as("jaccard")))
         .filter(col("jaccard") >= 0.5)
         .orderBy("new_id", "old_id")
     },
     Some(s"""
-      WITH sh AS ($shinglesSql),
-      mh AS (
-        SELECT doc_id, CAST(i.range AS INT) AS i,
-               min(md5(CAST(i.range AS VARCHAR) || ':' || shingle)) AS h
-        FROM sh CROSS JOIN range(0, 16) i
-        GROUP BY 1, 2),
-      bands AS (
-        SELECT doc_id, CAST(i // 4 AS INT) AS band,
-               md5(concat_ws(',',
-                 max(CASE WHEN i % 4 = 0 THEN h END),
-                 max(CASE WHEN i % 4 = 1 THEN h END),
-                 max(CASE WHEN i % 4 = 2 THEN h END),
-                 max(CASE WHEN i % 4 = 3 THEN h END))) AS bkey
-        FROM mh GROUP BY 1, 2),
+      WITH $shMhSql,
+      ${bandsSql("bands", 4)},
       cand AS (
         SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
         FROM bands n JOIN bands o ON n.band = o.band AND n.bkey = o.bkey
         WHERE n.doc_id % 10 = 0 AND o.doc_id % 10 <> 0),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      $szSql,
       pair AS (
         SELECT c.new_id, c.old_id, count(*) AS inter
         FROM cand c
@@ -686,40 +657,7 @@ object Dedup {
         .select("new_id", "old_id", "jaccard")
         .orderBy("new_id", "old_id")
     },
-    Some(s"""
-      WITH sh AS ($shinglesSql),
-      mh AS (
-        SELECT doc_id, CAST(i.range AS INT) AS i,
-               min(md5(CAST(i.range AS VARCHAR) || ':' || shingle)) AS h
-        FROM sh CROSS JOIN range(0, 16) i
-        GROUP BY 1, 2),
-      bands AS (
-        SELECT doc_id, CAST(i // 4 AS INT) AS band,
-               md5(concat_ws(',',
-                 max(CASE WHEN i % 4 = 0 THEN h END),
-                 max(CASE WHEN i % 4 = 1 THEN h END),
-                 max(CASE WHEN i % 4 = 2 THEN h END),
-                 max(CASE WHEN i % 4 = 3 THEN h END))) AS bkey
-        FROM mh GROUP BY 1, 2),
-      cand AS (
-        SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
-        FROM bands n JOIN bands o ON n.band = o.band AND n.bkey = o.bkey
-        WHERE n.doc_id % 10 = 0 AND o.doc_id % 10 <> 0),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      pair AS (
-        SELECT c.new_id, c.old_id, count(*) AS inter
-        FROM cand c
-        JOIN sh a ON a.doc_id = c.new_id
-        JOIN sh b ON b.doc_id = c.old_id AND b.shingle = a.shingle
-        GROUP BY 1, 2)
-      SELECT new_id, old_id,
-             CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-      FROM pair
-      JOIN sz sa ON sa.doc_id = new_id
-      JOIN sz sb ON sb.doc_id = old_id
-      WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.5
-      ORDER BY new_id, old_id
-    """.stripMargin.trim))
+    minhashIncrementalDelta.oracle)
 
   /** Delta-batch sketch: the (shingles, LSH bands) pair for ONE arrival
     * batch. `materialize = true` (the growth loop) eagerly checkpoints
@@ -750,9 +688,7 @@ object Dedup {
     * arrival batch (its [[deltaSketch]]) against a corpus sketch index.
     * Candidates come from the one-sided band join (batch bands ⋈ index
     * bands — O(|batch| × bucket), never corpus²); exact verification is
-    * the estimate_quality shape (broadcast-prune the combined shingle
-    * surface to candidate docs, co-shingle self-join, broadcast
-    * semi-join back on the normalized pair key). Orientation is
+    * [[verifyJaccard]] over the combined shingle surface. Orientation is
     * recovered with a broadcast join against the batch's own doc ids —
     * the caller guarantees the index excludes the CURRENT batch, so
     * every candidate pair is one batch doc + one indexed doc.
@@ -774,16 +710,7 @@ object Dedup {
         col("n.band") === col("o.band") && col("n.bkey") === col("o.bkey") &&
         col("n.doc_id") =!= col("o.doc_id"))
       .select(col("n.doc_id").as("new_id"), col("o.doc_id").as("old_id"))
-      .distinct())  // probed 2× (candDocs, normalized pair key)
-    val candDocs = cands.select(col("new_id").as("doc_id"))
-      .union(cands.select(col("old_id").as("doc_id"))).distinct()
-    val shC = maybeCheckpoint(
-      corpusSh.unionByName(bsh).join(broadcast(candDocs), Seq("doc_id")))
-      // referenced 2× (intersections, sizes)
-    val sz = shC.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val candsNorm = cands.select(
-      least(col("new_id"), col("old_id")).as("ia"),
-      greatest(col("new_id"), col("old_id")).as("ib"))
+      .distinct())  // probed 2× (candidate docs, pair key)
     // any near-dup's batch-side doc has shingles by construction, so the
     // batch ids seen in bsh suffice for orientation recovery.
     // Broadcasts here stay UNCONDITIONAL (unlike the batch tails'
@@ -791,25 +718,22 @@ object Dedup {
     // construction, and a per-micro-batch count action would cost more
     // than the insurance buys.
     val deltaIds = bsh.select(col("doc_id").as("did")).distinct()
-    shC.as("ca").join(shC.as("cb"),
-        col("ca.shingle") === col("cb.shingle") &&
-        col("ca.doc_id") < col("cb.doc_id"))
-      .select(col("ca.doc_id").as("ia"), col("cb.doc_id").as("ib"))
-      .join(candsNorm.hint("broadcast"), Seq("ia", "ib"), "left_semi")
-      .groupBy("ia", "ib").agg(count(lit(1)).as("inter"))
-      .join(broadcast(deltaIds), col("ia") === col("did"), "left")
-      .select(
-        when(col("did").isNotNull, col("ia")).otherwise(col("ib")).as("new_id"),
-        when(col("did").isNotNull, col("ib")).otherwise(col("ia")).as("old_id"),
-        col("inter"))
-      // candidate-scoped sz: broadcast (see prefixFilterJaccard note)
-      .join(broadcast(sz.as("sa")), col("new_id") === col("sa.doc_id"))
-      .join(broadcast(sz.as("sb")), col("old_id") === col("sb.doc_id"))
-      .select(col("new_id"), col("old_id"),
-        (col("inter").cast("double") / (col("sa.n") + col("sb.n") - col("inter")))
-          .as("jaccard"))
+    verifyJaccard(corpusSh.unionByName(bsh), cands, "new_id", "old_id",
+      normalizedPairs(cands), broadcast(_), df => (maybeCheckpoint(df), identity))(
+      _.join(broadcast(deltaIds), col("ia") === col("did"), "left")
+        .select(
+          when(col("did").isNotNull, col("ia")).otherwise(col("ib")).as("new_id"),
+          when(col("did").isNotNull, col("ib")).otherwise(col("ia")).as("old_id"),
+          col("inter")))(j => Seq(col("new_id"), col("old_id"), j.as("jaccard")))
       .filter(col("jaccard") >= 0.5)
   }
+
+  /** (new_id, old_id) candidates as the (ia < ib) key [[verifyJaccard]]
+    * semi-joins on. */
+  private def normalizedPairs(cands: DataFrame): DataFrame =
+    cands.select(
+      least(col("new_id"), col("old_id")).as("ia"),
+      greatest(col("new_id"), col("old_id")).as("ib"))
 
   /** [[deltaNearDupsFromSketch]] over raw (doc_id, text) arrival rows.
     * `eager = false` is the streaming micro-batch shape (lazy sketch, no
@@ -1152,11 +1076,11 @@ object Dedup {
     * curation steps (PipelineCompositions) probe. A production pipeline
     * computes this once per corpus snapshot and every curation step reads
     * the stored table (the same amortization as AnnSearch.index and
-    * NpmReplayOps.replayCache); the dedup_* gate queries keep building
+    * NpmReplayOps.replayFor); the dedup_* gate queries keep building
     * their own surfaces so their bench entries stay honest build costs.
     */
-  private val pairsCache = new graft.SessionCache[DataFrame]
-  private val surfaceCache = new graft.SessionCache[(DataFrame, DataFrame)]
+  private val pairTable = graft.PinnedStorage.surface[DataFrame]
+  private val pairLabelTables = graft.PinnedStorage.surface[(DataFrame, DataFrame)]
 
   /** The near-dup PAIR layer alone, pinned per (session, corpus) — r7
     * layering, mirroring [[shingleSurface]]/[[sketchSurface]]: the
@@ -1167,22 +1091,17 @@ object Dedup {
     * cache), exactly as `dedup_minhash_lsh` carries the sketch build.
     */
   private[operators] def pairsSurface(s: SparkSession, dir: String): DataFrame =
-    pairsCache.getOrElseUpdate(s, dir) {
-      // Pin ONLY the frames the queries keep probing. The builders'
-      // internal eager checkpoints (shingle table, edge table, per-round
-      // label frames) materialize OUTSIDE the pin blocks, so the
-      // between-query sweep can still reclaim them — pinning them too
-      // would reintroduce exactly the storage accumulation PinnedStorage
-      // exists to prevent.
-      graft.PinnedStorage.pin(s) { jaccardPairs(s, dir).localCheckpoint(true) }
-    }
+    pairTable(s, dir)(jaccardPairs(s, dir).localCheckpoint(true))
 
   private[operators] def pairSurface(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    surfaceCache.getOrElseUpdate(s, dir) {
+    pairLabelTables(s, dir) {
       val pairs = pairsSurface(s, dir)
-      val labelsPlan = componentLabelsOf(s, dir, pairs)
-      val labels = graft.PinnedStorage.pin(s) { labelsPlan.localCheckpoint(true) }
-      (pairs, labels)
+      // Pin ONLY the frames the queries keep probing: the propagation
+      // loop's eager checkpoints (edge table, per-round label frames)
+      // stay sweepable — pinning them too would reintroduce exactly the
+      // storage accumulation PinnedStorage exists to prevent.
+      val labelsPlan = graft.PinnedStorage.unpinned(s)(componentLabelsOf(s, dir, pairs))
+      (pairs, labelsPlan.localCheckpoint(true))
     }
 
   /** LSH candidate pairs against the session-pinned sketch (the probe
@@ -1191,15 +1110,8 @@ object Dedup {
     * unmaterialized: multi-consumer callers materialize it through
     * [[BroadcastGuard]].
     */
-  private[operators] def lshCandsFromSketch(s: SparkSession, dir: String): DataFrame = {
-    val (_, mh) = sketchSurface(s, dir)
-    val bands = bandsOf(mh)
-    bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
-      .distinct()
-  }
+  private[operators] def lshCandsFromSketch(s: SparkSession, dir: String): DataFrame =
+    bandPairs(bandsOf(sketchSurface(s, dir)._2))
 
   /** WHO duplicates WHOM: near-dup pair mass per unordered source pair.
     * The governance artifact behind every "drop source X, it is 80%
@@ -1490,8 +1402,7 @@ object Dedup {
     "dedup_minhash_sketch_merge",
     (s, dir) => {
       val sh = shingleSurface(s, dir)
-      val slotMins = (0 until 16).map(i =>
-        min(md5(concat(lit(s"$i:"), col("shingle")).cast("binary"))).as(s"h$i"))
+      val slotMins = minhashSlots
       val partial = sh
         .withColumn("shard", pmod(hash(col("shingle")), lit(4)))
         .groupBy(col("doc_id"), col("shard"))
@@ -1504,12 +1415,7 @@ object Dedup {
         .orderBy("doc_id")
     },
     Some(s"""
-      WITH sh AS ($shinglesSql),
-      mh AS (
-        SELECT doc_id, CAST(i.range AS INT) AS i,
-               min(md5(CAST(i.range AS VARCHAR) || ':' || shingle)) AS h
-        FROM sh CROSS JOIN range(0, 16) i
-        GROUP BY 1, 2)
+      WITH $shMhSql
       SELECT doc_id, md5(string_agg(h, ',' ORDER BY i)) AS sig
       FROM mh GROUP BY doc_id ORDER BY doc_id
     """.stripMargin.trim))
@@ -1601,19 +1507,8 @@ object Dedup {
       val (_, mh) = sketchSurface(s, dir)
       def arm(nb: Int): DataFrame = {
         val r = 16 / nb
-        val keys = (0 until nb).map(b =>
-          md5(concat_ws(",", (0 until r).map(j => col(s"h${b * r + j}")): _*).cast("binary")))
-        val bands = mh.select(col("doc_id"), posexplode(array(keys: _*)).as(Seq("band", "bkey")))
-        val pairs = bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("ia"), col("b.doc_id").as("ib"))
-          .distinct()
-        pairs
-          .join(mh.as("ma"), col("ia") === col("ma.doc_id"))
-          .join(mh.as("mb"), col("ib") === col("mb.doc_id"))
-          .select((0 until 16).map(i =>
-            when(col(s"ma.h$i") === col(s"mb.h$i"), 1).otherwise(0)).reduce(_ + _).as("matches"))
+        withSignatures(bandPairs(bandsOf(mh, r)), mh)
+          .select(slotMatches.as("matches"))
           .agg(count(lit(1)).as("n_pairs"),
             count(when(col("matches") >= 8, 1)).as("n_est_dups"))
           .select(lit(nb.toLong).as("bands"), lit(r.toLong).as("rows_per_band"),
@@ -1626,15 +1521,8 @@ object Dedup {
     Some {
       def armSql(nb: Int): String = {
         val r = 16 / nb
-        s"""bands$nb AS (
-          SELECT doc_id, CAST(i // $r AS INT) AS band,
-                 md5(concat_ws(',', ${(0 until r).map(j =>
-                   s"max(CASE WHEN i % $r = $j THEN h END)").mkString(", ")})) AS bkey
-          FROM mh GROUP BY 1, 2),
-        pairs$nb AS (
-          SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
-          FROM bands$nb a JOIN bands$nb b
-            ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+        s"""${bandsSql(s"bands$nb", r)},
+        ${bandPairsSql(s"pairs$nb", s"bands$nb")},
         est$nb AS (
           SELECT p.ia, p.ib, COUNT(*) FILTER (WHERE ma.h = mb.h) AS matches
           FROM pairs$nb p
@@ -1688,15 +1576,10 @@ object Dedup {
       val bitMatch = (0 until 16)
         .map(i => when(bit("ma", i) === bit("mb", i), 1).otherwise(0))
         .reduce(_ + _)
-      val fullMatch = (0 until 16)
-        .map(i => when(col(s"ma.h$i") === col(s"mb.h$i"), 1).otherwise(0))
-        .reduce(_ + _)
-      bc(cands)
-        .join(mh.as("ma"), col("ia") === col("ma.doc_id"))
-        .join(mh.as("mb"), col("ib") === col("mb.doc_id"))
+      withSignatures(bc(cands), mh)
         .select(col("ia"), col("ib"),
           bitMatch.cast("long").as("n_bit_match"),
-          fullMatch.cast("long").as("n_full_match"))
+          slotMatches.cast("long").as("n_full_match"))
         .selectExpr("ia", "ib", "n_bit_match",
           "CAST(GREATEST(2 * n_bit_match - 16, 0) AS DOUBLE) / 16.0 AS est_jaccard_bbit",
           "CAST(n_full_match AS DOUBLE) / 16.0 AS est_jaccard_full",

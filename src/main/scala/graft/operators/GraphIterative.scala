@@ -27,7 +27,7 @@ import BroadcastGuard.{Guarded, SlimRowCap}
   */
 object GraphIterative {
 
-  private val graphCache = new graft.SessionCache[DataFrame]
+  private val graphEdges = graft.PinnedStorage.surface[DataFrame]
 
   /** THE single edge-list definition (shared-single-definition
     * discipline): distinct supplier↔part pairs mapped to disjoint even/
@@ -73,9 +73,7 @@ object GraphIterative {
     * executor memory for the whole session.)
     */
   private[operators] def graphSurface(s: SparkSession, dir: String): DataFrame =
-    graphCache.getOrElseUpdate(s, dir) {
-      graft.PinnedStorage.pin(s)(buildEdges(s, dir))
-    }
+    graphEdges(s, dir)(buildEdges(s, dir))
 
   /** PageRank (damping 0.85, 3 supersteps) over the undirected bipartite
     * supplier↔part graph from distinct lineitem pairs. Suppliers map to
@@ -280,12 +278,10 @@ object GraphIterative {
       |        SELECT DISTINCT x.pk AS a, y.pk AS b
       |        FROM sp x JOIN sp y ON x.ok = y.ok AND x.pk < y.pk)""".stripMargin
 
-  private val coOrderCache = new graft.SessionCache[DataFrame]
+  private val coOrderEdges = graft.PinnedStorage.surface[DataFrame]
 
   private[operators] def coOrderSurface(s: SparkSession, dir: String): DataFrame =
-    coOrderCache.getOrElseUpdate(s, dir) {
-      graft.PinnedStorage.pin(s)(buildCoOrderEdges(s, dir))
-    }
+    coOrderEdges(s, dir)(buildCoOrderEdges(s, dir))
 
   val triangleCount: QueryDef = QueryDef(
     "graph_triangle_count",

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -27,23 +28,37 @@ object SketchOps {
   private val D = 3      // hash rows
   private val W = 512    // cells per row
 
+  /** Per-user event counts `c`. */
+  private def userCounts(events: DataFrame): DataFrame =
+    events.groupBy("user_id").agg(count(lit(1)).as("c"))
+
+  /** THE count-min cell builder: each key's d cells (user_id, c, j, h). */
+  private def cmCells(counts: DataFrame): DataFrame =
+    counts.select(col("user_id"), col("c"),
+        explode(array((0 until D).map(lit): _*)).as("j"))
+      .withColumn("h", expr(ScalePatterns.hexIntSpark(
+        "md5(CAST(CONCAT(CAST(j AS STRING), ':', CAST(user_id AS STRING)) AS BINARY))")) % W)
+
+  /** The d·w sketch: (j, h, cell_total) over [[cmCells]] rows. */
+  private def cmSketch(cells: DataFrame): DataFrame =
+    cells.groupBy("j", "h").agg(sum(col("c")).as("cell_total"))
+
+  /** The audit: the exact top-20 keys of `expl` ([[cmCells]] rows) next to
+    * their estimates from `sketch`. */
+  private def cmAudit(expl: DataFrame, sketch: DataFrame): DataFrame =
+    expl.join(sketch, Seq("j", "h"))
+      .groupBy("user_id")
+      .agg(min(col("cell_total")).as("cm_est"), min(col("c")).as("n_exact"))
+      .select(col("user_id"), col("n_exact"), col("cm_est"),
+        (col("cm_est") - col("n_exact")).as("overestimate"))
+      .orderBy(desc("n_exact"), asc("user_id"))
+      .limit(20)
+
   val countMin: QueryDef = QueryDef(
     "sketch_countmin_heavyhitters",
     (s, dir) => {
-      val exact = Tables.events(s, dir)
-        .groupBy("user_id").agg(count(lit(1)).as("c"))
-      val expl = exact.select(col("user_id"), col("c"),
-          explode(array((0 until D).map(lit): _*)).as("j"))
-        .withColumn("h", expr(ScalePatterns.hexIntSpark(
-          "md5(CAST(CONCAT(CAST(j AS STRING), ':', CAST(user_id AS STRING)) AS BINARY))")) % W)
-      val cells = expl.groupBy("j", "h").agg(sum(col("c")).as("cell_total"))
-      expl.join(cells, Seq("j", "h"))
-        .groupBy("user_id")
-        .agg(min(col("cell_total")).as("cm_est"), min(col("c")).as("n_exact"))
-        .select(col("user_id"), col("n_exact"), col("cm_est"),
-          (col("cm_est") - col("n_exact")).as("overestimate"))
-        .orderBy(desc("n_exact"), asc("user_id"))
-        .limit(20)
+      val expl = cmCells(userCounts(Tables.events(s, dir)))
+      cmAudit(expl, cmSketch(expl))
     },
     Some(s"""
       WITH exact AS (SELECT user_id, COUNT(*) AS c FROM events GROUP BY 1),
@@ -108,6 +123,36 @@ object SketchOps {
   private def kmvEstDuck(nKept: String, vk: String): String =
     s"CAST(CASE WHEN $nKept < $K THEN $nKept ELSE (${K - 1} * $Domain) // $vk END AS BIGINT)"
 
+  /** THE KMV key hash, per dialect: the 48-bit uniform of md5(user_id). */
+  private def kmvHash: Column =
+    expr(hex12Spark("md5(CAST(CAST(user_id AS STRING) AS BINARY))"))
+  private val kmvHashDuck: String = hex12Duck("md5(CAST(user_id AS VARCHAR))")
+
+  /** CTE `hashed`: the distinct (event_type, h) pairs of `from`. */
+  private def kmvHashedSql(from: String): String =
+    s"""hashed AS (
+        SELECT DISTINCT event_type, $kmvHashDuck AS h
+        FROM $from)"""
+
+  /** The per-type audit: `kth` (event_type, n_kept, vk) estimates next to
+    * the exact distinct user counts of `events`. */
+  private def kmvAudit(kth: DataFrame, events: DataFrame): DataFrame = {
+    val exact = events
+      .groupBy("event_type").agg(countDistinct(col("user_id")).as("n_exact"))
+    kth.join(exact, "event_type")
+      .select(col("event_type"), col("n_exact"),
+        expr(kmvEstSpark("n_kept", "vk")).as("kmv_est"))
+      .withColumn("within_20pct",
+        abs(col("kmv_est") - col("n_exact")) * 5 <= col("n_exact"))
+      .orderBy("event_type")
+  }
+
+  /** One estimate `est_<tag>` over an already-distinct `h` column,
+    * through the bounded two-stage K-smallest fold (TwoStageOrder). */
+  private def kmvEst(hs: DataFrame, tag: String): DataFrame =
+    TwoStageOrder.kSmallest(hs, Nil, "h", K)
+      .select(expr(kmvEstSpark("n_kept", "vk")).as(s"est_$tag"))
+
   /** One full DuckDB estimate-CTE body over a distinct-hash source. */
   private def kmvEstCteDuck(src: String, alias: String): String =
     s"""SELECT ${kmvEstDuck("COUNT(*)", s"MAX(CASE WHEN r = $K THEN h END)")} AS $alias
@@ -118,31 +163,19 @@ object SketchOps {
   val kmvDistinct: QueryDef = QueryDef(
     "sketch_kmv_distinct",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val hashed = Tables.events(s, dir)
-        .select(col("event_type"), expr(hex12Spark(
-          "md5(CAST(CAST(user_id AS STRING) AS BINARY))")).as("h"))
+        .select(col("event_type"), kmvHash.as("h"))
         .distinct()
       // per-type K smallest via the bounded two-stage fold — event_type
       // has a handful of values, so the r10 rank-within-type window was
       // one data-proportional sort per type; TwoStageOrder.kSmallest
       // keeps K per (type, input partition) then pools, which is the
       // sketch-merge algebra itself and exact by construction
-      val kth = TwoStageOrder.kSmallest(hashed, Seq("event_type"), "h", K)
-      val exact = Tables.events(s, dir)
-        .groupBy("event_type").agg(countDistinct(col("user_id")).as("n_exact"))
-      kth.join(exact, "event_type")
-        .select(col("event_type"), col("n_exact"),
-          expr(kmvEstSpark("n_kept", "vk")).as("kmv_est"))
-        .withColumn("within_20pct",
-          abs(col("kmv_est") - col("n_exact")) * 5 <= col("n_exact"))
-        .orderBy("event_type")
+      kmvAudit(TwoStageOrder.kSmallest(hashed, Seq("event_type"), "h", K),
+        Tables.events(s, dir))
     },
     Some(s"""
-      WITH hashed AS (
-        SELECT DISTINCT event_type,
-               ${hex12Duck("md5(CAST(user_id AS VARCHAR))")} AS h
-        FROM events),
+      WITH ${kmvHashedSql("events")},
       ranked AS (
         SELECT event_type, h,
                ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h ASC) AS r
@@ -177,29 +210,23 @@ object SketchOps {
   val kmvSetOps: QueryDef = QueryDef(
     "sketch_kmv_set_ops",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, dir)
         .filter(col("event_type").isin("view", "purchase"))
       val hashed = ev
-        .select(col("event_type"), expr(hex12Spark(
-          "md5(CAST(CAST(user_id AS STRING) AS BINARY))")).as("h"))
+        .select(col("event_type"), kmvHash.as("h"))
         .distinct()
         .localCheckpoint(true) // feeds both per-set and merged rankings
-      // expects an already-distinct h column: the per-type slices of
-      // `hashed` are distinct by construction; only the union across
-      // types re-dedups (r9 review: two redundant exchanges dropped).
-      // K-smallest via the bounded two-stage fold (TwoStageOrder): the
-      // r10 global row_number ranked EVERY distinct hash to keep 64
-      def est(df: org.apache.spark.sql.DataFrame, tag: String) =
-        TwoStageOrder.kSmallest(df, Nil, "h", K)
-          .select(expr(kmvEstSpark("n_kept", "vk")).as(s"est_$tag"))
+      // the per-type slices of `hashed` are distinct by construction;
+      // only the union across types re-dedups (r9 review: two redundant
+      // exchanges dropped). K-smallest via the bounded two-stage fold:
+      // the r10 global row_number ranked EVERY distinct hash to keep 64
       val exact = ev.agg(
         countDistinct(when(col("event_type") === "view", col("user_id"))).as("exact_a"),
         countDistinct(when(col("event_type") === "purchase", col("user_id"))).as("exact_b"),
         countDistinct(col("user_id")).as("exact_union"))
-      est(hashed.filter(col("event_type") === "view").select("h"), "a")
-        .crossJoin(est(hashed.filter(col("event_type") === "purchase").select("h"), "b"))
-        .crossJoin(est(hashed.select("h").distinct(), "union"))
+      kmvEst(hashed.filter(col("event_type") === "view").select("h"), "a")
+        .crossJoin(kmvEst(hashed.filter(col("event_type") === "purchase").select("h"), "b"))
+        .crossJoin(kmvEst(hashed.select("h").distinct(), "union"))
         .crossJoin(exact)
         .select(col("exact_a"), col("est_a"), col("exact_b"), col("est_b"),
           col("exact_union"), col("est_union"),
@@ -207,10 +234,7 @@ object SketchOps {
           (col("est_a") + col("est_b") - col("est_union")).as("est_intersect"))
     },
     Some(s"""
-      WITH hashed AS (
-        SELECT DISTINCT event_type,
-               ${hex12Duck("md5(CAST(user_id AS VARCHAR))")} AS h
-        FROM events WHERE event_type IN ('view', 'purchase')),
+      WITH ${kmvHashedSql("events WHERE event_type IN ('view', 'purchase')")},
       est_a AS (
         ${kmvEstCteDuck("SELECT h FROM hashed WHERE event_type = 'view'", "est_a")}),
       est_b AS (
@@ -244,18 +268,12 @@ object SketchOps {
   val joinSizeEstimate: QueryDef = QueryDef(
     "sketch_join_size_estimate",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, dir)
         .filter(col("event_type").isin("click", "view"))
       val hashed = ev
-        .select(col("event_type"), expr(hex12Spark(
-          "md5(CAST(CAST(user_id AS STRING) AS BINARY))")).as("h"))
+        .select(col("event_type"), kmvHash.as("h"))
         .distinct()
         .localCheckpoint(true)
-      // bounded two-stage K-smallest, same contract as [[kmvSetOps]]
-      def est(df: org.apache.spark.sql.DataFrame, tag: String) =
-        TwoStageOrder.kSmallest(df, Nil, "h", K)
-          .select(expr(kmvEstSpark("n_kept", "vk")).as(s"est_$tag"))
       val rowCounts = ev.agg(
         count(when(col("event_type") === "click", 1)).as("rows_a"),
         count(when(col("event_type") === "view", 1)).as("rows_b"))
@@ -264,9 +282,9 @@ object SketchOps {
         .join(ev.filter(col("event_type") === "view")
           .groupBy("user_id").agg(count(lit(1)).as("nb")), "user_id")
         .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("exact_join"))
-      est(hashed.filter(col("event_type") === "click").select("h"), "a")
-        .crossJoin(est(hashed.filter(col("event_type") === "view").select("h"), "b"))
-        .crossJoin(est(hashed.select("h").distinct(), "union"))
+      kmvEst(hashed.filter(col("event_type") === "click").select("h"), "a")
+        .crossJoin(kmvEst(hashed.filter(col("event_type") === "view").select("h"), "b"))
+        .crossJoin(kmvEst(hashed.select("h").distinct(), "union"))
         .crossJoin(broadcast(rowCounts))
         .crossJoin(broadcast(exactJoin))
         .select(col("rows_a"), col("rows_b"),
@@ -285,10 +303,7 @@ object SketchOps {
       WITH ev AS (
         SELECT event_type, user_id FROM events
         WHERE event_type IN ('click', 'view')),
-      hashed AS (
-        SELECT DISTINCT event_type,
-               ${hex12Duck("md5(CAST(user_id AS VARCHAR))")} AS h
-        FROM ev),
+      ${kmvHashedSql("ev")},
       est_a AS (
         ${kmvEstCteDuck("SELECT h FROM hashed WHERE event_type = 'click'", "est_a")}),
       est_b AS (
@@ -350,8 +365,7 @@ object SketchOps {
     * survivors — TwoStageOrder.kSmallest's shape, row-retrieving.
     */
   private[operators] def mergeKmvSketch(
-      sketch: org.apache.spark.sql.DataFrame,
-      batch: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      sketch: DataFrame, batch: DataFrame): DataFrame =
     sketch.unionByName(batch).distinct()
       .withColumn("__pid", spark_partition_id())
       .withColumn("__r", row_number().over(
@@ -372,15 +386,13 @@ object SketchOps {
       val sketchDir = s"${feed.base}/sketch"
       val arrivals = feed.stream(ev.filter(col("user_id") % 2 === 0),
         ev.filter(col("user_id") % 2 === 1))
-      val hashOf = expr(hex12Spark(
-        "md5(CAST(CAST(user_id AS STRING) AS BINARY))"))
       // seed an empty sketch so every batch is the same read-merge-write
-      ev.limit(0).select(col("event_type"), hashOf.as("h"))
+      ev.limit(0).select(col("event_type"), kmvHash.as("h"))
         .write.parquet(sketchDir)
       feed.run(arrivals.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           val sb = batch.sparkSession
-          val bh = batch.select(col("event_type"), hashOf.as("h")).distinct()
+          val bh = batch.select(col("event_type"), kmvHash.as("h")).distinct()
           val merged = mergeKmvSketch(sb.read.parquet(sketchDir), bh)
             // materialized BEFORE the overwrite of the table it reads
             .localCheckpoint(true)
@@ -393,38 +405,11 @@ object SketchOps {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_kept"),
           when(count(lit(1)) === K, max(col("h"))).as("vk"))
-      val exact = Tables.events(s, dir)
-        .groupBy("event_type").agg(countDistinct(col("user_id")).as("n_exact"))
-      sketch.join(exact, "event_type")
-        .select(col("event_type"), col("n_exact"),
-          expr(kmvEstSpark("n_kept", "vk")).as("kmv_est"))
-        .withColumn("within_20pct",
-          abs(col("kmv_est") - col("n_exact")) * 5 <= col("n_exact"))
-        .orderBy("event_type")
+      kmvAudit(sketch, Tables.events(s, dir))
     },
-    Some(s"""
-      WITH hashed AS (
-        SELECT DISTINCT event_type,
-               ${hex12Duck("md5(CAST(user_id AS VARCHAR))")} AS h
-        FROM events),
-      ranked AS (
-        SELECT event_type, h,
-               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h ASC) AS r
-        FROM hashed),
-      kth AS (
-        SELECT event_type, MAX(CASE WHEN r = $K THEN h END) AS vk,
-               COUNT(*) AS n_kept
-        FROM ranked WHERE r <= $K GROUP BY 1),
-      exact AS (
-        SELECT event_type, COUNT(DISTINCT user_id) AS n_exact
-        FROM events GROUP BY 1)
-      SELECT k.event_type AS event_type, e.n_exact AS n_exact,
-             ${kmvEstDuck("k.n_kept", "k.vk")} AS kmv_est,
-             ABS(${kmvEstDuck("k.n_kept", "k.vk")} - e.n_exact) * 5
-               <= e.n_exact AS within_20pct
-      FROM kth k JOIN exact e USING (event_type)
-      ORDER BY event_type
-    """.stripMargin.trim))
+    // union = K smallest of the pooled hashes: the live sketch is the
+    // batch sketch, so the oracle IS the batch audit's SQL
+    kmvDistinct.oracle)
 
   /** The count-min sketch maintained LIVE over a stream — the additive
     * counterpart of [[kmvDistinctLive]]: count-min's merge is cell-wise
@@ -452,13 +437,7 @@ object SketchOps {
       val sketchDir = s"${feed.base}/sketch"
       val arrivals = feed.stream(ev.filter(col("user_id") % 2 === 0),
         ev.filter(col("user_id") % 2 === 1))
-      def cellsOf(df: org.apache.spark.sql.DataFrame) = df
-        .groupBy("user_id").agg(count(lit(1)).as("c"))
-        .select(col("user_id"), col("c"),
-          explode(array((0 until D).map(lit): _*)).as("j"))
-        .withColumn("h", expr(ScalePatterns.hexIntSpark(
-          "md5(CAST(CONCAT(CAST(j AS STRING), ':', CAST(user_id AS STRING)) AS BINARY))")) % W)
-        .groupBy("j", "h").agg(sum(col("c")).as("cell_total"))
+      def cellsOf(df: DataFrame) = cmSketch(cmCells(userCounts(df)))
       // seed the d×w state empty so every batch is the same read-merge-write
       cellsOf(ev.limit(0)).write.parquet(sketchDir)
       feed.run(arrivals.writeStream
@@ -478,20 +457,7 @@ object SketchOps {
         })
       // probe the LIVE-built sketch with the batch audit: exact top-20
       // heavy hitters vs their count-min estimates
-      val cells = s.read.parquet(sketchDir)
-      val exact = Tables.events(s, dir)
-        .groupBy("user_id").agg(count(lit(1)).as("c"))
-      val expl = exact.select(col("user_id"), col("c"),
-          explode(array((0 until D).map(lit): _*)).as("j"))
-        .withColumn("h", expr(ScalePatterns.hexIntSpark(
-          "md5(CAST(CONCAT(CAST(j AS STRING), ':', CAST(user_id AS STRING)) AS BINARY))")) % W)
-      expl.join(cells, Seq("j", "h"))
-        .groupBy("user_id")
-        .agg(min(col("cell_total")).as("cm_est"), min(col("c")).as("n_exact"))
-        .select(col("user_id"), col("n_exact"), col("cm_est"),
-          (col("cm_est") - col("n_exact")).as("overestimate"))
-        .orderBy(desc("n_exact"), asc("user_id"))
-        .limit(20)
+      cmAudit(cmCells(userCounts(Tables.events(s, dir))), s.read.parquet(sketchDir))
     },
     // bit-identical to the batch-built sketch by merge algebra — the
     // oracle IS the batch audit's SQL

@@ -45,20 +45,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantics, same planInputPartitions, different persistence.
   *
   * Offsets store DIRECTORY-RELATIVE file names, resolved against the
-  * `path` option at plan time (r7; the r6 form persisted absolute
-  * paths): a relocated/remounted feed directory or a re-spelled path
-  * option across a restart leaves every persisted name valid, where
-  * absolute paths would silently rename the entire universe and
-  * re-deliver the whole feed as "unconsumed". Deserialization
-  * additionally cross-checks a non-empty offset against a non-empty
-  * current listing and FAILS FAST on zero overlap — consumed files are
+  * `path` option at plan time: a relocated/remounted feed directory or
+  * a re-spelled path option across a restart leaves every persisted
+  * name valid, where absolute paths would silently rename the entire
+  * universe and re-deliver the whole feed as "unconsumed".
+  * Deserialization accepts only that array form (anything else fails
+  * fast) and cross-checks a non-empty offset against a non-empty
+  * current listing, FAILING FAST on zero overlap — consumed files are
   * immutable and never deleted, so total disjointness means the path
   * option points at a different feed than the checkpoint consumed.
-  *
-  * r5-era checkpoints (offset = highest-name watermark) deserialize
-  * via the legacy branch: the watermark reifies to "every current file
-  * at or below it", which is exactly the set it stood for under the
-  * old monotone-naming contract.
   *
   * Usage: `spark.readStream.format("npm-changes-feed")
   *   .option("path", dir).load()` → one `value: string` column, the
@@ -98,14 +93,6 @@ object ChangesFeedSource {
       finally stream.close()
     }
   }
-
-  /** A persisted name relativized to the feed dir: r6-era checkpoints
-    * stored absolute paths; taking the final path element recovers the
-    * stable per-file identity (the listing is non-recursive, so names
-    * never contain separators going forward).
-    */
-  private[source] def relativeName(persisted: String): String =
-    Paths.get(persisted).getFileName.toString
 }
 
 class ChangesFeedTable(path: String) extends Table with SupportsRead {
@@ -137,9 +124,9 @@ object SeenFilesOffset {
 
   /** Parse an offset against the configured feed `dir`.
     *
-    * Array offsets (the current form) hold relative names; r6-era
-    * checkpoints persisted absolute paths, which relativize to the same
-    * stable per-file identity. A non-empty parsed set is then
+    * The offset must be the JSON array of consumed relative names that
+    * [[SeenFilesOffset.json]] writes; anything else FAILS FAST, naming
+    * the offset and the feed. A non-empty parsed set is then
     * cross-checked against a non-empty current listing and FAILS FAST
     * on ZERO overlap: consumed files are immutable and never deleted,
     * so a healthy feed dir always still contains them — total
@@ -148,46 +135,25 @@ object SeenFilesOffset {
     * and re-deliver this one wholesale. (An EMPTY listing stays
     * permissive: a momentarily unlistable mount must not kill a restart
     * that the monotone seen-set already protects.)
-    *
-    * Non-array offsets serve pre-set-era checkpoints whose offset was a
-    * highest-consumed-name watermark: under that design's monotone-
-    * naming contract the watermark denoted exactly "all files sorting at
-    * or below it", and files are immutable/append-only, so reifying it
-    * against the current listing reconstructs that set. Reification
-    * FAILS FAST if the listing does not contain the watermark file
-    * itself (r6 review finding): its absence means the directory is
-    * momentarily unlistable/unmounted — silently reifying to a smaller
-    * set would mark everything unconsumed and re-deliver the whole feed
-    * on the upgrade restart. Throwing lets the engine surface the
-    * restart against a healthy mount instead.
     */
-  def parse(json: String, dir: String): SeenFilesOffset =
-    if (json.startsWith("[")) {
-      val arr = mapper.readValue(json, classOf[Array[String]])
-      val names = SortedSet.from(arr.map(ChangesFeedSource.relativeName(_)))
-      if (names.nonEmpty) {
-        val listed = ChangesFeedSource.listFiles(dir)
-        if (listed.nonEmpty && !listed.exists(names.contains)) {
-          throw new IllegalStateException(
-            s"npm-changes-feed: none of the ${names.size} consumed file names " +
-              s"in the checkpoint offset appear under '$dir' (${listed.size} " +
-              "files listed) — the path option points at a different feed " +
-              "than the checkpoint consumed; refusing to re-deliver it " +
-              "wholesale against the wrong directory")
-        }
-      }
-      SeenFilesOffset(names)
-    } else if (json.isEmpty) SeenFilesOffset(SortedSet.empty)
-    else {
-      val name = ChangesFeedSource.relativeName(json)
+  def parse(json: String, dir: String): SeenFilesOffset = {
+    if (!json.startsWith("[")) throw new IllegalStateException(
+      s"npm-changes-feed: checkpoint offset '$json' for feed '$dir' is not " +
+        "a JSON array of consumed file names")
+    val names = SortedSet.from(mapper.readValue(json, classOf[Array[String]]))
+    if (names.nonEmpty) {
       val listed = ChangesFeedSource.listFiles(dir)
-      if (!listed.contains(name)) throw new IllegalStateException(
-        s"npm-changes-feed: legacy watermark offset '$name' not present in " +
-          s"directory listing of '$dir' (${listed.size} files) — feed " +
-          "directory unavailable or truncated; refusing to reify a smaller " +
-          "consumed set (would re-deliver already-consumed files)")
-      SeenFilesOffset(SortedSet.from(listed.filter(_ <= name)))
+      if (listed.nonEmpty && !listed.exists(names.contains)) {
+        throw new IllegalStateException(
+          s"npm-changes-feed: none of the ${names.size} consumed file names " +
+            s"in the checkpoint offset appear under '$dir' (${listed.size} " +
+            "files listed) — the path option points at a different feed " +
+            "than the checkpoint consumed; refusing to re-deliver it " +
+            "wholesale against the wrong directory")
+      }
     }
+    SeenFilesOffset(names)
+  }
 }
 
 class ChangesFeedMicroBatchStream(path: String) extends MicroBatchStream {

@@ -16,7 +16,7 @@ class Round15Spec extends SparkSpec {
     // the embedding data) pinned for the whole session though no probe
     // reads it once `codes` materializes. The build must pin exactly
     // vecs + cents + cb1 + codes = 4 storage entries.
-    val s = spark.newSession() // fresh session ⇒ fresh SessionCache entry
+    val s = spark.newSession() // fresh session ⇒ fresh PinnedStorage.Surface entry
     val before = s.sparkContext.getPersistentRDDs.keySet
     graft.SparkEntry.queries("ann_ivfadc_prebuilt")(s, dir).count(): Unit
     val pinnedByBuild = s.sparkContext.getPersistentRDDs.keySet.diff(before)

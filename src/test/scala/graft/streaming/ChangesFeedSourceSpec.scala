@@ -63,31 +63,31 @@ class ChangesFeedSourceSpec extends SparkSpec {
     assert(catalog.groupBy("change_seq_id").count().filter(col("count") > 1).count() == 0)
   }
 
-  test("offset arithmetic: a batch is the seen-set difference; legacy watermarks reify") {
+  test("offset arithmetic: a batch is the seen-set difference") {
     val base = graft.TmpDirs.create("graft-feedsrc3")
     (0 until 4).foreach(i => writeFeed(base, Seq(s"""{"seq":$i}"""), f"f-$i%03d.jsonl"))
     val stream = new graft.streaming.source.ChangesFeedMicroBatchStream(base)
     assert(stream.initialOffset().json() == "[]")
     assert(stream.latestOffset().json().contains("f-003.jsonl"))
-    // r5-era checkpoint offsets were highest-name watermarks: they must
-    // parse as "every file at or below the watermark"
     val parts = stream.planInputPartitions(
-      stream.deserializeOffset(s"$base/f-000.jsonl"),
-      stream.deserializeOffset(s"$base/f-002.jsonl"))
+      stream.deserializeOffset("""["f-000.jsonl"]"""),
+      stream.deserializeOffset("""["f-000.jsonl","f-001.jsonl","f-002.jsonl"]"""))
     val names = parts.map(_.asInstanceOf[graft.streaming.source.ChangesFilePartition]
       .file.split("/").last).toSeq.sorted
     assert(names == Seq("f-001.jsonl", "f-002.jsonl"))
   }
 
-  test("legacy watermark parse fails fast when the directory is unlistable") {
-    // reifying a watermark against an empty listing would mark the whole
-    // feed unconsumed and re-deliver everything after an upgrade restart
+  test("a non-array offset fails fast, naming the offset and the feed") {
+    // only the seen-set array form is a valid offset: a bare file name
+    // (the old highest-name watermark) must not be guessed into a set
     val base = graft.TmpDirs.create("graft-feedsrc7")
-    val stream = new graft.streaming.source.ChangesFeedMicroBatchStream(s"$base/missing")
+    writeFeed(base, Seq("""{"seq":1}"""), "changes-900.jsonl")
+    val stream = new graft.streaming.source.ChangesFeedMicroBatchStream(base)
     val ex = intercept[IllegalStateException] {
-      stream.deserializeOffset(s"$base/missing/changes-900.jsonl")
+      stream.deserializeOffset("changes-900.jsonl")
     }
-    assert(ex.getMessage.contains("refusing to reify"))
+    assert(ex.getMessage.contains("'changes-900.jsonl'"))
+    assert(ex.getMessage.contains(s"'$base'"))
   }
 
   test("a late-sorting file is delivered exactly once; consumed files never re-deliver") {
@@ -108,8 +108,8 @@ class ChangesFeedSourceSpec extends SparkSpec {
 
   test("relocated feed directory: relative-name offsets survive the move (no re-delivery)") {
     // consume from dir A through a real checkpoint, then MOVE the feed to
-    // dir B and restart pointing at B: the r6 absolute-path offsets would
-    // treat every file as unconsumed and re-deliver the whole feed; the
+    // dir B and restart pointing at B: absolute-path offsets would treat
+    // every file as unconsumed and re-deliver the whole feed; the
     // relative-name offsets must deliver nothing old and only what's new
     val base = graft.TmpDirs.create("graft-feedsrc8")
     val feedA = s"$base/feedA"
@@ -137,20 +137,6 @@ class ChangesFeedSourceSpec extends SparkSpec {
     assert(catalog.count() == afterFirst + 1)
     assert(catalog.filter(col("change_seq_id") === 32).count() == 1)
     assert(catalog.groupBy("change_seq_id").count().filter(col("count") > 1).count() == 0)
-  }
-
-  test("r6-era absolute-path offsets relativize on upgrade (no re-delivery)") {
-    val base = graft.TmpDirs.create("graft-feedsrc9")
-    (0 until 3).foreach(i => writeFeed(base, Seq(s"""{"seq":$i}"""), f"f-$i%03d.jsonl"))
-    val stream = new graft.streaming.source.ChangesFeedMicroBatchStream(base)
-    // an r6 checkpoint: the offset array holds ABSOLUTE paths
-    val legacyJson = s"""["$base/f-000.jsonl","$base/f-001.jsonl"]"""
-    val start = stream.deserializeOffset(legacyJson)
-    val parts = stream.planInputPartitions(start, stream.latestOffset())
-    val names = parts.map(_.asInstanceOf[graft.streaming.source.ChangesFilePartition]
-      .file.split("/").last).toSeq
-    assert(names == Seq("f-002.jsonl"),
-      "absolute-path offset entries were not recognized as consumed")
   }
 
   test("offset naming a disjoint feed fails fast instead of re-delivering wholesale") {
