@@ -53,14 +53,16 @@ case class SemverClean(child: Expression) extends UnaryExpression {
 }
 
 object SemverExpressions {
-  /** Arity-checked builder that [[register]] installs. */
-  private val builder: Seq[Expression] => Expression =
-    Arity.checked("semver_clean", 1)(exprs => SemverClean(exprs(0)))
+  /** Arity-checked builders that [[register]] installs. */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "semver_clean" -> Arity.checked("semver_clean", 1)(exprs => SemverClean(exprs(0))),
+    "normalize_doc" -> Arity.checked("normalize_doc", 1)(exprs => NormalizeDoc(exprs(0))))
 
-  /** Idempotently register `semver_clean` for SQL/expr use. */
+  /** Idempotently register `semver_clean` and `normalize_doc` for SQL/expr use. */
   def register(spark: SparkSession): Unit =
-    RegisterOnce(spark, "semver_clean") {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "semver_clean", builder, "built-in")
+    builders.foreach { case (name, builder) =>
+      RegisterOnce(spark, name) {
+        spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+      }
     }
 }

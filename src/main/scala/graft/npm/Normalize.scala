@@ -1,7 +1,7 @@
 package graft.npm
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{call_function, coalesce, lit, map}
 import org.apache.spark.sql.types.{MapType, StringType}
 
 import model._
@@ -22,8 +22,12 @@ import model._
   *     tag value itself — drop the tag if it is uncleanable or still
   *     missing from `versions` (index.js:71-93).
   *
-  * Pure (PackageDoc → Option[PackageDoc]) so it is unit/property-testable
-  * without Spark; the Dataset stage maps it over `Dataset[Change]`.
+  * On a semver-clean key collision (both `1.2.3` and `v1.2.3`) the renamed
+  * entry wins whatever the order; among entries of one kind the last wins.
+  *
+  * [[normalizeDoc]] is the pure (PackageDoc → Option[PackageDoc]) form,
+  * unit- and property-testable without Spark, and the oracle for
+  * [[normalizedDocColumn]], the one the pipeline runs.
   */
 object Normalize {
 
@@ -96,128 +100,12 @@ object Normalize {
   def normalizeChange(c: Change): Change =
     c.copy(doc = c.doc.flatMap(normalizeDoc))
 
-  /** T3 as pure Column DSL — the performance path (SURVEY §4.2's upgrade
-    * applied end-to-end): identical semantics to [[normalizeDoc]]
-    * (verified by NormalizeColumnsSpec against the typed path), but no
-    * encoder round-trip per row: semver cleaning runs through the native
-    * SemverClean expression, map rewrites through
-    * transform/map_from_entries/transform_values/map_filter (which Spark
-    * evaluates interpreted, inside the codegen'd projection). Each
-    * version key is cleaned once and each rewritten map built once per
-    * doc.
-    *
-    * Requires `semver_clean` registered in the session
-    * (SemverExpressions.register — idempotent).
-    *
-    * Keys that collide AFTER cleaning (e.g. both "1.2.3" and "v1.2.3" —
-    * occurs in real npm data) are deduped explicitly, last entry wins —
-    * matching the typed path and the reference library (index.js:44
-    * last-write-wins on plain object assignment) — so the stage never
-    * raises DUPLICATED_MAP_KEY under the default mapKeyDedupPolicy.
-    */
-  def normalizedDocColumn(doc: Column): Column = {
-    // Higher-order functions run interpreted, outside subexpression
-    // elimination: a subexpression written twice is evaluated twice, and
-    // once per element inside a lambda. `let` binds a value to a lambda
-    // variable so it is evaluated once, whatever reads it.
-    def let(value: Column)(body: Column => Column): Column =
-      transform(array(value), body).getItem(0)
-
-    // Rename-wins dedup of an array<struct<key,value,ren>> before
-    // map_from_entries: a renamed entry beats any plain entry with the
-    // same key regardless of position (the reference's
-    // `versions[cleaned] = version` assignment overwrites either way,
-    // index.js:44); among multiple entries of the SAME kind — renames
-    // colliding on one key, or literal duplicate raw JSON keys, which
-    // from_json preserves — the last wins (JS object parse / Scala Map
-    // semantics), so the stage never raises DUPLICATED_MAP_KEY under the
-    // default mapKeyDedupPolicy. Cheap path: no collision (the
-    // overwhelmingly common case) → entries as-is; the O(n²) scan runs
-    // only on collision.
-    def dedupRenameWins(entries: Column): Column = let(entries) { ents =>
-      val collides = size(array_distinct(transform(ents, _.getField("key")))) =!= size(ents)
-      def laterSameKey(e: Column, i: Column, ren: Boolean) =
-        exists(slice(ents, i + lit(2), size(ents)),
-          e2 => e2.getField("key") === e.getField("key") && (if (ren) e2.getField("ren") else !e2.getField("ren")))
-      val kept = filter(ents, (e, i) =>
-        when(e.getField("ren"), !laterSameKey(e, i, ren = true))
-        .otherwise(
-          !exists(ents,
-            e2 => e2.getField("key") === e.getField("key") && e2.getField("ren")) &&
-          !laterSameKey(e, i, ren = false)))
-      map_from_entries(transform(when(collides, kept).otherwise(ents),
-        e => struct(e.getField("key").as("key"), e.getField("value").as("value"))))
-    }
-    def clean(c: Column): Column = call_function("semver_clean", c)
-    val id = doc.getField("_id")
-    val dropDoc = id.isNull || id === "" || id.startsWith("_design/") ||
-      coalesce(doc.getField("_deleted"), lit(false)) ||
-      (doc.getField("error") === "not_found" && doc.getField("reason") === "deleted")
-    val versions = doc.getField("versions")
-
-    // (1b) couchapp-field repair on every surviving doc (index.js:14,19-20,
-    // 28-32): default _attachments / per-version directories to {}, drop
-    // doc- and version-level ctime/mtime
-    val noStr = lit(null).cast("string")
-    val base = doc
-      .withField("_attachments",
-        coalesce(doc.getField("_attachments"), map().cast(MapType(StringType, attachmentType))))
-      .withField("ctime", noStr)
-      .withField("mtime", noStr)
-
-    // (2) semver-clean version keys; rewrite version/_id on rename
-    val versions2 = dedupRenameWins(transform(map_entries(versions), { e =>
-      val k = e.getField("key")
-      val v0 = e.getField("value")
-      val v = v0
-        .withField("directories",
-          coalesce(v0.getField("directories"), map().cast(MapType(StringType, StringType))))
-        .withField("ctime", noStr)
-        .withField("mtime", noStr)
-      let(clean(k)) { ck =>
-        val renamed = ck.isNotNull && ck =!= k
-        struct(
-          coalesce(ck, k).as("key"),
-          when(renamed,
-            v.withField("version", ck)
-              .withField("_id", concat(id, lit("@"), ck)))
-            .otherwise(v).as("value"),
-          renamed.as("ren"))
-      }
-    }))
-
-    // move time keys in lockstep with version-key renames; a moved entry
-    // overwrites a plain one at the cleaned key (reference assignment)
-    val time2 = dedupRenameWins(transform(map_entries(doc.getField("time")), { e =>
-      val k = e.getField("key")
-      let(clean(k)) { ck =>
-        val moved = ck.isNotNull && ck =!= k && map_contains_key(versions, k)
-        struct(when(moved, ck).otherwise(k).as("key"), e.getField("value").as("value"),
-          moved.as("ren"))
-      }
-    }))
-
-    // (3) dist-tags repair against the NEW version key set: retarget
-    // renamed values, keep resolvable ones, clean-then-retry, else drop
-    val tags = doc.getField("dist-tags")
-    def tags2(newVersions: Column): Column = {
-      val retargeted = transform_values(tags, { (_, v) =>
-        let(clean(v)) { cv =>
-          when(cv.isNotNull && map_contains_key(newVersions, cv), cv)
-            .when(map_contains_key(newVersions, v), v)
-            .otherwise(lit(null).cast("string"))
-        }
-      })
-      map_filter(retargeted, (_, v) => v.isNotNull)
-    }
-
-    when(dropDoc, lit(null).cast(docType))
-      .when(versions.isNull, base)
-      .otherwise(let(versions2) { v2 =>
-        base
-          .withField("versions", v2)
-          .withField("time", when(doc.getField("time").isNotNull, time2))
-          .withField("`dist-tags`", when(tags.isNotNull, tags2(v2)))
-      })
-  }
+  /** T3 as one Column, equal to [[normalizeDoc]] on every doc the typed model can express: the doc-level
+    * repair as `withField`s, which Catalyst rewrites only after folding local relations (so a local input
+    * is not normalized on the driver at planning time), then `normalize_doc` (SemverExpressions). */
+  def normalizedDocColumn(doc: Column): Column = call_function("normalize_doc", doc
+    .withField("_attachments",
+      coalesce(doc.getField("_attachments"), map().cast(MapType(StringType, attachmentType))))
+    .withField("ctime", lit(null).cast(StringType))
+    .withField("mtime", lit(null).cast(StringType)))
 }

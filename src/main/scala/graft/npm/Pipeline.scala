@@ -85,10 +85,11 @@ object Pipeline {
     (fit, oversized)
   }
 
-  /** T3 through the Column-DSL path (codegen semver_clean + map HOFs) —
-    * no per-row encoder round-trip. Semantically equal to the typed
-    * [[normalizeTyped]] (NormalizeColumnsSpec pins it); the typed form
-    * stays as the property-tested reference semantics.
+  /** T3 as one native `normalize_doc` expression per doc
+    * ([[Normalize.normalizedDocColumn]]) — no per-row encoder round-trip.
+    * Semantically equal to the typed [[normalizeTyped]]
+    * (NormalizeColumnsSpec pins it); the typed form stays as the
+    * property-tested reference semantics.
     */
   def normalize(parsed: DataFrame)(implicit spark: SparkSession): Dataset[Change] = {
     // register on the session that OWNS the frame: under foreachBatch the
@@ -136,7 +137,7 @@ object Pipeline {
       .withColumn("save_path", concat_ws("/", col("package_dir"), col("zip_name")))
       // A5 trigger heuristic: len(time) - len(versions) == 2
       .withColumn("retention_triggered",
-        coalesce(size(map_keys(col("doc.time"))) - size(map_keys(col("doc.versions"))) === 2,
+        coalesce(size(col("doc.time")) - size(col("doc.versions")) === 2,
           lit(false)))
       // rejection reason: first failing check wins (ordered like the
       // reference's sequential control flow)
@@ -185,8 +186,8 @@ object Pipeline {
   private val catalogColumns: Seq[(String, Column)] = Seq(
     "package_revision_id" -> col("doc._rev"),
     "package_latest_version" -> col("latest"),
-    "package_versions_count" -> size(map_keys(col("doc.versions"))),
-    "package_modification_count" -> size(map_keys(col("doc.time"))),
+    "package_versions_count" -> size(col("doc.versions")),
+    "package_modification_count" -> size(col("doc.time")),
     "package_latest_change_time" ->
       to_timestamp(col("latest_time_str"), "yyyy-MM-dd'T'HH:mm:ss.SSSX"),
     "package_latest_authors" -> col("latest_version_doc.author"),

@@ -1,5 +1,7 @@
 package graft.npm
 
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Loose semver cleaning — a pure-Scala re-expression of the behavior the
   * reference gets from `semver.clean(v, loose = true)` inside
   * normalize-registry-metadata (reference:
@@ -44,12 +46,35 @@ object Semver {
 
   /** Codegen-friendly adapter for the SemverClean Catalyst expression
     * (static forwarder callable from generated Java): null for null input
-    * or uncleanable strings.
+    * or uncleanable strings. An already canonical `N.N.N` comes back as
+    * the same instance, without the String round-trip and the regex.
     */
-  def cleanUTF8(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String =
+  def cleanUTF8(s: UTF8String): UTF8String =
     if (s == null) null
+    else if (isCanonicalCore(s)) s
     else clean(s.toString) match {
-      case Some(c) => org.apache.spark.unsafe.types.UTF8String.fromString(c)
+      case Some(c) => UTF8String.fromString(c)
       case None => null
     }
+
+  /** Exactly three dot-separated runs of ASCII digits, none with a
+    * leading zero unless it is `0` itself: what [[clean]] maps to itself
+    * with no prerelease.
+    */
+  private def isCanonicalCore(s: UTF8String): Boolean = {
+    val n = s.numBytes
+    var i = 0
+    var part = 0
+    while (part < 3) {
+      val start = i
+      while (i < n && s.getByte(i) >= '0' && s.getByte(i) <= '9') i += 1
+      if (i == start || (s.getByte(start) == '0' && i - start > 1)) return false
+      part += 1
+      if (part < 3) {
+        if (i == n || s.getByte(i) != '.') return false
+        i += 1
+      }
+    }
+    i == n
+  }
 }

@@ -3,10 +3,11 @@ package graft.npm
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The Column-DSL normalization (Pipeline.normalize) must produce exactly
-  * what the typed pure-function path (Pipeline.normalizeTyped) produces —
-  * on the fixture corpus (every §1.2 normalization rule) and on the 20k
-  * synthetic replay feed.
+/** The column normalization (Pipeline.normalize, one `normalize_doc`
+  * expression per doc) must produce exactly what the typed pure-function
+  * path (Pipeline.normalizeTyped) produces — on the fixture corpus (every
+  * §1.2 normalization rule) and on the 20k synthetic replay feed. Inputs
+  * the typed model cannot express have their outputs pinned literally.
   */
 class NormalizeColumnsSpec extends SparkSpec {
 
@@ -113,6 +114,13 @@ class NormalizeColumnsSpec extends SparkSpec {
     }
   }
 
+  test("normalize_doc's generated code compiles: no interpreted fallback") {
+    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try compareOn(Fixtures.withFetch404.toDF("value"))
+    finally spark.conf.set("spark.sql.codegen.fallback", prev.getOrElse("true"))
+  }
+
   test("column path == typed path on the 20k synthetic replay feed") {
     compareOn(NpmReplayOps.syntheticFeed(spark, "/root/testdata/sf0.01"))
   }
@@ -143,5 +151,30 @@ class NormalizeColumnsSpec extends SparkSpec {
       .withColumn("doc", Normalize.normalizedDocColumn(col("doc")))
     val twice = once.withColumn("doc", Normalize.normalizedDocColumn(col("doc")))
     assert(canon(once) == canon(twice))
+  }
+
+  test("inputs the typed oracle does not cover: null values, duplicate keys, no versions") {
+    // the typed path cannot express a null version/time/tag value or a
+    // duplicate raw key, so these outputs are pinned literally
+    val raw = Seq(
+      // null version values: a plain one and a renamed one that beats a plain entry
+      """{"seq":500,"id":"n1","doc":{"_id":"n1","_rev":"1-a","dist-tags":{"latest":"1.0.0","beta":"v2.0.0"},"versions":{"1.0.0":null,"2.0.0":{"version":"2.0.0"},"v2.0.0":null},"time":{"1.0.0":"t1","v2.0.0":"t2"}}}""",
+      // a null time value and a null dist-tag value
+      """{"seq":501,"id":"n2","doc":{"_id":"n2","_rev":"1-a","dist-tags":{"latest":"v1.0.0","next":null},"versions":{"v1.0.0":{"version":"v1.0.0"}},"time":{"v1.0.0":null,"created":null}}}""",
+      // duplicate raw keys in time and in dist-tags
+      """{"seq":502,"id":"n3","doc":{"_id":"n3","_rev":"1-a","dist-tags":{"latest":"1.0.0","latest":"v1.0.0","next":"0.6","latest":"2.0.0"},"versions":{"1.0.0":{"version":"1.0.0"},"v2.0.0":{"version":"v2.0.0"}},"time":{"1.0.0":"t1","created":"t0","1.0.0":"t2","v2.0.0":"t3","2.0.0":"t4","v2.0.0":"t5"}}}""",
+      // no versions: time and dist-tags pass through untouched
+      """{"seq":503,"id":"n4","doc":{"_id":"n4","_rev":"1-a","ctime":"c","dist-tags":{"latest":"v9.9.9","x":null,"latest":"0.6"},"time":{"v1.0.0":"t1","v1.0.0":"t2","x":null}}}""")
+    val got = Pipeline.normalize(Pipeline.parse(raw.toDF("value")))(spark).toDF()
+      .select(col("seq"), to_json(col("doc")))
+      .as[(Long, String)].collect().toMap
+    // a null version value stays null (and a renamed null still wins);
+    // duplicate time keys dedup like version keys, duplicate tags all stay
+    val expected = Map(
+      500L -> """{"_id":"n1","_rev":"1-a","dist-tags":{"latest":"1.0.0","beta":"2.0.0"},"versions":{"1.0.0":null,"2.0.0":null},"time":{"1.0.0":"t1","2.0.0":"t2"},"_attachments":{}}""",
+      501L -> """{"_id":"n2","_rev":"1-a","dist-tags":{"latest":"1.0.0"},"versions":{"1.0.0":{"version":"1.0.0","_id":"n2@1.0.0","directories":{}}},"time":{"1.0.0":null,"created":null},"_attachments":{}}""",
+      502L -> """{"_id":"n3","_rev":"1-a","dist-tags":{"latest":"1.0.0","latest":"1.0.0","latest":"2.0.0"},"versions":{"1.0.0":{"version":"1.0.0","directories":{}},"2.0.0":{"version":"2.0.0","_id":"n3@2.0.0","directories":{}}},"time":{"created":"t0","1.0.0":"t2","2.0.0":"t5"},"_attachments":{}}""",
+      503L -> """{"_id":"n4","_rev":"1-a","dist-tags":{"latest":"v9.9.9","x":null,"latest":"0.6"},"time":{"v1.0.0":"t1","v1.0.0":"t2","x":null},"_attachments":{}}""")
+    assert(got == expected)
   }
 }

@@ -8,6 +8,7 @@ import graft.SparkSpec
 import org.apache.spark.graftaccess.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
 import org.apache.spark.sql.functions._
 
 /** Fetchers that record every call; local mode runs tasks in this JVM, so
@@ -209,5 +210,22 @@ class PipelineSpec extends SparkSpec {
     val ex = exchanges(result.deletions)
     assert(ex.size == 1 && ex.head.contains("hashpartitioning"),
       result.deletions.queryExecution.executedPlan.toString)
+  }
+
+  test("the replay normalizes each doc in one normalize_doc call, with no lambda") {
+    // a file scan, as the mirror reads; the plan below the cache, since
+    // InMemoryRelation hides it
+    val dir = java.nio.file.Paths.get(graft.TmpDirs.create("graft-pipeline-plan"))
+    Files.write(dir.resolve("changes.jsonl"), Fixtures.withFetch404.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val routed = Pipeline.replay(spark.read.text(dir.toString), Fixtures.RoutingFetcher).routed
+    val plan = spark.sessionState.optimizer.execute(routed.queryExecution.analyzed)
+    val exprs = plan.collect { case node => node.expressions.flatMap(_.collect { case e => e }) }.flatten
+    val lambdas = exprs.filter {
+      case _: LambdaFunction | _: HigherOrderFunction => true
+      case _ => false
+    }
+    assert(lambdas.isEmpty, lambdas.map(_.prettyName).distinct.mkString(", "))
+    assert(exprs.count(_.prettyName == "normalize_doc") == 1, plan.treeString)
+    routed.unpersist()
   }
 }

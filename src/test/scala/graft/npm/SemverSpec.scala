@@ -3,6 +3,7 @@ package graft.npm
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import org.apache.spark.unsafe.types.UTF8String
 
 class SemverSpec extends AnyFunSuite {
 
@@ -54,6 +55,30 @@ class SemverSpec extends AnyFunSuite {
       Semver.clean(v).foreach { c =>
         assert(Semver.clean(c).contains(c), s"$v -> $c not a fixpoint")
       }
+    }
+  }
+
+  private val part: Gen[String] = Gen.oneOf(
+    Gen.choose(0, 999).map(_.toString),
+    Gen.choose(0, 99).map(n => "0" + n),                           // leading zero
+    Gen.listOfN(30, Gen.numChar).map(_.mkString))                  // 30-digit part
+  private val rawGen: Gen[String] = for {
+    prefix <- Gen.oneOf("", "v", "V", "=", "=v", " ", " v")
+    parts <- Gen.choose(2, 4).flatMap(Gen.listOfN(_, part))
+    pre <- Gen.oneOf("", "-beta", "beta.01", "-rc.1", "-0")
+    build <- Gen.oneOf("", "+build.5", "+")
+    suffix <- Gen.oneOf("", " ", "x")
+  } yield prefix + parts.mkString(".") + pre + build + suffix
+
+  test("property: cleanUTF8 equals clean, and returns a canonical core as-is (2000 samples)") {
+    var seed = Seed(7L)
+    (1 to 2000).foreach { _ =>
+      val s = rawGen.apply(Gen.Parameters.default, seed).get
+      seed = seed.next
+      val u = UTF8String.fromString(s)
+      val out = Semver.cleanUTF8(u)
+      assert(Option(out).map(_.toString) == Semver.clean(s), s"'$s'")
+      if (Semver.clean(s).contains(s) && s.forall(c => c.isDigit || c == '.')) assert(out eq u, s"'$s'")
     }
   }
 }
