@@ -56,9 +56,10 @@ object SemverExpressions {
   /** Arity-checked builders that [[register]] installs. */
   private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "semver_clean" -> Arity.checked("semver_clean", 1)(exprs => SemverClean(exprs(0))),
-    "normalize_doc" -> Arity.checked("normalize_doc", 1)(exprs => NormalizeDoc(exprs(0))))
+    "normalize_doc" -> Arity.checked("normalize_doc", 1)(exprs => NormalizeDoc(exprs(0))),
+    "to_json_length" -> Arity.checked("to_json_length", 1)(exprs => ToJsonLength(exprs(0))))
 
-  /** Idempotently register `semver_clean` and `normalize_doc` for SQL/expr use. */
+  /** Idempotently register `semver_clean`, `normalize_doc` and `to_json_length` for SQL/expr use. */
   def register(spark: SparkSession): Unit =
     builders.foreach { case (name, builder) =>
       RegisterOnce(spark, name) {

@@ -1,8 +1,7 @@
 package graft.npm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import model._
 
@@ -18,13 +17,17 @@ import model._
   *   → normalize (T3/F7; not run for oversized or unparseable lines)
   *   → derived columns + validity/size checks (F1,F2,F4,P3)
   *   → slim projection: catalog (P1,T4,T6,T7,F6) and retention-arrival columns
-  *   → enrichment (S6/F5, injectable; row-preserving, one fetch per row
-  *     that passed the checks)
+  *   → enrichment (S6/F5, injectable; one nondeterministic fetch column,
+  *     evaluated once per row that passed the checks)
   *   → route: the first of msg_too_large/produce, corrupt_json/parse, the
   *     [[withDerived]] reject chain, http_<status>/download; none → catalog
   *   → one cached routed frame, of which catalog (K4), skipped DLQ (K3),
   *     audit events (K2) and retention evictions (A5 → K5) are filters and
   *     projections.
+  *
+  * Every stage up to the route is a Catalyst expression over internal
+  * rows (no object round trip), so the routed projection runs in
+  * whole-stage codegen.
   *
   * Declarative-wins note (§4.1): size caps run BEFORE any payload work
   * (the reference's F4 pre-download variant, legacy mirror.ts:119), so the
@@ -35,9 +38,9 @@ object Pipeline {
   val RemotePackageDir = "npm-mirror-packages"
 
   /** Injectable tarball fetcher (S6): url → (http status, byte count).
-    * Production would do real HTTP with a connection pool per partition;
-    * tests inject a deterministic Map-backed stub (FIXTURES.md F3). Must
-    * be serializable.
+    * Production would do real HTTP with a connection pool per task (each
+    * task deserializes its own copy); tests inject a deterministic
+    * Map-backed stub (FIXTURES.md F3). Must be serializable.
     */
   type Fetcher = String => (Int, Long)
   object AlwaysOk extends (String => (Int, Long)) with Serializable {
@@ -50,6 +53,10 @@ object Pipeline {
       audit: DataFrame,     // AuditEvent rows
       deletions: DataFrame, // Retention.Eviction rows
       routed: DataFrame)    // the cached frame the four read; unpersist once they are written
+
+  /** Built once: deriving an encoder by reflection is planning work that
+    * every micro-batch would otherwise pay again. */
+  private lazy val changeEncoder: Encoder[Change] = Encoders.product[Change]
 
   /** T1: raw JSON lines → typed change column + retained raw string. */
   def parse(raw: DataFrame): DataFrame =
@@ -96,31 +103,34 @@ object Pipeline {
     // micro-batch runs in a cloned session whose registry is isolated
     // from the driver session's
     graft.functions.SemverExpressions.register(parsed.sparkSession)
-    implicit val enc: Encoder[Change] = Encoders.product[Change]
     parsed.filter(col("c").isNotNull && col("c.seq").isNotNull)
       .select("c.*")
       .withColumn("doc", Normalize.normalizedDocColumn(col("doc")))
-      .as[Change]
+      .as(changeEncoder)
   }
 
   /** T3 applied through the typed API (pure function, property-tested). */
-  def normalizeTyped(parsed: DataFrame)(implicit spark: SparkSession): Dataset[Change] = {
-    implicit val enc: Encoder[Change] = Encoders.product[Change]
+  def normalizeTyped(parsed: DataFrame)(implicit spark: SparkSession): Dataset[Change] =
     parsed.filter(col("c").isNotNull && col("c.seq").isNotNull)
-      .select("c.*").as[Change]
-      .map(Normalize.normalizeChange)
-  }
+      .select("c.*").as(changeEncoder)
+      .map(Normalize.normalizeChange)(changeEncoder)
 
   /** Derived columns + validity flags over normalized changes. Everything
     * here is Column DSL → codegen'd, null-safe via map element_at.
     */
-  def withDerived(changes: Dataset[Change]): DataFrame = {
-    val df = changes.toDF()
+  def withDerived(changes: Dataset[Change]): DataFrame = derive(changes.toDF())
+
+  /** [[withDerived]] over any frame with Change's columns (extra columns
+    * pass through). The F2 doc size is `to_json_length(doc)`, equal to
+    * `length(to_json(doc))` without building the JSON string.
+    */
+  private def derive(df: DataFrame): DataFrame = {
+    graft.functions.SemverExpressions.register(df.sparkSession)
     df
       .withColumn("latest", element_at(col("doc.`dist-tags`"), "latest"))
       .withColumn("latest_version_doc", element_at(col("doc.versions"), col("latest")))
       .withColumn("latest_time_str", element_at(col("doc.time"), col("latest")))
-      .withColumn("doc_json_size", length(to_json(col("doc"))).cast("long"))
+      .withColumn("doc_json_size", call_function("to_json_length", col("doc")))
       .withColumn("tarball_url", col("latest_version_doc.dist.tarball"))
       .withColumn("tarball_size", col("latest_version_doc.dist.unpackedSize"))
       // T4 scoped-name split + T6 dir prefix + T7/F6 filename templating
@@ -156,28 +166,24 @@ object Pipeline {
 
   /** S6 enrichment, row-preserving: appends `tarball_status` and
     * `fetched_bytes` to every row of `rows` (which must carry
-    * `reject_reason` and `tarball_url`). The fetcher is called once for
-    * each row whose `reject_reason` is null, with one fetcher binding per
-    * partition (mapPartitions, never a per-row UDF — connection
-    * amortization); rejected rows get nulls and no fetch. No join, so no
-    * Exchange; F5 status routing is the caller's.
+    * `reject_reason` and `tarball_url`; a null url is fetched as "").
+    * The fetch is one nondeterministic UDF column under
+    * `when(reject_reason IS NULL)`: Catalyst never duplicates a
+    * nondeterministic expression (no project collapse, no subexpression
+    * elimination), so the fetcher is called exactly once for each row
+    * whose `reject_reason` is null and never for a rejected row, which
+    * gets nulls. Each task deserializes the fetcher once (one binding,
+    * one connection pool, per task). Rows stay internal, so the
+    * projection stays in whole-stage codegen. No join, so no Exchange;
+    * F5 status routing is the caller's.
     */
   def enrich(rows: DataFrame, fetcher: Fetcher)(implicit spark: SparkSession): DataFrame = {
-    val schema = rows.schema
-      .add("tarball_status", IntegerType)
-      .add("fetched_bytes", LongType)
-    val rejected = rows.schema.fieldIndex("reject_reason")
-    val url = rows.schema.fieldIndex("tarball_url")
-    rows.mapPartitions { it =>
-      // one fetcher binding per partition ≈ one connection pool per task
-      it.map { r =>
-        if (!r.isNullAt(rejected)) Row.fromSeq(r.toSeq :+ null :+ null)
-        else {
-          val (status, n) = fetcher(if (r.isNullAt(url)) "" else r.getString(url))
-          Row.fromSeq(r.toSeq :+ status :+ n)
-        }
-      }
-    }(Encoders.row(schema))
+    val fetch = udf((url: String) => fetcher(if (url == null) "" else url)).asNondeterministic()
+    rows
+      .withColumn("fetched", when(col("reject_reason").isNull, fetch(col("tarball_url"))))
+      .withColumn("tarball_status", col("fetched._1"))
+      .withColumn("fetched_bytes", col("fetched._2"))
+      .drop("fetched")
   }
 
   /** P1 catalog columns over [[withDerived]]'s output, by CatalogRecord
@@ -209,9 +215,7 @@ object Pipeline {
   def replay(
       raw: DataFrame,
       fetcher: Fetcher = AlwaysOk)(implicit spark: SparkSession): PipelineResult = {
-    import spark.implicits._
     graft.functions.SemverExpressions.register(raw.sparkSession)
-    implicit val enc: Encoder[Change] = Encoders.product[Change]
 
     val oversized = lineBytes(col("raw")) > MaxKafkaMessageBytes
     val unparsed = col("c.seq").isNull
@@ -221,9 +225,9 @@ object Pipeline {
       when(oversized, "msg_too_large").when(unparsed, "corrupt_json").as("line_reason"),
       when(oversized, "produce").when(unparsed, "parse").as("line_stage"))
 
-    // as[Change] keeps the line_* columns; their null doc makes withDerived
-    // reject those lines, so enrich never fetches for them
-    val slim = withDerived(lines.as[Change]).select(
+    // derive keeps the line_* columns; their null doc makes it reject
+    // those lines, so enrich never fetches for them
+    val slim = derive(lines).select(
       Seq(col("seq"), col("id"), col("line_reason"), col("line_stage"),
         col("reject_reason"), col("reject_stage"), col("tarball_url")) ++
       catalogColumns.map { case (n, c) => c.as(n) } ++ arrivalNames.map(col): _*)
@@ -249,7 +253,7 @@ object Pipeline {
     val arrivals = kept.select(
         col("package_dir"), col("zip_name").as("file_name"),
         col("seq").as("ctime"), col("retention_triggered"))
-      .as[Retention.ZipArrival]
+      .as(Retention.zipArrivalEncoder)
     val deletions = Retention.evictions(arrivals).toDF()
 
     PipelineResult(catalog, skipped, audit, deletions, routed)

@@ -1,8 +1,7 @@
 package graft.npm
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{Encoder, Encoders}
 
 /** A5 — per-package version-retention eviction (SURVEY.md §2.6 A5).
   *
@@ -54,6 +53,12 @@ object Retention {
   case class FileEntry(name: String, ctime: Long)
   case class DirState(files: Vector[FileEntry])
 
+  // each built once: deriving an encoder by reflection is planning work that
+  // every micro-batch would otherwise pay again
+  lazy val zipArrivalEncoder: Encoder[ZipArrival] = Encoders.product[ZipArrival]
+  private lazy val evictionEncoder: Encoder[Eviction] = Encoders.product[Eviction]
+  private lazy val dirStateEncoder: Encoder[DirState] = Encoders.product[DirState]
+
   /** Pure single-arrival step. `existing` = files present before this
     * arrival, any order. Returns the at-most-one evicted file name.
     */
@@ -90,19 +95,17 @@ object Retention {
   /** Batch operator: group arrivals by package dir, replay each in order.
     * One shuffle on package_dir; per-group work is O(n · limit).
     */
-  def evictions(arrivals: Dataset[ZipArrival])(implicit spark: SparkSession): Dataset[Eviction] = {
-    implicit val evEnc: Encoder[Eviction] = Encoders.product[Eviction]
+  def evictions(arrivals: Dataset[ZipArrival])(implicit spark: SparkSession): Dataset[Eviction] =
     arrivals
       .groupByKey(_.package_dir)(Encoders.STRING)
-      .flatMapGroups { (dir, it) => replayPackage(dir, it)._2.iterator }
-  }
+      .flatMapGroups { (dir, it) => replayPackage(dir, it)._2.iterator }(evictionEncoder)
 
   /** Streaming operator: same core under flatMapGroupsWithState; state is
     * the per-package directory listing, carried across micro-batches.
     */
   def streamingEvictions(arrivals: Dataset[ZipArrival])(implicit spark: SparkSession): Dataset[Eviction] = {
-    implicit val evEnc: Encoder[Eviction] = Encoders.product[Eviction]
-    implicit val stEnc: Encoder[DirState] = Encoders.product[DirState]
+    implicit val evEnc: Encoder[Eviction] = evictionEncoder
+    implicit val stEnc: Encoder[DirState] = dirStateEncoder
     arrivals
       .groupByKey(_.package_dir)(Encoders.STRING)
       .flatMapGroupsWithState[DirState, Eviction](

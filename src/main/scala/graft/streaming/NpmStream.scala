@@ -186,13 +186,12 @@ object NpmStream {
       outDir: String,
       checkpointDir: String): StreamingQuery = {
     implicit val s: SparkSession = spark
-    import spark.implicits._
     val parsed = Pipeline.parse(source)
     val arrivals = Pipeline.withDerived(Pipeline.normalize(parsed))
       .filter(col("reject_reason").isNull)
       .select(col("package_dir"), col("zip_name").as("file_name"),
         col("seq").as("ctime"), col("retention_triggered"))
-      .as[Retention.ZipArrival]
+      .as(Retention.zipArrivalEncoder)
     Retention.streamingEvictions(arrivals).toDF()
       .writeStream
       .outputMode("append")

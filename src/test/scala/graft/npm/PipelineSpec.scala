@@ -8,7 +8,11 @@ import graft.SparkSpec
 import org.apache.spark.graftaccess.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
+import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction, StructsToJson}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, MapPartitions, SerializeFromObject}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 /** Fetchers that record every call; local mode runs tasks in this JVM, so
@@ -101,6 +105,18 @@ class PipelineSpec extends SparkSpec {
       == Map("left-pad" -> "^1.0.0", "semver" -> "~7.0.0"))
     assert(r.getAs[Map[String, String]]("package_distribution_tags") == Map("latest" -> "1.0.0"))
     assert(r.getAs[java.sql.Timestamp]("package_latest_change_time") != null)
+  }
+
+  test("catalog maps keep the doc's entry order, also past four entries") {
+    // five dependencies: a Scala Map of more than four entries is a
+    // HashMap, so a round trip through external rows would reorder them
+    val deps = Seq("core", "react", "parse", "lodash", "http")
+    val line = Fixtures.distinctFeed(1).head.replace("\"shasum\":\"s\"}",
+      "\"shasum\":\"s\"},\"dependencies\":{" + deps.map(d => s"\"$d\":\"^1.0.0\"").mkString(",") + "}")
+    val r = Pipeline.replay(Seq(line).toDF("value"))
+    val keys = r.catalog.select(map_keys(col("package_latest_dependencies"))).as[Seq[String]].head()
+    assert(keys == deps)
+    r.routed.unpersist()
   }
 
   test("T3 semver cleaning flows through to the catalog (seq 8)") {
@@ -212,12 +228,16 @@ class PipelineSpec extends SparkSpec {
       result.deletions.queryExecution.executedPlan.toString)
   }
 
-  test("the replay normalizes each doc in one normalize_doc call, with no lambda") {
-    // a file scan, as the mirror reads; the plan below the cache, since
-    // InMemoryRelation hides it
+  /** The routed frame of a replay over the fixture corpus read from a file, as the mirror reads. */
+  private def fileFedRouted(): DataFrame = {
     val dir = java.nio.file.Paths.get(graft.TmpDirs.create("graft-pipeline-plan"))
     Files.write(dir.resolve("changes.jsonl"), Fixtures.withFetch404.mkString("", "\n", "\n").getBytes("UTF-8"))
-    val routed = Pipeline.replay(spark.read.text(dir.toString), Fixtures.RoutingFetcher).routed
+    Pipeline.replay(spark.read.text(dir.toString), Fixtures.RoutingFetcher).routed
+  }
+
+  test("the replay normalizes each doc in one normalize_doc call, with no lambda") {
+    // the plan below the cache, since InMemoryRelation hides it
+    val routed = fileFedRouted()
     val plan = spark.sessionState.optimizer.execute(routed.queryExecution.analyzed)
     val exprs = plan.collect { case node => node.expressions.flatMap(_.collect { case e => e }) }.flatten
     val lambdas = exprs.filter {
@@ -226,6 +246,29 @@ class PipelineSpec extends SparkSpec {
     }
     assert(lambdas.isEmpty, lambdas.map(_.prettyName).distinct.mkString(", "))
     assert(exprs.count(_.prettyName == "normalize_doc") == 1, plan.treeString)
+    routed.unpersist()
+  }
+
+  test("the routed projection keeps internal rows: no object round trip, no to_json, JIT-sized codegen") {
+    val routed = fileFedRouted()
+    val plan = spark.sessionState.optimizer.execute(routed.queryExecution.analyzed)
+    val objectNodes = plan.collect {
+      case n @ (_: DeserializeToObject | _: SerializeFromObject | _: MapPartitions) => n.nodeName
+    }
+    assert(objectNodes.isEmpty, plan.treeString)
+    // to_json is replaced by an evaluator call before optimization, so look in the analyzed plan
+    val toJson = routed.queryExecution.analyzed.collect { case n => n.expressions.flatMap(_.collect {
+      case e: StructsToJson => e }) }.flatten
+    assert(toJson.isEmpty, routed.queryExecution.analyzed.treeString)
+    // HotSpot never JIT-compiles a method over 8,000 bytecode bytes
+    val cached = routed.queryExecution.optimizedPlan
+      .collectFirst { case r: InMemoryRelation => r.cacheBuilder.cachedPlan }.get
+    val stages = cached.collect { case w: WholeStageCodegenExec => w }
+    assert(stages.nonEmpty, cached.treeString)
+    stages.foreach { w =>
+      val size = CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize
+      assert(size <= 8000, s"stage ${w.codegenStageId} compiles a $size-byte method:\n${cached.treeString}")
+    }
     routed.unpersist()
   }
 }

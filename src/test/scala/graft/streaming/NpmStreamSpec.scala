@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import graft.SparkSpec
 import graft.npm.{FetchLog, Fixtures, Pipeline}
 import org.apache.hadoop.fs.ParentNotDirectoryException
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 class NpmStreamSpec extends SparkSpec {
@@ -156,5 +157,24 @@ class NpmStreamSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.size == before)
     // the other three sinks were still written
     assert(spark.read.parquet(s"$base/skipped").filter(col("seq").isNotNull).count() == 6)
+  }
+
+  test("the concurrent sink writes of an uncached local batch each fold its parse, and agree") {
+    // once the routed frame is released, each of the four sink writes plans
+    // the whole replay again on its own thread, and Spark's
+    // ConvertToLocalRelation evaluates the parse of a local batch at
+    // planning time, through the one from_json expression the four plans share
+    val base = graft.TmpDirs.create("graft-npmfold")
+    val r = Pipeline.replay(Fixtures.withFetch404.toDF("value"), Fixtures.RoutingFetcher)(spark)
+    NpmStream.writeBatchOutputs(r, base, batchId = 0) // off the cached routed frame
+    val folded = r.catalog.queryExecution.optimizedPlan.collect { case l: LocalRelation => l.output.map(_.name) }
+    assert(folded == Seq(Seq("c", "raw")), r.catalog.queryExecution.optimizedPlan.treeString)
+    (1 to 3).foreach(b => NpmStream.writeBatchOutputs(r, base, batchId = b))
+    Seq("catalog", "skipped", "audit", "deleted_zips").foreach { sink =>
+      val df = spark.read.parquet(s"$base/$sink")
+      def rows(b: Int) = df.filter(col("batch_id") === b).drop("batch_id").collect().map(_.toString).sorted.toSeq
+      assert((1 to 3).forall(b => rows(b) == rows(0)), sink)
+    }
+    assert(spark.read.parquet(s"$base/catalog").filter(col("batch_id") === 3).count() == 6)
   }
 }
